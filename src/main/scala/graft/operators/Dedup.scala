@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines, all designed for
   * the 100-TB shape:
@@ -472,6 +473,34 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
+  /** Edge-row bound of the DRIVER-LOCAL regime of [[connectedComponents]]
+    * and [[connectedComponentsIncremental]]: at most this many (u, v) rows
+    * are ever collected to the driver — 2^16 pairs of longs, a few MB of
+    * driver heap with the row objects and the union-find map. It bounds
+    * driver memory, which no deployment should trade against data size,
+    * so it is a constant and deliberately NOT a `spark.graft.*` conf;
+    * both functions clamp their `localEdges` argument to it, so a
+    * caller can only lower the bound (specs pass 0 to force the
+    * distributed round loop), never raise it. */
+  private[graft] val ccLocalEdges: Int = 1 << 16
+
+  private def isEager(staging: Staging.Mode): Boolean = staging match {
+    case Staging.Local | Staging.Reliable(_) => true
+    case _ => false
+  }
+
+  /** Stage `df` under an EAGER mode with `metric` riding the staging
+    * action as an observed metric (CollectMetrics): the eager staging
+    * runs through Dataset.withAction, which notifies the
+    * QueryExecutionListener Observation registers, so the value is ready
+    * the moment the checkpoint action returns — no job of its own. */
+  private def stageObserved(staging: Staging.Mode, df: DataFrame,
+                            metric: Column): (DataFrame, Any) = {
+    val obs = org.apache.spark.sql.Observation()
+    val staged = staging(df.observe(obs, metric.as("m")))
+    (staged, obs.get("m"))
+  }
+
   /** Connected components over an undirected edge frame — the step that
     * turns near-dup PAIRS (from [[minhashLshPairs]], [[simhashPairs]] or
     * the exact tiers) into duplicate GROUPS so a pipeline can keep one
@@ -493,6 +522,21 @@ object Dedup {
     * how (default localCheckpoint; pass Staging.Reliable(dir) on a
     * cluster so a lost executor cannot kill an hours-long sweep).
     *
+    * DRIVER-LOCAL REGIME: under an eager staging mode (Local, Reliable)
+    * the symmetric edge set is staged with its row count observed on
+    * the staging action. When it holds at most `localEdges` rows
+    * ([[ccLocalEdges]], 2^16) the edges are collected in one job and
+    * closed by union-find on the driver, always linking the larger root
+    * under the smaller so every root is its component's minimum — the
+    * same (id, component) rows as the round loop, without its ~4 jobs
+    * per round. The bound caps the driver's share at a few MB whatever
+    * the corpus; it is a constant, not a conf, and `localEdges` above
+    * it is clamped to it (see [[ccLocalEdges]]).
+    * Larger edge sets, and the lazy modes (Memory, None — no action may
+    * fire at build time), run the round loop unchanged, so the path
+    * still scales to corpus-sized graphs. `onRound` fires once for the
+    * driver-local closure.
+    *
     * Returns (id, component) for every node incident to an edge, where
     * component = smallest node id in the component. Isolated rows never
     * appear in `pairs`; callers union them back as their own singleton
@@ -504,10 +548,26 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 25,
                           staging: Staging.Mode = Staging.Local,
-                          onRound: () => Unit = () => ()): DataFrame = {
+                          onRound: () => Unit = () => (),
+                          localEdges: Int = ccLocalEdges): DataFrame = {
     val fwd = pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-    val edges = staging(fwd.union(fwd.select(col("v").as("u"), col("u").as("v")))
-      .distinct())
+    val sym = fwd.union(fwd.select(col("v").as("u"), col("u").as("v"))).distinct()
+    val eagerStaging = isEager(staging)
+    // a caller may only LOWER the bound (specs pass 0): raising it would
+    // trade driver memory for data size, which the constant rules out
+    val bound = math.min(localEdges, ccLocalEdges)
+    val edges =
+      if (!eagerStaging || bound <= 0) staging(sym)
+      else {
+        val (staged, n) = stageObserved(staging, sym, count(lit(1)))
+        val local =
+          if (n.asInstanceOf[Long] > bound) None
+          else localComponents(staged.sparkSession, staged.collect(), staged.schema("u"))
+        local match {
+          case Some(comps) => onRound(); return comps
+          case _ => staged
+        }
+      }
     var labelsInit = edges.select(col("u").as("id")).distinct()
       .withColumn("comp", col("id"))
     // sum(comp) strictly decreases whenever any label improves (labels
@@ -522,22 +582,14 @@ object Dedup {
     // mode each round already materializes `next` with one action —
     // riding the label sum on that action as an observed metric
     // (CollectMetrics) removes the per-round compSum job (one fewer
-    // driver round-trip per round, across every CC consumer). The
-    // eager staging runs through Dataset.withAction, which notifies the
-    // QueryExecutionListener Observation registers, so the metric is
-    // ready the moment the checkpoint action returns; lazy modes keep
-    // the explicit pass (no action to ride).
-    val eagerStaging = staging match {
-      case Staging.Local | Staging.Reliable(_) => true
-      case _ => false
-    }
+    // driver round-trip per round, across every CC consumer). Lazy
+    // modes keep the explicit pass (no action to ride).
     def stageWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) =
       if (!eagerStaging) { val s = staging(df); (s, compSum(s)) }
       else {
-        val obs = org.apache.spark.sql.Observation()
-        val staged = staging(df.observe(obs,
-          coalesce(sum(col("comp")), lit(0L)).cast("decimal(38,0)").as("s")))
-        val s = obs.get("s") match {
+        val (staged, sum0) = stageObserved(staging, df,
+          coalesce(sum(col("comp")), lit(0L)).cast("decimal(38,0)"))
+        val s = sum0 match {
           case d: java.math.BigDecimal => d
           case other => new java.math.BigDecimal(other.toString)
         }
@@ -577,6 +629,39 @@ object Dedup {
     labels.select(col("id"), col("comp").as("component"))
   }
 
+  /** Union-find closure of driver-held (u, v) edge rows — the
+    * driver-local regime of [[connectedComponents]]. Linking the larger
+    * root under the smaller keeps every root its component's minimum,
+    * so each node's row equals the round loop's fixpoint. `idField` is
+    * the edges' `u` field, whose type and nullability the round loop's
+    * `id` carries too. None when an endpoint is NULL: the round loop
+    * groups a null id like any other, and its label rising from null
+    * can balance the label-sum fixpoint test a round early, so such
+    * edge sets keep the round loop's exact output by running it. */
+  private def localComponents(spark: org.apache.spark.sql.SparkSession,
+                              edges: Iterable[Row],
+                              idField: StructField): Option[DataFrame] = {
+    if (edges.exists(e => e.isNullAt(0) || e.isNullAt(1))) return None
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val up = parent(c); parent(c) = r; c = up }
+      r
+    }
+    def node(x: Long): Long = { if (!parent.contains(x)) parent(x) = x; x }
+    edges.foreach { e =>
+      val a = find(node(e.getLong(0)))
+      val b = find(node(e.getLong(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val rows = new java.util.ArrayList[Row](parent.size)
+    parent.keys.toArray.foreach(x => rows.add(Row(x, find(x))))
+    Some(spark.createDataFrame(rows, StructType(Seq(
+      idField.copy(name = "id"), StructField("component", LongType, nullable = true)))))
+  }
+
   /** Incremental connected components (round 12) — the shard-arrival
     * twin of [[connectedComponents]], completing the ingestion story for
     * the GROUP-SIZED consumer (the quote-cluster catalog) the way the
@@ -606,6 +691,15 @@ object Dedup {
     * the untouched rows; the CC rounds run on the star subgraph, not
     * the corpus graph.
     *
+    * DRIVER-LOCAL REGIME: under an eager staging mode the shard's edges
+    * are staged once (a miner's output is then evaluated once, not once
+    * per consumer), and the star-subgraph run below is an ordinary
+    * [[connectedComponents]] call, so it takes that function's
+    * driver-local regime whenever its symmetric edge rows (touched stars
+    * plus shard edges) fit `localEdges` ([[ccLocalEdges]]): a handful of
+    * jobs instead of ~4 per round. Past the bound, and under the lazy
+    * modes, the round loop runs as before.
+    *
     * Two output modes. Default (`deltaOnly = false`): the complete
     * updated labeling, same schema and semantics as
     * [[connectedComponents]] over the union of all edges — contract
@@ -624,8 +718,9 @@ object Dedup {
                                      maxIter: Int = 25,
                                      staging: Staging.Mode = Staging.Local,
                                      deltaOnly: Boolean = false,
-                                     onRound: () => Unit = () => ()): DataFrame = {
-    val fwd = newPairs.select(col(aCol).cast("long").as("u"),
+                                     onRound: () => Unit = () => (),
+                                     localEdges: Int = ccLocalEdges): DataFrame = {
+    val shardEdges = newPairs.select(col(aCol).cast("long").as("u"),
       col(bCol).cast("long").as("v"))
     // labels is NOT staged here: it is corpus-sized (typically a table
     // read or already checkpointed by the caller), consumed only by
@@ -633,8 +728,15 @@ object Dedup {
     // cost back into every shard arrival
     val lab = labels.select(col("id").cast("long").as("id"),
       col("component").cast("long").as("comp"))
-    val newNodes = staging(fwd.select(col("u")).union(fwd.select(col("v")))
-      .distinct().select(col("u").as("id")))
+    // the shard's edges feed both the touched-component selection and
+    // the sub-run: under an eager mode stage them once, so a miner's
+    // output is evaluated once; the new nodes are then a cheap view of
+    // them. Lazy modes stage the new nodes, as the shard stays a view
+    val eager = isEager(staging)
+    val fwd = if (eager) staging(shardEdges) else shardEdges
+    val nodes = fwd.select(col("u")).union(fwd.select(col("v")))
+      .distinct().select(col("u").as("id"))
+    val newNodes = if (eager) nodes else staging(nodes)
     // components with any member incident to a new edge — everything
     // else is provably unchanged and never enters the propagation
     val touchedComps = lab.join(newNodes, Seq("id"), "left_semi")
@@ -646,7 +748,7 @@ object Dedup {
       .select(col("id").as("u"), col("comp").as("v"))
     val sub = connectedComponents(
       starPairs.union(fwd.select(col("u"), col("v"))), "u", "v",
-      maxIter, staging, onRound)
+      maxIter, staging, onRound, localEdges)
     if (deltaOnly) sub.select(col("id"), col("component"))
     else {
       val untouched = lab.join(sub.select(col("id")), Seq("id"), "left_anti")

@@ -47,6 +47,31 @@ private[graft] object FitPool {
   def peakActive: Int = peak.get()
   def resetPeak(): Unit = peak.set(0)
 
+  /** Join EVERY side thread even when an earlier join throws — the
+    * fence-window contract requires no write outlives the window, so a
+    * caller wraps its main-thread write in `try { ... } finally
+    * FitPool.joinAll(a, b)`. First failure wins among the joins; when
+    * the guarded block also failed, that (rarer, both-failed) join error
+    * replaces it — either way a loud write failure surfaces and no
+    * thread is left running. An interrupt of the joining thread is not
+    * swallowed: the remaining joins still run (best effort), then the
+    * interrupt flag is restored before the first failure is rethrown.
+    * A VirtualMachineError (OOM, stack overflow) propagates at once. */
+  def joinAll(joins: (() => Any)*): Unit = {
+    var err: Throwable = null
+    var interrupted = false
+    joins.foreach { j =>
+      try j() catch {
+        case e: VirtualMachineError => throw e
+        case e: Throwable =>
+          if (e.isInstanceOf[InterruptedException]) interrupted = true
+          if (err == null) err = e
+      }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    if (err != null) throw err
+  }
+
   /** Run `body` on a FRESH daemon thread and return a join-function that
     * rethrows its failure (round 17). For overlapping a FIXED, small
     * number of independent driver actions (e.g. the two bucketed table
@@ -55,21 +80,6 @@ private[graft] object FitPool {
     * the caller itself runs on a pool thread and the pool is saturated,
     * because the side thread is never drawn from the bounded pool. Use
     * [[submit]] for unbounded fan-out, this for pairwise overlap. */
-  /** Join EVERY side thread even when an earlier join throws — the
-    * fence-window contract requires no write outlives the window, so a
-    * caller wraps its main-thread write in `try { ... } finally
-    * FitPool.joinAll(a, b)`. First failure wins among the joins; when
-    * the guarded block also failed, that (rarer, both-failed) join error
-    * replaces it — either way a loud write failure surfaces and no
-    * thread is left running. */
-  def joinAll(joins: (() => Any)*): Unit = {
-    var err: Throwable = null
-    joins.foreach { j =>
-      try j() catch { case e: Throwable => if (err == null) err = e }
-    }
-    if (err != null) throw err
-  }
-
   def sideThread[T](body: => T): () => T = {
     @volatile var out: Either[Throwable, T] = null
     val t = new Thread(() => {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -188,14 +188,14 @@ object IngestLoop {
     * checkpoint-local batch ids would collide with the bound loop's
     * partitions and the retry step's drop-own-partition would clobber
     * them. */
-  private def bindLoop(spark: SparkSession, prefix: String,
+  private def bindLoop(spark: SparkSession, prefix: String, meta: Row,
                        loopId: String): Unit = {
-    val meta = spark.table(s"${prefix}_meta")
-    if (!meta.columns.contains("loop_id")) {
-      meta.localCheckpoint(true).withColumn("loop_id", lit(loopId))
+    if (!meta.schema.fieldNames.contains("loop_id")) {
+      spark.table(s"${prefix}_meta").localCheckpoint(true)
+        .withColumn("loop_id", lit(loopId))
         .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
     } else {
-      val recorded = meta.head().getAs[String]("loop_id")
+      val recorded = meta.getAs[String]("loop_id")
       require(recorded != MultiWriterMarker,
         s"index family '$prefix' is MULTI-WRITER: its partition ids are " +
           "global (assigned through the commits mapping), so a " +
@@ -299,16 +299,21 @@ object IngestLoop {
     } else present.size == tables.size
   }
 
+  /** The family's one-row meta. A batch reads it ONCE under its fence
+    * and hands the row to every check and corpus view that needs it
+    * (each read is a single-task Spark job). */
+  private def readMeta(spark: SparkSession, prefix: String): Row =
+    spark.table(s"${prefix}_meta").head()
+
   /** Bucket-count agreement between a persisted family and the loop
     * writing into it: appending partitions with a DIFFERENT bucket count
     * than the tables were created with silently breaks the co-location
     * contract every candidate join relies on. Families created before
     * the count was recorded in meta (round 10) pass unchecked. */
-  private def requireBucketAgreement(spark: SparkSession, prefix: String,
+  private def requireBucketAgreement(prefix: String, meta: Row,
                                      buckets: Int): Unit = {
-    val meta = spark.table(s"${prefix}_meta")
-    if (meta.columns.contains("buckets")) {
-      val persisted = meta.head().getAs[Int]("buckets")
+    if (meta.schema.fieldNames.contains("buckets")) {
+      val persisted = meta.getAs[Int]("buckets")
       require(persisted == buckets,
         s"index family '$prefix' was written with $persisted buckets, the " +
           s"ingest loop is configured with $buckets — appending would break " +
@@ -428,8 +433,9 @@ object IngestLoop {
       s"persisted index family (${corpus.numPerms}, ${corpus.rowsPerBand}) != " +
         s"loop family ($numPerms, $rowsPerBand)")
     if (exists) {
-      requireBucketAgreement(spark, prefix, buckets)
-      if (!multiWriter) bindLoop(spark, prefix, lid) // bindMulti ran pre-resolve
+      val meta = readMeta(spark, prefix)
+      requireBucketAgreement(prefix, meta, buckets)
+      if (!multiWriter) bindLoop(spark, prefix, meta, lid) // bindMulti ran pre-resolve
     }
     // fold the shard in: append the batch's partition only; a retry
     // first drops its own half-written partition (corpus partitions
@@ -724,8 +730,9 @@ object IngestLoop {
         s"seed=${corpus.seed}, dim=${corpus.dim}) != loop family " +
         s"(bits=$bitsPerTable, tables=$numTables, seed=$seed, dim=${shard.dim})")
     if (exists) {
-      requireBucketAgreement(spark, prefix, buckets)
-      if (!multiWriter) bindLoop(spark, prefix, lid) // bindMulti ran pre-resolve
+      val meta = readMeta(spark, prefix)
+      requireBucketAgreement(prefix, meta, buckets)
+      if (!multiWriter) bindLoop(spark, prefix, meta, lid) // bindMulti ran pre-resolve
     }
     // replay rewrite of an existing partition bumps the generation so a
     // concurrent miner re-mines: see ingestMinhashBatch
@@ -845,8 +852,9 @@ object IngestLoop {
         val idx = graft.operators.Similarity.loadPqIndex(spark, prefix)
         require(idx.idCol == idCol,
           s"persisted PQ index keys on '${idx.idCol}', loop on '$idCol'")
-        requireBucketAgreement(spark, prefix, buckets)
-        if (!multiWriter) bindLoop(spark, prefix, lid) // bindMulti ran pre-resolve
+        val meta = readMeta(spark, prefix)
+        requireBucketAgreement(prefix, meta, buckets)
+        if (!multiWriter) bindLoop(spark, prefix, meta, lid) // bindMulti ran pre-resolve
         spark.sql(s"ALTER TABLE ${prefix}_codes DROP IF EXISTS PARTITION (ingest_batch=$pid)")
         graft.operators.Similarity.encodePq(batch, vecCol, idx)
       }
@@ -929,8 +937,9 @@ object IngestLoop {
         val idx0 = graft.operators.Similarity.loadSemIndex(spark, prefix)
         require(idx0.idCol == idCol,
           s"persisted sem index keys on '${idx0.idCol}', loop on '$idCol'")
-        requireBucketAgreement(spark, prefix, buckets)
-        bindLoop(spark, prefix, lid)
+        val meta = readMeta(spark, prefix)
+        requireBucketAgreement(prefix, meta, buckets)
+        bindLoop(spark, prefix, meta, lid)
         spark.sql(s"ALTER TABLE ${prefix}_docs DROP IF EXISTS PARTITION (ingest_batch=$bid)")
         val idx = idx0.copy(docs = idx0.docs.filter(col("ingest_batch") < bid))
         graft.operators.Similarity.semanticDedupIncremental(
@@ -1114,8 +1123,9 @@ object IngestLoop {
       val delta =
         if (!exists) Dedup.connectedComponents(pairs, aCol, bCol, onRound = beat)
         else {
-          requireBucketAgreement(spark, prefix, buckets)
-          bindLoop(spark, prefix, lid)
+          val meta = readMeta(spark, prefix)
+          requireBucketAgreement(prefix, meta, buckets)
+          bindLoop(spark, prefix, meta, lid)
           spark.sql(s"ALTER TABLE ${prefix}_labels DROP IF EXISTS PARTITION (ingest_batch=$bid)")
           Dedup.connectedComponentsIncremental(
             ccComponentsBefore(spark, prefix, bid), pairs, aCol, bCol,
@@ -1373,8 +1383,9 @@ object IngestLoop {
         require(corpus.idCol == idCol,
           s"persisted SimHash family keys on '${corpus.idCol}', loop on '$idCol'")
         if (exists) {
-          requireBucketAgreement(spark, prefix, buckets)
-          if (!multiWriter) bindLoop(spark, prefix, lid)
+          val meta = readMeta(spark, prefix)
+          requireBucketAgreement(prefix, meta, buckets)
+          if (!multiWriter) bindLoop(spark, prefix, meta, lid)
           val replayed = partitionExists(spark, s"${prefix}_chunked", pid)
           spark.sql(s"ALTER TABLE ${prefix}_chunked DROP IF EXISTS PARTITION (ingest_batch=$pid)")
           if (replayed) graft.operators.Tombstones.bumpGeneration(spark, prefix)
@@ -1440,8 +1451,12 @@ object IngestLoop {
     * `bid` — [[minhashCorpusBefore]]'s quote/excerpt twin (internal id
     * column is the normalized `id`). */
   def containmentCorpusBefore(spark: SparkSession, prefix: String,
-                              bid: Long): Dedup.ContainmentIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
+                              bid: Long): Dedup.ContainmentIndex =
+    containmentCorpusBefore(spark, prefix, bid, readMeta(spark, prefix))
+
+  /** [[containmentCorpusBefore]] over an already-read meta row `m`. */
+  private def containmentCorpusBefore(spark: SparkSession, prefix: String,
+                                      bid: Long, m: Row): Dedup.ContainmentIndex = {
     def live(t: String) = graft.operators.Tombstones.filter(
       spark.table(s"${prefix}_$t").filter(col("ingest_batch") < bid)
         .drop("ingest_batch"), "id", prefix)
@@ -1451,8 +1466,7 @@ object IngestLoop {
 
   /** The multi-writer containment corpus view. */
   private def containmentCorpusMulti(spark: SparkSession, prefix: String,
-                                     g: GlobalBid): Dedup.ContainmentIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
+                                     g: GlobalBid, m: Row): Dedup.ContainmentIndex = {
     def live(t: String) = graft.operators.Tombstones.filter(
       spark.table(s"${prefix}_$t")
         .filter(multiCorpusFilter(g.gbid, g.missingBelow, g.compensate))
@@ -1503,6 +1517,11 @@ object IngestLoop {
     val (pid, mkCorpus, gen0) =
       graft.operators.Fence.withFence(spark, prefix, owner) {
         val exists = familyExists(spark, prefix, Seq("posting", "base", "meta"))
+        // read once, under the fence, by the first consumer below; the
+        // corpus views, the bucket check and the loop binding share it
+        // (the unfenced mine re-derives its corpus view from this row:
+        // id column and shingle width never change within a family)
+        lazy val meta = readMeta(spark, prefix)
         if (exists && multiWriter) bindMulti(spark, prefix)
         val resolved =
           if (multiWriter) resolveGlobalBid(spark, prefix, lid, bid, s"${prefix}_posting")
@@ -1511,15 +1530,15 @@ object IngestLoop {
         val mkCorpus: () => Dedup.ContainmentIndex =
           if (!exists) () => Dedup.ContainmentIndex(idCol, n,
             shard.base.limit(0), shard.posting.limit(0))
-          else if (multiWriter) () => containmentCorpusMulti(spark, prefix, resolved)
-          else () => containmentCorpusBefore(spark, prefix, pid)
+          else if (multiWriter) () => containmentCorpusMulti(spark, prefix, resolved, meta)
+          else () => containmentCorpusBefore(spark, prefix, pid, meta)
         val corpus = mkCorpus()
         require(corpus.n == n,
           s"persisted containment family has shingle width n=${corpus.n}, " +
             s"loop has n=$n — mismatched shingle families silently miss overlaps")
         if (exists) {
-          requireBucketAgreement(spark, prefix, buckets)
-          if (!multiWriter) bindLoop(spark, prefix, lid)
+          requireBucketAgreement(prefix, meta, buckets)
+          if (!multiWriter) bindLoop(spark, prefix, meta, lid)
           // probe BOTH tables (round 17): with the appends below running
           // concurrently, a crash window can leave EITHER partition
           // present alone, and a drop that removes files without the

@@ -28,7 +28,11 @@ import org.apache.spark.sql.functions._
   *            per-shard cost a PERSISTED-labels pipeline pays: only the
   *            re-propagated rows are computed and materialized, the
   *            untouched corpus stays on disk (append-with-batch-id, read
-  *            latest-wins — the index families' ingest discipline)
+  *            latest-wins — the index families' ingest discipline).
+  *            When the symmetric shard + touched-star edge rows fit
+  *            Dedup.ccLocalEdges, this arm measures the
+  *            DRIVER-LOCAL union-find regime, not the round loop; raise
+  *            `copies`/lower `shardMod` past the bound to time the loop
   *   inc-full full-mode incremental — the complete updated catalog
   *            re-materialized per shard; kept to show WHY delta is the
   *            pipeline shape (the O(corpus) union/anti-join dominates)

@@ -498,27 +498,169 @@ class DedupSpec extends AnyFunSuite {
     assert(f.map(_.toString).sorted.sameElements(f2.map(_.toString).sorted))
   }
 
+  // components: {1,2,3,4} via chain 1-2-3-4 (diameter 3, needs real
+  // propagation); {10,11,12} star centered on 12; {20,21} pair;
+  // {30..39} a 10-node path — diameter 9 exercises the iteration loop
+  // well past the trivial 1-2 rounds.
+  lazy val ccFixture = (Seq((1L, 2L), (3L, 2L), (3L, 4L), (12L, 10L), (12L, 11L), (20L, 21L)) ++
+    (30L until 39L).map(i => (i + 1, i))).toDF("a", "b")
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Runs `body` and returns its result with the number of `onRound`
+    * calls it made: the driver-local CC regime makes exactly one, the
+    * round loop at least two (a changed round plus the confirming one)
+    * on any graph with an edge between distinct ids. */
+  private def withRounds[A](body: (() => Unit) => A): (A, Int) = {
+    var rounds = 0
+    val out = body(() => rounds += 1)
+    (out, rounds)
+  }
+
   test("connectedComponents: chain, star, singleton-pair, deep path") {
-    // components: {1,2,3,4} via chain 1-2-3-4 (diameter 3, needs real
-    // propagation); {10,11,12} star centered on 12; {20,21} pair;
-    // {30..39} a 10-node path — diameter 9 exercises the iteration loop
-    // well past the trivial 1-2 rounds.
-    val edges = (Seq((1L, 2L), (3L, 2L), (3L, 4L), (12L, 10L), (12L, 11L), (20L, 21L)) ++
-      (30L until 39L).map(i => (i + 1, i))).toDF("a", "b")
-    val got = Dedup.connectedComponents(edges, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Seq(1L, 2L, 3L, 4L).forall(got(_) == 1L))
-    assert(Seq(10L, 11L, 12L).forall(got(_) == 10L))
-    assert(Seq(20L, 21L).forall(got(_) == 20L))
-    assert((30L to 39L).forall(got(_) == 30L))
-    assert(got.size == 19)
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(Seq(1L, 2L, 3L, 4L).forall(got(_) == 1L))
+      assert(Seq(10L, 11L, 12L).forall(got(_) == 10L))
+      assert(Seq(20L, 21L).forall(got(_) == 20L))
+      assert((30L to 39L).forall(got(_) == 30L))
+      assert(got.size == 19)
+    }
+    import graft.operators.Staging
+    val (local, rounds) = withRounds(r => Dedup.connectedComponents(ccFixture, "a", "b", onRound = r))
+    assert(rounds == 1, "19 nodes sit far below the bound: the driver-local regime")
+    check(local)
+    val loop = Dedup.connectedComponents(ccFixture, "a", "b", localEdges = 0)
+    check(loop)
+    // the lazy mode keeps the distributed round loop, same rows
+    val (none, noneRounds) = withRounds(r =>
+      Dedup.connectedComponents(ccFixture, "a", "b", staging = Staging.None, onRound = r))
+    assert(noneRounds > 1)
+    assert(sortedRows(none) == sortedRows(local) && sortedRows(loop) == sortedRows(local))
+  }
+
+  test("driver-local CC: the 19-node fixture runs in at most 3 Spark jobs under Staging.Local") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "dedupspec-cc-jobs"
+    val markerGroup = group + "-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `markerGroup` => marker.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "connectedComponents over the 19-node fixture")
+      val got = Dedup.connectedComponents(ccFixture, "a", "b").collect()
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job of the measured group has been counted
+      sc.setJobGroup(markerGroup, "listener drain marker")
+      spark.range(1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(got.length == 19)
+      assert(jobs.get <= 3,
+        s"driver-local CC ran ${jobs.get} jobs: staging + one collect should suffice")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("driver-local CC bound: exactly ccLocalEdges rows stay on the driver, one more runs the round loop") {
+    import graft.operators.Staging
+    // a star of B/2 leaves is exactly B symmetric edge rows; a self-edge
+    // on a separate node adds ONE row (its reverse is itself)
+    val leaves = Dedup.ccLocalEdges / 2
+    val star = spark.range(1, leaves + 1).select(lit(0L).as("a"), col("id").as("b"))
+    val over = star.union(Seq((-7L, -7L)).toDF("a", "b"))
+    val (atBound, r1) = withRounds(r => Dedup.connectedComponents(star, "a", "b", onRound = r))
+    assert(r1 == 1, "exactly B edge rows must take the driver-local regime")
+    val (pastBound, r2) = withRounds(r => Dedup.connectedComponents(over, "a", "b", onRound = r))
+    assert(r2 > 1, "B + 1 edge rows must run the round loop")
+    val (_, r3) = withRounds(r => Dedup.connectedComponents(over, "a", "b", onRound = r,
+      localEdges = Int.MaxValue))
+    assert(r3 > 1, "a caller may lower the bound but never raise it")
+    assert(atBound.count() == leaves + 1 && atBound.filter(col("component") =!= 0L).count() == 0)
+    val viaNone = Dedup.connectedComponents(over, "a", "b", staging = Staging.None)
+    assert(pastBound.exceptAll(viaNone).count() == 0 && viaNone.exceptAll(pastBound).count() == 0)
+    assert(pastBound.filter(col("id") === -7L).select("component").head().getLong(0) == -7L)
+    assert(pastBound.join(atBound, Seq("id", "component"), "left_anti").count() == 1,
+      "past the bound only the self-edge node is added")
+  }
+
+  test("driver-local CC edge cases match the round loop: empty, self-edges, null endpoints") {
+    import graft.operators.Staging
+    def frame(rows: Seq[(java.lang.Long, java.lang.Long)]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map { case (a, b) => org.apache.spark.sql.Row(a, b) }, 2),
+        org.apache.spark.sql.types.StructType.fromDDL("a BIGINT, b BIGINT"))
+    val L = (x: Long) => java.lang.Long.valueOf(x)
+    // (name, edges, rows every regime must return, driver-local?)
+    val cases = Seq(
+      ("empty", Seq.empty[(java.lang.Long, java.lang.Long)], Seq.empty[String], true),
+      ("self-edges", Seq((L(5), L(5)), (L(1), L(2)), (L(9), L(9))),
+        Seq("[1,1]", "[2,1]", "[5,5]", "[9,9]"), true),
+      // null endpoints keep the round loop's output, which the driver
+      // regime therefore defers to: null never carries a label to a
+      // neighbor, but is grouped like an id — and its label rising from
+      // null balances the label-sum fixpoint test after one round here,
+      // so it stops at [null,2] rather than the min adjacent component 1
+      ("null endpoints", Seq((L(1), L(2)), (L(2), null), (null, L(6)), (L(6), L(5)),
+        (null, null), (L(8), L(8))),
+        Seq("[1,1]", "[2,1]", "[5,5]", "[6,5]", "[8,8]", "[null,2]"), false),
+      ("null-only", Seq((null, null)), Seq("[null,null]"), false))
+    cases.foreach { case (name, rows, pinned, driverLocal) =>
+      val (local, rounds) = withRounds(r =>
+        Dedup.connectedComponents(frame(rows), "a", "b", onRound = r))
+      if (driverLocal) assert(rounds == 1, s"$name: driver-local regime expected")
+      val loop = Dedup.connectedComponents(frame(rows), "a", "b", localEdges = 0)
+      val none = Dedup.connectedComponents(frame(rows), "a", "b", staging = Staging.None)
+      assert(sortedRows(loop) == pinned.sorted, s"$name: round loop changed")
+      assert(sortedRows(none) == pinned.sorted, s"$name: Staging.None changed")
+      assert(sortedRows(local) == pinned.sorted, s"$name: default regime differs")
+      // the incremental twin over an empty past takes the same rows, in
+      // both regimes
+      val past = Seq.empty[(Long, Long)].toDF("id", "component")
+      val inc = Dedup.connectedComponentsIncremental(past, frame(rows), "a", "b")
+      val incLoop = Dedup.connectedComponentsIncremental(past, frame(rows), "a", "b",
+        localEdges = 0)
+      assert(sortedRows(inc) == pinned.sorted, s"$name: incremental default regime")
+      assert(sortedRows(incLoop) == pinned.sorted, s"$name: incremental round loop")
+    }
+  }
+
+  test("incremental CC: the bound counts the sub-run's symmetric star + shard edge rows") {
+    val old = (1L until 10L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val frozen = Dedup.connectedComponents(old, "a_id", "b_id")
+    val fresh = Seq((10L, 50L), (60L, 61L)).toDF("a_id", "b_id")
+    val full = Dedup.connectedComponents(old.union(fresh), "a_id", "b_id")
+    // star of {1..10} on label 1: the self-edge 1-1 plus 9 members both
+    // ways (19 rows), and the 2 shard edges both ways (4 rows) = 23 rows:
+    // a bound of 23 fits, 22 does not
+    Seq(23 -> 1, 22 -> 2).foreach { case (bound, minRounds) =>
+      val (inc, rounds) = withRounds(r => Dedup.connectedComponentsIncremental(
+        frozen, fresh, "a_id", "b_id", onRound = r, localEdges = bound))
+      if (minRounds == 1) assert(rounds == 1, s"bound $bound: driver-local expected")
+      else assert(rounds >= minRounds, s"bound $bound: round loop expected")
+      assert(inc.exceptAll(full).count() == 0 && full.exceptAll(inc).count() == 0,
+        s"bound $bound")
+    }
   }
 
   test("connectedComponents closes a 200-node path within the log-round budget") {
     // diameter 199: plain hash-min would need ~199 rounds; path
-    // compression must land well inside maxIter = 12 (2^12 >> 199)
+    // compression must land well inside maxIter = 12 (2^12 >> 199).
+    // 398 edge rows are under the driver-local bound, so the round loop
+    // is forced with localEdges = 0
     val edges = (1000L until 1199L).map(i => (i + 1, i)).toDF("a", "b")
-    val got = Dedup.connectedComponents(edges, "a", "b", maxIter = 12)
+    val got = Dedup.connectedComponents(edges, "a", "b", maxIter = 12, localEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 200)
     assert(got.values.forall(_ == 1000L))
@@ -817,6 +959,15 @@ class DedupSpec extends AnyFunSuite {
     assert(inc.count() == full.count())
     assert(inc.exceptAll(full).count() == 0 && full.exceptAll(inc).count() == 0,
       "incremental labeling diverges from batch-over-union")
+    // the same on the round loop (the graph is under the driver-local
+    // bound, so localEdges = 0 forces it) on both sides
+    val incLoop = Dedup.connectedComponentsIncremental(frozen, fresh, "a_id", "b_id",
+      localEdges = 0)
+    val fullLoop = Dedup.connectedComponents(old.union(fresh), "a_id", "b_id",
+      localEdges = 0)
+    assert(incLoop.exceptAll(fullLoop).count() == 0 && fullLoop.exceptAll(incLoop).count() == 0,
+      "round-loop incremental labeling diverges from round-loop batch-over-union")
+    assert(fullLoop.exceptAll(full).count() == 0 && full.exceptAll(fullLoop).count() == 0)
     // spot-check the semantics: merged components take the global min
     val byId = inc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byId(11L) == 1L, "merged component must relabel to the global min")

@@ -612,11 +612,15 @@ class IngestLoopSpec extends AnyFunSuite {
 
   test("a long CC ingest batch heartbeats per round: the fence staleness clock resets while the batch works") {
     import spark.implicits._
-    // a 1024-node chain: ~10 pointer-jump rounds, each a corpus-touching
-    // Spark job — the long-batch shape whose fence silence the per-round
-    // beacon exists to break (round 13; ingest batches previously beat
-    // only between legs, so a long CC run read as a silent holder)
-    val chain = (0L until 1024L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    // a chain past the driver-local edge bound (Dedup.ccLocalEdges rows,
+    // each undirected edge counting twice), so the batch runs the round
+    // loop: ~16 pointer-jump rounds, each a corpus-touching Spark job —
+    // the long-batch shape whose fence silence the per-round beacon
+    // exists to break (round 13; ingest batches previously beat only
+    // between legs, so a long CC run read as a silent holder)
+    val nodes = Dedup.ccLocalEdges / 2 + 1024L
+    val chain = spark.range(0L, nodes - 1)
+      .select(col("id").as("a_id"), (col("id") + 1L).as("b_id"))
     val p = "ing_hb"
     val fenceFile = java.nio.file.Paths.get(
       graft.operators.Fence.path(spark, p).toUri.getPath)

@@ -637,20 +637,59 @@ class PropertySpec extends AnyFunSuite {
       def df(rows: List[(Long, Long)]) =
         if (rows.isEmpty) List.empty[(Long, Long)].toDF("a_id", "b_id")
         else rows.toDF("a_id", "b_id")
-      val frozen = Dedup.connectedComponents(df(oldE), "a_id", "b_id")
-      val inc = Dedup.connectedComponentsIncremental(frozen, df(newE),
-        "a_id", "b_id")
-      val full = Dedup.connectedComponents(df(es), "a_id", "b_id")
+      // both regimes: the default (these graphs are under the
+      // driver-local edge bound) and the round loop, forced with 0
+      Seq(Dedup.ccLocalEdges, 0).foreach { bound =>
+        val frozen = Dedup.connectedComponents(df(oldE), "a_id", "b_id", localEdges = bound)
+        val inc = Dedup.connectedComponentsIncremental(frozen, df(newE),
+          "a_id", "b_id", localEdges = bound)
+        val full = Dedup.connectedComponents(df(es), "a_id", "b_id", localEdges = bound)
+        val label = s"edges=${es.size} cut=$cut bound=$bound"
+        assert(inc.exceptAll(full).count() == 0 &&
+          full.exceptAll(inc).count() == 0, label)
+        // delta ∪ untouched-frozen must agree too
+        val delta = Dedup.connectedComponentsIncremental(frozen, df(newE),
+          "a_id", "b_id", deltaOnly = true, localEdges = bound)
+        val merged = delta.union(
+          frozen.join(delta.select(col("id")), Seq("id"), "left_anti"))
+        assert(merged.exceptAll(full).count() == 0 &&
+          full.exceptAll(merged).count() == 0, label)
+      }
+    }
+  }
+
+  test("driver-local CC == the distributed round loop for ANY random graph, batch and both incremental modes") {
+    // the union-find regime below the edge bound must be invisible: every
+    // consumer gets the rows the round loop (forced with localEdges = 0)
+    // produces, including wide id ranges, dense cliques and self-loops
+    val graphs: Gen[(List[(Long, Long)], Int)] = for {
+      n <- Gen.chooseNum(2, 60)
+      m <- Gen.chooseNum(1, 90)
+      es <- Gen.listOfN(m, for {
+        a <- Gen.chooseNum(0L, n.toLong)
+        b <- Gen.chooseNum(0L, n.toLong)
+      } yield (a * 1000003L, b * 1000003L))
+      cut <- Gen.chooseNum(0, m)
+    } yield (es, cut)
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
+    cases(graphs, 8).foreach { case (es, cut) =>
+      val (oldE, newE) = es.splitAt(cut)
+      def df(rows: List[(Long, Long)]) =
+        if (rows.isEmpty) List.empty[(Long, Long)].toDF("a_id", "b_id")
+        else rows.toDF("a_id", "b_id")
       val label = s"edges=${es.size} cut=$cut"
-      assert(inc.exceptAll(full).count() == 0 &&
-        full.exceptAll(inc).count() == 0, label)
-      // delta ∪ untouched-frozen must agree too
-      val delta = Dedup.connectedComponentsIncremental(frozen, df(newE),
-        "a_id", "b_id", deltaOnly = true)
-      val merged = delta.union(
-        frozen.join(delta.select(col("id")), Seq("id"), "left_anti"))
-      assert(merged.exceptAll(full).count() == 0 &&
-        full.exceptAll(merged).count() == 0, label)
+      val local = Dedup.connectedComponents(df(es), "a_id", "b_id")
+      val loop = Dedup.connectedComponents(df(es), "a_id", "b_id", localEdges = 0)
+      assert(same(local, loop), s"batch: $label")
+      val frozen = Dedup.connectedComponents(df(oldE), "a_id", "b_id", localEdges = 0)
+      Seq(false, true).foreach { deltaOnly =>
+        val inc = Dedup.connectedComponentsIncremental(frozen, df(newE),
+          "a_id", "b_id", deltaOnly = deltaOnly)
+        val incLoop = Dedup.connectedComponentsIncremental(frozen, df(newE),
+          "a_id", "b_id", deltaOnly = deltaOnly, localEdges = 0)
+        assert(same(inc, incLoop), s"incremental deltaOnly=$deltaOnly: $label")
+      }
     }
   }
 }
