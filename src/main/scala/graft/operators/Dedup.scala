@@ -231,28 +231,16 @@ object Dedup {
     // fenced like every other family-mutating writer so it cannot
     // interleave with a live ingest loop or compaction on the prefix
     Fence.withFence(spark, prefix, "saveMinhashIndex") {
-    // bucket-aligned writes (round 16): exactly `buckets` files per
-    // table instead of tasks x buckets — see Layout.bucketAligned.
-    // The three writes land on DIFFERENT tables — overlap them (round
-    // 17; guide §2.6: each is one write-latency of mostly driver-side
-    // catalog work); all complete before the fence releases.
-    val bandsJoin = FitPool.sideThread {
-      Layout.bucketAligned(idx.bands, buckets, "band", "bucket")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "band", "bucket").sortBy("band", "bucket")
-        .saveAsTable(s"${prefix}_bands")
-    }
-    val metaJoin = FitPool.sideThread {
       import spark.implicits._
-      Seq((idx.idCol, idx.numPerms, idx.rowsPerBand, buckets))
-        .toDF("id_col", "num_perms", "rows_per_band", "buckets")
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-    }
-    try {
-      Layout.bucketAligned(idx.shingles, buckets, idx.idCol)
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, idx.idCol).sortBy(idx.idCol).saveAsTable(s"${prefix}_shingles")
-    } finally FitPool.joinAll(bandsJoin, metaJoin)
+      // bucket-aligned writes (round 16) of three DIFFERENT tables,
+      // overlapped (round 17): see Layout.writeAll; all complete before
+      // the fence releases
+      Layout.writeAll(Seq(
+        Layout.Write(idx.bands, s"${prefix}_bands", Seq("band", "bucket")),
+        Layout.Write(Seq((idx.idCol, idx.numPerms, idx.rowsPerBand, buckets))
+          .toDF("id_col", "num_perms", "rows_per_band", "buckets"), s"${prefix}_meta", Nil),
+        Layout.Write(idx.shingles, s"${prefix}_shingles", Seq(idx.idCol))),
+        buckets, "overwrite")
     }
   }
 
@@ -893,13 +881,12 @@ object Dedup {
                        buckets: Int = 64): Unit = {
     val spark = idx.chunked.sparkSession
     Fence.withFence(spark, prefix, "saveSimhashIndex") {
-    Layout.bucketAligned(idx.chunked, buckets, "chunk", "ckey")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "chunk", "ckey").sortBy("chunk", "ckey")
-      .saveAsTable(s"${prefix}_chunked")
-    import spark.implicits._
-    Seq((idx.idCol, buckets)).toDF("id_col", "buckets")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
+      import spark.implicits._
+      Layout.writeAll(Seq(
+        Layout.Write(Seq((idx.idCol, buckets)).toDF("id_col", "buckets"),
+          s"${prefix}_meta", Nil),
+        Layout.Write(idx.chunked, s"${prefix}_chunked", Seq("chunk", "ckey"))),
+        buckets, "overwrite")
     }
   }
 
@@ -1320,22 +1307,14 @@ object Dedup {
                            buckets: Int = 64): Unit = {
     val spark = idx.posting.sparkSession
     Fence.withFence(spark, prefix, "saveContainmentIndex") {
-    // overlap the three per-table writes: see saveMinhashIndex (round 17)
-    val postingJoin = FitPool.sideThread {
-      Layout.bucketAligned(idx.posting, buckets, "gram")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "gram").sortBy("gram").saveAsTable(s"${prefix}_posting")
-    }
-    val metaJoin = FitPool.sideThread {
       import spark.implicits._
-      Seq((idx.idCol, idx.n, buckets)).toDF("id_col", "n", "buckets")
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-    }
-    try {
-      Layout.bucketAligned(idx.base, buckets, "id")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "id").sortBy("id").saveAsTable(s"${prefix}_base")
-    } finally FitPool.joinAll(postingJoin, metaJoin)
+      // overlap the three per-table writes: see saveMinhashIndex (round 17)
+      Layout.writeAll(Seq(
+        Layout.Write(idx.posting, s"${prefix}_posting", Seq("gram")),
+        Layout.Write(Seq((idx.idCol, idx.n, buckets)).toDF("id_col", "n", "buckets"),
+          s"${prefix}_meta", Nil),
+        Layout.Write(idx.base, s"${prefix}_base", Seq("id"))),
+        buckets, "overwrite")
     }
   }
 

@@ -9,6 +9,12 @@ import org.apache.spark.sql.functions.col
   * pre-partitioned files. (The testdata itself is plain parquet; these
   * helpers are how a deployment would lay out the hot join keys, and
   * LayoutSpec proves the join plan drops its exchanges.)
+  *
+  * This object is also the ONE place a persisted index family's table
+  * write is spelled: every save, ingest append, compaction and repair
+  * goes through [[writeBucketed]] / [[writeAll]], so the bucket
+  * alignment, the `ingest_batch` partitioning and the bucket/sort spec
+  * cannot drift between writers of one family.
   */
 object Layout {
 
@@ -28,8 +34,7 @@ object Layout {
     * tiny-file explosion, and it scales with the frame being written,
     * never the corpus. */
   def bucketAligned(df: DataFrame, buckets: Int, cols: String*): DataFrame =
-    if (!df.sparkSession.conf.get("spark.graft.bucketAlign", "true").toBoolean) df
-    else df.repartition(buckets, cols.map(c => col(s"`$c`")): _*)
+    df.repartition(buckets, cols.map(c => col(s"`$c`")): _*)
 
   /** Write as a bucketed managed table (hash-partitioned into `buckets`
     * files per partition by `key`, sorted within buckets). Joins and
@@ -37,8 +42,47 @@ object Layout {
     * shuffle. */
   def writeBucketed(df: DataFrame, table: String, key: String,
                     buckets: Int): Unit =
-    bucketAligned(df, buckets, key).write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
+    writeBucketed(Write(df, table, Seq(key)), buckets, "overwrite")
+
+  /** One family-table write: `df` saved as the managed parquet table
+    * `table`, hash-bucketed and sorted on `cols` — or unbucketed when
+    * `cols` is empty (a family's one-row meta). */
+  private[graft] case class Write(df: DataFrame, table: String, cols: Seq[String])
+
+  /** The family-table write: bucket-aligned (see [[bucketAligned]]),
+    * parquet, partitioned by `ingest_batch` whenever the frame carries
+    * that column (an ingest-grown family keeps its partitions through
+    * every append, compaction and repair — derived from the input, so
+    * no writer can forget it), then bucketed/sorted and saved with
+    * `mode` ("append" or "overwrite"). */
+  private[graft] def writeBucketed(w: Write, buckets: Int, mode: String): Unit = {
+    val bucketed = w.cols.nonEmpty
+    val df = if (bucketed) bucketAligned(w.df, buckets, w.cols: _*) else w.df
+    val out = df.write.mode(mode).format("parquet")
+    val parts = if (df.columns.contains("ingest_batch")) out.partitionBy("ingest_batch") else out
+    (if (bucketed) parts.bucketBy(buckets, w.cols.head, w.cols.tail: _*)
+      .sortBy(w.cols.head, w.cols.tail: _*) else parts)
+      .saveAsTable(w.table)
+  }
+
+  /** Several writes to DIFFERENT tables of one family, overlapped (round
+    * 17; guide §2.6): each is about one write-latency of mostly
+    * driver-side catalog and commit work (~400 ms per tiny bucketed
+    * append, DdlProbe), so all but the last run on side threads while
+    * the last runs on the caller's thread. `beforeLast` runs on the
+    * caller's thread between launching the side writes and starting
+    * the last one (the ingest loops' fence heartbeat and job label; a
+    * side thread inherits the caller's job description as it was at
+    * launch). Every side write is joined in `finally`, so no write
+    * outlives the call — the fence-window contract. */
+  private[graft] def writeAll(writes: Seq[Write], buckets: Int, mode: String,
+                              beforeLast: () => Unit = () => ()): Unit = {
+    val side = writes.init.map(w => FitPool.sideThread(writeBucketed(w, buckets, mode)))
+    try {
+      beforeLast()
+      writeBucketed(writes.last, buckets, mode)
+    } finally FitPool.joinAll(side: _*)
+  }
 
   /** Co-located equi-join of two same-bucketed tables. */
   def bucketedJoin(spark: SparkSession, left: String, right: String,

@@ -694,24 +694,18 @@ object Similarity {
     // writer fence (round 11): saves overwrite the whole family — fenced
     // like every other family-mutating writer (see graft.operators.Fence)
     Fence.withFence(spark, prefix, "savePqIndex") {
-    // bucket-aligned write (round 16): see Layout.bucketAligned.
-    // meta write overlapped with the codes write (round 17; different
-    // tables, both inside the fence — see Dedup.saveMinhashIndex)
-    val metaJoin = graft.operators.FitPool.sideThread {
       import spark.implicits._
-      Seq((idx.idCol, idx.m, idx.ksub, idx.dim, idx.seed,
-          idx.coarse.l1.map(_.toSeq).toSeq,
-          idx.coarse.l2.map(_.toSeq).toSeq,
-          idx.codebooks.map(_.map(_.toSeq).toSeq).toSeq, buckets, idx.assign))
-        .toDF("id_col", "m", "ksub", "dim", "seed", "coarse_l1", "coarse_l2",
-          "codebooks", "buckets", "assign")
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-    }
-    try {
-      Layout.bucketAligned(idx.codes, buckets, "cell")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "cell").sortBy("cell").saveAsTable(s"${prefix}_codes")
-    } finally graft.operators.FitPool.joinAll(metaJoin)
+      // meta write overlapped with the codes write (round 17; different
+      // tables, both inside the fence — see Layout.writeAll)
+      Layout.writeAll(Seq(
+        Layout.Write(Seq((idx.idCol, idx.m, idx.ksub, idx.dim, idx.seed,
+            idx.coarse.l1.map(_.toSeq).toSeq,
+            idx.coarse.l2.map(_.toSeq).toSeq,
+            idx.codebooks.map(_.map(_.toSeq).toSeq).toSeq, buckets, idx.assign))
+          .toDF("id_col", "m", "ksub", "dim", "seed", "coarse_l1", "coarse_l2",
+            "codebooks", "buckets", "assign"), s"${prefix}_meta", Nil),
+        Layout.Write(idx.codes, s"${prefix}_codes", Seq("cell"))),
+        buckets, "overwrite")
     }
   }
 
@@ -719,8 +713,13 @@ object Similarity {
     * session answers query batches against it without retraining or
     * re-encoding. */
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  prefix: String): PqIndex = {
-    val r = spark.table(s"${prefix}_meta").head()
+                  prefix: String): PqIndex =
+    loadPqIndex(spark, prefix, spark.table(s"${prefix}_meta").head())
+
+  /** [[loadPqIndex]] over an already-read meta row `r`. */
+  private[graft] def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
+                                 prefix: String,
+                                 r: org.apache.spark.sql.Row): PqIndex = {
     // nested rows deserialize as collection.Seq (mutable ArraySeq), not
     // immutable Seq — type the getAs accordingly
     val l1 = r.getAs[scala.collection.Seq[scala.collection.Seq[Double]]](5)
@@ -1070,20 +1069,16 @@ object Similarity {
   def saveSemIndex(idx: SemIndex, prefix: String, buckets: Int = 16): Unit = {
     val spark = idx.docs.sparkSession
     Fence.withFence(spark, prefix, "saveSemIndex") {
-    // meta overlapped with the docs write (round 17; see saveMinhashIndex)
-    val metaJoin = graft.operators.FitPool.sideThread {
       import spark.implicits._
-      Seq((idx.idCol, idx.threshold, idx.seed,
-          idx.coarse.l1.map(_.toSeq).toSeq, idx.coarse.l2.map(_.toSeq).toSeq,
-          buckets))
-        .toDF("id_col", "threshold", "seed", "coarse_l1", "coarse_l2", "buckets")
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-    }
-    try {
-      Layout.bucketAligned(idx.docs, buckets, "cell")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "cell").sortBy("cell").saveAsTable(s"${prefix}_docs")
-    } finally graft.operators.FitPool.joinAll(metaJoin)
+      // meta overlapped with the docs write (round 17; see Layout.writeAll)
+      Layout.writeAll(Seq(
+        Layout.Write(Seq((idx.idCol, idx.threshold, idx.seed,
+            idx.coarse.l1.map(_.toSeq).toSeq, idx.coarse.l2.map(_.toSeq).toSeq,
+            buckets))
+          .toDF("id_col", "threshold", "seed", "coarse_l1", "coarse_l2", "buckets"),
+          s"${prefix}_meta", Nil),
+        Layout.Write(idx.docs, s"${prefix}_docs", Seq("cell"))),
+        buckets, "overwrite")
     }
   }
 
@@ -1091,8 +1086,13 @@ object Similarity {
     * ([[Tombstones]]-deleted ids filtered; internal id column is the
     * normalized `id`). */
   def loadSemIndex(spark: org.apache.spark.sql.SparkSession,
-                   prefix: String): SemIndex = {
-    val r = spark.table(s"${prefix}_meta").head()
+                   prefix: String): SemIndex =
+    loadSemIndex(spark, prefix, spark.table(s"${prefix}_meta").head())
+
+  /** [[loadSemIndex]] over an already-read meta row `r`. */
+  private[graft] def loadSemIndex(spark: org.apache.spark.sql.SparkSession,
+                                  prefix: String,
+                                  r: org.apache.spark.sql.Row): SemIndex = {
     val l1 = r.getAs[scala.collection.Seq[scala.collection.Seq[Double]]](3)
       .map(_.toArray).toArray
     val l2 = r.getAs[scala.collection.Seq[scala.collection.Seq[Double]]](4)
@@ -1297,24 +1297,15 @@ object Similarity {
                      buckets: Int = 64): Unit = {
     val spark = idx.hashed.sparkSession
     Fence.withFence(spark, prefix, "saveEmbedIndex") {
-    // overlap the three per-table writes: see saveMinhashIndex (round 17)
-    val hashedJoin = graft.operators.FitPool.sideThread {
-      Layout.bucketAligned(idx.hashed, buckets, "t", "h")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "t", "h").sortBy("t", "h")
-        .saveAsTable(s"${prefix}_hashed")
-    }
-    val metaJoin = graft.operators.FitPool.sideThread {
       import spark.implicits._
-      Seq((idx.idCol, idx.bitsPerTable, idx.numTables, idx.seed, idx.dim, buckets))
-        .toDF("id_col", "bits_per_table", "num_tables", "seed", "dim", "buckets")
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-    }
-    try {
-      Layout.bucketAligned(idx.vecs, buckets, "id")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "id").sortBy("id").saveAsTable(s"${prefix}_vecs")
-    } finally graft.operators.FitPool.joinAll(hashedJoin, metaJoin)
+      // overlap the three per-table writes: see Layout.writeAll (round 17)
+      Layout.writeAll(Seq(
+        Layout.Write(idx.hashed, s"${prefix}_hashed", Seq("t", "h")),
+        Layout.Write(Seq((idx.idCol, idx.bitsPerTable, idx.numTables, idx.seed, idx.dim, buckets))
+          .toDF("id_col", "bits_per_table", "num_tables", "seed", "dim", "buckets"),
+          s"${prefix}_meta", Nil),
+        Layout.Write(idx.vecs, s"${prefix}_vecs", Seq("id"))),
+        buckets, "overwrite")
     }
   }
 

@@ -84,10 +84,6 @@ object Staging {
     * over sources) are probed, where `toRdd` is pure metadata. */
   def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     if (df.isStreaming) return df // no partition probe on streams
-    // deployment knob (and A/B seam): spark.graft.spread=false restores
-    // the source partitioning everywhere
-    if (!df.sparkSession.conf.get("spark.graft.spread", "true").toBoolean)
-      return df
     import org.apache.spark.sql.catalyst.plans.logical._
     val shuffleDerived = df.queryExecution.optimizedPlan.exists {
       case _: Join | _: Aggregate | _: Window | _: Sort => true

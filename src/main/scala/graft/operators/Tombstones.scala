@@ -325,15 +325,29 @@ object Tombstones {
   /** Rewrite one bucketed family table minus the tombstoned rows,
     * preserving its bucket/sort layout (and the `ingest_batch`
     * partitioning if the table grew through an [[graft.streaming.IngestLoop]]).
+    * `buckets` must match the family's original bucket count — the
+    * layout is the join-co-location contract, so compaction must not
+    * change it. The rewrite itself is [[rewriteThroughTemp]]; re-running
+    * over already-filtered survivors is a no-op filter (tombstones are
+    * only cleared after every table rewrote), so its crash recovery is
+    * never a correctness risk here. */
+  private def rewriteMinus(spark: SparkSession, tbl: String, idColInTbl: String,
+                           prefix: String, buckets: Int,
+                           bucketCols: Seq[String]): Unit =
+    rewriteThroughTemp(spark, tbl, buckets, bucketCols, () => ())(
+      filterForCompact(spark.table(tbl), idColInTbl, prefix))
+
+  /** Replace a bucketed family table's content with `survivors`, the
+    * crash-safe way every family rewrite pass shares (tombstone
+    * compaction, and the components family's compact/repair fold).
     * Two disk-to-disk writes: survivors land in a temp table first
     * (fresh lineage), then overwrite the original from it — the shape
     * that holds at corpus scale, where an eager checkpoint of the whole
     * table would pin it in executor storage, and an ALTER-RENAME swap
     * of a partitioned managed table is not metastore-portable (this
     * catalog's rename leaves partition locations at the old path).
-    * `buckets` must match the family's original bucket count — the
-    * layout is the join-co-location contract, so compaction must not
-    * change it.
+    * `between` runs after the temp write (the fence heartbeat of a
+    * long pass).
     *
     * CRASH RECOVERY (round 10): the overwrite of `tbl` is drop+recreate,
     * so a crash between the two writes can leave the live table missing
@@ -343,28 +357,21 @@ object Tombstones {
     * the live table MISSING restores the live table from it; a leftover
     * temp with the live table PRESENT (crash before or during the temp
     * write of a later run) is stale and dropped. Either way the pass
-    * then re-runs normally — tombstones are only cleared after every
-    * table rewrote, so a re-run over already-filtered survivors is a
-    * no-op filter, not a correctness risk. */
-  private def rewriteMinus(spark: SparkSession, tbl: String, idColInTbl: String,
-                           prefix: String, buckets: Int,
-                           bucketCols: Seq[String]): Unit = {
+    * then re-runs normally; `survivors` is evaluated only after the
+    * recovery, so it always reads the restored live table. */
+  private[graft] def rewriteThroughTemp(spark: SparkSession, tbl: String,
+                                        buckets: Int, bucketCols: Seq[String],
+                                        between: () => Unit)(
+                                        survivors: => org.apache.spark.sql.DataFrame): Unit = {
     val tmp = tbl + "__compact"
-    def write(df: org.apache.spark.sql.DataFrame, to: String): Unit = {
-      // bucket-aligned (round 16): see Layout.bucketAligned
-      val w0 = Layout.bucketAligned(df, buckets, bucketCols: _*)
-        .write.mode("overwrite").format("parquet")
-      val w1 = if (df.columns.contains("ingest_batch")) w0.partitionBy("ingest_batch") else w0
-      w1.bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-        .saveAsTable(to)
-    }
+    def write(df: org.apache.spark.sql.DataFrame, to: String): Unit =
+      Layout.writeBucketed(Layout.Write(df, to, bucketCols), buckets, "overwrite")
     if (spark.catalog.tableExists(tmp)) {
       if (!spark.catalog.tableExists(tbl)) write(spark.table(tmp), tbl)
       spark.sql(s"DROP TABLE $tmp")
     }
-    val src = spark.table(tbl)
-    write(filterForCompact(src, idColInTbl, prefix), tmp)
+    write(survivors, tmp)
+    between()
     write(spark.table(tmp), tbl)
     spark.sql(s"DROP TABLE $tmp")
   }

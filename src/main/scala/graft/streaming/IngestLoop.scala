@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.operators.{Dedup, Fence, Layout, Similarity, Tombstones}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -28,9 +28,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * output for batch N overwrites its own `ingest_batch=N` directory, and
   * the corpus view for batch N reads partitions `ingest_batch < N` — so
   * a retry that already half-appended its own partition neither sees
-  * itself as corpus nor double-emits pairs; [[ingestMinhashBatch]] also
-  * drops the batch's own index partition before re-appending, making the
-  * fold itself idempotent (retry-replay pinned in IngestLoopSpec).
+  * itself as corpus nor double-emits pairs; the batch commit
+  * ([[commitBatch]], shared by every family) also drops the batch's own
+  * index partition before re-appending, making the fold itself
+  * idempotent (retry-replay pinned in IngestLoopSpec).
   *
   * Pair-set contract (the reason this loop is trustworthy): band-bucket
   * collision is a pairwise predicate, so the UNION of every batch's pair
@@ -75,7 +76,14 @@ object IngestLoop {
     * COMPENSATE for (they ran while this batch was an unreplayed
     * orphan, so they could not have mined against it). */
   private case class GlobalBid(gbid: Long, missingBelow: Seq[Long],
-                               compensate: Seq[Long], created: Boolean)
+                               compensate: Seq[Long]) {
+    /** This batch's corpus view of a family table: see [[multiCorpusFilter]]. */
+    def corpus: Column = multiCorpusFilter(gbid, missingBelow, compensate)
+  }
+
+  /** A single-writer batch's identity: its own checkpoint-local bid,
+    * reading every partition strictly below it. */
+  private def before(bid: Long): GlobalBid = GlobalBid(bid, Seq.empty, Seq.empty)
 
   /** Resolve (loop_id, local_bid) → global partition id under the
     * family fence (round 13 — TRUE multi-writer ingestion, SURVEY §10's
@@ -115,7 +123,7 @@ object IngestLoop {
     // metastore) must die before the append-create both to avoid the
     // LOCATION_ALREADY_EXISTS refusal and because adopting its rows
     // would be the stale-mapping corruption the round-13 advisory named
-    graft.operators.Tombstones.clearOrphanLocation(spark, t)
+    Tombstones.clearOrphanLocation(spark, t)
     val commits =
       if (spark.catalog.tableExists(t)) Some(spark.table(t)) else None
     val existing = commits.flatMap(
@@ -136,7 +144,7 @@ object IngestLoop {
             "more than 1024 batches committed while it was an orphan; " +
             "rebuild the family (this means the loop was dead for its " +
             "entire ingest history).")
-        GlobalBid(g, missing, comp, created = false)
+        GlobalBid(g, missing, comp)
       case None =>
         val next = commits
           .map(_.agg(coalesce(max("global_bid"), lit(-1L))).head.getLong(0) + 1L)
@@ -163,7 +171,7 @@ object IngestLoop {
         Seq((loopId, localBid, next, missing))
           .toDF("loop_id", "local_bid", "global_bid", "missing_below")
           .write.mode("append").format("parquet").saveAsTable(t)
-        GlobalBid(next, missing, Seq.empty, created = true)
+        GlobalBid(next, missing, Seq.empty)
     }
   }
 
@@ -172,7 +180,7 @@ object IngestLoop {
     * see [[resolveGlobalBid]]. Collapses to plain `< gbid` when both
     * sets are empty (the no-crash fast path). */
   private def multiCorpusFilter(gbid: Long, missing: Seq[Long],
-                                comp: Seq[Long]): org.apache.spark.sql.Column = {
+                                comp: Seq[Long]): Column = {
     val below =
       if (missing.isEmpty) col("ingest_batch") < gbid
       else col("ingest_batch") < gbid && !col("ingest_batch").isin(missing: _*)
@@ -218,10 +226,9 @@ object IngestLoop {
     * partitions are keyed on that loop's checkpoint-local bids, which a
     * global assignment would collide with — there is deliberately no
     * in-place conversion (rebuild, or keep the single loop). */
-  private def bindMulti(spark: SparkSession, prefix: String): Unit = {
-    val meta = spark.table(s"${prefix}_meta")
+  private def bindMulti(prefix: String, meta: Row): Unit = {
     val recorded =
-      if (meta.columns.contains("loop_id")) meta.head().getAs[String]("loop_id")
+      if (meta.schema.fieldNames.contains("loop_id")) meta.getAs[String]("loop_id")
       else "<none>"
     require(recorded == MultiWriterMarker,
       s"index family '$prefix' is bound to single-writer loop '$recorded': " +
@@ -237,7 +244,7 @@ object IngestLoop {
     * fresh checkpoint restarts bids at 0 and its retries would clobber
     * the family's existing partitions. */
   def rebind(spark: SparkSession, prefix: String, newLoopId: String): Unit =
-    graft.operators.Fence.withFence(spark, prefix, "rebindLoop") {
+    Fence.withFence(spark, prefix, "rebindLoop") {
       spark.table(s"${prefix}_meta").localCheckpoint(true)
         .withColumn("loop_id", lit(normLoopId(newLoopId)))
         .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
@@ -321,184 +328,166 @@ object IngestLoop {
     }
   }
 
-  /** The persisted corpus index as of batches STRICTLY BEFORE `bid` —
-    * partition-pruned reads of the append-only tables, so a retried
-    * batch never sees its own half-written fold. */
-  def minhashCorpusBefore(spark: SparkSession, prefix: String,
-                          bid: Long): Dedup.MinHashIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
-    val idCol = m.getString(0)
-    // tombstoned docs leave the corpus view immediately — same contract
-    // as the batch load path (Dedup.loadMinhashIndex)
-    def live(t: String) = graft.operators.Tombstones.filter(
-      spark.table(s"${prefix}_$t").filter(col("ingest_batch") < bid)
-        .drop("ingest_batch"), idCol, prefix)
-    Dedup.MinHashIndex(idCol, live("shingles"), live("bands"),
-      m.getInt(1), m.getInt(2))
+  /** One batch of a family loop in flight: the family prefix, the fence
+    * owner (`"<loop>Batch bid=N"`, the name a held fence reports) and
+    * the batch's job labels. */
+  private final class Run(val spark: SparkSession, val prefix: String,
+                          val owner: String) {
+    /** Label this thread's next Spark jobs `"<owner>: <phase>"` (guide
+      * §1.5): the phases of a batch — shard index, append `<table>`,
+      * mine, maintain check — are readable in the UI and in JobProfile
+      * without a debugger. */
+    def label(phase: String): Unit =
+      spark.sparkContext.setJobDescription(s"$owner: $phase")
   }
 
-  /** The multi-writer MinHash corpus view for a resolved batch:
-    * partitions strictly below its global id minus its frozen missing
-    * set, plus its compensation set — [[resolveGlobalBid]]'s read
-    * contract. Tombstone-filtered like [[minhashCorpusBefore]]. */
-  private def minhashCorpusMulti(spark: SparkSession, prefix: String,
-                                 g: GlobalBid): Dedup.MinHashIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
-    val idCol = m.getString(0)
-    def live(t: String) = graft.operators.Tombstones.filter(
-      spark.table(s"${prefix}_$t")
-        .filter(multiCorpusFilter(g.gbid, g.missingBelow, g.compensate))
-        .drop("ingest_batch"), idCol, prefix)
-    Dedup.MinHashIndex(idCol, live("shingles"), live("bands"),
-      m.getInt(1), m.getInt(2))
-  }
-
-  /** One micro-batch of the MinHash ingestion loop (exposed separately so
-    * a retry can be replayed deterministically — and tested).
-    *
-    * `multiWriter = true` (round 13) opts the family into PARALLEL
-    * loops on one prefix: the batch's partition id is resolved through
-    * the fenced `<prefix>_commits` mapping ([[resolveGlobalBid]] — a
-    * replay reuses its mapping, so drop-own-partition can never clobber
-    * another loop's partition), the corpus view reads the mapping's
-    * frozen below/compensation sets, and the family meta records the
-    * multi-writer marker instead of an owning loop. The pair-set
-    * contract survives verbatim: each cross pair is emitted exactly
-    * once, by the later GLOBAL partition's batch (or by an orphan's
-    * replay when the later batch provably never saw it). Concurrent
-    * loops should set `spark.graft.fence.waitMs` so an arriving batch
-    * WAITS for the fence instead of dying with its streaming query —
-    * serialization costs seconds of latency, never an append. The
-    * default stays single-writer: one loop per family, enforced. */
-  def ingestMinhashBatch(batch: DataFrame, bid: Long, idCol: String,
-                         textCol: String, prefix: String, pairsDir: String,
-                         threshold: Double, numPerms: Int, rowsPerBand: Int,
-                         buckets: Int, loopId: String = "",
-                         multiWriter: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val lid = normLoopId(loopId)
-    val owner = s"ingestMinhashBatch bid=$bid"
-    // spread = false (round 16): a micro-batch is shard-sized — the
-    // 32-way exchange + checkpoint cost more than the signature kernel
-    // saves (see Dedup.minhashIndex; measured on the simhash twin)
-    val shard = Dedup.minhashIndex(batch, idCol, textCol, numPerms, rowsPerBand,
-      spread = false)
-    // Fence window 1 (round 14 — narrowed from the whole batch): bid
-    // resolution + the batch-local APPEND legs only. The expensive leg
-    // — pair mining against the corpus-sized index — runs OUTSIDE the
-    // fence (below), so concurrent loops on ONE family overlap their
-    // mining instead of serializing batch-by-batch. Soundness:
-    //  - appending the data partition INSIDE the resolve window keeps
-    //    assign→append atomic, so "assigned-but-absent" stays a
-    //    crash-only state and resolveGlobalBid's frozen missing/
-    //    compensation exactly-once argument carries over unchanged;
-    //  - every concurrent batch's corpus view reads partitions
-    //    STRICTLY BELOW its own global bid, which are already fully
-    //    appended by this atomicity — append-only and immutable
-    //    outside the compact*/repair* rewrite passes;
-    //  - those rewrite passes are exactly what the family GENERATION
-    //    (Tombstones.generation, bumped fence-held at rewrite entry)
-    //    tracks: the unfenced mine snapshots it here and re-checks it
-    //    after publishing (mineAndPublish) — a change proves a rewrite
-    //    raced the corpus reads and the mine re-runs against the
-    //    settled layout. Compaction is rare; the retry is cheap and
-    //    exact.
-    val (pid, mkCorpus, gen0) =
-      graft.operators.Fence.withFence(spark, prefix, owner) {
-    val exists = familyExists(spark, prefix, Seq("bands", "shingles", "meta"))
-    // multi-writer eligibility is checked BEFORE the commits mapping is
-    // touched: resolveGlobalBid creates and appends to <prefix>_commits,
-    // and a mistaken multiWriter=true batch against a single-writer
-    // family must be refused without permanently recording a bogus
-    // global-bid mapping (which would corrupt accounting if the family
-    // were later rebuilt under the same prefix without dropping it)
-    if (exists && multiWriter) bindMulti(spark, prefix)
-    // the partition id this batch owns: checkpoint-local by default,
-    // global via the fenced commits mapping under multi-writer
-    val resolved =
-      if (multiWriter) resolveGlobalBid(spark, prefix, lid, bid, s"${prefix}_bands")
-      else GlobalBid(bid, Seq.empty, Seq.empty, created = !exists)
-    val pid = resolved.gbid
-    // a BUILDER, not a captured plan: a re-mine after a racing
-    // compaction must re-derive the view from the catalog — the
-    // pre-compaction plan pins dropped files (e.g. the cleared
-    // tombstone table) and would fail or read torn state
-    val mkCorpus: () => Dedup.MinHashIndex =
-      if (!exists) () => Dedup.MinHashIndex(idCol, shard.shingles.limit(0),
-        shard.bands.limit(0), numPerms, rowsPerBand)
-      else if (multiWriter) () => minhashCorpusMulti(spark, prefix, resolved)
-      else () => minhashCorpusBefore(spark, prefix, pid)
-    val corpus = mkCorpus()
-    require(corpus.numPerms == numPerms && corpus.rowsPerBand == rowsPerBand,
-      s"persisted index family (${corpus.numPerms}, ${corpus.rowsPerBand}) != " +
-        s"loop family ($numPerms, $rowsPerBand)")
-    if (exists) {
-      val meta = readMeta(spark, prefix)
-      requireBucketAgreement(prefix, meta, buckets)
-      if (!multiWriter) bindLoop(spark, prefix, meta, lid) // bindMulti ran pre-resolve
-    }
-    // fold the shard in: append the batch's partition only; a retry
-    // first drops its own half-written partition (corpus partitions
-    // are untouched either way; under multi-writer the replayed
-    // mapping pins pid, so the drop can never hit a foreign partition).
-    // A drop that actually removes files is a REWRITE of an existing
-    // partition (a crash replay), which a concurrent unfenced miner of
-    // another batch could be mid-scan over — bump the generation so its
-    // check re-mines instead of accepting a torn (partially re-listed)
-    // read of this partition.
-    if (exists) {
-      // probe BOTH tables (round 17): the concurrent appends below mean
-      // a crash window can leave either partition present alone — see
-      // ingestContainmentBatch
-      val replayed = partitionExists(spark, s"${prefix}_bands", pid) ||
-        partitionExists(spark, s"${prefix}_shingles", pid)
-      Seq("bands", "shingles").foreach { t =>
-        spark.sql(s"ALTER TABLE ${prefix}_$t DROP IF EXISTS PARTITION (ingest_batch=$pid)")
-      }
-      if (replayed) graft.operators.Tombstones.bumpGeneration(spark, prefix)
-    }
-    // overlap the two per-table appends (round 17; guide §2.6 — each is
-    // ~one write-latency of mostly driver-side catalog work); both
-    // complete before the fence releases
-    val bandsJoin = graft.operators.FitPool.sideThread {
-      graft.operators.Layout.bucketAligned(shard.bands, buckets, "band", "bucket")
-        .withColumn("ingest_batch", lit(pid))
-        .write.mode("append").format("parquet")
-        .partitionBy("ingest_batch")
-        .bucketBy(buckets, "band", "bucket").sortBy("band", "bucket")
-        .saveAsTable(s"${prefix}_bands")
-    }
-    // between-append liveness beacon (see Fence.heartbeat): a large
-    // batch reads as alive, not crashed, to an operator eyeing
-    // forceRelease
-    graft.operators.Fence.heartbeat(spark, prefix, owner)
+  /** Run one batch of a family loop: `body` (the shard, the
+    * [[commitBatch]] and, for the pairwise families, the unfenced mine),
+    * then the auto-maintenance check ([[maybeMaintain]]). The caller's
+    * job description is restored on EVERY exit — a refused batch (a pair
+    * budget, a loop-binding refusal) must not leave its phase label on
+    * the calling thread, and a batch nested in another's mine (the
+    * group-sized containment loop feeding [[ingestCcBatch]]) hands the
+    * outer batch its own label back. */
+  private def runBatch(spark: SparkSession, prefix: String, owner: String)(
+      body: Run => Unit): Unit = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    val run = new Run(spark, prefix, owner)
     try {
-      graft.operators.Layout.bucketAligned(shard.shingles, buckets, idCol)
-        .withColumn("ingest_batch", lit(pid))
-        .write.mode("append").format("parquet")
-        .partitionBy("ingest_batch")
-        .bucketBy(buckets, idCol).sortBy(idCol)
-        .saveAsTable(s"${prefix}_shingles")
-    } finally graft.operators.FitPool.joinAll(bandsJoin)
-    if (!exists) {
-      import spark.implicits._
-      Seq((idCol, numPerms, rowsPerBand, buckets))
-        .toDF("id_col", "num_perms", "rows_per_band", "buckets")
-        .withColumn("loop_id",
-          lit(if (multiWriter) MultiWriterMarker else lid))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-    }
-    (pid, mkCorpus, graft.operators.Tombstones.generation(spark, prefix))
-      } // fence released — the corpus-sized leg below runs unfenced
-    // pairs touching this batch, written to the batch's OWN partition
-    // directory (overwrite => retry- and re-mine-idempotent); the
-    // corpus view is re-derived per attempt (see mkCorpus above)
-    mineAndPublish(spark, prefix, owner, gen0) {
-      Dedup.minhashLshPairsIncremental(shard, mkCorpus(), threshold)
-        .write.mode("overwrite").parquet(s"$pairsDir/ingest_batch=$pid")
-    }
-    maybeMaintain(spark, prefix)
+      run.label("shard index")
+      body(run)
+      run.label("maintain check")
+      maybeMaintain(spark, prefix)
+    } finally sc.setJobDescription(prev)
   }
+
+  /** A batch inside its commit: whether the family existed when it
+    * arrived, the family's one-row meta (read once under the fence;
+    * null on creation) and the batch's resolved partition identity. */
+  private case class Batch(exists: Boolean, meta: Row, g: GlobalBid) {
+    def pid: Long = g.gbid
+  }
+
+  /** What a batch folds into its family: one frame per data table, in
+    * the family's table order, and the meta row a CREATING batch writes
+    * (the family's own columns; the commit stamps `loop_id`). */
+  private case class Fold(frames: Seq[DataFrame], meta: Option[DataFrame])
+
+  /** THE batch commit — one fenced sequence shared by every family loop,
+    * so the fold's safety properties cannot drift between families.
+    * `tables` lists the family's data tables with their bucket columns;
+    * `view` builds (and checks) the family's corpus view of the batch;
+    * `fold` is the family's kernel, computed inside the fence. In order:
+    *
+    *  1. [[familyExists]] decides existence on ALL of the family's
+    *     tables (the torn-first-batch and compaction-leftover refusals);
+    *  2. the meta row is read ONCE and handed to every check and view
+    *     below (each read is a single-task Spark job);
+    *  3. multi-writer eligibility ([[bindMulti]]) is checked BEFORE the
+    *     commits mapping is touched: [[resolveGlobalBid]] creates and
+    *     appends to `<prefix>_commits`, and a mistaken multiWriter=true
+    *     batch against a single-writer family must be refused without
+    *     permanently recording a bogus global-bid mapping (which would
+    *     corrupt accounting if the family were later rebuilt under the
+    *     same prefix without dropping it);
+    *  4. the partition id this batch owns is resolved: checkpoint-local
+    *     by default, global via the fenced commits mapping under
+    *     multi-writer (resolution runs only there);
+    *  5. the family's view and parameter checks, then bucket agreement
+    *     and the single-writer loop binding ([[bindLoop]]);
+    *  6. the replay probe, drop and generation bump: a retry first drops
+    *     its own half-written partition (corpus partitions are untouched
+    *     either way; under multi-writer the replayed mapping pins the
+    *     id, so the drop can never hit a foreign partition). A drop that
+    *     actually removes files is a REWRITE of an existing partition (a
+    *     crash replay), which a concurrent unfenced miner of another
+    *     batch could be mid-scan over — so the generation is bumped and
+    *     its check re-mines instead of accepting a torn (partially
+    *     re-listed) read of this partition. EVERY data table is probed
+    *     (round 17): the overlapped appends below mean a crash window
+    *     can leave either partition present alone;
+    *  7. the family kernel (PQ encode, SemDeDup decide and the
+    *     components delta compute INSIDE the fence; the pairwise
+    *     families' shards were built before it);
+    *  8. the appends, overlapped on side threads ([[Layout.writeAll]]),
+    *     with the between-append liveness beacon ([[Fence.heartbeat]]: a
+    *     large batch reads as alive, not crashed, to an operator eyeing
+    *     forceRelease); all complete before the fence releases, so
+    *     assign→append stays atomic;
+    *  9. the meta row on creation, stamped with the owning loop id or
+    *     [[MultiWriterMarker]] — written LAST, after the data tables;
+    *  10. the generation snapshot the unfenced mine re-checks.
+    *
+    * Fence window (round 14 — narrowed from the whole batch): bid
+    * resolution + the batch-local APPEND legs only. The pairwise
+    * families' expensive leg — pair mining against the corpus-sized
+    * index — runs OUTSIDE the fence ([[mineAndPublish]]), so concurrent
+    * loops on ONE family overlap their mining instead of serializing
+    * batch-by-batch. Soundness:
+    *  - appending the data partition INSIDE the resolve window keeps
+    *    assign→append atomic, so "assigned-but-absent" stays a
+    *    crash-only state and resolveGlobalBid's frozen missing/
+    *    compensation exactly-once argument carries over unchanged;
+    *  - every concurrent batch's corpus view reads partitions
+    *    STRICTLY BELOW its own global bid, which are already fully
+    *    appended by this atomicity — append-only and immutable
+    *    outside the compact* and repair* rewrite passes;
+    *  - those rewrite passes are exactly what the family GENERATION
+    *    (Tombstones.generation, bumped fence-held at rewrite entry)
+    *    tracks: the unfenced mine snapshots it here and re-checks it
+    *    after publishing (mineAndPublish) — a change proves a rewrite
+    *    raced the corpus reads and the mine re-runs against the
+    *    settled layout. Compaction is rare; the retry is cheap and
+    *    exact. */
+  private def commitBatch[V](run: Run, bid: Long, loopId: String,
+                             multiWriter: Boolean, buckets: Int,
+                             tables: Seq[(String, Seq[String])])(
+                             view: Batch => V)(fold: (Batch, V) => Fold): (Batch, Long) = {
+    import run.{owner, prefix, spark}
+    val lid = normLoopId(loopId)
+    Fence.withFence(spark, prefix, owner) {
+      val exists = familyExists(spark, prefix, tables.map(_._1) :+ "meta")
+      val meta = if (exists) readMeta(spark, prefix) else null
+      if (exists && multiWriter) bindMulti(prefix, meta)
+      val b = Batch(exists, meta,
+        if (multiWriter) resolveGlobalBid(spark, prefix, lid, bid, s"${prefix}_${tables.head._1}")
+        else before(bid))
+      val v = view(b)
+      if (exists) {
+        requireBucketAgreement(prefix, meta, buckets)
+        if (!multiWriter) bindLoop(spark, prefix, meta, lid) // bindMulti ran pre-resolve
+        val replayed = tables.exists(t => partitionExists(spark, s"${prefix}_${t._1}", b.pid))
+        tables.foreach { t =>
+          spark.sql(s"ALTER TABLE ${prefix}_${t._1} DROP IF EXISTS PARTITION (ingest_batch=${b.pid})")
+        }
+        if (replayed) Tombstones.bumpGeneration(spark, prefix)
+      }
+      val f = fold(b, v)
+      run.label(s"append ${tables.head._1}")
+      Layout.writeAll(tables.zip(f.frames).map { case ((t, cols), df) =>
+        Layout.Write(df.withColumn("ingest_batch", lit(b.pid)), s"${prefix}_$t", cols)
+      }, buckets, "append", () => {
+        Fence.heartbeat(spark, prefix, owner)
+        run.label(s"append ${tables.last._1}")
+      })
+      if (!exists)
+        Layout.writeBucketed(Layout.Write(f.meta.get.withColumn("loop_id",
+          lit(if (multiWriter) MultiWriterMarker else lid)), s"${prefix}_meta", Nil),
+          buckets, "overwrite")
+      (b, Tombstones.generation(spark, prefix))
+    }
+  }
+
+  /** Family table `t` as a batch's corpus view reads it: the partitions
+    * `g` may see ([[multiCorpusFilter]] — plain `< bid` for a
+    * single-writer batch), so a retried batch never sees its own
+    * half-written fold, with tombstoned ids gone — the same contract as
+    * the family's batch load path. */
+  private def live(spark: SparkSession, prefix: String, t: String,
+                   idCol: String, g: GlobalBid): DataFrame =
+    Tombstones.filter(spark.table(s"${prefix}_$t").filter(g.corpus)
+      .drop("ingest_batch"), idCol, prefix)
 
   /** Run the unfenced mining leg, then verify under a brief fence
     * re-acquire that the family's layout [[graft.operators.Tombstones.generation]]
@@ -517,6 +506,15 @@ object IngestLoop {
     * compacting continuously enough to starve this loop is an
     * operational fault worth a loud stop.
     *
+    * The pairs touching the batch go to the batch's OWN partition
+    * directory (overwrite => retry- and re-mine-idempotent), and `mine`
+    * re-derives the corpus view per attempt from the fence-read meta
+    * row — a BUILDER, not a captured plan: a re-mine after a racing
+    * compaction must re-derive the view from the catalog, since the
+    * pre-compaction plan pins dropped files (e.g. the cleared tombstone
+    * table) and would fail or read torn state. The row itself stays
+    * valid: a family's id column and kernel parameters never change.
+    *
     * Crash accounting (order flipped round 14: data lands before
     * pairs): a batch that dies between the append window and the pair
     * publish leaves its partition in the index WITHOUT its pairs —
@@ -526,8 +524,9 @@ object IngestLoop {
     * the same eventual consistency as before the flip, mirrored:
     * pre-round-14 a crashed batch could leave pairs whose partitions
     * never landed. */
-  private def mineAndPublish(spark: SparkSession, prefix: String,
-                             owner: String, gen0: Long)(mine: => Unit): Unit = {
+  private def mineAndPublish(run: Run, gen0: Long)(mine: => Unit): Unit = {
+    import run.{owner, prefix, spark}
+    run.label("mine")
     var gen = gen0
     var attempts = 0
     var settled = false
@@ -546,7 +545,7 @@ object IngestLoop {
       // visible here means its rewrite had not begun when the mine's
       // reads finished, so the published pairs are consistent either
       // way. Pure FS metadata, no job, no fence round-trip per batch.
-      val now = graft.operators.Tombstones.generation(spark, prefix)
+      val now = Tombstones.generation(spark, prefix)
       if (now == gen) settled = true else gen = now
     }
     mineAttempts.put(prefix, attempts)
@@ -590,15 +589,15 @@ object IngestLoop {
       // ONE compute so racing loops on a family neither double-trigger
       // nor skip a pass (round-15 advisory): the loop whose increment
       // crosses `every` observes the reset-to-0 result and fires.
-      val key = spark.conf.get("spark.sql.warehouse.dir", "") + " " + prefix
+      val key = spark.conf.get("spark.sql.warehouse.dir", "") + "\u0000" + prefix
       val fired = batchesSinceMaintain.compute(key, (_, v) => {
         val n = (if (v == null) 0 else v.intValue) + 1
         Int.box(if (n >= every) 0 else n)
       })
       if (fired.intValue == 0) {
         val maxT = spark.conf.getOption("spark.graft.maintain.maxTombstones")
-          .map(_.toLong).getOrElse(graft.operators.Tombstones.defaultMaxTombstones)
-        try graft.operators.Tombstones.maintain(spark, prefix, f.toDouble, maxT)
+          .map(_.toLong).getOrElse(Tombstones.defaultMaxTombstones)
+        try Tombstones.maintain(spark, prefix, f.toDouble, maxT)
         catch { case _: graft.operators.FenceHeldException => () }
       }
     }
@@ -633,6 +632,86 @@ object IngestLoop {
   private[graft] def lastMineAttempts(prefix: String): Int =
     mineAttempts.getOrDefault(prefix, 0)
 
+  /** Drive a streaming source through one family's batch function as a
+    * checkpointed `foreachBatch` query; the checkpoint location doubles
+    * as the loop id the family binds to. */
+  private def drive(src: DataFrame, checkpointDir: String, trigger: Trigger)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery =
+    src.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch(batch)
+      .start()
+
+  /** The persisted corpus index as of batches STRICTLY BEFORE `bid` —
+    * partition-pruned reads of the append-only tables, so a retried
+    * batch never sees its own half-written fold. */
+  def minhashCorpusBefore(spark: SparkSession, prefix: String,
+                          bid: Long): Dedup.MinHashIndex =
+    minhashView(spark, prefix, readMeta(spark, prefix), before(bid))
+
+  /** The MinHash corpus view of batch `g` over meta row `m`. Under
+    * multi-writer it reads partitions strictly below the global id minus
+    * the frozen missing set, plus the compensation set —
+    * [[resolveGlobalBid]]'s read contract. Tombstoned docs leave the
+    * view immediately — same contract as the batch load path
+    * (Dedup.loadMinhashIndex). */
+  private def minhashView(spark: SparkSession, prefix: String, m: Row,
+                          g: GlobalBid): Dedup.MinHashIndex = {
+    val idCol = m.getString(0)
+    Dedup.MinHashIndex(idCol, live(spark, prefix, "shingles", idCol, g),
+      live(spark, prefix, "bands", idCol, g), m.getInt(1), m.getInt(2))
+  }
+
+  /** One micro-batch of the MinHash ingestion loop (exposed separately so
+    * a retry can be replayed deterministically — and tested).
+    *
+    * `multiWriter = true` (round 13) opts the family into PARALLEL
+    * loops on one prefix: the batch's partition id is resolved through
+    * the fenced `<prefix>_commits` mapping ([[resolveGlobalBid]] — a
+    * replay reuses its mapping, so drop-own-partition can never clobber
+    * another loop's partition), the corpus view reads the mapping's
+    * frozen below/compensation sets, and the family meta records the
+    * multi-writer marker instead of an owning loop. The pair-set
+    * contract survives verbatim: each cross pair is emitted exactly
+    * once, by the later GLOBAL partition's batch (or by an orphan's
+    * replay when the later batch provably never saw it). Concurrent
+    * loops should set `spark.graft.fence.waitMs` so an arriving batch
+    * WAITS for the fence instead of dying with its streaming query —
+    * serialization costs seconds of latency, never an append. The
+    * default stays single-writer: one loop per family, enforced. */
+  def ingestMinhashBatch(batch: DataFrame, bid: Long, idCol: String,
+                         textCol: String, prefix: String, pairsDir: String,
+                         threshold: Double, numPerms: Int, rowsPerBand: Int,
+                         buckets: Int, loopId: String = "",
+                         multiWriter: Boolean = false): Unit =
+    runBatch(batch.sparkSession, prefix, s"ingestMinhashBatch bid=$bid") { run =>
+      import run.spark.implicits._
+      // spread = false (round 16): a micro-batch is shard-sized — the
+      // 32-way exchange + checkpoint cost more than the signature kernel
+      // saves (see Dedup.minhashIndex; measured on the simhash twin)
+      val shard = Dedup.minhashIndex(batch, idCol, textCol, numPerms, rowsPerBand,
+        spread = false)
+      def corpus(b: Batch): Dedup.MinHashIndex =
+        if (!b.exists) Dedup.MinHashIndex(idCol, shard.shingles.limit(0),
+          shard.bands.limit(0), numPerms, rowsPerBand)
+        else minhashView(run.spark, prefix, b.meta, b.g)
+      val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
+        Seq("bands" -> Seq("band", "bucket"), "shingles" -> Seq(idCol))) { b =>
+        val c = corpus(b)
+        require(c.numPerms == numPerms && c.rowsPerBand == rowsPerBand,
+          s"persisted index family (${c.numPerms}, ${c.rowsPerBand}) != " +
+            s"loop family ($numPerms, $rowsPerBand)")
+      } { (_, _) =>
+        Fold(Seq(shard.bands, shard.shingles), Some(Seq((idCol, numPerms, rowsPerBand, buckets))
+          .toDF("id_col", "num_perms", "rows_per_band", "buckets")))
+      }
+      mineAndPublish(run, gen0) {
+        Dedup.minhashLshPairsIncremental(shard, corpus(b), threshold)
+          .write.mode("overwrite").parquet(s"$pairsDir/ingest_batch=${b.pid}")
+      }
+    }
+
   /** Drive a streaming document source through the MinHash ingestion
     * loop. Returns the started query; accumulated pairs live under
     * `pairsDir` (partition column `ingest_batch`), the growing index
@@ -646,48 +725,31 @@ object IngestLoop {
                     rowsPerBand: Int = 4, buckets: Int = 8,
                     trigger: Trigger = Trigger.AvailableNow(),
                     multiWriter: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ingestMinhashBatch(batch, bid, idCol, textCol, prefix, pairsDir,
-          threshold, numPerms, rowsPerBand, buckets, loopId = checkpointDir,
-          multiWriter = multiWriter)
-      }
-      .start()
+    drive(docs, checkpointDir, trigger) { (batch, bid) =>
+      ingestMinhashBatch(batch, bid, idCol, textCol, prefix, pairsDir,
+        threshold, numPerms, rowsPerBand, buckets, loopId = checkpointDir,
+        multiWriter = multiWriter)
+    }
 
   /** The persisted sign-LSH corpus as of batches strictly before `bid` —
     * the vector twin of [[minhashCorpusBefore]]. */
   def embedCorpusBefore(spark: SparkSession, prefix: String,
-                        bid: Long): Similarity.EmbedIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
-    // tombstoned vectors leave the corpus view immediately — same
-    // contract as the batch load path (Similarity.loadEmbedIndex)
-    def live(t: String) = graft.operators.Tombstones.filter(
-      spark.table(s"${prefix}_$t").filter(col("ingest_batch") < bid)
-        .drop("ingest_batch"), "id", prefix)
-    Similarity.EmbedIndex(m.getString(0), live("vecs"), live("hashed"),
-      m.getInt(1), m.getInt(2), m.getLong(3), m.getInt(4))
-  }
+                        bid: Long): Similarity.EmbedIndex =
+    embedView(spark, prefix, readMeta(spark, prefix), before(bid))
 
-  /** The multi-writer sign-LSH corpus view for a resolved batch —
-    * [[minhashCorpusMulti]]'s vector twin: partitions strictly below
-    * the global id minus the frozen missing set, plus the compensation
-    * set. Tombstone-filtered like [[embedCorpusBefore]]. */
-  private def embedCorpusMulti(spark: SparkSession, prefix: String,
-                               g: GlobalBid): Similarity.EmbedIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
-    def live(t: String) = graft.operators.Tombstones.filter(
-      spark.table(s"${prefix}_$t")
-        .filter(multiCorpusFilter(g.gbid, g.missingBelow, g.compensate))
-        .drop("ingest_batch"), "id", prefix)
-    Similarity.EmbedIndex(m.getString(0), live("vecs"), live("hashed"),
+  /** The sign-LSH corpus view of batch `g` — [[minhashView]]'s vector
+    * twin (tombstoned vectors leave it immediately — same contract as
+    * the batch load path, Similarity.loadEmbedIndex). */
+  private def embedView(spark: SparkSession, prefix: String, m: Row,
+                        g: GlobalBid): Similarity.EmbedIndex =
+    Similarity.EmbedIndex(m.getString(0), live(spark, prefix, "vecs", "id", g),
+      live(spark, prefix, "hashed", "id", g),
       m.getInt(1), m.getInt(2), m.getLong(3), m.getInt(4))
-  }
 
   /** One micro-batch of the embedding (sign-LSH) ingestion loop — same
     * append-only partition design and retry contract as
-    * [[ingestMinhashBatch]].
+    * [[ingestMinhashBatch]] (the shared [[commitBatch]], then the
+    * unfenced mine).
     *
     * `multiWriter = true` opts the family into PARALLEL loops exactly
     * as the MinHash loop does (round 13): sign-LSH collision is a
@@ -699,88 +761,33 @@ object IngestLoop {
                        threshold: Double, bitsPerTable: Int, numTables: Int,
                        seed: Long, dim: Int, buckets: Int,
                        loopId: String = "",
-                       multiWriter: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val lid = normLoopId(loopId)
-    val owner = s"ingestEmbedBatch bid=$bid"
-    val shard = Similarity.embedIndex(batch, idCol, vecCol,
-      bitsPerTable, numTables, seed, dim)
-    // fence window 1 — resolve + append only; the corpus-sized pair
-    // mine runs unfenced below with the generation check. Full
-    // soundness argument: see ingestMinhashBatch (round 14).
-    val (pid, mkCorpus, gen0) =
-      graft.operators.Fence.withFence(spark, prefix, owner) {
-    val exists = familyExists(spark, prefix, Seq("hashed", "vecs", "meta"))
-    // meta check before the commits mapping is touched: see ingestMinhashBatch
-    if (exists && multiWriter) bindMulti(spark, prefix)
-    val resolved =
-      if (multiWriter) resolveGlobalBid(spark, prefix, lid, bid, s"${prefix}_hashed")
-      else GlobalBid(bid, Seq.empty, Seq.empty, created = !exists)
-    val pid = resolved.gbid
-    // builder, not captured plan — re-mines re-derive: see ingestMinhashBatch
-    val mkCorpus: () => Similarity.EmbedIndex =
-      if (!exists) () => Similarity.EmbedIndex(idCol, shard.vecs.limit(0),
-        shard.hashed.limit(0), bitsPerTable, numTables, seed, shard.dim)
-      else if (multiWriter) () => embedCorpusMulti(spark, prefix, resolved)
-      else () => embedCorpusBefore(spark, prefix, pid)
-    val corpus = mkCorpus()
-    require(corpus.bitsPerTable == bitsPerTable && corpus.numTables == numTables &&
-      corpus.seed == seed && corpus.dim == shard.dim,
-      s"persisted LSH family (bits=${corpus.bitsPerTable}, tables=${corpus.numTables}, " +
-        s"seed=${corpus.seed}, dim=${corpus.dim}) != loop family " +
-        s"(bits=$bitsPerTable, tables=$numTables, seed=$seed, dim=${shard.dim})")
-    if (exists) {
-      val meta = readMeta(spark, prefix)
-      requireBucketAgreement(prefix, meta, buckets)
-      if (!multiWriter) bindLoop(spark, prefix, meta, lid) // bindMulti ran pre-resolve
-    }
-    // replay rewrite of an existing partition bumps the generation so a
-    // concurrent miner re-mines: see ingestMinhashBatch
-    if (exists) {
-      // probe BOTH tables: the concurrent appends below mean a crash
-      // window can leave either partition present alone (round 17)
-      val replayed = partitionExists(spark, s"${prefix}_hashed", pid) ||
-        partitionExists(spark, s"${prefix}_vecs", pid)
-      Seq("hashed", "vecs").foreach { t =>
-        spark.sql(s"ALTER TABLE ${prefix}_$t DROP IF EXISTS PARTITION (ingest_batch=$pid)")
+                       multiWriter: Boolean = false): Unit =
+    runBatch(batch.sparkSession, prefix, s"ingestEmbedBatch bid=$bid") { run =>
+      import run.spark.implicits._
+      val shard = Similarity.embedIndex(batch, idCol, vecCol,
+        bitsPerTable, numTables, seed, dim)
+      def corpus(b: Batch): Similarity.EmbedIndex =
+        if (!b.exists) Similarity.EmbedIndex(idCol, shard.vecs.limit(0),
+          shard.hashed.limit(0), bitsPerTable, numTables, seed, shard.dim)
+        else embedView(run.spark, prefix, b.meta, b.g)
+      val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
+        Seq("hashed" -> Seq("t", "h"), "vecs" -> Seq("id"))) { b =>
+        val c = corpus(b)
+        require(c.bitsPerTable == bitsPerTable && c.numTables == numTables &&
+          c.seed == seed && c.dim == shard.dim,
+          s"persisted LSH family (bits=${c.bitsPerTable}, tables=${c.numTables}, " +
+            s"seed=${c.seed}, dim=${c.dim}) != loop family " +
+            s"(bits=$bitsPerTable, tables=$numTables, seed=$seed, dim=${shard.dim})")
+      } { (_, _) =>
+        Fold(Seq(shard.hashed, shard.vecs),
+          Some(Seq((idCol, bitsPerTable, numTables, seed, shard.dim, buckets))
+            .toDF("id_col", "bits_per_table", "num_tables", "seed", "dim", "buckets")))
       }
-      if (replayed) graft.operators.Tombstones.bumpGeneration(spark, prefix)
+      mineAndPublish(run, gen0) {
+        Similarity.lshDupPairsIncremental(shard, corpus(b), threshold)
+          .write.mode("overwrite").parquet(s"$pairsDir/ingest_batch=${b.pid}")
+      }
     }
-    // overlap the two per-table appends: see ingestContainmentBatch
-    val hashedJoin = graft.operators.FitPool.sideThread {
-      graft.operators.Layout.bucketAligned(shard.hashed, buckets, "t", "h")
-        .withColumn("ingest_batch", lit(pid))
-        .write.mode("append").format("parquet")
-        .partitionBy("ingest_batch")
-        .bucketBy(buckets, "t", "h").sortBy("t", "h")
-        .saveAsTable(s"${prefix}_hashed")
-    }
-    // between-append liveness beacon: see ingestMinhashBatch
-    graft.operators.Fence.heartbeat(spark, prefix, owner)
-    try {
-      graft.operators.Layout.bucketAligned(shard.vecs, buckets, "id")
-        .withColumn("ingest_batch", lit(pid))
-        .write.mode("append").format("parquet")
-        .partitionBy("ingest_batch")
-        .bucketBy(buckets, "id").sortBy("id")
-        .saveAsTable(s"${prefix}_vecs")
-    } finally graft.operators.FitPool.joinAll(hashedJoin)
-    if (!exists) {
-      import spark.implicits._
-      Seq((idCol, bitsPerTable, numTables, seed, shard.dim, buckets))
-        .toDF("id_col", "bits_per_table", "num_tables", "seed", "dim", "buckets")
-        .withColumn("loop_id",
-          lit(if (multiWriter) MultiWriterMarker else lid))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-    }
-    (pid, mkCorpus, graft.operators.Tombstones.generation(spark, prefix))
-      } // fence released — mine unfenced
-    mineAndPublish(spark, prefix, owner, gen0) {
-      Similarity.lshDupPairsIncremental(shard, mkCorpus(), threshold)
-        .write.mode("overwrite").parquet(s"$pairsDir/ingest_batch=$pid")
-    }
-    maybeMaintain(spark, prefix)
-  }
 
   /** One micro-batch of the IVF-PQ SERVING-INDEX ingestion loop — the
     * ANN member of the incremental index family (round 9). Batch 0
@@ -793,11 +800,12 @@ object IngestLoop {
     * the Faiss ingestion discipline: quantizers train once, shards
     * stream through the encoder; drift is handled by a deliberate
     * retrain, never an implicit refit (which would silently re-key every
-    * previously-encoded vector). Retry contract as [[ingestMinhashBatch]]:
-    * the batch's partition is dropped before re-append, and a torn batch
-    * 0 (codes without meta) is detected and re-run clean. Serving reads
-    * the whole table via [[Similarity.loadPqIndex]] — bucketed on `cell`
-    * across partitions, so the ADC join stays co-located.
+    * previously-encoded vector). Retry contract as [[ingestMinhashBatch]]
+    * (the shared [[commitBatch]]): the batch's partition is dropped
+    * before re-append, and a torn batch 0 (codes without meta) is
+    * detected and re-run clean. Serving reads the whole table via
+    * [[Similarity.loadPqIndex]] — bucketed on `cell` across partitions,
+    * so the ADC join stays co-located.
     *
     * `multiWriter = true` (round 13): parallel encoding loops on one
     * serving index — the SIMPLEST member of the multi-writer family
@@ -817,56 +825,33 @@ object IngestLoop {
                     ksub: Int, seed: Long, buckets: Int,
                     loopId: String = "",
                     multiWriter: Boolean = false,
-                    assign: Int = 1): Unit = {
-    val spark = batch.sparkSession
-    val lid = normLoopId(loopId)
-    // writer fence: see ingestMinhashBatch
-    graft.operators.Fence.withFence(spark, prefix, s"ingestPqBatch bid=$bid") {
-    val exists = familyExists(spark, prefix, Seq("codes", "meta"))
-    // meta check before the commits mapping is touched: see ingestMinhashBatch
-    if (exists && multiWriter) bindMulti(spark, prefix)
-    val pid =
-      if (multiWriter)
-        resolveGlobalBid(spark, prefix, lid, bid, s"${prefix}_codes").gbid
-      else bid
-    val codes =
-      if (!exists) {
-        // the creating batch freezes the assignment factor with the
-        // quantizers (round 15 — multi-assignment): later batches'
-        // encodePq reads it off the loaded index and replicates
-        val idx = graft.operators.Similarity.pqIndex(
-          batch, idCol, vecCol, nlist, m, ksub, seed, assign = assign)
-        import spark.implicits._
-        Seq((idx.idCol, idx.m, idx.ksub, idx.dim, idx.seed,
-            idx.coarse.l1.map(_.toSeq).toSeq,
-            idx.coarse.l2.map(_.toSeq).toSeq,
-            idx.codebooks.map(_.map(_.toSeq).toSeq).toSeq, buckets))
-          .toDF("id_col", "m", "ksub", "dim", "seed", "coarse_l1",
-            "coarse_l2", "codebooks", "buckets")
-          .withColumn("loop_id",
-            lit(if (multiWriter) MultiWriterMarker else lid))
-          .withColumn("assign", lit(idx.assign))
-          .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-        idx.codes
-      } else {
-        val idx = graft.operators.Similarity.loadPqIndex(spark, prefix)
-        require(idx.idCol == idCol,
-          s"persisted PQ index keys on '${idx.idCol}', loop on '$idCol'")
-        val meta = readMeta(spark, prefix)
-        requireBucketAgreement(prefix, meta, buckets)
-        if (!multiWriter) bindLoop(spark, prefix, meta, lid) // bindMulti ran pre-resolve
-        spark.sql(s"ALTER TABLE ${prefix}_codes DROP IF EXISTS PARTITION (ingest_batch=$pid)")
-        graft.operators.Similarity.encodePq(batch, vecCol, idx)
+                    assign: Int = 1): Unit =
+    runBatch(batch.sparkSession, prefix, s"ingestPqBatch bid=$bid") { run =>
+      import run.spark.implicits._
+      commitBatch(run, bid, loopId, multiWriter, buckets, Seq("codes" -> Seq("cell"))) { b =>
+        if (!b.exists) None
+        else {
+          val idx = Similarity.loadPqIndex(run.spark, prefix, b.meta)
+          require(idx.idCol == idCol,
+            s"persisted PQ index keys on '${idx.idCol}', loop on '$idCol'")
+          Some(idx)
+        }
+      } {
+        case (_, Some(idx)) => Fold(Seq(Similarity.encodePq(batch, vecCol, idx)), None)
+        case (_, None) =>
+          // the creating batch freezes the assignment factor with the
+          // quantizers (round 15 — multi-assignment): later batches'
+          // encodePq reads it off the loaded index and replicates
+          val idx = Similarity.pqIndex(batch, idCol, vecCol, nlist, m, ksub, seed,
+            assign = assign)
+          Fold(Seq(idx.codes), Some(Seq((idx.idCol, idx.m, idx.ksub, idx.dim, idx.seed,
+              idx.coarse.l1.map(_.toSeq).toSeq,
+              idx.coarse.l2.map(_.toSeq).toSeq,
+              idx.codebooks.map(_.map(_.toSeq).toSeq).toSeq, buckets, idx.assign))
+            .toDF("id_col", "m", "ksub", "dim", "seed", "coarse_l1",
+              "coarse_l2", "codebooks", "buckets", "assign")))
       }
-    graft.operators.Layout.bucketAligned(codes, buckets, "cell")
-      .withColumn("ingest_batch", lit(pid))
-      .write.mode("append").format("parquet")
-      .partitionBy("ingest_batch")
-      .bucketBy(buckets, "cell").sortBy("cell")
-      .saveAsTable(s"${prefix}_codes")
     }
-    maybeMaintain(spark, prefix)
-  }
 
   /** Drive a streaming embedding source through the IVF-PQ serving-index
     * loop — [[minhashIngest]]'s ANN sibling: the index GROWS with the
@@ -878,15 +863,11 @@ object IngestLoop {
                trigger: Trigger = Trigger.AvailableNow(),
                multiWriter: Boolean = false,
                assign: Int = 1): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ingestPqBatch(batch, bid, idCol, vecCol, prefix, nlist, m, ksub,
-          seed, buckets, loopId = checkpointDir, multiWriter = multiWriter,
-          assign = assign)
-      }
-      .start()
+    drive(vecs, checkpointDir, trigger) { (batch, bid) =>
+      ingestPqBatch(batch, bid, idCol, vecCol, prefix, nlist, m, ksub,
+        seed, buckets, loopId = checkpointDir, multiWriter = multiWriter,
+        assign = assign)
+    }
 
   /** One micro-batch of the SEMANTIC-DEDUP ingestion loop — SemDeDup
     * as a curation service: batch 0 clusters itself and persists the
@@ -896,10 +877,10 @@ object IngestLoop {
     * ([[graft.operators.Similarity.semanticDedupIncremental]] — work
     * bounded by the batch's touched cells, budget-enforced) and appends
     * its decided rows as its own `ingest_batch` partition. Retry
-    * contract as the family's other loops: the batch's partition drops
-    * before re-append, and the corpus view reads partitions strictly
-    * before `bid`, so a half-appended retry neither sees itself nor
-    * double-decides.
+    * contract as the family's other loops (the shared [[commitBatch]]):
+    * the batch's partition drops before re-append, and the corpus view
+    * reads partitions strictly before `bid`, so a half-appended retry
+    * neither sees itself nor double-decides.
     *
     * DELIBERATELY SINGLE-WRITER (round 13, while the pairwise families
     * gained `multiWriter`): SemDeDup's keep/drop decision is
@@ -915,45 +896,30 @@ object IngestLoop {
   def ingestSemBatch(batch: DataFrame, bid: Long, idCol: String,
                      vecCol: String, prefix: String, threshold: Double,
                      nlist: Int, seed: Long, maxPairs: Long,
-                     buckets: Int, loopId: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val lid = normLoopId(loopId)
-    // writer fence: see ingestMinhashBatch
-    graft.operators.Fence.withFence(spark, prefix, s"ingestSemBatch bid=$bid") {
-    val exists = familyExists(spark, prefix, Seq("docs", "meta"))
-    val docs =
-      if (!exists) {
-        val idx = graft.operators.Similarity.semIndex(
-          batch, idCol, vecCol, threshold, nlist, seed, maxPairs = maxPairs)
-        import spark.implicits._
-        Seq((idx.idCol, idx.threshold, idx.seed,
-            idx.coarse.l1.map(_.toSeq).toSeq, idx.coarse.l2.map(_.toSeq).toSeq,
-            buckets))
-          .toDF("id_col", "threshold", "seed", "coarse_l1", "coarse_l2", "buckets")
-          .withColumn("loop_id", lit(lid))
-          .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-        idx.docs
-      } else {
-        val idx0 = graft.operators.Similarity.loadSemIndex(spark, prefix)
-        require(idx0.idCol == idCol,
-          s"persisted sem index keys on '${idx0.idCol}', loop on '$idCol'")
-        val meta = readMeta(spark, prefix)
-        requireBucketAgreement(prefix, meta, buckets)
-        bindLoop(spark, prefix, meta, lid)
-        spark.sql(s"ALTER TABLE ${prefix}_docs DROP IF EXISTS PARTITION (ingest_batch=$bid)")
-        val idx = idx0.copy(docs = idx0.docs.filter(col("ingest_batch") < bid))
-        graft.operators.Similarity.semanticDedupIncremental(
-          batch, vecCol, idx, maxPairs)
+                     buckets: Int, loopId: String = ""): Unit =
+    runBatch(batch.sparkSession, prefix, s"ingestSemBatch bid=$bid") { run =>
+      import run.spark.implicits._
+      commitBatch(run, bid, loopId, multiWriter = false, buckets, Seq("docs" -> Seq("cell"))) { b =>
+        if (!b.exists) None
+        else {
+          val idx0 = Similarity.loadSemIndex(run.spark, prefix, b.meta)
+          require(idx0.idCol == idCol,
+            s"persisted sem index keys on '${idx0.idCol}', loop on '$idCol'")
+          Some(idx0)
+        }
+      } {
+        case (b, Some(idx0)) =>
+          val idx = idx0.copy(docs = idx0.docs.filter(col("ingest_batch") < b.pid))
+          Fold(Seq(Similarity.semanticDedupIncremental(batch, vecCol, idx, maxPairs)), None)
+        case (_, None) =>
+          val idx = Similarity.semIndex(
+            batch, idCol, vecCol, threshold, nlist, seed, maxPairs = maxPairs)
+          Fold(Seq(idx.docs), Some(Seq((idx.idCol, idx.threshold, idx.seed,
+              idx.coarse.l1.map(_.toSeq).toSeq, idx.coarse.l2.map(_.toSeq).toSeq,
+              buckets))
+            .toDF("id_col", "threshold", "seed", "coarse_l1", "coarse_l2", "buckets")))
       }
-    graft.operators.Layout.bucketAligned(docs, buckets, "cell")
-      .withColumn("ingest_batch", lit(bid))
-      .write.mode("append").format("parquet")
-      .partitionBy("ingest_batch")
-      .bucketBy(buckets, "cell").sortBy("cell")
-      .saveAsTable(s"${prefix}_docs")
     }
-    maybeMaintain(spark, prefix)
-  }
 
   /** Drive a streaming embedding source through the semantic-dedup
     * curation loop: the decided corpus (keep/drop + canonical per doc)
@@ -963,14 +929,10 @@ object IngestLoop {
                 nlist: Int = -1, seed: Long = 42L,
                 maxPairs: Long = 1000000000L, buckets: Int = 8,
                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ingestSemBatch(batch, bid, idCol, vecCol, prefix, threshold, nlist,
-          seed, maxPairs, buckets, loopId = checkpointDir)
-      }
-      .start()
+    drive(vecs, checkpointDir, trigger) { (batch, bid) =>
+      ingestSemBatch(batch, bid, idCol, vecCol, prefix, threshold, nlist,
+        seed, maxPairs, buckets, loopId = checkpointDir)
+    }
 
   /** One micro-batch of streaming ANN QUERY SERVING — [[pqIngest]]'s
     * read-side twin: answer a batch of query vectors against the
@@ -991,8 +953,8 @@ object IngestLoop {
     val spark = batch.sparkSession
     if (spark.catalog.tableExists(resultsTable))
       spark.sql(s"ALTER TABLE $resultsTable DROP IF EXISTS PARTITION (serve_batch=$bid)")
-    val idx = graft.operators.Similarity.loadPqIndex(spark, prefix)
-    graft.operators.Similarity
+    val idx = Similarity.loadPqIndex(spark, prefix)
+    Similarity
       .ivfPqTopK(idx, vectors, batch, idCol, vecCol, k, nprobe, refine)
       .withColumn("serve_batch", lit(bid))
       .write.mode("append").format("parquet")
@@ -1007,14 +969,10 @@ object IngestLoop {
               checkpointDir: String, k: Int = 10, nprobe: Int = 4,
               refine: Int = 4,
               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        servePqBatch(batch, bid, idCol, vecCol, prefix, vectors,
-          resultsTable, k, nprobe, refine)
-      }
-      .start()
+    drive(queries, checkpointDir, trigger) { (batch, bid) =>
+      servePqBatch(batch, bid, idCol, vecCol, prefix, vectors,
+        resultsTable, k, nprobe, refine)
+    }
 
   /** The persisted duplicate-components view as of batches strictly
     * before `bid` — LATEST-BATCH-WINS per node: each appended delta
@@ -1106,51 +1064,25 @@ object IngestLoop {
     * one loop. */
   def ingestCcBatch(pairs: DataFrame, bid: Long, aCol: String, bCol: String,
                     prefix: String, buckets: Int,
-                    loopId: String = ""): Unit = {
-    val spark = pairs.sparkSession
-    val lid = normLoopId(loopId)
-    val owner = s"ingestCcBatch bid=$bid"
-    def label(s: String): Unit =
-      spark.sparkContext.setJobDescription(s"cc bid=$bid: $s")
-    graft.operators.Fence.withFence(spark, prefix, owner) {
+                    loopId: String = ""): Unit =
+    runBatch(pairs.sparkSession, prefix, s"ingestCcBatch bid=$bid") { run =>
+      import run.spark.implicits._
       // per-CC-round liveness beacon (round 13): the incremental run is
       // this batch's long leg — several corpus-touching rounds with no
       // other fence activity, which read as "holder silent" to an
       // operator eyeing forceRelease. Each round stamps the fence.
-      val beat = () => graft.operators.Fence.heartbeat(spark, prefix, owner)
-      val exists = familyExists(spark, prefix, Seq("labels", "meta"))
-      label("delta")
-      val delta =
-        if (!exists) Dedup.connectedComponents(pairs, aCol, bCol, onRound = beat)
-        else {
-          val meta = readMeta(spark, prefix)
-          requireBucketAgreement(prefix, meta, buckets)
-          bindLoop(spark, prefix, meta, lid)
-          spark.sql(s"ALTER TABLE ${prefix}_labels DROP IF EXISTS PARTITION (ingest_batch=$bid)")
-          Dedup.connectedComponentsIncremental(
-            ccComponentsBefore(spark, prefix, bid), pairs, aCol, bCol,
-            deltaOnly = true, onRound = beat)
-        }
-      // between-leg beacon before the append, mirroring the other loops
-      graft.operators.Fence.heartbeat(spark, prefix, owner)
-      label("append labels")
-      graft.operators.Layout.bucketAligned(delta, buckets, "id")
-        .withColumn("ingest_batch", lit(bid))
-        .write.mode("append").format("parquet")
-        .partitionBy("ingest_batch")
-        .bucketBy(buckets, "id").sortBy("id")
-        .saveAsTable(s"${prefix}_labels")
-      if (!exists) {
-        import spark.implicits._
-        Seq(("id", buckets)).toDF("id_col", "buckets")
-          .withColumn("loop_id", lit(lid))
-          .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
+      val beat = () => Fence.heartbeat(run.spark, prefix, run.owner)
+      commitBatch(run, bid, loopId, multiWriter = false, buckets,
+        Seq("labels" -> Seq("id")))(_ => ()) { (b, _) =>
+        if (!b.exists)
+          Fold(Seq(Dedup.connectedComponents(pairs, aCol, bCol, onRound = beat)),
+            Some(Seq(("id", buckets)).toDF("id_col", "buckets")))
+        else
+          Fold(Seq(Dedup.connectedComponentsIncremental(
+            ccComponentsBefore(run.spark, prefix, b.pid), pairs, aCol, bCol,
+            deltaOnly = true, onRound = beat)), None)
       }
     }
-    label("maintain check")
-    maybeMaintain(spark, prefix)
-    spark.sparkContext.setJobDescription(null)
-  }
 
   /** Fold the components family's delta log (round 13 — the LSM fold
     * half [[ingestCcBatch]]'s append half requires): each appended
@@ -1176,7 +1108,8 @@ object IngestLoop {
     * the same labels). The loop's bid sequence continues untouched.
     *
     * Crash recovery: the same two-write temp-table shape as
-    * [[graft.operators.Tombstones]]' `rewriteMinus` — a leftover
+    * [[graft.operators.Tombstones]]' compactions (`rewriteThroughTemp`,
+    * shared through [[foldCc]]) — a leftover
     * `__compact` temp with the live table missing restores it; with
     * the live table present it is stale and dropped. Holds the family
     * [[graft.operators.Fence]] for the duration: an ingest batch
@@ -1185,29 +1118,7 @@ object IngestLoop {
     * Run it from [[graft.operators.Tombstones.maintain]], which
     * triggers on the superseded-row fraction. */
   def compactCc(spark: SparkSession, prefix: String, buckets: Int = -1): Unit =
-    graft.operators.Fence.withFence(spark, prefix, "compactCc") {
-      // layout rewrite: see Tombstones.generation (bump-first contract)
-      graft.operators.Tombstones.bumpGeneration(spark, prefix)
-      val tbl = s"${prefix}_labels"
-      val tmp = tbl + "__compact"
-      val b =
-        if (buckets > 0) buckets
-        else spark.table(s"${prefix}_meta").head().getAs[Int]("buckets")
-      def write(df: DataFrame, to: String): Unit =
-        graft.operators.Layout.bucketAligned(df, b, "id")
-          .write.mode("overwrite").format("parquet")
-          .partitionBy("ingest_batch")
-          .bucketBy(b, "id").sortBy("id")
-          .saveAsTable(to)
-      if (spark.catalog.tableExists(tmp)) {
-        if (!spark.catalog.tableExists(tbl)) write(spark.table(tmp), tbl)
-        spark.sql(s"DROP TABLE $tmp")
-      }
-      write(ccComponents(spark, prefix).withColumn("ingest_batch", lit(-1L)), tmp)
-      graft.operators.Fence.heartbeat(spark, prefix, "compactCc")
-      write(spark.table(tmp), tbl)
-      spark.sql(s"DROP TABLE $tmp")
-    }
+    foldCc(spark, prefix, buckets, "compactCc")(ccComponents(spark, prefix))
 
   /** Re-derive the persisted components catalog after UPSTREAM
     * deletions (round 13 — the entry point [[ingestCcBatch]]'s
@@ -1232,30 +1143,24 @@ object IngestLoop {
                deletedIds: DataFrame, idCol: String,
                survivingPairs: DataFrame, aCol: String, bCol: String,
                buckets: Int = -1): Unit =
-    graft.operators.Fence.withFence(spark, prefix, "repairCc") {
-      // layout rewrite: see Tombstones.generation (bump-first contract)
-      graft.operators.Tombstones.bumpGeneration(spark, prefix)
-      val tbl = s"${prefix}_labels"
-      val tmp = tbl + "__compact"
-      val b =
-        if (buckets > 0) buckets
-        else spark.table(s"${prefix}_meta").head().getAs[Int]("buckets")
-      def write(df: DataFrame, to: String): Unit =
-        graft.operators.Layout.bucketAligned(df, b, "id")
-          .write.mode("overwrite").format("parquet")
-          .partitionBy("ingest_batch")
-          .bucketBy(b, "id").sortBy("id")
-          .saveAsTable(to)
-      if (spark.catalog.tableExists(tmp)) {
-        if (!spark.catalog.tableExists(tbl)) write(spark.table(tmp), tbl)
-        spark.sql(s"DROP TABLE $tmp")
-      }
-      val repaired = Dedup.ccRepair(ccComponents(spark, prefix),
-        survivingPairs, aCol, bCol, deletedIds, idCol)
-      write(repaired.withColumn("ingest_batch", lit(-1L)), tmp)
-      graft.operators.Fence.heartbeat(spark, prefix, "repairCc")
-      write(spark.table(tmp), tbl)
-      spark.sql(s"DROP TABLE $tmp")
+    foldCc(spark, prefix, buckets, "repairCc")(Dedup.ccRepair(
+      ccComponents(spark, prefix), survivingPairs, aCol, bCol, deletedIds, idCol))
+
+  /** The components family's fold behind [[compactCc]] and [[repairCc]]:
+    * under the family fence, bump the generation first (layout rewrite:
+    * see Tombstones.generation — the bump-first contract), then replace
+    * the labels table with `catalog` as the single floor partition
+    * `ingest_batch = -1` through [[Tombstones.rewriteThroughTemp]] (its
+    * crash recovery; `catalog` is computed after it, against the
+    * restored table), heartbeating between the two writes. */
+  private def foldCc(spark: SparkSession, prefix: String, buckets: Int,
+                     owner: String)(catalog: => DataFrame): Unit =
+    Fence.withFence(spark, prefix, owner) {
+      Tombstones.bumpGeneration(spark, prefix)
+      val b = if (buckets > 0) buckets else readMeta(spark, prefix).getAs[Int]("buckets")
+      Tombstones.rewriteThroughTemp(spark, s"${prefix}_labels", b, Seq("id"),
+        () => Fence.heartbeat(spark, prefix, owner))(
+        catalog.withColumn("ingest_batch", lit(-1L)))
     }
 
   /** Drive a streaming pair source (duplicate edges) through the
@@ -1264,14 +1169,10 @@ object IngestLoop {
   def ccIngest(pairs: DataFrame, aCol: String, bCol: String,
                prefix: String, checkpointDir: String, buckets: Int = 8,
                trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    pairs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ingestCcBatch(batch, bid, aCol, bCol, prefix, buckets,
-          loopId = checkpointDir)
-      }
-      .start()
+    drive(pairs, checkpointDir, trigger) { (batch, bid) =>
+      ingestCcBatch(batch, bid, aCol, bCol, prefix, buckets,
+        loopId = checkpointDir)
+    }
 
   /** Drive a streaming embedding source through the sign-LSH ingestion
     * loop — the vector twin of [[minhashIngest]]. `dim` must be passed
@@ -1283,36 +1184,23 @@ object IngestLoop {
                   numTables: Int = 8, seed: Long = 42L, buckets: Int = 8,
                   trigger: Trigger = Trigger.AvailableNow(),
                   multiWriter: Boolean = false): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ingestEmbedBatch(batch, bid, idCol, vecCol, prefix, pairsDir,
-          threshold, bitsPerTable, numTables, seed, dim, buckets,
-          loopId = checkpointDir, multiWriter = multiWriter)
-      }
-      .start()
+    drive(vecs, checkpointDir, trigger) { (batch, bid) =>
+      ingestEmbedBatch(batch, bid, idCol, vecCol, prefix, pairsDir,
+        threshold, bitsPerTable, numTables, seed, dim, buckets,
+        loopId = checkpointDir, multiWriter = multiWriter)
+    }
 
   /** The persisted SimHash corpus as of batches strictly before `bid` —
     * [[minhashCorpusBefore]]'s 64-bit-signature twin. */
   def simhashCorpusBefore(spark: SparkSession, prefix: String,
-                          bid: Long): Dedup.SimHashIndex = {
-    val idCol = spark.table(s"${prefix}_meta").head().getString(0)
-    Dedup.SimHashIndex(idCol, graft.operators.Tombstones.filter(
-      spark.table(s"${prefix}_chunked").filter(col("ingest_batch") < bid)
-        .drop("ingest_batch"), idCol, prefix))
-  }
+                          bid: Long): Dedup.SimHashIndex =
+    simhashView(spark, prefix, readMeta(spark, prefix), before(bid))
 
-  /** The multi-writer SimHash corpus view — [[minhashCorpusMulti]]'s
-    * twin (partitions below the global id minus the frozen missing
-    * set, plus the compensation set). */
-  private def simhashCorpusMulti(spark: SparkSession, prefix: String,
-                                 g: GlobalBid): Dedup.SimHashIndex = {
-    val idCol = spark.table(s"${prefix}_meta").head().getString(0)
-    Dedup.SimHashIndex(idCol, graft.operators.Tombstones.filter(
-      spark.table(s"${prefix}_chunked")
-        .filter(multiCorpusFilter(g.gbid, g.missingBelow, g.compensate))
-        .drop("ingest_batch"), idCol, prefix))
+  /** The SimHash corpus view of batch `g` — [[minhashView]]'s twin. */
+  private def simhashView(spark: SparkSession, prefix: String, m: Row,
+                          g: GlobalBid): Dedup.SimHashIndex = {
+    val idCol = m.getString(0)
+    Dedup.SimHashIndex(idCol, live(spark, prefix, "chunked", idCol, g))
   }
 
   /** One micro-batch of the SIMHASH ingestion loop (round 15 — the
@@ -1321,7 +1209,8 @@ object IngestLoop {
     * landing-path user had to hand-roll the fence/meta/partition
     * discipline this loop encodes. Same append-only partition design,
     * retry contract, narrow fence window, and generation check as
-    * [[ingestMinhashBatch]] (chunk-bucket collision is a PAIRWISE
+    * [[ingestMinhashBatch]] — the shared [[commitBatch]] and
+    * [[mineAndPublish]] (chunk-bucket collision is a PAIRWISE
     * predicate — Hamming is symmetric — so the pair-set contract and
     * [[resolveGlobalBid]]'s multi-writer exactly-once argument carry
     * over verbatim). */
@@ -1334,7 +1223,7 @@ object IngestLoop {
     // 7.3 -> ~4.7 s with the shard spread off (exchange dominated)
     ingestChunkedBatch(Dedup.simhashIndex(batch, idCol, textCol, spread = false),
       batch.sparkSession, bid, idCol, prefix, pairsDir, maxHamming, buckets,
-      normLoopId(loopId), multiWriter, s"ingestSimhashBatch bid=$bid")
+      loopId, multiWriter, s"ingestSimhashBatch bid=$bid")
 
   /** One micro-batch of the SIGNATURE ingestion loop — the MEDIA
     * landing path (round 15): the perceptual fingerprints (image dHash,
@@ -1353,64 +1242,37 @@ object IngestLoop {
                            multiWriter: Boolean = false): Unit =
     ingestChunkedBatch(Dedup.signatureIndex(batch, idCol, sigCol),
       batch.sparkSession, bid, idCol, prefix, pairsDir, maxHamming, buckets,
-      normLoopId(loopId), multiWriter, s"ingestSignatureBatch bid=$bid")
+      loopId, multiWriter, s"ingestSignatureBatch bid=$bid")
 
   /** The shared chunked-family batch body behind [[ingestSimhashBatch]]
     * and [[ingestSignatureBatch]] — identical persisted geometry, so
-    * one fold serves both shard builders. */
-  private def ingestChunkedBatch(shard: Dedup.SimHashIndex,
+    * one fold serves both shard builders. The shard is passed by name,
+    * so it is built under the batch's "shard index" label. */
+  private def ingestChunkedBatch(shardOf: => Dedup.SimHashIndex,
                                  spark: SparkSession, bid: Long,
                                  idCol: String, prefix: String,
                                  pairsDir: String, maxHamming: Int,
-                                 buckets: Int, lid: String,
-                                 multiWriter: Boolean, owner: String): Unit = {
-    // fence window: resolve + append only; the corpus-sized pair mine
-    // runs unfenced below with the generation check — full soundness
-    // argument at ingestMinhashBatch (round 14)
-    val (pid, mkCorpus, gen0) =
-      graft.operators.Fence.withFence(spark, prefix, owner) {
-        val exists = familyExists(spark, prefix, Seq("chunked", "meta"))
-        if (exists && multiWriter) bindMulti(spark, prefix)
-        val resolved =
-          if (multiWriter) resolveGlobalBid(spark, prefix, lid, bid, s"${prefix}_chunked")
-          else GlobalBid(bid, Seq.empty, Seq.empty, created = !exists)
-        val pid = resolved.gbid
-        val mkCorpus: () => Dedup.SimHashIndex =
-          if (!exists) () => Dedup.SimHashIndex(idCol, shard.chunked.limit(0))
-          else if (multiWriter) () => simhashCorpusMulti(spark, prefix, resolved)
-          else () => simhashCorpusBefore(spark, prefix, pid)
-        val corpus = mkCorpus()
-        require(corpus.idCol == idCol,
-          s"persisted SimHash family keys on '${corpus.idCol}', loop on '$idCol'")
-        if (exists) {
-          val meta = readMeta(spark, prefix)
-          requireBucketAgreement(prefix, meta, buckets)
-          if (!multiWriter) bindLoop(spark, prefix, meta, lid)
-          val replayed = partitionExists(spark, s"${prefix}_chunked", pid)
-          spark.sql(s"ALTER TABLE ${prefix}_chunked DROP IF EXISTS PARTITION (ingest_batch=$pid)")
-          if (replayed) graft.operators.Tombstones.bumpGeneration(spark, prefix)
-        }
-        graft.operators.Layout.bucketAligned(shard.chunked, buckets, "chunk", "ckey")
-          .withColumn("ingest_batch", lit(pid))
-          .write.mode("append").format("parquet")
-          .partitionBy("ingest_batch")
-          .bucketBy(buckets, "chunk", "ckey").sortBy("chunk", "ckey")
-          .saveAsTable(s"${prefix}_chunked")
-        if (!exists) {
-          import spark.implicits._
-          Seq((idCol, buckets)).toDF("id_col", "buckets")
-            .withColumn("loop_id",
-              lit(if (multiWriter) MultiWriterMarker else lid))
-            .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-        }
-        (pid, mkCorpus, graft.operators.Tombstones.generation(spark, prefix))
-      } // fence released — mine unfenced
-    mineAndPublish(spark, prefix, owner, gen0) {
-      Dedup.simhashPairsIncremental(shard, mkCorpus(), maxHamming)
-        .write.mode("overwrite").parquet(s"$pairsDir/ingest_batch=$pid")
+                                 buckets: Int, loopId: String,
+                                 multiWriter: Boolean, owner: String): Unit =
+    runBatch(spark, prefix, owner) { run =>
+      import spark.implicits._
+      val shard = shardOf
+      def corpus(b: Batch): Dedup.SimHashIndex =
+        if (!b.exists) Dedup.SimHashIndex(idCol, shard.chunked.limit(0))
+        else simhashView(spark, prefix, b.meta, b.g)
+      val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
+        Seq("chunked" -> Seq("chunk", "ckey"))) { b =>
+        val c = corpus(b)
+        require(c.idCol == idCol,
+          s"persisted SimHash family keys on '${c.idCol}', loop on '$idCol'")
+      } { (_, _) =>
+        Fold(Seq(shard.chunked), Some(Seq((idCol, buckets)).toDF("id_col", "buckets")))
+      }
+      mineAndPublish(run, gen0) {
+        Dedup.simhashPairsIncremental(shard, corpus(b), maxHamming)
+          .write.mode("overwrite").parquet(s"$pairsDir/ingest_batch=${b.pid}")
+      }
     }
-    maybeMaintain(spark, prefix)
-  }
 
   /** Drive a streaming signature source (precomputed 64-bit
     * fingerprints — the media codec stages' output) through the
@@ -1420,15 +1282,11 @@ object IngestLoop {
                       maxHamming: Int = 3, buckets: Int = 8,
                       trigger: Trigger = Trigger.AvailableNow(),
                       multiWriter: Boolean = false): StreamingQuery =
-    sigs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ingestSignatureBatch(batch, bid, idCol, sigCol, prefix, pairsDir,
-          maxHamming, buckets, loopId = checkpointDir,
-          multiWriter = multiWriter)
-      }
-      .start()
+    drive(sigs, checkpointDir, trigger) { (batch, bid) =>
+      ingestSignatureBatch(batch, bid, idCol, sigCol, prefix, pairsDir,
+        maxHamming, buckets, loopId = checkpointDir,
+        multiWriter = multiWriter)
+    }
 
   /** Drive a streaming document source through the SimHash ingestion
     * loop — [[minhashIngest]]'s 64-bit-signature sibling. */
@@ -1437,43 +1295,24 @@ object IngestLoop {
                     maxHamming: Int = 3, buckets: Int = 8,
                     trigger: Trigger = Trigger.AvailableNow(),
                     multiWriter: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ingestSimhashBatch(batch, bid, idCol, textCol, prefix, pairsDir,
-          maxHamming, buckets, loopId = checkpointDir,
-          multiWriter = multiWriter)
-      }
-      .start()
+    drive(docs, checkpointDir, trigger) { (batch, bid) =>
+      ingestSimhashBatch(batch, bid, idCol, textCol, prefix, pairsDir,
+        maxHamming, buckets, loopId = checkpointDir,
+        multiWriter = multiWriter)
+    }
 
   /** The persisted containment corpus as of batches strictly before
     * `bid` — [[minhashCorpusBefore]]'s quote/excerpt twin (internal id
     * column is the normalized `id`). */
   def containmentCorpusBefore(spark: SparkSession, prefix: String,
                               bid: Long): Dedup.ContainmentIndex =
-    containmentCorpusBefore(spark, prefix, bid, readMeta(spark, prefix))
+    containmentView(spark, prefix, readMeta(spark, prefix), before(bid))
 
-  /** [[containmentCorpusBefore]] over an already-read meta row `m`. */
-  private def containmentCorpusBefore(spark: SparkSession, prefix: String,
-                                      bid: Long, m: Row): Dedup.ContainmentIndex = {
-    def live(t: String) = graft.operators.Tombstones.filter(
-      spark.table(s"${prefix}_$t").filter(col("ingest_batch") < bid)
-        .drop("ingest_batch"), "id", prefix)
+  /** The containment corpus view of batch `g` over meta row `m`. */
+  private def containmentView(spark: SparkSession, prefix: String, m: Row,
+                              g: GlobalBid): Dedup.ContainmentIndex =
     Dedup.ContainmentIndex(m.getString(0), m.getInt(1),
-      live("base"), live("posting"))
-  }
-
-  /** The multi-writer containment corpus view. */
-  private def containmentCorpusMulti(spark: SparkSession, prefix: String,
-                                     g: GlobalBid, m: Row): Dedup.ContainmentIndex = {
-    def live(t: String) = graft.operators.Tombstones.filter(
-      spark.table(s"${prefix}_$t")
-        .filter(multiCorpusFilter(g.gbid, g.missingBelow, g.compensate))
-        .drop("ingest_batch"), "id", prefix)
-    Dedup.ContainmentIndex(m.getString(0), m.getInt(1),
-      live("base"), live("posting"))
-  }
+      live(spark, prefix, "base", "id", g), live(spark, prefix, "posting", "id", g))
 
   /** One micro-batch of the CONTAINMENT (quote/excerpt) ingestion loop
     * (round 15): same design as [[ingestSimhashBatch]]. Containment
@@ -1492,120 +1331,53 @@ object IngestLoop {
                              loopId: String = "",
                              multiWriter: Boolean = false,
                              groupsPrefix: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val lid = normLoopId(loopId)
     require(groupsPrefix.isEmpty || !multiWriter,
       "group-sized emission composes the components family, which is " +
         "single-writer by necessity (see ingestCcBatch): run multiple " +
         "PAIR-mode containment loops with multiWriter=true and fan their " +
         "pair streams into one ccIngest loop instead")
-    // SPREAD THE BATCH before corpus-sized work (round 16 — found by
-    // LoopProbe's clone-storm arm): a landing micro-batch is typically
-    // ONE file = ONE partition, and the mine's candidate join + count
-    // aggregate inherit that partitioning on the shard side — on a
-    // clone-heavy batch the whole within-batch pair mass then runs in a
-    // single task. One shard-sized hash repartition on the id restores
-    // cluster-wide parallelism for everything downstream.
-    val spread = batch.repartition(col(idCol))
-    val owner = s"ingestContainmentBatch bid=$bid"
-    // job labels (guide §1.5): phases of a batch are readable in the UI
-    // and in JobProfile without a debugger
-    def label(s: String): Unit =
-      spark.sparkContext.setJobDescription(s"containment bid=$bid: $s")
-    label("shard index")
-    val shard = Dedup.containmentIndex(spread, idCol, textCol, n)
-    val (pid, mkCorpus, gen0) =
-      graft.operators.Fence.withFence(spark, prefix, owner) {
-        val exists = familyExists(spark, prefix, Seq("posting", "base", "meta"))
-        // read once, under the fence, by the first consumer below; the
-        // corpus views, the bucket check and the loop binding share it
-        // (the unfenced mine re-derives its corpus view from this row:
-        // id column and shingle width never change within a family)
-        lazy val meta = readMeta(spark, prefix)
-        if (exists && multiWriter) bindMulti(spark, prefix)
-        val resolved =
-          if (multiWriter) resolveGlobalBid(spark, prefix, lid, bid, s"${prefix}_posting")
-          else GlobalBid(bid, Seq.empty, Seq.empty, created = !exists)
-        val pid = resolved.gbid
-        val mkCorpus: () => Dedup.ContainmentIndex =
-          if (!exists) () => Dedup.ContainmentIndex(idCol, n,
-            shard.base.limit(0), shard.posting.limit(0))
-          else if (multiWriter) () => containmentCorpusMulti(spark, prefix, resolved, meta)
-          else () => containmentCorpusBefore(spark, prefix, pid, meta)
-        val corpus = mkCorpus()
-        require(corpus.n == n,
-          s"persisted containment family has shingle width n=${corpus.n}, " +
+    runBatch(batch.sparkSession, prefix, s"ingestContainmentBatch bid=$bid") { run =>
+      import run.spark.implicits._
+      // SPREAD THE BATCH before corpus-sized work (round 16 — found by
+      // LoopProbe's clone-storm arm): a landing micro-batch is typically
+      // ONE file = ONE partition, and the mine's candidate join + count
+      // aggregate inherit that partitioning on the shard side — on a
+      // clone-heavy batch the whole within-batch pair mass then runs in a
+      // single task. One shard-sized hash repartition on the id restores
+      // cluster-wide parallelism for everything downstream.
+      val shard = Dedup.containmentIndex(batch.repartition(col(idCol)), idCol, textCol, n)
+      def corpus(b: Batch): Dedup.ContainmentIndex =
+        if (!b.exists) Dedup.ContainmentIndex(idCol, n,
+          shard.base.limit(0), shard.posting.limit(0))
+        else containmentView(run.spark, prefix, b.meta, b.g)
+      val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
+        Seq("posting" -> Seq("gram"), "base" -> Seq("id"))) { b =>
+        val c = corpus(b)
+        require(c.n == n,
+          s"persisted containment family has shingle width n=${c.n}, " +
             s"loop has n=$n — mismatched shingle families silently miss overlaps")
-        if (exists) {
-          requireBucketAgreement(prefix, meta, buckets)
-          if (!multiWriter) bindLoop(spark, prefix, meta, lid)
-          // probe BOTH tables (round 17): with the appends below running
-          // concurrently, a crash window can leave EITHER partition
-          // present alone, and a drop that removes files without the
-          // generation bump would expose a concurrent miner to a torn
-          // read of the re-listed partition
-          val replayed = partitionExists(spark, s"${prefix}_posting", pid) ||
-            partitionExists(spark, s"${prefix}_base", pid)
-          Seq("posting", "base").foreach { t =>
-            spark.sql(s"ALTER TABLE ${prefix}_$t DROP IF EXISTS PARTITION (ingest_batch=$pid)")
-          }
-          if (replayed) graft.operators.Tombstones.bumpGeneration(spark, prefix)
-        }
-        // the two appends land on DIFFERENT tables and each is ~one
-        // write-latency of mostly driver-side catalog work (round-17
-        // DdlProbe: ~400 ms per tiny bucketed append) — overlap them on
-        // a side thread (guide §2.6); both complete before the fence
-        // releases, so assign->append atomicity is unchanged
-        label("append posting")
-        val postingJoin = graft.operators.FitPool.sideThread {
-          graft.operators.Layout.bucketAligned(shard.posting, buckets, "gram")
-            .withColumn("ingest_batch", lit(pid))
-            .write.mode("append").format("parquet")
-            .partitionBy("ingest_batch")
-            .bucketBy(buckets, "gram").sortBy("gram")
-            .saveAsTable(s"${prefix}_posting")
-        }
-        // between-append liveness beacon: see ingestMinhashBatch
-        graft.operators.Fence.heartbeat(spark, prefix, owner)
-        label("append base")
-        try {
-          graft.operators.Layout.bucketAligned(shard.base, buckets, "id")
-            .withColumn("ingest_batch", lit(pid))
-            .write.mode("append").format("parquet")
-            .partitionBy("ingest_batch")
-            .bucketBy(buckets, "id").sortBy("id")
-            .saveAsTable(s"${prefix}_base")
-        } finally graft.operators.FitPool.joinAll(postingJoin)
-        if (!exists) {
-          import spark.implicits._
-          Seq((idCol, n, buckets)).toDF("id_col", "n", "buckets")
-            .withColumn("loop_id",
-              lit(if (multiWriter) MultiWriterMarker else lid))
-            .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
-        }
-        (pid, mkCorpus, graft.operators.Tombstones.generation(spark, prefix))
-      } // fence released — mine unfenced
-    label("mine")
-    mineAndPublish(spark, prefix, owner, gen0) {
-      if (groupsPrefix.nonEmpty)
-        // GROUP-SIZED emission (round 16): the batch's qualifying pairs
-        // never materialize as a listing — the undirected component
-        // edges feed the persisted components family directly, so the
-        // durable per-batch output is the labels DELTA (O(touched
-        // components)), not Theta(k·shard) pair rows. Replay-safe: a
-        // re-publish after a generation bump (or a crash-window batch
-        // replay) re-enters ingestCcBatch with the same bid, whose
-        // drop-own-partition contract makes the delta idempotent.
-        ingestCcBatch(
-          Dedup.containmentEdgesIncremental(shard, mkCorpus(), tau, maxCandidates),
-          pid, "u", "v", groupsPrefix, buckets, loopId = lid)
-      else
-        Dedup.containmentJoinIncremental(shard, mkCorpus(), tau, maxCandidates)
-          .write.mode("overwrite").parquet(s"$pairsDir/ingest_batch=$pid")
+      } { (_, _) =>
+        Fold(Seq(shard.posting, shard.base),
+          Some(Seq((idCol, n, buckets)).toDF("id_col", "n", "buckets")))
+      }
+      mineAndPublish(run, gen0) {
+        if (groupsPrefix.nonEmpty)
+          // GROUP-SIZED emission (round 16): the batch's qualifying pairs
+          // never materialize as a listing — the undirected component
+          // edges feed the persisted components family directly, so the
+          // durable per-batch output is the labels DELTA (O(touched
+          // components)), not Theta(k·shard) pair rows. Replay-safe: a
+          // re-publish after a generation bump (or a crash-window batch
+          // replay) re-enters ingestCcBatch with the same bid, whose
+          // drop-own-partition contract makes the delta idempotent.
+          ingestCcBatch(
+            Dedup.containmentEdgesIncremental(shard, corpus(b), tau, maxCandidates),
+            b.pid, "u", "v", groupsPrefix, buckets, loopId = loopId)
+        else
+          Dedup.containmentJoinIncremental(shard, corpus(b), tau, maxCandidates)
+            .write.mode("overwrite").parquet(s"$pairsDir/ingest_batch=${b.pid}")
+      }
     }
-    label("maintain check")
-    maybeMaintain(spark, prefix)
-    spark.sparkContext.setJobDescription(null)
   }
 
   /** Drive a streaming document source through the containment
@@ -1626,13 +1398,9 @@ object IngestLoop {
                         trigger: Trigger = Trigger.AvailableNow(),
                         multiWriter: Boolean = false,
                         groupsPrefix: String = ""): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ingestContainmentBatch(batch, bid, idCol, textCol, prefix, pairsDir,
-          tau, n, buckets, maxCandidates, loopId = checkpointDir,
-          multiWriter = multiWriter, groupsPrefix = groupsPrefix)
-      }
-      .start()
+    drive(docs, checkpointDir, trigger) { (batch, bid) =>
+      ingestContainmentBatch(batch, bid, idCol, textCol, prefix, pairsDir,
+        tau, n, buckets, maxCandidates, loopId = checkpointDir,
+        multiWriter = multiWriter, groupsPrefix = groupsPrefix)
+    }
 }

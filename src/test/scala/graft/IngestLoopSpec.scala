@@ -1395,4 +1395,97 @@ class IngestLoopSpec extends AnyFunSuite {
         col("b_id").isin(deadIds.toSeq: _*)).count() == 0)
     } finally drop("ing_sg_chunked", "ing_sg_meta", "ing_sg_tombstones")
   }
+  test("a crash between the overlapped appends replays to the clean-run state in EVERY family, bumping the generation once") {
+    import graft.operators.Tombstones
+    import spark.implicits._
+    // ids 0 and 1 mod 4: half of each table, split by parity below
+    val docs = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
+      .filter(col("doc_id") % 4 < 2)
+    val texts = docs.union(docs.withColumn("doc_id", col("doc_id") + 1000000L))
+    val embs = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      .filter(col("vec_id") % 4 < 2)
+    val vecs = embs.union(embs.withColumn("vec_id", col("vec_id") + 10000000L))
+    val edges = Seq(
+      (0L until 20L).map(i => (i, i + 1000000L)),
+      (0L until 20L).map(i => (i + 1000000L, i + 2000000L)))
+    def half(df: org.apache.spark.sql.DataFrame, id: String, bid: Long) =
+      df.filter(col(id) % 2 === bid)
+    // (family, data tables in append order, writes pairs, batch run)
+    case class Fam(name: String, tables: Seq[String], pairs: Boolean,
+                   run: (String, String, Long) => Unit)
+    val fams = Seq(
+      Fam("mh", Seq("bands", "shingles"), pairs = true, (p, d, bid) =>
+        IngestLoop.ingestMinhashBatch(half(texts, "doc_id", bid), bid, "doc_id", "text",
+          p, d, threshold = 0.5, numPerms = 32, rowsPerBand = 4, buckets = 4)),
+      Fam("em", Seq("hashed", "vecs"), pairs = true, (p, d, bid) =>
+        IngestLoop.ingestEmbedBatch(half(vecs, "vec_id", bid), bid, "vec_id", "embedding",
+          p, d, threshold = 0.9, bitsPerTable = 12, numTables = 4, seed = 42L,
+          dim = 64, buckets = 4)),
+      Fam("pq", Seq("codes"), pairs = false, (p, _, bid) =>
+        IngestLoop.ingestPqBatch(half(vecs, "vec_id", bid), bid, "vec_id", "embedding",
+          p, nlist = 4, m = 8, ksub = 16, seed = 42L, buckets = 4)),
+      Fam("sem", Seq("docs"), pairs = false, (p, _, bid) =>
+        IngestLoop.ingestSemBatch(half(vecs, "vec_id", bid), bid, "vec_id", "embedding",
+          p, threshold = 0.9, nlist = 4, seed = 42L, maxPairs = 1000000000L, buckets = 4)),
+      Fam("cc", Seq("labels"), pairs = false, (p, _, bid) =>
+        IngestLoop.ingestCcBatch(edges(bid.toInt).toDF("a_id", "b_id"), bid,
+          "a_id", "b_id", p, buckets = 4)),
+      Fam("sh", Seq("chunked"), pairs = true, (p, d, bid) =>
+        IngestLoop.ingestSimhashBatch(half(texts, "doc_id", bid), bid, "doc_id", "text",
+          p, d, maxHamming = 3, buckets = 4)),
+      Fam("cn", Seq("posting", "base"), pairs = true, (p, d, bid) =>
+        IngestLoop.ingestContainmentBatch(half(texts, "doc_id", bid), bid, "doc_id",
+          "text", p, d, tau = 0.5, n = 3, buckets = 4)))
+    fams.foreach { f =>
+      val p = s"ing_ha_${f.name}"
+      val pairsDir = java.nio.file.Files.createTempDirectory(s"ingest_ha_${f.name}").toString
+      def snapshot(): Seq[Seq[String]] =
+        (f.tables :+ "meta").map(t => spark.table(s"${p}_$t").collect().map(_.toString).toSeq.sorted) ++
+          (if (f.pairs) Seq(spark.read.parquet(pairsDir).collect().map(_.toString).toSeq.sorted)
+          else Nil)
+      try {
+        f.run(p, pairsDir, 0L)
+        f.run(p, pairsDir, 1L)
+        val clean = snapshot()
+        val gen = Tombstones.generation(spark, p)
+        // the crash window between the overlapped appends: batch 1's
+        // partition landed in the LAST table but not in the ones before
+        // it (a one-table family has no such window — its replay finds
+        // the whole partition present)
+        f.tables.init.foreach { t =>
+          spark.sql(s"ALTER TABLE ${p}_$t DROP IF EXISTS PARTITION (ingest_batch=1)")
+        }
+        f.run(p, pairsDir, 1L) // the checkpoint's replay of batch 1
+        assert(snapshot() == clean, s"${f.name}: the replay diverges from the clean run")
+        assert(Tombstones.generation(spark, p) == gen + 1,
+          s"${f.name}: a replay over a present partition must bump the generation exactly once")
+      } finally drop((f.tables :+ "meta").map(t => s"${p}_$t"): _*)
+    }
+  }
+
+  test("a refused batch restores the caller's job description (budget-refused containment mine)") {
+    val docs = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
+      .filter(col("doc_id") % 10 === 0)
+    val excerpts = docs
+      .withColumn("__toks", split(col("text"), " "))
+      .withColumn("text",
+        expr("concat_ws(' ', slice(__toks, 1, CAST(size(__toks) DIV 2 AS INT)))"))
+      .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
+    val pairsDir = java.nio.file.Files.createTempDirectory("ingest_label").toString
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("caller: outer phase")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        IngestLoop.ingestContainmentBatch(docs.union(excerpts), 0L, "doc_id", "text",
+          "ing_lbl", pairsDir, tau = 0.5, n = 3, buckets = 4, maxCandidates = 1L)
+      }
+      assert(e.getMessage.contains("budget"), e.getMessage)
+      assert(sc.getLocalProperty("spark.job.description") == "caller: outer phase",
+        "the refused batch leaked its phase label onto the calling thread")
+    } finally {
+      sc.setJobDescription(prev)
+      drop("ing_lbl_posting", "ing_lbl_base", "ing_lbl_meta")
+    }
+  }
 }
