@@ -526,9 +526,12 @@ object Dedup {
     * driver-local closure.
     *
     * Returns (id, component) for every node incident to an edge, where
-    * component = smallest node id in the component. Isolated rows never
-    * appear in `pairs`; callers union them back as their own singleton
-    * groups if needed. Throws if `maxIter` rounds do not reach the
+    * component = smallest node id in the component. An edge with a NULL
+    * endpoint names no node, as in a SQL equi-join, and is dropped
+    * before either regime sees it (so the incremental twin and
+    * [[ccRepair]], whose sub-runs come through here, drop it too).
+    * Isolated rows never appear in `pairs`; callers union them back as
+    * their own singleton groups if needed. Throws if `maxIter` rounds do not reach the
     * fixpoint (2^maxIter exceeds any real diameter — hitting this means
     * the input, not the budget, is wrong) rather than returning a
     * silently-incomplete grouping.
@@ -539,6 +542,7 @@ object Dedup {
                           onRound: () => Unit = () => (),
                           localEdges: Int = ccLocalEdges): DataFrame = {
     val fwd = pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull)
     val sym = fwd.union(fwd.select(col("v").as("u"), col("u").as("v"))).distinct()
     val eagerStaging = isEager(staging)
     // a caller may only LOWER the bound (specs pass 0): raising it would
@@ -548,13 +552,11 @@ object Dedup {
       if (!eagerStaging || bound <= 0) staging(sym)
       else {
         val (staged, n) = stageObserved(staging, sym, count(lit(1)))
-        val local =
-          if (n.asInstanceOf[Long] > bound) None
-          else localComponents(staged.sparkSession, staged.collect(), staged.schema("u"))
-        local match {
-          case Some(comps) => onRound(); return comps
-          case _ => staged
+        if (n.asInstanceOf[Long] <= bound) {
+          onRound()
+          return localComponents(staged.sparkSession, staged.collect())
         }
+        staged
       }
     var labelsInit = edges.select(col("u").as("id")).distinct()
       .withColumn("comp", col("id"))
@@ -620,16 +622,9 @@ object Dedup {
   /** Union-find closure of driver-held (u, v) edge rows — the
     * driver-local regime of [[connectedComponents]]. Linking the larger
     * root under the smaller keeps every root its component's minimum,
-    * so each node's row equals the round loop's fixpoint. `idField` is
-    * the edges' `u` field, whose type and nullability the round loop's
-    * `id` carries too. None when an endpoint is NULL: the round loop
-    * groups a null id like any other, and its label rising from null
-    * can balance the label-sum fixpoint test a round early, so such
-    * edge sets keep the round loop's exact output by running it. */
+    * so each node's row equals the round loop's fixpoint. */
   private def localComponents(spark: org.apache.spark.sql.SparkSession,
-                              edges: Iterable[Row],
-                              idField: StructField): Option[DataFrame] = {
-    if (edges.exists(e => e.isNullAt(0) || e.isNullAt(1))) return None
+                              edges: Iterable[Row]): DataFrame = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
@@ -646,8 +641,8 @@ object Dedup {
     }
     val rows = new java.util.ArrayList[Row](parent.size)
     parent.keys.toArray.foreach(x => rows.add(Row(x, find(x))))
-    Some(spark.createDataFrame(rows, StructType(Seq(
-      idField.copy(name = "id"), StructField("component", LongType, nullable = true)))))
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("id", LongType, nullable = false), StructField("component", LongType))))
   }
 
   /** Incremental connected components (round 12) — the shard-arrival

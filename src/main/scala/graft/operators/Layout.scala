@@ -68,21 +68,21 @@ object Layout {
   /** Several writes to DIFFERENT tables of one family, overlapped (round
     * 17; guide §2.6): each is about one write-latency of mostly
     * driver-side catalog and commit work (~400 ms per tiny bucketed
-    * append, DdlProbe), so all but the last run on side threads while
-    * the last runs on the caller's thread. `beforeLast` runs on the
-    * caller's thread between launching the side writes and starting
-    * the last one (the ingest loops' fence heartbeat and job label; a
-    * side thread inherits the caller's job description as it was at
-    * launch). Every side write is joined in `finally`, so no write
-    * outlives the call — the fence-window contract. */
+    * append, DdlProbe), so all but the last are forked legs of one
+    * [[FitPool.legs]] scope while the last runs on the caller's thread.
+    * `beforeLast` runs on the caller's thread between forking the side
+    * writes and starting the last one (the ingest loops' fence heartbeat
+    * and job label; a fork carries the caller's job description as it
+    * was when forked). The scope joins every side write before it
+    * returns or throws, so no write outlives the call — the fence-window
+    * contract — and a failed write cancels the others. */
   private[graft] def writeAll(writes: Seq[Write], buckets: Int, mode: String,
-                              beforeLast: () => Unit = () => ()): Unit = {
-    val side = writes.init.map(w => FitPool.sideThread(writeBucketed(w, buckets, mode)))
-    try {
+                              beforeLast: () => Unit = () => ()): Unit =
+    FitPool.legs(writes.last.df.sparkSession) { scope =>
+      writes.init.foreach(w => scope.fork(writeBucketed(w, buckets, mode)))
       beforeLast()
       writeBucketed(writes.last, buckets, mode)
-    } finally FitPool.joinAll(side: _*)
-  }
+    }
 
   /** Co-located equi-join of two same-bucketed tables. */
   def bucketedJoin(spark: SparkSession, left: String, right: String,

@@ -38,18 +38,6 @@ object QueryDef {
       .cast("long").cast("double").divide(lit(f))
   }
 
-  /** Run `main` while concurrently-submitted `legs` compute, joining
-    * EVERY leg before returning or throwing (round 17): a query body
-    * that refuses mid-main (e.g. a pair-budget guard) must not leave a
-    * background leg running into the next bench query's timing window.
-    * `Await.ready` never rethrows a leg's failure here — the caller's
-    * later `Await.result` (or main's own throw) surfaces it. */
-  def withLegs[T](legs: scala.concurrent.Future[_]*)(main: => T): T =
-    try main finally legs.foreach { l =>
-      try scala.concurrent.Await.ready(l, scala.concurrent.duration.Duration.Inf)
-      catch { case _: InterruptedException => () }
-    }
-
   /** Multiset equality of two same-schema frames in ONE action (round
     * 16): the contract rows previously pinned set-equality with two
     * `exceptAll(...).count()` round-trips per comparison — four hash

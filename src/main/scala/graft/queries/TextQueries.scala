@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{Curation, Dedup, Multimodal, Packing, Sampling, Similarity, Staging, TextAnalysis, Tombstones}
+import graft.operators.{Curation, Dedup, FitPool, Multimodal, Packing, Sampling, Similarity, Staging, TextAnalysis, Tombstones}
 import graft.streaming.IngestLoop
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -472,19 +472,17 @@ object TextQueries {
         val q = e.filter(col("vec_id") < 50)
         // brute-force reference leg is independent of the index
         // build+serve leg — overlap them (guide §2.6)
-        val exactLeg = graft.operators.FitPool.submit {
-          Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
-            .localCheckpoint(true)
-        }
-        val ann = QueryDef.withLegs(exactLeg) {
+        val (ann, exact) = FitPool.legs(s) { scope =>
+          val exactLeg = scope.fork {
+            Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
+              .localCheckpoint(true)
+          }
           val idx = Similarity.pqIndex(e, "vec_id", "embedding",
             nlist = 16, m = 16, ksub = 32, seed = 42L, assign = 2)
-          Similarity.ivfPqTopK(idx, e, q, "vec_id", "embedding",
+          (Similarity.ivfPqTopK(idx, e, q, "vec_id", "embedding",
               k = 10, nprobe = 6, refine = 8)
-            .localCheckpoint(true)
+            .localCheckpoint(true), exactLeg.join())
         }
-        val exact = scala.concurrent.Await.result(exactLeg,
-          scala.concurrent.duration.Duration.Inf)
         annContract(ann, exact, k = 10, minMeanRecall = 0.75)
       },
       oracle = Some("""
@@ -510,18 +508,16 @@ object TextQueries {
         val e = embs(s, d)
         val q = e.filter(col("vec_id") < 50)
         // brute-force reference leg overlapped with build+serve (§2.6)
-        val exactLeg = graft.operators.FitPool.submit {
-          Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
-            .localCheckpoint(true)
-        }
-        val ann = QueryDef.withLegs(exactLeg) {
-          Similarity.ivfPqTopK(e, q, "vec_id", "embedding",
+        val (ann, exact) = FitPool.legs(s) { scope =>
+          val exactLeg = scope.fork {
+            Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
+              .localCheckpoint(true)
+          }
+          (Similarity.ivfPqTopK(e, q, "vec_id", "embedding",
               k = 10, nlist = 4096, nprobe = 1536, m = 16, ksub = 32,
               refine = 8, seed = 42L)
-            .localCheckpoint(true)
+            .localCheckpoint(true), exactLeg.join())
         }
-        val exact = scala.concurrent.Await.result(exactLeg,
-          scala.concurrent.duration.Duration.Inf)
         annContract(ann, exact, k = 10, minMeanRecall = 0.5)
       },
       oracle = Some("""
@@ -606,7 +602,16 @@ object TextQueries {
         // past the shared frozen index — overlap them (guide §2.6); the
         // equality compare and the emitted row read both legs' staged
         // results exactly as the sequential form did
-        val foldLeg = graft.operators.FitPool.submit {
+        val (folded, witnessBad, decKept, batch) = FitPool.legs(s) { scope =>
+          // the comparator quantizes with the INDEX's nlist: the
+          // incremental path uses the frozen model, and auto-nlist would
+          // resolve differently on the larger union at scale
+          val batchLeg = scope.fork {
+            Similarity.semanticDedup(e.union(shard), "vec_id",
+                "embedding", threshold = 0.9, nlist = idx0.coarse.nlist)
+              .select(col("vec_id").as("id"), col("cell"), col("canonical"), col("kept"))
+              .localCheckpoint(true)
+          }
           val dec = Similarity.semanticDedupIncremental(shard, "embedding", idx0)
             .localCheckpoint(true)
           val folded = idx0.union(dec).docs
@@ -618,22 +623,8 @@ object TextQueries {
             .join(kept.select(col("id").as("canonical"), col("cell").as("__kc")),
               Seq("canonical"), "left")
             .filter(col("__kc").isNull || col("__kc") =!= col("cell")).count()
-          (folded, witnessBad, dec.filter(col("kept")).count())
+          (folded, witnessBad, dec.filter(col("kept")).count(), batchLeg.join())
         }
-        // the comparator quantizes with the INDEX's nlist: the
-        // incremental path uses the frozen model, and auto-nlist would
-        // resolve differently on the larger union at scale
-        val batchLeg = graft.operators.FitPool.submit {
-          Similarity.semanticDedup(e.union(shard), "vec_id",
-              "embedding", threshold = 0.9, nlist = idx0.coarse.nlist)
-            .select(col("vec_id").as("id"), col("cell"), col("canonical"), col("kept"))
-            .localCheckpoint(true)
-        }
-        import scala.concurrent.Await
-        import scala.concurrent.duration.Duration
-        val (folded, witnessBad, decKept) =
-          QueryDef.withLegs(batchLeg)(Await.result(foldLeg, Duration.Inf))
-        val batch = Await.result(batchLeg, Duration.Inf)
         val eq = QueryDef.sameMultiset(folded, batch)
         Seq((folded.count(), eq, decKept == 0L, witnessBad == 0L))
           .toDF("n_docs", "incr_eq_batch", "clones_dropped", "witness_ok")
@@ -707,7 +698,35 @@ object TextQueries {
         // independent jobs) so each leg's stragglers back-fill the other's
         // idle cores. Statement ORDER within each leg is unchanged; the
         // emitted row is the same pure function of both legs' results.
-        val mhLeg = graft.operators.FitPool.submit {
+        val ((nCorpusLive, pairsEq, deadPairs, mhCleared),
+             (nCodesLive, annEq, annDead, pqCleared)) = FitPool.legs(s) { scope =>
+          val pqLeg = scope.fork {
+            val e = embs(s, d).select(col("vec_id"), col("embedding"))
+            Similarity.savePqIndex(Similarity.pqIndex(e, "vec_id", "embedding",
+              nlist = 16, m = 8, ksub = 16, seed = 42L), "q112pq", buckets = 8)
+            val q = e.filter(col("vec_id") < 30)
+            Tombstones.add(e.filter(col("vec_id") % 8 === 0).select("vec_id"),
+              "vec_id", "q112pq")
+            val loaded = Similarity.loadPqIndex(s, "q112pq")
+            val served = Similarity.ivfPqTopK(loaded, e, q, "vec_id", "embedding",
+                k = 5, nprobe = 8, refine = 8).localCheckpoint(true)
+            val annDead = served.filter(col("c_id") % 8 === 0).count()
+            // the strongest falsifier: serving through the tombstoned load
+            // must equal serving with the codes filtered by the same
+            // data-derived predicate — re-ranked, not just row-dropped
+            val manual = loaded.copy(codes =
+              s.table("q112pq_codes").filter(pmod(col("c_id"), lit(8)) =!= 0))
+            val expect = Similarity.ivfPqTopK(manual, e, q, "vec_id", "embedding",
+                k = 5, nprobe = 8, refine = 8).localCheckpoint(true)
+            Tombstones.compactPq(s, "q112pq") // buckets from family meta
+            val reServed = Similarity.ivfPqTopK(Similarity.loadPqIndex(s, "q112pq"),
+                e, q, "vec_id", "embedding", k = 5, nprobe = 8, refine = 8)
+              .localCheckpoint(true)
+            val annEq = sameSet(served, expect) && sameSet(reServed, served)
+            val pqCleared = !s.catalog.tableExists("q112pq_tombstones")
+            val nCodesLive = s.table("q112pq_codes").count()
+            (nCodesLive, annEq, annDead, pqCleared)
+          }
           val docsDf = docs(s, d).select(col("doc_id"), col("text"))
           val corpus = docsDf.filter(col("doc_id") % 4 === 0)
           // ingestion-shaped shard (q101's ratio): a batch is small relative
@@ -735,41 +754,8 @@ object TextQueries {
           val pairsEq = sameSet(logical, rebuilt) && sameSet(physical, logical)
           val mhCleared = !s.catalog.tableExists("q112mh_tombstones")
           val nCorpusLive = s.table("q112mh_shingles").count()
-          (nCorpusLive, pairsEq, deadPairs, mhCleared)
+          ((nCorpusLive, pairsEq, deadPairs, mhCleared), pqLeg.join())
         }
-        val pqLeg = graft.operators.FitPool.submit {
-          val e = embs(s, d).select(col("vec_id"), col("embedding"))
-          Similarity.savePqIndex(Similarity.pqIndex(e, "vec_id", "embedding",
-            nlist = 16, m = 8, ksub = 16, seed = 42L), "q112pq", buckets = 8)
-          val q = e.filter(col("vec_id") < 30)
-          Tombstones.add(e.filter(col("vec_id") % 8 === 0).select("vec_id"),
-            "vec_id", "q112pq")
-          val loaded = Similarity.loadPqIndex(s, "q112pq")
-          val served = Similarity.ivfPqTopK(loaded, e, q, "vec_id", "embedding",
-              k = 5, nprobe = 8, refine = 8).localCheckpoint(true)
-          val annDead = served.filter(col("c_id") % 8 === 0).count()
-          // the strongest falsifier: serving through the tombstoned load
-          // must equal serving with the codes filtered by the same
-          // data-derived predicate — re-ranked, not just row-dropped
-          val manual = loaded.copy(codes =
-            s.table("q112pq_codes").filter(pmod(col("c_id"), lit(8)) =!= 0))
-          val expect = Similarity.ivfPqTopK(manual, e, q, "vec_id", "embedding",
-              k = 5, nprobe = 8, refine = 8).localCheckpoint(true)
-          Tombstones.compactPq(s, "q112pq") // buckets from family meta
-          val reServed = Similarity.ivfPqTopK(Similarity.loadPqIndex(s, "q112pq"),
-              e, q, "vec_id", "embedding", k = 5, nprobe = 8, refine = 8)
-            .localCheckpoint(true)
-          val annEq = sameSet(served, expect) && sameSet(reServed, served)
-          val pqCleared = !s.catalog.tableExists("q112pq_tombstones")
-          val nCodesLive = s.table("q112pq_codes").count()
-          (nCodesLive, annEq, annDead, pqCleared)
-        }
-        import scala.concurrent.Await
-        import scala.concurrent.duration.Duration
-        val (nCorpusLive, pairsEq, deadPairs, mhCleared) =
-          QueryDef.withLegs(pqLeg)(Await.result(mhLeg, Duration.Inf))
-        val (nCodesLive, annEq, annDead, pqCleared) =
-          Await.result(pqLeg, Duration.Inf)
         Seq((nCorpusLive, nCodesLive, pairsEq, deadPairs == 0L, annEq,
             annDead == 0L, mhCleared && pqCleared))
           .toDF("n_corpus_live", "n_codes_live", "pairs_eq_rebuild",
@@ -1813,34 +1799,30 @@ object TextQueries {
         // independent of the incremental mine — overlap all three
         // (guide §2.6)
         val shingleOk = (t: org.apache.spark.sql.Column) => size(split(t, " ")) >= 3
-        val identLeg = graft.operators.FitPool.submit {
-          corpusDf.filter(shingleOk(col("text")))
-            .select(col("doc_id").as("a_id"), md5(col("text")).as("__h"))
-            .join(shardDf.select(col("doc_id").as("b_id"), md5(col("text")).as("__h")),
-              Seq("__h"))
-            .select("a_id", "b_id").localCheckpoint(true)
-        }
         val inSlice = (c: org.apache.spark.sql.Column) => pmod(c, lit(10000000L)) < 250
-        val fullLeg = graft.operators.FitPool.submit {
-          Dedup.minhashLshPairs(
-              corpusDf.filter(inSlice(col("doc_id")))
-                .union(shardDf.filter(inSlice(col("doc_id")))),
-              "doc_id", "text", threshold = 0.8)
-            .filter(col("a_id") >= 10000000L || col("b_id") >= 10000000L)
-            .select("a_id", "b_id").localCheckpoint(true)
-        }
-        val inc = QueryDef.withLegs(identLeg, fullLeg) {
+        val (inc, identCross, fullSlice) = FitPool.legs(s) { scope =>
+          val identLeg = scope.fork {
+            corpusDf.filter(shingleOk(col("text")))
+              .select(col("doc_id").as("a_id"), md5(col("text")).as("__h"))
+              .join(shardDf.select(col("doc_id").as("b_id"), md5(col("text")).as("__h")),
+                Seq("__h"))
+              .select("a_id", "b_id").localCheckpoint(true)
+          }
+          val fullLeg = scope.fork {
+            Dedup.minhashLshPairs(
+                corpusDf.filter(inSlice(col("doc_id")))
+                  .union(shardDf.filter(inSlice(col("doc_id")))),
+                "doc_id", "text", threshold = 0.8)
+              .filter(col("a_id") >= 10000000L || col("b_id") >= 10000000L)
+              .select("a_id", "b_id").localCheckpoint(true)
+          }
           val cIdx = Dedup.minhashIndex(corpusDf, "doc_id", "text")
           // shard is 1/40 of the corpus: the spread exchange costs more
           // than the signature kernel it widens (round 16)
           val sIdx = Dedup.minhashIndex(shardDf, "doc_id", "text", spread = false)
-          Dedup.minhashLshPairsIncremental(sIdx, cIdx, threshold = 0.8)
-            .localCheckpoint(true)
+          (Dedup.minhashLshPairsIncremental(sIdx, cIdx, threshold = 0.8)
+            .localCheckpoint(true), identLeg.join(), fullLeg.join())
         }
-        val identCross = scala.concurrent.Await.result(identLeg,
-          scala.concurrent.duration.Duration.Inf)
-        val fullSlice = scala.concurrent.Await.result(fullLeg,
-          scala.concurrent.duration.Duration.Inf)
         val missed = identCross.join(
           inc.filter(col("jaccard") === 1.0).select("a_id", "b_id"),
           Seq("a_id", "b_id"), "left_anti")
@@ -1890,32 +1872,28 @@ object TextQueries {
         // incremental mine (guide §2.6) — same restructure as q101
         val nonzero = (v: org.apache.spark.sql.Column) =>
           Similarity.l2norm(Similarity.toDoubleArray(v)) > 0
-        val identLeg = graft.operators.FitPool.submit {
-          corpusDf.filter(nonzero(col("embedding")))
-            .select(col("vec_id").as("a_id"), col("embedding").as("__v"))
-            .join(shardDf.select(col("vec_id").as("b_id"), col("embedding").as("__v")),
-              Seq("__v"))
-            .select("a_id", "b_id").localCheckpoint(true)
-        }
         val inSlice = (c: org.apache.spark.sql.Column) => pmod(c, lit(10000000L)) < 250
-        val fullLeg = graft.operators.FitPool.submit {
-          Similarity.lshDupPairs(
-              corpusDf.filter(inSlice(col("vec_id")))
-                .union(shardDf.filter(inSlice(col("vec_id")))),
-              "vec_id", "embedding", threshold = 0.9, dim = 64)
-            .filter(col("a_id") >= 10000000L || col("b_id") >= 10000000L)
-            .select("a_id", "b_id").localCheckpoint(true)
-        }
-        val inc = QueryDef.withLegs(identLeg, fullLeg) {
+        val (inc, identCross, fullSlice) = FitPool.legs(s) { scope =>
+          val identLeg = scope.fork {
+            corpusDf.filter(nonzero(col("embedding")))
+              .select(col("vec_id").as("a_id"), col("embedding").as("__v"))
+              .join(shardDf.select(col("vec_id").as("b_id"), col("embedding").as("__v")),
+                Seq("__v"))
+              .select("a_id", "b_id").localCheckpoint(true)
+          }
+          val fullLeg = scope.fork {
+            Similarity.lshDupPairs(
+                corpusDf.filter(inSlice(col("vec_id")))
+                  .union(shardDf.filter(inSlice(col("vec_id")))),
+                "vec_id", "embedding", threshold = 0.9, dim = 64)
+              .filter(col("a_id") >= 10000000L || col("b_id") >= 10000000L)
+              .select("a_id", "b_id").localCheckpoint(true)
+          }
           val cIdx = Similarity.embedIndex(corpusDf, "vec_id", "embedding", dim = 64)
           val sIdx = Similarity.embedIndex(shardDf, "vec_id", "embedding", dim = 64)
-          Similarity.lshDupPairsIncremental(sIdx, cIdx, threshold = 0.9)
-            .localCheckpoint(true)
+          (Similarity.lshDupPairsIncremental(sIdx, cIdx, threshold = 0.9)
+            .localCheckpoint(true), identLeg.join(), fullLeg.join())
         }
-        val identCross = scala.concurrent.Await.result(identLeg,
-          scala.concurrent.duration.Duration.Inf)
-        val fullSlice = scala.concurrent.Await.result(fullLeg,
-          scala.concurrent.duration.Duration.Inf)
         val missed = identCross.join(
           inc.filter(col("cos") === 1.0).select("a_id", "b_id"),
           Seq("a_id", "b_id"), "left_anti")
@@ -3128,28 +3106,25 @@ object TextQueries {
         // depend only on the checkpointed corpus, not on the loop — run
         // them concurrently with the draining micro-batches (guide §2.6:
         // the loop's small jobs leave most cores idle)
-        val fullLeg = graft.operators.FitPool.submit {
-          Dedup.simhashPairs(corpus, "doc_id", "text").localCheckpoint(true)
-        }
-        val identLeg = graft.operators.FitPool.submit {
-          corpus
-            .select(col("doc_id").as("a_id"), md5(col("text")).as("__h"))
-            .join(corpus.select(col("doc_id").as("b_id"), md5(col("text")).as("__h")),
-              Seq("__h"))
-            .filter(col("a_id") < col("b_id"))
-            .select("a_id", "b_id").localCheckpoint(true)
-        }
-        val (nBatches, streamed) = QueryDef.withLegs(fullLeg, identLeg) {
+        val (nBatches, streamed, full, identCross) = FitPool.legs(s) { scope =>
+          val fullLeg = scope.fork {
+            Dedup.simhashPairs(corpus, "doc_id", "text").localCheckpoint(true)
+          }
+          val identLeg = scope.fork {
+            corpus
+              .select(col("doc_id").as("a_id"), md5(col("text")).as("__h"))
+              .join(corpus.select(col("doc_id").as("b_id"), md5(col("text")).as("__h")),
+                Seq("__h"))
+              .filter(col("a_id") < col("b_id"))
+              .select("a_id", "b_id").localCheckpoint(true)
+          }
           q.awaitTermination()
           val nB = new java.io.File(pairsDir).listFiles()
             .count(_.getName.startsWith("ingest_batch="))
           (nB, s.read.parquet(pairsDir)
-            .select("a_id", "b_id", "hamming").localCheckpoint(true))
+            .select("a_id", "b_id", "hamming").localCheckpoint(true),
+            fullLeg.join(), identLeg.join())
         }
-        import scala.concurrent.Await
-        import scala.concurrent.duration.Duration
-        val full = Await.result(fullLeg, Duration.Inf)
-        val identCross = Await.result(identLeg, Duration.Inf)
         val missed = identCross.join(
           streamed.filter(col("hamming") === 0).select("a_id", "b_id"),
           Seq("a_id", "b_id"), "left_anti")
@@ -3498,20 +3473,15 @@ object TextQueries {
           checkpointDir = ckpt)
         // full-batch reference pairs depend only on the checkpointed
         // signatures — overlap with the draining loop (guide §2.6)
-        val fullLeg = graft.operators.FitPool.submit {
-          Dedup.signaturePairs(sigs, "media_id", "dhash").localCheckpoint(true)
-        }
-        val (nBatches, streamed) = QueryDef.withLegs(fullLeg) {
+        val (nBatches, streamed, full) = FitPool.legs(s) { scope =>
+          val fullLeg = scope.fork {
+            Dedup.signaturePairs(sigs, "media_id", "dhash").localCheckpoint(true)
+          }
           q.awaitTermination()
           val nB = new java.io.File(pairsDir).listFiles()
             .count(_.getName.startsWith("ingest_batch="))
           (nB, s.read.parquet(pairsDir)
-            .select("a_id", "b_id", "hamming").localCheckpoint(true))
-        }
-        val full = {
-          import scala.concurrent.Await
-          import scala.concurrent.duration.Duration
-          Await.result(fullLeg, Duration.Inf)
+            .select("a_id", "b_id", "hamming").localCheckpoint(true), fullLeg.join())
         }
         val expReenc = idsDf.filter(col("doc_id") % 5 === 1)
           .select(col("doc_id").as("a_id"), (col("doc_id") + 1000000L).as("b_id"))
@@ -3668,21 +3638,19 @@ object TextQueries {
         val pred = pmod(col("vec_id"), lit(4)) === 1
         // filtered brute-force reference leg overlapped with the index
         // build+filtered-serve leg (guide §2.6)
-        val exactLeg = graft.operators.FitPool.submit {
-          Similarity.bruteForceTopK(e.filter(pred), q,
-              "vec_id", "embedding", k = 10)
-            .localCheckpoint(true)
-        }
-        val ann = QueryDef.withLegs(exactLeg) {
+        val (ann, exact) = FitPool.legs(s) { scope =>
+          val exactLeg = scope.fork {
+            Similarity.bruteForceTopK(e.filter(pred), q,
+                "vec_id", "embedding", k = 10)
+              .localCheckpoint(true)
+          }
           val idx = Similarity.pqIndex(e, "vec_id", "embedding",
             nlist = 16, m = 16, ksub = 32, seed = 42L, assign = 2)
-          Similarity.ivfPqTopK(idx, e, q, "vec_id", "embedding",
+          (Similarity.ivfPqTopK(idx, e, q, "vec_id", "embedding",
               k = 10, nprobe = 2, refine = 8,
               filterIds = Some(e.filter(pred).select("vec_id")))
-            .localCheckpoint(true)
+            .localCheckpoint(true), exactLeg.join())
         }
-        val exact = scala.concurrent.Await.result(exactLeg,
-          scala.concurrent.duration.Duration.Inf)
         annContract(ann, exact, k = 10, minMeanRecall = 0.75)
       },
       oracle = Some("""

@@ -547,28 +547,32 @@ class DedupSpec extends AnyFunSuite {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val marker = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties).map(_.getProperty("spark.job.tags", "")).getOrElse("")
+        tags.split(",").foreach {
           case `group` => jobs.incrementAndGet()
           case `markerGroup` => marker.countDown()
           case _ => ()
         }
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "connectedComponents over the 19-node fixture")
+      sc.addJobTag(group)
       val got = Dedup.connectedComponents(ccFixture, "a", "b").collect()
       // listener events arrive in order: once the marker job's start is
       // seen, every job of the measured group has been counted
-      sc.setJobGroup(markerGroup, "listener drain marker")
+      sc.removeJobTag(group)
+      sc.addJobTag(markerGroup)
       spark.range(1).count()
       assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
       assert(got.length == 19)
       assert(jobs.get <= 3,
         s"driver-local CC ran ${jobs.get} jobs: staging + one collect should suffice")
     } finally {
-      sc.clearJobGroup()
+      sc.removeJobTag(group)
+      sc.removeJobTag(markerGroup)
       sc.removeSparkListener(listener)
     }
   }
@@ -607,15 +611,13 @@ class DedupSpec extends AnyFunSuite {
       ("empty", Seq.empty[(java.lang.Long, java.lang.Long)], Seq.empty[String], true),
       ("self-edges", Seq((L(5), L(5)), (L(1), L(2)), (L(9), L(9))),
         Seq("[1,1]", "[2,1]", "[5,5]", "[9,9]"), true),
-      // null endpoints keep the round loop's output, which the driver
-      // regime therefore defers to: null never carries a label to a
-      // neighbor, but is grouped like an id — and its label rising from
-      // null balances the label-sum fixpoint test after one round here,
-      // so it stops at [null,2] rather than the min adjacent component 1
+      // an edge with a NULL endpoint names no node (as in a SQL
+      // equi-join): it is dropped, and its other endpoint appears only
+      // through its remaining edges
       ("null endpoints", Seq((L(1), L(2)), (L(2), null), (null, L(6)), (L(6), L(5)),
         (null, null), (L(8), L(8))),
-        Seq("[1,1]", "[2,1]", "[5,5]", "[6,5]", "[8,8]", "[null,2]"), false),
-      ("null-only", Seq((null, null)), Seq("[null,null]"), false))
+        Seq("[1,1]", "[2,1]", "[5,5]", "[6,5]", "[8,8]"), true),
+      ("null-only", Seq((null, null)), Seq.empty[String], true))
     cases.foreach { case (name, rows, pinned, driverLocal) =>
       val (local, rounds) = withRounds(r =>
         Dedup.connectedComponents(frame(rows), "a", "b", onRound = r))
