@@ -45,16 +45,24 @@ object Tables {
     apply(spark, dir, "events")
       .withColumn("ts_ts", timestamp_micros(expr("ts div 1000")))
 
-  /** Session builder used by tests/tools: mirrors Verify/Bench configs.
-    * SPARK_GRAFT_MASTER overrides the master (the local-cluster
-    * distribution-realism drives run every tool against separate
-    * executor JVMs this way; see Verify). */
+  /** The engine's only session builder: Verify, Bench, perfbench, the
+    * tools and the tests all get their session here, so this is their
+    * config. SPARK_GRAFT_MASTER overrides the master:
+    * `local-cluster[2,8,4096]` is the distribution-realism drive
+    * (BASELINE.md), whose separate executor JVMs exercise task
+    * serialization of the custom codegen expressions, broadcasts and
+    * localCheckpoint across process boundaries; executors launched via
+    * SPARK_HOME get the driver's own classpath. */
   def session(threads: Int = 8): SparkSession = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$threads]")
     val builder = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", threads.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // events.ts physical type is driver-controlled and has shipped as
+      // both INT64 TIMESTAMP(NANOS) (needs this setting or the read
+      // throws) and timestamp[us]; normalizeTs maps either to the
+      // engine-wide epoch-nanos BIGINT contract
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       // InferFiltersFromGenerate adds a redundant `size(arr) > 0` below

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,33 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional query-name filter (local iteration)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] is the distribution-
-    // realism drive (BASELINE.md): separate executor JVMs exercise task
-    // serialization of the custom codegen expressions, broadcasts, and
-    // localCheckpoint across process boundaries. Executors launched via
-    // SPARK_HOME need the application classes — ship the forked driver's
-    // own classpath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts physical type is driver-controlled and has shipped as
-      // both INT64 TIMESTAMP(NANOS) (needs this setting or the read
-      // throws) and timestamp[us]; Tables.normalizeTs maps either to
-      // the engine-wide epoch-nanos BIGINT contract
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Tables.session: inferred size()>0 filters inline staged
-      // gram/signature builders into join conditions (q85: 17.6 -> ~3 s)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * stage re-deriving the chain from the scan (the round-13 q126 row
   * deliberately re-derives so its oracle covers the raw composition;
   * this is the production entry point that composition was missing —
-  * `tools/CurationProbe` records the staged-vs-re-derive gap at 100×,
+  * SURVEY.md's round-14 record has the staged-vs-re-derive gap (re-derive
+  * 16.2/28.8 s vs staged 4.1/8.3 s at 10×/100×, outputs row-identical),
   * and q126 now drives THIS code under [[Staging.None]], so the entry
   * point itself replays against the full-chain DuckDB oracle).
   *

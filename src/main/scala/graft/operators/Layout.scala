@@ -68,7 +68,7 @@ object Layout {
   /** Several writes to DIFFERENT tables of one family, overlapped (round
     * 17; guide §2.6): each is about one write-latency of mostly
     * driver-side catalog and commit work (~400 ms per tiny bucketed
-    * append, DdlProbe), so all but the last are forked legs of one
+    * append, OPTIMIZATION_r17.md), so all but the last are forked legs of one
     * [[FitPool.legs]] scope while the last runs on the caller's thread.
     * `beforeLast` runs on the caller's thread between forking the side
     * writes and starting the last one (the ingest loops' fence heartbeat

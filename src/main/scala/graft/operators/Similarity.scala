@@ -407,9 +407,10 @@ object Similarity {
     else {
       // MULTI-ASSIGNMENT (round 15): index each vector in its `assign`
       // nearest cells — the recall lever the probe decomposition
-      // actually supports (RecallProbe: refine=64 moved recall 0.736 ->
-      // 0.736 while nprobe=16 hit 0.994, i.e. the loss is boundary
-      // vectors in unprobed cells, NOT quantization error — so an
+      // actually supports (BASELINE.md round-15 recall decomposition:
+      // refine=64 moved recall 0.736 -> 0.736 while nprobe=16 hit
+      // 0.994, i.e. the loss is boundary vectors in unprobed cells,
+      // NOT quantization error — so an
       // OPQ-style rotation would lift nothing here). Each copy encodes
       // its OWN residual (vs its assigned cell's center), so ADC stays
       // self-consistent per copy; serving keeps each candidate once at
@@ -453,11 +454,6 @@ object Similarity {
     base.select(col("c_id"), col("cv"))
       .orderBy(Sampling.mixedHash(col("c_id")), col("c_id"))
       .limit(trainSample).collect().map(_.getSeq[Double](1).toArray)
-
-  /** Probe hook: [[sampleVecs]] on a raw frame (dev tooling only). */
-  private[graft] def probeSample(df: DataFrame, idCol: String, vecCol: String,
-                                 trainSample: Int): Array[Array[Double]] =
-    sampleVecs(withNorm(df, idCol, vecCol, "c_id", "cv", "cn"), trainSample)
 
   /** DISTINCT-vector twin of [[sampleVecs]] for [[semanticDedup]]: the
     * sample is drawn from the distinct embedding set, hash-ordered by

@@ -444,7 +444,7 @@ object TextAnalysis {
     * vector is capped at 32 MB (`require`) — at 10 bits/gram that is
     * ~270 M benchmark grams, far past any eval suite.
     *
-    * The honest single-box record (`tools/BloomProbe`, 45 M corpus
+    * The honest single-box record (SURVEY.md round 13, 45 M corpus
     * grams vs a 1.8 M-gram benchmark, broadcast joins disabled): wall
     * time within 1.35x of the raw gram shuffle join — local NVMe
     * shuffle is nearly free, so the saved bytes don't buy wall clock
@@ -893,8 +893,9 @@ object TextAnalysis {
     * cached footprint is two copies of the types table (the previous
     * round's frame is unpersisted as soon as the next settles). A
     * GPT-2-scale 50k-rule vocabulary is therefore 50k short driver
-    * round-trips: fine on a warm cluster (BpeProbe's trainer wall is
-    * flat in corpus size), but budget wall-clock accordingly — the
+    * round-trips: fine on a warm cluster (the trainer wall is flat in
+    * corpus size, BASELINE.md round-15 BPE rungs), but budget wall-clock
+    * accordingly — the
     * heavy lifting at 100 TB is pass 1, never the rounds. */
   def trainBpeMerges(df: DataFrame, textCol: String, numMerges: Int,
                      minFreq: Long = 2L,

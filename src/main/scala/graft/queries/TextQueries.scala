@@ -458,9 +458,9 @@ object TextQueries {
     //
     // Round 15: MULTI-ASSIGNMENT (assign=2 — each vector indexed in its
     // two nearest cells, serving dedups candidates at their best ADC).
-    // The RecallProbe decomposition showed the recall loss was entirely
-    // boundary vectors in unprobed cells (refine=64 moved nothing,
-    // nprobe=16 hit 0.99), so replication is the lever — measured
+    // The round-15 recall decomposition (BASELINE.md) showed the recall
+    // loss was entirely boundary vectors in unprobed cells (refine=64
+    // moved nothing, nprobe=16 hit 0.99), so replication is the lever — measured
     // mean recall@10 at (nprobe=6, refine=8): 0.88-1.00 across
     // sf0.001/0.01/0.1/100x, up from 0.70-0.74 single-assigned at the
     // SAME probed cell fraction. Floor raised 0.5 -> 0.75 accordingly.
@@ -499,7 +499,7 @@ object TextQueries {
     // Babenko/Lempitsky CVPR 2012), two-stage beam probing, no
     // nlist-sized literal or broadcast anywhere. nprobe keeps q107's
     // probed-corpus fraction (1536/4096 = 6/16 = 37.5%); recall@10 vs
-    // exact measured 0.86-1.00 at sf0.001/0.01/0.1/100× (RecallProbe) —
+    // exact measured 0.86-1.00 at sf0.001/0.01/0.1/100× (SURVEY.md §7) —
     // finer cells IMPROVE recall at fixed probe fraction, so the same
     // 0.5 bound has more margin than q107's. Exhaustive-probe == brute
     // force at nlist=4096 pinned in SessionIvfSpec.
@@ -1035,7 +1035,7 @@ object TextQueries {
           .orderBy("doc_id")
       },
       // common dialect (no list lambdas): the 16 sample positions as
-      // explicit terms — replays in both DuckDB and the Spark emulator
+      // explicit terms, each mapping one-to-one onto the Spark side
       oracle = Some(s"""
         WITH d AS (SELECT doc_id, text, length(text) AS L FROM documents)
         SELECT doc_id,
@@ -1989,13 +1989,11 @@ object TextQueries {
         Dedup.containmentJoinIncremental(sIdx, cIdx, tau = 0.5)
           .orderBy("a_id", "b_id")
       },
-      // Oracle kept in the emulator-and-DuckDB COMMON dialect (VERDICT r7
-      // watch item): prefix slices as list_slice(tk, 1, n) (== Spark
-      // slice(tk, 1, n) when begin is 1), variable indexing as
-      // list_extract (== element_at), and the shingle count staged as a
-      // plain column so range(1, ns + 1) stays regex-rewritable — no
-      // per-query OracleEmu override, so local replay cannot drift from
-      // the driver's real-DuckDB check.
+      // Oracle kept in the COMMON dialect (VERDICT r7 watch item): prefix
+      // slices as list_slice(tk, 1, n) (== Spark slice(tk, 1, n) when
+      // begin is 1), variable indexing as list_extract (== element_at),
+      // and the shingle count staged as a plain column, so each construct
+      // maps one-to-one onto the Spark side.
       oracle = Some("""
         WITH b0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
         tk0 AS (SELECT doc_id, string_split(text, ' ') AS tk FROM b0),

@@ -335,8 +335,8 @@ object IngestLoop {
                           val owner: String) {
     /** Label this thread's next Spark jobs `"<owner>: <phase>"` (guide
       * §1.5): the phases of a batch — shard index, append `<table>`,
-      * mine, maintain check — are readable in the UI and in JobProfile
-      * without a debugger. */
+      * mine, maintain check — are readable in the UI and in perfbench's
+      * traced run (`perfbench/run.py --trace 1`) without a debugger. */
     def label(phase: String): Unit =
       spark.sparkContext.setJobDescription(s"$owner: $phase")
   }
@@ -615,7 +615,8 @@ object IngestLoop {
     * check forces a re-mine. No-op in production. Volatile so a
     * spec's assignment is visible to a loop thread, but the probe
     * itself is GLOBAL state: under the concurrent-loop topology (two
-    * loops on one family in one JVM — the MwProbe shape) both loops
+    * loops on one family in one JVM — the multi-writer shape SURVEY.md's
+    * round-13 record measures) both loops
     * invoke whatever function is installed, so it is a
     * SINGLE-LOOP-TEST-ONLY seam — probes that must not fire for a
     * foreign loop filter on the prefix argument (round-14 advisory). */
@@ -1339,8 +1340,9 @@ object IngestLoop {
     runBatch(batch.sparkSession, prefix, s"ingestContainmentBatch bid=$bid") { run =>
       import run.spark.implicits._
       // SPREAD THE BATCH before corpus-sized work (round 16 — found by
-      // LoopProbe's clone-storm arm): a landing micro-batch is typically
-      // ONE file = ONE partition, and the mine's candidate join + count
+      // the ingest-loop drive on the 100-clone fixture, whose round-15
+      // per-batch rungs are in BASELINE.md): a landing micro-batch is
+      // typically ONE file = ONE partition, and the mine's candidate join + count
       // aggregate inherit that partitioning on the shard side — on a
       // clone-heavy batch the whole within-batch pair mass then runs in a
       // single task. One shard-sized hash repartition on the id restores
