@@ -83,9 +83,9 @@ object Dedup {
         "(Dedup.minhashLshPairs / Dedup.simhashPairs / Similarity.lshDupPairs).")
   }
 
-  /** Conditional-collapse probe shared by the pair families: does the
-    * exact-dup pair mass Σ c(c−1)/2 of `keyed` grouped by `key` exceed
-    * `ratio` pairs per row? Deliberately an EAGER aggregate at
+  /** The probe of [[dupGroups]]: does the exact-dup pair mass
+    * Σ c(c−1)/2 of `keyed` grouped by `key` exceed `ratio` pairs per
+    * row? Deliberately an EAGER aggregate at
     * plan-construction time — the answer gates WHICH plan gets built —
     * which is exactly why it must NOT run under [[Staging.None]] (the
     * documented streaming-safe / lazy-composition pass-through: no
@@ -103,6 +103,95 @@ object Dedup {
       .agg(coalesce(sum(col("c")), lit(0L)).as("n"),
         coalesce(sum(col("c") * (col("c") - 1L)), lit(0L)).as("p2")).head()
     st.getLong(1) / 2 > ratio * st.getLong(0)
+  }
+
+  /** Exact-duplicate groups of a collapsed run: `mem` = (id, gid[,
+    * __shard]) maps every member to its group's min-id representative;
+    * `reps` = (gid, key) holds one row per group. */
+  private[graft] final case class DupGroups(mem: DataFrame, reps: DataFrame)
+
+  /** EXACT-DUPLICATE COLLAPSE — the one conditional rep-election policy
+    * of every near-dup family (MinHash, SimHash, signature, containment,
+    * LSH cosine, SemDeDup; one-shot and incremental).
+    *
+    * The trade: a g-member exact-dup family (equal `key`) is a
+    * guaranteed g²-ish candidate clique in every band/chunk/cell, so a
+    * clone-heavy corpus inflates the kernel's candidate join by
+    * Σ g(g−1)/2, while collapsing costs a few id-only staging and
+    * expansion joins that are pure overhead when families are small.
+    * [[heavyDupMass]] measures the within-family pair mass with one
+    * aggregate and the collapse is taken only when it exceeds `ratio`
+    * pairs per row (strictly): pairs-of-twins corpora (0.5 pairs/row)
+    * stay lean, the 100× clone-family fixture (~50 pairs/row)
+    * collapses. The probe — and so the collapse — is skipped under
+    * [[Staging.None]] and on a streaming input (see [[heavyDupMass]]).
+    * Callers pass `collapsePairsPerDoc` = 0 to force the collapse on any
+    * dup mass, `Double.PositiveInfinity` to disable it.
+    *
+    * `keyed` is (id, key[, __shard]), narrow: the key is anything whose
+    * equality implies equal kernel scores (md5 of the text, the
+    * signature, the sorted shingle set's md5, the raw vector). Returns
+    * `None` for the lean branch; otherwise the members are staged once,
+    * each group elects its MIN id as representative (`gid`), and the
+    * (id, gid[, __shard]) membership is staged once more so every
+    * expansion join shuffles scalars, never the key. The site runs its
+    * kernel over the representatives only and either maps the rep-level
+    * pairs back with [[expandDupPairs]] or lets members inherit their
+    * rep's decision by one join on `gid` (SemDeDup: an exact-dup group
+    * is one sub-clique of its rep's component). Both branches are
+    * row-identical, pinned branch-forced per family in DedupSpec,
+    * SessionIvfSpec and SemDedupIncSpec. */
+  private[graft] def dupGroups(keyed: DataFrame, staging: Staging.Mode,
+                               ratio: Double): Option[DupGroups] = {
+    if (!heavyDupMass(keyed, col("key"), staging, ratio)) return None
+    val members = staging(keyed)
+    val reps = members.groupBy("key").agg(min(col("id")).as("gid"))
+    val shard = if (keyed.columns.contains("__shard")) Seq(col("__shard")) else Nil
+    val mem = staging(members.join(reps, Seq("key"))
+      .select(Seq(col("id"), col("gid")) ++ shard: _*))
+    Some(DupGroups(mem, reps.select("gid", "key")))
+  }
+
+  /** Rep-level pairs (a_id, b_id, `score`) — ids are representatives'
+    * gids — expanded to member pairs under the [[dupGroups]] contract:
+    *  - within a group every member pair qualifies iff the group does:
+    *    all groups, or only the gids of `okGroups` when given (MinHash's
+    *    shinglable groups, the cosine family's self-score ≥ threshold);
+    *    the pair scores `withinScore`, which may read `okGroups`'
+    *    columns;
+    *  - across groups each rep pair fans out to the two groups' member
+    *    cross product with the rep pair's score (the score is a function
+    *    of the two keys).
+    * A symmetric measure emits a < b, re-normalised with least/greatest
+    * (member id sets of two groups interleave); a `directed` one
+    * (containment) emits every ordered a ≠ b and keeps the direction.
+    * When `mem` carries `__shard` (an incremental run), only pairs with
+    * at least one shard member are kept. */
+  private[graft] def expandDupPairs(g: DupGroups, repPairs: DataFrame,
+                                    score: String, withinScore: Column,
+                                    okGroups: Option[DataFrame] = None,
+                                    directed: Boolean = false): DataFrame = {
+    val sharded = g.mem.columns.contains("__shard")
+    def side(m: DataFrame, gidAs: String, idAs: String, shardAs: String,
+             extra: Column*): DataFrame =
+      m.select(Seq(col("gid").as(gidAs), col("id").as(idAs)) ++ extra ++
+        (if (sharded) Seq(col("__shard").as(shardAs)) else Nil): _*)
+    val touches = if (sharded) col("__sa") || col("__sb") else lit(true)
+    val m1 = okGroups.fold(g.mem)(g.mem.join(_, Seq("gid")))
+    val within = side(m1, "gid", "a_id", "__sa", withinScore.as(score))
+      .join(side(m1, "gid", "b_id", "__sb"), Seq("gid"))
+      .filter((if (directed) col("a_id") =!= col("b_id") else col("a_id") < col("b_id")) &&
+        touches)
+      .select(col("a_id"), col("b_id"), col(score))
+    val cross = repPairs
+      .join(side(g.mem, "a_id", "__ma", "__sa"), Seq("a_id"))
+      .join(side(g.mem, "b_id", "__mb", "__sb"), Seq("b_id"))
+      .filter(touches)
+      .select(
+        (if (directed) Seq(col("__ma").as("a_id"), col("__mb").as("b_id"))
+         else Seq(least(col("__ma"), col("__mb")).as("a_id"),
+           greatest(col("__ma"), col("__mb")).as("b_id"))) :+ col(score): _*)
+    within.union(cross)
   }
 
   // MinHash: h_j(x) = (a_j * (xxhash64(x) mod p) + b_j) mod p with the
@@ -357,86 +446,39 @@ object Dedup {
     * (xxhash64) and skewed buckets can be salted. Returns (a_id, b_id,
     * jaccard) for every member pair above the threshold.
     *
-    * EXACT duplicates are collapsed FIRST (round-5): identical texts
-    * share identical shingle sets, signatures and band buckets, so
-    * running every copy through banding re-does the same work per copy
-    * and floods the verify join — an exact-dup pair is a guaranteed
-    * candidate in EVERY band, and verify shuffles two shingle arrays
-    * per candidate. One md5 groupBy picks a representative (min id) per
-    * distinct text; the banded pipeline sees representatives only; the
-    * output is then expanded back to member pairs with id-only joins
-    * (no shingle arrays): within-group pairs at jaccard 1.0 (iff the
-    * text actually shingles — sub-n-token docs have empty shingle sets
-    * whose jaccard is defined 0 and never clears the threshold, exactly
-    * the uncollapsed behavior), cross-group pairs fanned out from each
-    * surviving representative pair. Row-identical to the uncollapsed
-    * formulation (DedupSpec exhaustive oracle); signature + verify work
-    * scales with DISTINCT texts, not copies — the production "exact
-    * dedup before near-dup" composition built in.
-    *
-    * The collapse is CONDITIONAL (round-7): it is a trade — what the
-    * uncollapsed run overpays is the WITHIN-FAMILY candidate blowup (a
-    * g-member exact-dup family is a guaranteed g²-ish collision clique
-    * in every band, so candidate volume inflates by Σ g(g−1)/2), while
-    * the collapse overpays five id-expansion joins that are pure
-    * overhead when families are small. One cheap aggregate over the md5
-    * groups measures the within-family pair mass up front: collapse
-    * only when it exceeds `collapsePairsPerDoc` pairs per corpus row.
-    * A corpus of pairs-of-twins (q33's base∪shifted shape: pair mass
-    * 0.5/doc) stays lean — banding a doc twice is linear work; the 100×
-    * fixture's ~100-member clone families (pair mass ~50/doc) collapse,
-    * which is what lets that run finish at all. Both branches are
-    * row-identical (DedupSpec pins them branch-forced on one corpus):
-    * an exact-dup pair is a guaranteed candidate in every band and
-    * verifies at jaccard exactly 1.0 on identical shingle sets. Pass 0
-    * to force the collapse on any dup mass, Double.PositiveInfinity to
-    * disable it. */
+    * Exact duplicates (md5 of the text) take the [[dupGroups]]
+    * collapse: an exact-dup pair is a guaranteed candidate in EVERY
+    * band and verify shuffles two shingle arrays per candidate, so
+    * past `collapsePairsPerDoc` the banded pipeline sees
+    * representatives only and signature + verify work scales with
+    * DISTINCT texts (the production "exact dedup before near-dup"
+    * composition built in). Within a group the pairs score jaccard
+    * exactly 1.0 iff the text actually shingles — sub-n-token docs
+    * have empty shingle sets whose jaccard is defined 0 and never
+    * clears the threshold, exactly the uncollapsed behavior. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       numPerms: Int = 32, rowsPerBand: Int = 4,
                       threshold: Double = 0.5,
                       staging: Staging.Mode = Staging.Local,
-                      collapsePairsPerDoc: Double = 2.0): DataFrame = {
-    if (!heavyDupMass(df, md5(col(textCol)), staging, collapsePairsPerDoc))
-      return bandedJaccardPairs(
+                      collapsePairsPerDoc: Double = 2.0): DataFrame =
+    dupGroups(df.select(col(idCol).as("id"), md5(col(textCol)).as("key")),
+        staging, collapsePairsPerDoc) match {
+      case None => bandedJaccardPairs(
         minhashIndex(df, idCol, textCol, numPerms, rowsPerBand, staging),
         idCol, threshold)
-    // membership table staged once: feeds the rep election and both
-    // sides of each expansion join. All other staged frames are
-    // rep-level (distinct texts).
-    val members = staging(df.select(col(idCol), md5(col(textCol)).as("__hash")))
-    val reps = members.groupBy("__hash").agg(min(col(idCol)).as(idCol))
-    val repDf = df.join(reps.select(col(idCol)), Seq(idCol), "left_semi")
-    // banded pipeline over representatives (staged via minhashIndex: the
-    // band self-join's two legs would otherwise re-run the signature
-    // kernel twice, and the two verification joins would re-shingle
-    // twice more — the "write the signature table first" step of a
-    // production pass). Staging.Reliable(dir) on clusters; Staging.None
-    // to compose.
-    val idx = minhashIndex(repDf, idCol, textCol, numPerms, rowsPerBand, staging)
-    val sh = idx.shingles
-    val repPairs = bandedJaccardPairs(idx, idCol, threshold)
-    // expansion 1 — within-group: every member pair of a shinglable
-    // exact-dup group, jaccard exactly 1.0 (md5-key self-join, id-only)
-    val okGroups = reps.join(
-        sh.select(col(idCol), (size(col("__sh")) > 0).as("__ok")), Seq(idCol))
-      .filter(col("__ok") && lit(1.0) >= lit(threshold)).select("__hash")
-    val m1 = members.join(okGroups, Seq("__hash"))
-    val within = m1.select(col("__hash"), col(idCol).as("a_id"))
-      .join(m1.select(col("__hash"), col(idCol).as("b_id")), Seq("__hash"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), lit(1.0).as("jaccard"))
-    // expansion 2 — cross-group: each representative pair fans out to
-    // its two groups' member cross product (group id sets are disjoint
-    // but interleaved, so re-normalize with least/greatest)
-    val cross = repPairs
-      .join(reps.select(col("__hash").as("__ha"), col(idCol).as("a_id")), Seq("a_id"))
-      .join(reps.select(col("__hash").as("__hb"), col(idCol).as("b_id")), Seq("b_id"))
-      .join(members.select(col("__hash").as("__ha"), col(idCol).as("__ma")), Seq("__ha"))
-      .join(members.select(col("__hash").as("__hb"), col(idCol).as("__mb")), Seq("__hb"))
-      .select(least(col("__ma"), col("__mb")).as("a_id"),
-        greatest(col("__ma"), col("__mb")).as("b_id"), col("jaccard"))
-    within.union(cross)
-  }
+      case Some(g) =>
+        // banded pipeline over representatives (staged via minhashIndex:
+        // the band self-join's two legs would otherwise re-run the
+        // signature kernel twice, and the two verification joins would
+        // re-shingle twice more)
+        val repDf = df.join(g.reps.select(col("gid").as(idCol)), Seq(idCol), "left_semi")
+        val idx = minhashIndex(repDf, idCol, textCol, numPerms, rowsPerBand, staging)
+        val okGroups = idx.shingles
+          .filter(size(col("__sh")) > 0 && lit(1.0) >= lit(threshold))
+          .select(col(idCol).as("gid"))
+        expandDupPairs(g, bandedJaccardPairs(idx, idCol, threshold), "jaccard",
+          lit(1.0), Some(okGroups))
+    }
 
   /** Banded candidate generation + exact-Jaccard verification over a
     * built [[MinHashIndex]] — the shared core of both
@@ -897,19 +939,16 @@ object Dedup {
   }
 
   /** Build the [[SimHashIndex]] for `df`: signature (native codegen
-    * vote kernel) + chunk explode — shuffle-free scan projection. */
+    * vote kernel), then [[signatureIndex]]'s chunk explode —
+    * shuffle-free scan projection. */
   def simhashIndex(df: DataFrame, idCol: String, textCol: String,
                    staging: Staging.Mode = Staging.Local,
                    spread: Boolean = true): SimHashIndex = {
     // spread before the kernel (round 16): see Staging.spread — the
     // 64-hyperplane vote otherwise runs at the scan's file width;
     // spread = false for shard/batch-sized inputs (see minhashIndex)
-    val sigd = (if (spread) Staging.spread(df, col(idCol)) else df)
-      .withColumn("__sig", simhash64(s"split($textCol, ' ')"))
-    SimHashIndex(idCol, staging(sigd.select(col(idCol), col("__sig"),
-      explode(expr("transform(sequence(0, 3), c -> " +
-        "named_struct('chunk', c, 'ckey', shiftright(`__sig`, c * 16) & 65535))")).as("cb"))
-      .select(col(idCol), col("__sig"), col("cb.chunk").as("chunk"), col("cb.ckey").as("ckey"))))
+    signatureIndex((if (spread) Staging.spread(df, col(idCol)) else df)
+      .withColumn("__sig", simhash64(s"split($textCol, ' ')")), idCol, "__sig", staging)
   }
 
   /** [[SimHashIndex]] over a PRECOMPUTED 64-bit signature column — the
@@ -930,78 +969,50 @@ object Dedup {
     * perceptual-hash dedup path (image corpora dedup on dHash the way
     * text dedups on MinHash/SimHash): chunk-bucket candidates + exact
     * Hamming verify, recall 1.0 at Hamming <= 3 by the pigeonhole
-    * bound. Same conditional exact-dup collapse as [[simhashPairs]],
-    * keyed on the signature itself (re-encoded copies of one image
-    * share a signature exactly, so clone-heavy image corpora would
-    * otherwise inflate the candidate join g²·4-ish): past
-    * `collapsePairsPerDoc` within-group pairs per row the chunk join
-    * runs over min-id representatives and member pairs are restored by
-    * id-only expansions (hamming exactly 0 within a signature group). */
+    * bound. Exact duplicates take the [[dupGroups]] collapse keyed on
+    * the signature itself (re-encoded copies of one image share a
+    * signature exactly, so clone-heavy image corpora would otherwise
+    * inflate the candidate join g²·4-ish); hamming is exactly 0 within
+    * a signature group. */
   def signaturePairs(df: DataFrame, idCol: String, sigCol: String,
                      maxHamming: Int = 3,
                      staging: Staging.Mode = Staging.Local,
                      collapsePairsPerDoc: Double = 2.0): DataFrame = {
     val sigd = df.select(col(idCol), col(sigCol).cast("long").as("__sig"))
-    def chunksOf(d: DataFrame) = signatureIndex(d, idCol, "__sig", Staging.None).chunked
-    if (!heavyDupMass(sigd, col("__sig"), staging, collapsePairsPerDoc))
-      return simhashChunkPairs(staging(chunksOf(sigd)), idCol, maxHamming)
-    val members = staging(sigd)
-    val reps = members.groupBy("__sig").agg(min(col(idCol)).as(idCol))
-    val repPairs = simhashChunkPairs(
-      staging(chunksOf(reps.select(col(idCol), col("__sig")))), idCol, maxHamming)
-    val within = members.select(col("__sig"), col(idCol).as("a_id"))
-      .join(members.select(col("__sig"), col(idCol).as("b_id")), Seq("__sig"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), lit(0).cast("int").as("hamming"))
-    val cross = repPairs
-      .join(reps.select(col("__sig").as("__sa"), col(idCol).as("a_id")), Seq("a_id"))
-      .join(reps.select(col("__sig").as("__sb"), col(idCol).as("b_id")), Seq("b_id"))
-      .join(members.select(col("__sig").as("__sa"), col(idCol).as("__ma")), Seq("__sa"))
-      .join(members.select(col("__sig").as("__sb"), col(idCol).as("__mb")), Seq("__sb"))
-      .select(least(col("__ma"), col("__mb")).as("a_id"),
-        greatest(col("__ma"), col("__mb")).as("b_id"), col("hamming"))
-    within.union(cross)
+    def pairsOf(d: DataFrame) = simhashChunkPairs(
+      staging(signatureIndex(d, idCol, "__sig", Staging.None).chunked), idCol, maxHamming)
+    dupGroups(sigd.select(col(idCol).as("id"), col("__sig").as("key")),
+        staging, collapsePairsPerDoc) match {
+      case None => pairsOf(sigd)
+      case Some(g) =>
+        expandDupPairs(g, pairsOf(g.reps.select(col("gid").as(idCol), col("key").as("__sig"))),
+          "hamming", lit(0).cast("int"))
+    }
   }
 
   /** SimHash near-dup pairs: candidates share at least one of four 16-bit
     * signature chunks (guarantees recall for distance <= 3), verified by
     * exact Hamming distance. Chunk-bucket join, not O(n^2).
     *
-    * Conditional exact-dup collapse (round-7, the family-wide trade): an
-    * exact-dup family shares one signature, so every member pair is a
-    * guaranteed candidate in ALL FOUR chunks — clone-heavy corpora
-    * inflate the candidate join g²·4-ish. Past `collapsePairsPerDoc`
-    * within-family pairs per row the chunk join runs over md5-elected
-    * representatives and member pairs are restored by id-only
-    * expansions: hamming exactly 0 within a group (identical text →
-    * identical signature — every text has a signature, so no
-    * shinglability carve-out), the rep pair's hamming across groups
-    * (least/greatest re-normalized; Hamming is symmetric). Branch
-    * row-identity pinned in DedupSpec. */
+    * Exact duplicates (md5 of the text) take the [[dupGroups]]
+    * collapse: an exact-dup family shares one signature, so every
+    * member pair is a guaranteed candidate in ALL FOUR chunks. Hamming
+    * is exactly 0 within a group (identical text → identical signature
+    * — every text has a signature, so no shinglability carve-out). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
                    staging: Staging.Mode = Staging.Local,
                    collapsePairsPerDoc: Double = 2.0): DataFrame = {
-    if (!heavyDupMass(df, md5(col(textCol)), staging, collapsePairsPerDoc))
-      return simhashChunkPairs(
-        simhashIndex(df, idCol, textCol, staging).chunked, idCol, maxHamming)
-    val members = staging(df.select(col(idCol), md5(col(textCol)).as("__hash")))
-    val reps = members.groupBy("__hash").agg(min(col(idCol)).as(idCol))
-    val repDf = df.join(reps.select(col(idCol)), Seq(idCol), "left_semi")
-    val repPairs = simhashChunkPairs(
-      simhashIndex(repDf, idCol, textCol, staging).chunked, idCol, maxHamming)
-    val within = members.select(col("__hash"), col(idCol).as("a_id"))
-      .join(members.select(col("__hash"), col(idCol).as("b_id")), Seq("__hash"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), lit(0).cast("int").as("hamming"))
-    val cross = repPairs
-      .join(reps.select(col("__hash").as("__ha"), col(idCol).as("a_id")), Seq("a_id"))
-      .join(reps.select(col("__hash").as("__hb"), col(idCol).as("b_id")), Seq("b_id"))
-      .join(members.select(col("__hash").as("__ha"), col(idCol).as("__ma")), Seq("__ha"))
-      .join(members.select(col("__hash").as("__hb"), col(idCol).as("__mb")), Seq("__hb"))
-      .select(least(col("__ma"), col("__mb")).as("a_id"),
-        greatest(col("__ma"), col("__mb")).as("b_id"), col("hamming"))
-    within.union(cross)
+    def pairsOf(d: DataFrame) = simhashChunkPairs(
+      simhashIndex(d, idCol, textCol, staging).chunked, idCol, maxHamming)
+    dupGroups(df.select(col(idCol).as("id"), md5(col(textCol)).as("key")),
+        staging, collapsePairsPerDoc) match {
+      case None => pairsOf(df)
+      case Some(g) =>
+        expandDupPairs(g,
+          pairsOf(df.join(g.reps.select(col("gid").as(idCol)), Seq(idCol), "left_semi")),
+          "hamming", lit(0).cast("int"))
+    }
   }
 
   /** Chunk-bucket candidate join + exact-Hamming verify over a built
@@ -1031,65 +1042,47 @@ object Dedup {
     val idCol = shard.idCol
     require(corpus.idCol == idCol,
       s"index id columns differ: '${corpus.idCol}' vs '$idCol'")
-    // conditional collapse on the SIGNATURE key (round-7, the family
-    // trade applied at the index level): identical signatures — which
-    // is what exact-dup texts produce — collide in all four chunks, so
-    // clone families inflate both candidate legs g²·4-ish. The group
-    // key is `__sig` itself (no text access needed: equal sigs ⇔
-    // hamming 0, and every cross pair's hamming equals its rep pair's).
-    // One narrow row per id (the chunk-0 slice) feeds the mass
-    // aggregate and the membership frames.
+    // the [[dupGroups]] collapse on the SIGNATURE key: identical
+    // signatures — which is what exact-dup texts produce — collide in
+    // all four chunks, and equal sigs ⇔ hamming 0, so no text access is
+    // needed. One narrow row per id (the chunk-0 slice) feeds the probe
+    // and the membership frames.
     val keyed = corpus.chunked.filter(col("chunk") === 0)
-      .select(col(idCol).as("id"), col("__sig"), lit(false).as("__shard"))
+      .select(col(idCol).as("id"), col("__sig").as("key"), lit(false).as("__shard"))
       .union(shard.chunked.filter(col("chunk") === 0)
-        .select(col(idCol).as("id"), col("__sig"), lit(true).as("__shard")))
-    if (!heavyDupMass(keyed, col("__sig"), staging, collapsePairsPerDoc)) {
-      val sa = shard.chunked.select(col(idCol).as("a_id"), col("__sig").as("a_sig"), col("chunk"), col("ckey"))
-      val sb = shard.chunked.select(col(idCol).as("b_id"), col("__sig").as("b_sig"), col("chunk"), col("ckey"))
-      val nn = sa.join(sb, Seq("chunk", "ckey"))
-        .filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"), hamming(col("a_sig"), col("b_sig")).as("hamming"))
-      val nc = shard.chunked.select(col(idCol).as("n_id"), col("__sig").as("n_sig"), col("chunk"), col("ckey"))
-        .join(corpus.chunked.select(col(idCol).as("c_id"), col("__sig").as("c_sig"), col("chunk"), col("ckey")),
-          Seq("chunk", "ckey"))
-        .select(least(col("n_id"), col("c_id")).as("a_id"),
-          greatest(col("n_id"), col("c_id")).as("b_id"),
-          hamming(col("n_sig"), col("c_sig")).as("hamming"))
-      return nn.union(nc).distinct().filter(col("hamming") <= maxHamming)
+        .select(col(idCol).as("id"), col("__sig").as("key"), lit(true).as("__shard")))
+    val g = dupGroups(keyed, staging, collapsePairsPerDoc) match {
+      case Some(groups) => groups
+      case None =>
+        val sa = shard.chunked.select(col(idCol).as("a_id"), col("__sig").as("a_sig"), col("chunk"), col("ckey"))
+        val sb = shard.chunked.select(col(idCol).as("b_id"), col("__sig").as("b_sig"), col("chunk"), col("ckey"))
+        val nn = sa.join(sb, Seq("chunk", "ckey"))
+          .filter(col("a_id") < col("b_id"))
+          .select(col("a_id"), col("b_id"), hamming(col("a_sig"), col("b_sig")).as("hamming"))
+        val nc = shard.chunked.select(col(idCol).as("n_id"), col("__sig").as("n_sig"), col("chunk"), col("ckey"))
+          .join(corpus.chunked.select(col(idCol).as("c_id"), col("__sig").as("c_sig"), col("chunk"), col("ckey")),
+            Seq("chunk", "ckey"))
+          .select(least(col("n_id"), col("c_id")).as("a_id"),
+            greatest(col("n_id"), col("c_id")).as("b_id"),
+            hamming(col("n_sig"), col("c_sig")).as("hamming"))
+        return nn.union(nc).distinct().filter(col("hamming") <= maxHamming)
     }
-    val members = staging(keyed)
-    val reps = members.groupBy("__sig").agg(min(col("id")).as("gid"))
-    val mem = staging(members.join(reps, Seq("__sig"))
-      .select(col("id"), col("gid"), col("__shard")))
-    val repIds = reps.select(col("gid").as(idCol))
+    val repIds = g.reps.select(col("gid").as(idCol))
     val allChunked = corpus.chunked.union(shard.chunked)
     val repChunked = allChunked.join(repIds, Seq(idCol), "left_semi")
-    val probeGroups = mem.filter(col("__shard")).select(col("gid").as(idCol)).distinct()
+    val probeGroups = g.mem.filter(col("__shard")).select(col("gid").as(idCol)).distinct()
     val probeChunked = repChunked.join(probeGroups, Seq(idCol), "left_semi")
     val repPairs = probeChunked
       .select(col(idCol).as("x_id"), col("__sig").as("x_sig"), col("chunk"), col("ckey"))
       .join(repChunked.select(col(idCol).as("y_id"), col("__sig").as("y_sig"),
         col("chunk"), col("ckey")), Seq("chunk", "ckey"))
       .filter(col("x_id") =!= col("y_id"))
-      .select(least(col("x_id"), col("y_id")).as("u"),
-        greatest(col("x_id"), col("y_id")).as("v"),
+      .select(least(col("x_id"), col("y_id")).as("a_id"),
+        greatest(col("x_id"), col("y_id")).as("b_id"),
         hamming(col("x_sig"), col("y_sig")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-    val within = mem.select(col("gid"), col("id").as("a_id"), col("__shard").as("__sa"))
-      .join(mem.select(col("gid"), col("id").as("b_id"), col("__shard").as("__sb")),
-        Seq("gid"))
-      .filter(col("a_id") < col("b_id") && (col("__sa") || col("__sb")))
-      .select(col("a_id"), col("b_id"), lit(0).cast("int").as("hamming"))
-    val cross = repPairs
-      .join(mem.select(col("gid").as("u"), col("id").as("__ma"),
-        col("__shard").as("__sa")), Seq("u"))
-      .join(mem.select(col("gid").as("v"), col("id").as("__mb"),
-        col("__shard").as("__sb")), Seq("v"))
-      .filter(col("__sa") || col("__sb"))
-      .select(least(col("__ma"), col("__mb")).as("a_id"),
-        greatest(col("__ma"), col("__mb")).as("b_id"), col("hamming"))
-    within.union(cross)
+    expandDupPairs(g, repPairs, "hamming", lit(0).cast("int"))
   }
 
   // ------------------------------------------------------------------
@@ -1193,35 +1186,26 @@ object Dedup {
     // kernel time it parallelizes (guide §8: don't move payload bytes
     // for light work). A production-width scan never collapses here.
     val base = staging(containmentBase(df, idCol, textCol, n))
-    // conditional exact-dup collapse on the SHINGLE-SET key (the
-    // minhashLshPairs trade; see containmentJoinIncremental): clone
-    // families would re-pay the prefix pipeline per copy and flood the
-    // candidate join with within-family pairs, so past the pair-mass
-    // threshold the pipeline runs over set-representatives only and
-    // member pairs are restored by id-only expansions (1.0 within a
-    // group — identical sets — and the rep score across groups,
-    // direction-preserved because containment is a pure function of
-    // the two sets). Both branches row-identical (DedupSpec).
-    val keyed = base.withColumn("__k", md5(concat_ws("\u0001", sort_array(col("sh")))))
-    if (!heavyDupMass(keyed, col("__k"), staging, collapsePairsPerDoc))
-      return containmentPrefixPairs(base, tau, maxCandidates, staging)
-    val members = staging(keyed.select(col("id"), col("__k")))
-    val reps = members.groupBy("__k").agg(min(col("id")).as("gid"))
-    val mem = staging(members.join(reps, Seq("__k"))
-      .select(col("id"), col("gid")))
-    val repBase = staging(base.join(reps.select(col("gid").as("id")),
-      Seq("id"), "left_semi"))
-    val repPairs = containmentPrefixPairs(repBase, tau, maxCandidates, staging)
-    val within = mem.select(col("gid"), col("id").as("a_id"))
-      .join(mem.select(col("gid"), col("id").as("b_id")), Seq("gid"))
-      .filter(col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"), lit(1.0).as("containment"))
-    val cross = repPairs
-      .join(mem.select(col("gid").as("a_id"), col("id").as("__ma")), Seq("a_id"))
-      .join(mem.select(col("gid").as("b_id"), col("id").as("__mb")), Seq("b_id"))
-      .select(col("__ma").as("a_id"), col("__mb").as("b_id"), col("containment"))
-    within.union(cross)
+    // the [[dupGroups]] collapse on the SHINGLE-SET key: containment is
+    // a pure function of the two sets, so members score 1.0 within a
+    // group (identical sets) and the rep score across groups,
+    // direction-preserved
+    dupGroups(base.select(col("id"), shingleSetKey.as("key")), staging,
+        collapsePairsPerDoc) match {
+      case None => containmentPrefixPairs(base, tau, maxCandidates, staging)
+      case Some(g) =>
+        val repBase = staging(base.join(g.reps.select(col("gid").as("id")),
+          Seq("id"), "left_semi"))
+        expandDupPairs(g, containmentPrefixPairs(repBase, tau, maxCandidates, staging),
+          "containment", lit(1.0), directed = true)
+    }
   }
+
+  /** Exact-duplicate key of a shingle set: md5 of the sorted set. The
+    * \u0001 separator is safe: grams are space-joined token n-grams from
+    * a single-space split, so no gram contains it and the sorted-set
+    * concatenation is prefix-unambiguous. */
+  private val shingleSetKey: Column = md5(concat_ws("\u0001", sort_array(col("sh"))))
 
   /** The prefix-filtered candidate + exact-verify pipeline of
     * [[containmentJoin]] over a prepared (id, sh, m) base — shared by
@@ -1340,19 +1324,11 @@ object Dedup {
     * hard-capped by [[requirePairBudget]] before the join is
     * scheduled.
     *
-    * The conditional exact-dup collapse (the [[minhashLshPairs]] trade,
-    * round-7) applies here on the SHINGLE-SET key: containment is a
-    * pure function of the two shingle sets, so docs with identical sets
-    * (md5 of the sorted set) form groups whose every member pair scores
-    * identically — 1.0 within a group, the rep-pair score across
-    * groups. One aggregate measures the within-group pair mass over
-    * corpus ∪ shard; past `collapsePairsPerDoc` pairs per row the
-    * candidate join runs over group REPRESENTATIVES only (clone
-    * families of size g would otherwise inflate candidates g²-ish) and
-    * member pairs are restored by id-only expansion joins, keeping only
-    * shard-touching ones. Both branches are row-identical (DedupSpec
-    * pins them branch-forced); the group key lives on narrow columns,
-    * so the per-batch keying is one linear pass, not a corpus re-index. */
+    * Exact duplicates take the [[dupGroups]] collapse over corpus ∪
+    * shard on the SHINGLE-SET key (md5 of the sorted set: containment
+    * is a pure function of the two sets, so every member pair of one
+    * group scores 1.0); the key lives on narrow columns, so the
+    * per-batch keying is one linear pass, not a corpus re-index. */
   def containmentJoinIncremental(shard: ContainmentIndex,
                                  corpus: ContainmentIndex, tau: Double,
                                  maxCandidates: Long = 1000000000L,
@@ -1446,10 +1422,10 @@ object Dedup {
         .join(probeIds.select(col("id").as("b_id"), lit(true).as("__ps")),
           Seq("b_id"), "left")
         .filter(!coalesce(col("__ps"), lit(false)) || col("a_id") < col("b_id"))
-        .join(baseM.select(col("id").as("a_id"), col("m").as("__ma")), Seq("a_id"))
-        .join(baseM.select(col("id").as("b_id"), col("m").as("__mb")), Seq("b_id"))
-        .withColumn("__ca", fx(col("__cnt"), col("__ma")))
-        .withColumn("__cb", fx(col("__cnt"), col("__mb")))
+        .join(baseM.select(col("id").as("a_id"), col("m").as("__m_a")), Seq("a_id"))
+        .join(baseM.select(col("id").as("b_id"), col("m").as("__m_b")), Seq("b_id"))
+        .withColumn("__ca", fx(col("__cnt"), col("__m_a")))
+        .withColumn("__cb", fx(col("__cnt"), col("__m_b")))
     def pairsOf(c: DataFrame): DataFrame =
       c.filter(col("__ca") >= tau)
         .select(col("a_id"), col("b_id"), col("__ca").as("containment"))
@@ -1460,76 +1436,48 @@ object Dedup {
       c.filter(col("__ca") >= tau || col("__cb") >= tau)
         .select(least(col("a_id"), col("b_id")).as("u"),
           greatest(col("a_id"), col("b_id")).as("v"))
-    val keyed = corpus.base.withColumn("__shard", lit(false))
-      .union(shard.base.withColumn("__shard", lit(true)))
-      // \u0001 separator: grams are space-joined token n-grams from a
-      // single-space split, so no gram contains it and the sorted-set
-      // concatenation is prefix-unambiguous
-      .withColumn("__k", md5(concat_ws("\u0001", sort_array(col("sh")))))
-    if (!heavyDupMass(keyed, col("__k"), staging, collapsePairsPerDoc)) {
-      val allPost = corpus.posting.union(shard.posting)
-      requirePairBudget(shard.posting, allPost, "gram", maxCandidates)
-      val allBase = corpus.base.union(shard.base)
-      val c = counted(shard.posting, allPost,
-        shard.base.select(col("id")), allBase.select(col("id"), col("m")))
-      return if (edges) edgesOf(c) else pairsOf(c)
+    val keyed = corpus.base.select(col("id"), shingleSetKey.as("key"), lit(false).as("__shard"))
+      .union(shard.base.select(col("id"), shingleSetKey.as("key"), lit(true).as("__shard")))
+    val g = dupGroups(keyed, staging, collapsePairsPerDoc) match {
+      case Some(groups) => groups
+      case None =>
+        val allPost = corpus.posting.union(shard.posting)
+        requirePairBudget(shard.posting, allPost, "gram", maxCandidates)
+        val allBase = corpus.base.union(shard.base)
+        val c = counted(shard.posting, allPost,
+          shard.base.select(col("id")), allBase.select(col("id"), col("m")))
+        return if (edges) edgesOf(c) else pairsOf(c)
     }
-    // collapse branch: membership and reps on narrow (id, __k, __shard)
-    // columns; the one array-keyed op was the md5 above
-    val members = staging(keyed.select(col("id"), col("__k"), col("__shard")))
-    val reps = members.groupBy("__k").agg(min(col("id")).as("gid"))
-    val mem = staging(members.join(reps, Seq("__k"))
-      .select(col("id"), col("gid"), col("__shard")))
-    val repIds = reps.select(col("gid").as("id"))
+    val repIds = g.reps.select(col("gid").as("id"))
     val allPost = corpus.posting.union(shard.posting)
     val repPost = allPost.join(repIds, Seq("id"), "left_semi")
     // probe side: representatives of groups with >= 1 shard member (the
     // candidate join is symmetric, so corpus-only groups are still
     // reachable as the index side)
-    val probeGroups = mem.filter(col("__shard")).select(col("gid").as("id")).distinct()
+    val probeGroups = g.mem.filter(col("__shard")).select(col("gid").as("id")).distinct()
     val probePost = repPost.join(probeGroups, Seq("id"), "left_semi")
     requirePairBudget(probePost, repPost, "gram", maxCandidates)
     val allBase = corpus.base.union(shard.base)
     val repM = allBase.join(repIds, Seq("id"), "left_semi")
       .select(col("id"), col("m"))
     val c = counted(probePost, repPost, probeGroups, repM)
-    if (edges) {
-      // rep-level component edges + group star edges -- NO member-pair
-      // expansion (the whole point of the group-sized tier)
-      val repEdges = edgesOf(c)
-      // shard members link to their group anchor (gid = min member id)
-      val starEdges = mem.filter(col("__shard") && col("id") =!= col("gid"))
-        .select(col("id").as("u"), col("gid").as("v"))
-      // a group whose anchor arrived in THIS shard must link the new
-      // anchor to the group's previous minimum (corpus members were
-      // star-connected to that minimum in their own batches)
-      val eraEdges = mem.groupBy("gid")
-        .agg(min(when(!col("__shard"), col("id"))).as("__mc"))
-        .filter(col("__mc").isNotNull && col("__mc") =!= col("gid"))
-        .select(col("gid").as("u"), col("__mc").as("v"))
-      return repEdges.union(starEdges).union(eraEdges)
-    }
-    val repPairs = pairsOf(c)
-    // expansion 1 -- within-group: every ORDERED member pair of a group
-    // (identical shingle sets -> containment exactly 1.0, which clears
-    // any tau <= 1; base rows are shinglable by construction), kept
-    // only when a side is in the shard
-    val within = mem.select(col("gid"), col("id").as("a_id"), col("__shard").as("__sa"))
-      .join(mem.select(col("gid"), col("id").as("b_id"), col("__shard").as("__sb")),
-        Seq("gid"))
-      .filter(col("a_id") =!= col("b_id") && (col("__sa") || col("__sb")))
-      .select(col("a_id"), col("b_id"), lit(1.0).as("containment"))
-    // expansion 2 -- cross-group, DIRECTION-PRESERVING (containment is
-    // asymmetric): each qualifying rep direction fans out to the a-side
-    // group's members x the b-side group's members, shard-touching only
-    val cross = repPairs
-      .join(mem.select(col("gid").as("a_id"), col("id").as("__ma"),
-        col("__shard").as("__sa")), Seq("a_id"))
-      .join(mem.select(col("gid").as("b_id"), col("id").as("__mb"),
-        col("__shard").as("__sb")), Seq("b_id"))
-      .filter(col("__sa") || col("__sb"))
-      .select(col("__ma").as("a_id"), col("__mb").as("b_id"), col("containment"))
-    within.union(cross)
+    if (!edges)
+      // base rows are shinglable by construction, so every group's
+      // member pairs qualify (containment exactly 1.0 clears any tau)
+      return expandDupPairs(g, pairsOf(c), "containment", lit(1.0), directed = true)
+    // edges: rep-level component edges + group star edges -- NO
+    // member-pair expansion (the whole point of the group-sized tier).
+    // Shard members link to their group anchor (gid = min member id)
+    val starEdges = g.mem.filter(col("__shard") && col("id") =!= col("gid"))
+      .select(col("id").as("u"), col("gid").as("v"))
+    // a group whose anchor arrived in THIS shard must link the new
+    // anchor to the group's previous minimum (corpus members were
+    // star-connected to that minimum in their own batches)
+    val eraEdges = g.mem.groupBy("gid")
+      .agg(min(when(!col("__shard"), col("id"))).as("__mc"))
+      .filter(col("__mc").isNotNull && col("__mc") =!= col("gid"))
+      .select(col("gid").as("u"), col("__mc").as("v"))
+    edgesOf(c).union(starEdges).union(eraEdges)
   }
 
   /** Fully STATELESS corpus-containment gate — "is this arriving doc an

@@ -777,18 +777,12 @@ object Similarity {
     * hard 512 trainer cap, so auto can actually deliver the large k a
     * big corpus needs instead of require-failing at the budget guard.
     *
-    * EXACT duplicates collapse FIRST, conditionally (the family trade —
-    * [[lshDupPairs]]'s collapse applied here): a g-member identical-
-    * vector family is a guaranteed g²-ish edge clique inside its cell
-    * (identical vectors share a cell and every pair scores cos exactly
-    * 1.0 ≥ any legal threshold), so past the pair-mass threshold the
-    * cells/edges/components machinery runs over one min-id
-    * representative per distinct vector and members inherit their rep's
-    * (cell, canonical) by one id-only expansion join. Output identical
-    * either way: an exact-dup group is always one sub-clique of a
-    * component, so the component's min id — the canonical — is the same
-    * computed over members or over min-id reps (pinned in
-    * SessionIvfSpec's forced-branch check).
+    * Exact duplicates (the raw vector) take the `Dedup.dupGroups`
+    * collapse, and members inherit their rep's (cell, canonical): an
+    * identical-vector group shares a cell and scores cos exactly 1.0,
+    * so it is always one sub-clique of a component, and the
+    * component's min id — the canonical — is the same computed over
+    * members or over min-id reps.
     *
     * Returns one row per surviving input doc: (idCol, cell, canonical,
     * kept) — `kept` = (id == canonical); dropped docs point at their
@@ -826,23 +820,21 @@ object Similarity {
                                                 staging: Staging.Mode,
                                                 collapsePairsPerDoc: Double,
                                                 pretrained: Option[Coarse]): DataFrame = {
-    if (!Dedup.heavyDupMass(df, col(vecCol), staging, collapsePairsPerDoc))
-      return semanticDedupDirect(df, idCol, vecCol, threshold, nlist,
+    Dedup.dupGroups(df.select(col(idCol).as("id"), col(vecCol).as("key")),
+        staging, collapsePairsPerDoc) match {
+      case None => semanticDedupDirect(df, idCol, vecCol, threshold, nlist,
         seed, trainSample, maxPairs, staging, pretrained)
-    val members = staging(df.select(col(idCol).as("id"), col(vecCol).as("__k")))
-    val reps = members.groupBy("__k").agg(min(col("id")).as("gid"))
-    val mem = staging(members.join(reps, Seq("__k")).select(col("id"), col("gid")))
-    val repDf = reps.select(col("gid").as(idCol), col("__k").as(vecCol))
-    val repOut = semanticDedupDirect(repDf, idCol, vecCol, threshold,
-      nlist, seed, trainSample, maxPairs, staging, pretrained)
-    // members inherit their rep's cell and canonical (identical vectors
-    // are always one sub-clique of the rep's component); zero-norm
-    // groups have no rep row and their members drop out here — the
-    // direct branch's withNorm contract
-    mem.join(repOut.select(col(idCol).as("gid"), col("cell"), col("canonical")),
-        Seq("gid"))
-      .select(col("id").as(idCol), col("cell"), col("canonical"),
-        (col("id") === col("canonical")).as("kept"))
+      case Some(g) =>
+        val repOut = semanticDedupDirect(
+          g.reps.select(col("gid").as(idCol), col("key").as(vecCol)), idCol, vecCol,
+          threshold, nlist, seed, trainSample, maxPairs, staging, pretrained)
+        // zero-norm groups have no rep row and their members drop out
+        // here — the direct branch's withNorm contract
+        g.mem.join(repOut.select(col(idCol).as("gid"), col("cell"), col("canonical")),
+            Seq("gid"))
+          .select(col("id").as(idCol), col("cell"), col("canonical"),
+            (col("id") === col("canonical")).as("kept"))
+    }
   }
 
   /** The uncollapsed cells → edges → components pipeline of
@@ -971,12 +963,12 @@ object Similarity {
     * existing survivors and only the bridge doc drops — the documented,
     * deliberate deviation.
     *
-    * Clone-heavy shards take the family's conditional exact-dup
-    * collapse (identical vectors → one rep through the cell joins,
-    * id-only expansion after), and the corpus side of the cross join is
-    * deflated to one row per distinct (cell, vector, canonical) within
-    * the TOUCHED cells only — per-batch work stays bounded by shard
-    * activity even when both sides are clone-dominated.
+    * Clone-heavy shards take the `Dedup.dupGroups` collapse (members
+    * inherit their rep's decision, as in [[semanticDedup]]), and the
+    * corpus side of the cross join is deflated to one row per distinct
+    * (cell, vector, canonical) within the TOUCHED cells only —
+    * per-batch work stays bounded by shard activity even when both
+    * sides are clone-dominated.
     *
     * Pair mass (shard×corpus cross + within-shard, touched cells only)
     * is ENFORCED against `maxPairs` before any join is scheduled.
@@ -987,26 +979,20 @@ object Similarity {
                                staging: Staging.Mode = Staging.Local,
                                collapsePairsPerDoc: Double = 2.0): DataFrame = {
     val sbase = staging(withNorm(shard, idx.idCol, vecCol, "id", "cv", "cn"))
-    if (!Dedup.heavyDupMass(shard, col(vecCol), staging, collapsePairsPerDoc))
-      return semanticDedupIncCore(sbase, idx, maxPairs, staging)
-    // conditional exact-dup collapse (the family trade): an identical-
-    // vector family inside the shard is a guaranteed clique in its cell
-    // — past the pair-mass threshold the core runs over one min-id rep
-    // per distinct vector and members inherit the rep's decision by an
-    // id-only expansion: a non-rep member always has the cos-1.0 edge
-    // to its rep, so it drops onto the rep's canonical (the rep IS the
-    // canonical when the rep kept) — the same sub-clique argument as
-    // [[semanticDedup]]'s collapse branch, so output is identical
-    // either way (pinned in SemDedupIncSpec's forced-branch check).
-    val members = staging(sbase.select(col("id"), col("cv")))
-    val reps = members.groupBy("cv").agg(min(col("id")).as("gid"))
-    val mem = staging(members.join(reps, Seq("cv")).select(col("id"), col("gid")))
-    val repBase = sbase.join(reps.select(col("gid").as("id")), Seq("id"))
-    val repDec = semanticDedupIncCore(repBase, idx, maxPairs, staging)
-    mem.join(repDec.select(col("id").as("gid"), col("cell"), col("cv"),
-        col("cn"), col("canonical")), Seq("gid"))
-      .select(col("id"), col("cell"), col("cv"), col("cn"), col("canonical"),
-        (col("id") === col("canonical")).as("kept"))
+    Dedup.dupGroups(shard.select(col(idx.idCol).as("id"), col(vecCol).as("key")),
+        staging, collapsePairsPerDoc) match {
+      case None => semanticDedupIncCore(sbase, idx, maxPairs, staging)
+      case Some(g) =>
+        // a non-rep member always has the cos-1.0 edge to its rep, so it
+        // drops onto the rep's canonical (the rep IS the canonical when
+        // the rep kept); zero-norm groups drop out as in sbase
+        val repDec = semanticDedupIncCore(
+          sbase.join(g.reps.select(col("gid").as("id")), Seq("id")), idx, maxPairs, staging)
+        g.mem.join(repDec.select(col("id").as("gid"), col("cell"), col("cv"),
+            col("cn"), col("canonical")), Seq("gid"))
+          .select(col("id"), col("cell"), col("cv"), col("cn"), col("canonical"),
+            (col("id") === col("canonical")).as("kept"))
+    }
   }
 
   private def semanticDedupIncCore(sbase: DataFrame, idx: SemIndex,
@@ -1183,83 +1169,38 @@ object Similarity {
     * the O(n^2) explosion never happens — the exact tier
     * ([[cosineDupPairs]]) stays for small blocks and oracles.
     *
-    * EXACT duplicates are collapsed FIRST (the q33 lesson applied to
-    * vectors): identical embeddings share identical band keys, so every
-    * copy re-pays the hyperplane hashing and an exact-dup pair is a
-    * guaranteed candidate in EVERY table, flooding the rescore join —
-    * on a copy-heavy corpus (the 100× fixture's ~100-member clone
-    * families) that is quadratic work per clique paid in full. One
-    * groupBy on the raw vector (exact equality — no hash-collision
-    * risk; Spark normalizes -0.0/NaN identically in group and join
-    * keys) elects a min-id representative; banding/rescore run over
-    * representatives only; member pairs are restored by id-only
-    * expansion joins. Within-group pairs carry the group's self-cosine
-    * (exactly 1.0 — zero-norm vectors are excluded before hashing per
-    * the shared cosine contract, so no 0/0 arises), and the output is
-    * row-identical to the uncollapsed run (SessionIvfSpec pins it
-    * against exact cosineDupPairs, including a >2-member clone-family /
-    * zero-vector / cross-family edge corpus; the incremental tests pin
-    * the shard-restriction equality).
-    *
-    * The collapse is CONDITIONAL (round-7, the minhashLshPairs trade):
-    * what the uncollapsed run overpays is the within-family candidate
-    * blowup (a g-member identical-vector family is a g²-ish collision
-    * clique in every table), while the collapse overpays its expansion
-    * joins when families are small. One aggregate over the vector
-    * groups measures the within-family pair mass Σ g(g−1)/2; collapse
-    * only when it exceeds `collapsePairsPerDoc` pairs per corpus row —
-    * pairs-of-twins corpora (q45's shape) stay lean, the 100× clone-
-    * family fixture collapses. Identical output either way (an
-    * exact-dup pair collides in every table and rescores at cos exactly
-    * 1.0; SessionIvfSpec pins both branches). Pass 0 to force the
-    * collapse on any dup mass, Double.PositiveInfinity to disable. */
+    * Exact duplicates take the `Dedup.dupGroups` collapse, keyed on the
+    * raw vector (exact equality — no hash-collision risk; Spark
+    * normalizes -0.0/NaN identically in group and join keys):
+    * identical embeddings share identical band keys in EVERY table.
+    * Within-group pairs carry the group's self-cosine (exactly 1.0 —
+    * zero-norm vectors are excluded before hashing per the shared
+    * cosine contract, so no 0/0 arises). */
   def lshDupPairs(df: DataFrame, idCol: String, vecCol: String,
                   threshold: Double, bitsPerTable: Int = 10, numTables: Int = 8,
                   seed: Long = 42L, dim: Int = -1,
                   staging: Staging.Mode = Staging.Local,
                   collapsePairsPerDoc: Double = 2.0): DataFrame = {
-    if (!Dedup.heavyDupMass(df, col(vecCol), staging, collapsePairsPerDoc))
-      return bandedCosinePairs(
+    Dedup.dupGroups(df.select(col(idCol).as("id"), col(vecCol).as("key")),
+        staging, collapsePairsPerDoc) match {
+      case None => bandedCosinePairs(
         embedIndex(df, idCol, vecCol, bitsPerTable, numTables, seed, dim, staging),
         threshold)
-    // membership table staged once: feeds the rep election and the
-    // (id, gid) re-keying below
-    val members = staging(df.select(col(idCol).as("id"), col(vecCol).as("__k")))
-    val reps = members.groupBy("__k").agg(min(col("id")).as("gid"))
-    // the representative's vector IS its group key — rebuild the rep
-    // frame from `reps` instead of semi-joining (and re-scanning) df
-    val repDf = reps.select(col("gid").as(idCol), col("__k").as(vecCol))
-    // membership re-keyed to the representative's (narrow) id: the one
-    // array-keyed join happens here, once; every expansion join below
-    // shuffles (id, gid) scalars, never the raw vectors
-    val mem = staging(members.join(reps, Seq("__k")).select(col("id"), col("gid")))
-    // banded pipeline over representatives, staged via embedIndex (the
-    // "write the signature table first" step of a production pass):
-    // vecs = (id, arr, nrm, band keys), hashed = (id, t, h)
-    val idx = embedIndex(repDf, idCol, vecCol, bitsPerTable, numTables, seed, dim, staging)
-    val repPairs = bandedCosinePairs(idx, threshold)
-    // expansion 1 — within-group: every member pair of an exact-dup
-    // group, carrying the group's self-cosine (exactly 1.0; zero-norm
-    // groups never reach here — embedIndex excluded them, so their gid
-    // is absent from idx.vecs and the join drops their members)
-    val okSelf = idx.vecs.select(col("id").as("gid"),
-        round(dot(col("arr"), col("arr")) / (col("nrm") * col("nrm")), 6).as("cos"))
-      .filter(col("cos") >= threshold)
-    val m1 = mem.join(okSelf, Seq("gid"))
-    val within = m1.select(col("gid"), col("id").as("a_id"), col("cos"))
-      .join(m1.select(col("gid"), col("id").as("b_id")), Seq("gid"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("cos"))
-    // expansion 2 — cross-group: each surviving representative pair fans
-    // out to its two groups' member cross product (repPairs' ids ARE
-    // gids; member id sets are disjoint but interleaved, so re-normalize
-    // with least/greatest)
-    val cross = repPairs
-      .join(mem.select(col("gid").as("a_id"), col("id").as("__ma")), Seq("a_id"))
-      .join(mem.select(col("gid").as("b_id"), col("id").as("__mb")), Seq("b_id"))
-      .select(least(col("__ma"), col("__mb")).as("a_id"),
-        greatest(col("__ma"), col("__mb")).as("b_id"), col("cos"))
-    within.union(cross)
+      case Some(g) =>
+        // the representative's vector IS its group key — build the rep
+        // frame from `reps` instead of semi-joining (and re-scanning) df;
+        // the banded pipeline over it is staged via embedIndex
+        val idx = embedIndex(g.reps.select(col("gid").as(idCol), col("key").as(vecCol)),
+          idCol, vecCol, bitsPerTable, numTables, seed, dim, staging)
+        // within-group pairs carry the group's self-cosine (exactly 1.0;
+        // zero-norm groups never reach here — embedIndex excluded them,
+        // so their gid is absent from idx.vecs and their members drop)
+        val okSelf = idx.vecs.select(col("id").as("gid"),
+            round(dot(col("arr"), col("arr")) / (col("nrm") * col("nrm")), 6).as("cos"))
+          .filter(col("cos") >= threshold)
+        Dedup.expandDupPairs(g, bandedCosinePairs(idx, threshold), "cos",
+          col("cos"), Some(okSelf))
+    }
   }
 
   /** Banded candidate generation + exact-cosine rescore over a built

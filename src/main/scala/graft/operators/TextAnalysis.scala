@@ -757,7 +757,7 @@ object TextAnalysis {
       .withColumn("pred", when(col("score") > 0, lit("keep")).otherwise(lit("drop")))
   }
 
-  /** A small frozen demonstration vocabulary for [[bpeTokenCount]] —
+  /** A small frozen demonstration vocabulary for [[subwordTokenCount]] —
     * common English subword pieces, maxPieceLen 4. A real deployment
     * passes its tokenizer's piece list instead (50k+ pieces ride as one
     * referenced HashSet per task — see [[graft.functions.BpeCount]]);
@@ -786,17 +786,6 @@ object TextAnalysis {
                         out: String = "bpe_tokens"): DataFrame =
     df.withColumn(out,
       graft.functions.BpeExpression.bpeCount(col(textCol), vocab))
-
-  /** Renamed to [[subwordTokenCount]] (round 15): the old name
-    * oversold — greedy longest-match is the WordPiece serving
-    * formulation, not merge-order BPE. Kept as an alias so round-14
-    * callers keep compiling. */
-  @deprecated("use subwordTokenCount (greedy longest-match) or " +
-    "mergeTokenCount (merge-order BPE)", "round 15")
-  def bpeTokenCount(df: DataFrame, idCol: String, textCol: String,
-                    vocab: Seq[String] = demoBpeVocab,
-                    out: String = "bpe_tokens"): DataFrame =
-    subwordTokenCount(df, idCol, textCol, vocab, out)
 
   /** A small frozen demonstration MERGE LIST for [[mergeTokenCount]] —
     * rank-ordered, consistent (every side is a single codepoint or an

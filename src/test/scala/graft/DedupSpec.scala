@@ -827,6 +827,20 @@ class DedupSpec extends AnyFunSuite {
     // and the collapse branch actually engaged (pair mass >= 2x rows)
     val dupPairs = clones.groupBy(_._2).values.map(g => g.size.toLong * (g.size - 1) / 2).sum
     assert(dupPairs > 2.0 * clones.size, "fixture must trip the collapse threshold")
+    // the probe's boundary is strict: exactly `ratio` pairs per row
+    // stays lean, one more pair collapses
+    import graft.operators.Staging
+    val probe = (keys: Seq[Int]) => Dedup.heavyDupMass(
+      keys.zipWithIndex.map { case (k, i) => (i.toLong, k) }.toDF("id", "k"),
+      col("k"), Staging.Local, 1.0)
+    assert(!probe(Seq(1, 1, 1, 1, 2, 3)), "6 pairs over 6 rows is not > 1.0 per row")
+    assert(probe(Seq(1, 1, 1, 1, 2, 2)), "7 pairs over 6 rows is > 1.0 per row")
+    // Staging.None and a streaming input never run an action: a key
+    // that raises on evaluation and a stream (whose .head() throws)
+    // both come back lean
+    assert(!Dedup.heavyDupMass(cdf, raise_error(lit("probe ran")), Staging.None, 0.0))
+    assert(!Dedup.heavyDupMass(spark.readStream.format("rate").load(),
+      col("value"), Staging.Local, 0.0))
   }
 
   test("keepBestCanonical tolerates a caller column named 'component' and keeps it intact") {

@@ -98,14 +98,16 @@ class SemDedupIncSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 200)
     val idx = Similarity.semIndex(embs, "vec_id", "embedding",
       threshold = 0.9, nlist = 16)
-    // 5 identical clones per source vector, distinct ascending ids —
-    // well past the default pairs-per-doc threshold, so the default
-    // call takes the collapse branch
+    // 5 identical clones per source vector, distinct ascending ids:
+    // exactly 2.0 within-family pairs per row, which the probe's strict
+    // test keeps on the direct branch at the default threshold — so the
+    // collapse is forced with pairs-per-doc 0
     val shard = (1 to 5).map(i => embs.filter(col("vec_id") % 2 === 0)
         .withColumn("vec_id", col("vec_id") + i * 1000000L))
       .reduce(_ union _)
     val collapsed = decisions(
-      Similarity.semanticDedupIncremental(shard, "embedding", idx))
+      Similarity.semanticDedupIncremental(shard, "embedding", idx,
+        collapsePairsPerDoc = 0.0))
     val direct = decisions(
       Similarity.semanticDedupIncremental(shard, "embedding", idx,
         collapsePairsPerDoc = Double.MaxValue))
