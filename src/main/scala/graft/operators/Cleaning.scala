@@ -646,13 +646,6 @@ object Cleaning {
       .drop("__thr", "__ntop")
   }
 
-  /** A1 (BigDataProject.R:78,83): one-row null-count-per-column frame. */
-  def nullCounts(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
-    val cs = if (cols.nonEmpty) cols else df.columns.toSeq
-    val aggs = cs.map(c => sum(col(c).isNull.cast("long")).as(c))
-    df.agg(aggs.head, aggs.tail: _*)
-  }
-
   /** A6: value counts, count desc then value asc (pinned tie-break). */
   def valueCounts(df: DataFrame, c: String): DataFrame =
     df.groupBy(col(c)).count().orderBy(desc("count"), asc(c))

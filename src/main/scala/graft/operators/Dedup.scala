@@ -324,12 +324,9 @@ object Dedup {
       // bucket-aligned writes (round 16) of three DIFFERENT tables,
       // overlapped (round 17): see Layout.writeAll; all complete before
       // the fence releases
-      Layout.writeAll(Seq(
-        Layout.Write(idx.bands, s"${prefix}_bands", Seq("band", "bucket")),
-        Layout.Write(Seq((idx.idCol, idx.numPerms, idx.rowsPerBand, buckets))
-          .toDF("id_col", "num_perms", "rows_per_band", "buckets"), s"${prefix}_meta", Nil),
-        Layout.Write(idx.shingles, s"${prefix}_shingles", Seq(idx.idCol))),
-        buckets, "overwrite")
+      Family.MinHash.keyedOn(idx.idCol).save(prefix, Seq(idx.bands, idx.shingles),
+        Seq((idx.idCol, idx.numPerms, idx.rowsPerBand, buckets))
+          .toDF("id_col", "num_perms", "rows_per_band", "buckets"), buckets)
     }
   }
 
@@ -340,12 +337,10 @@ object Dedup {
     * so every consumer of a loaded index sees deletions immediately. */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                        prefix: String): MinHashIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
+    val m = spark.table(Family.meta(prefix)).head()
     val idCol = m.getString(0)
-    MinHashIndex(idCol,
-      Tombstones.filter(spark.table(s"${prefix}_shingles"), idCol, prefix),
-      Tombstones.filter(spark.table(s"${prefix}_bands"), idCol, prefix),
-      m.getInt(1), m.getInt(2))
+    val Seq(bands, shingles) = Family.MinHash.keyedOn(idCol).load(spark, prefix)
+    MinHashIndex(idCol, shingles, bands, m.getInt(1), m.getInt(2))
   }
 
   /** Online corpus-match gate: for each shard document — `shard` may be
@@ -920,11 +915,8 @@ object Dedup {
     val spark = idx.chunked.sparkSession
     Fence.withFence(spark, prefix, "saveSimhashIndex") {
       import spark.implicits._
-      Layout.writeAll(Seq(
-        Layout.Write(Seq((idx.idCol, buckets)).toDF("id_col", "buckets"),
-          s"${prefix}_meta", Nil),
-        Layout.Write(idx.chunked, s"${prefix}_chunked", Seq("chunk", "ckey"))),
-        buckets, "overwrite")
+      Family.SimHash.keyedOn(idx.idCol).save(prefix, Seq(idx.chunked),
+        Seq((idx.idCol, buckets)).toDF("id_col", "buckets"), buckets)
     }
   }
 
@@ -932,10 +924,8 @@ object Dedup {
     * ([[Tombstones]]-deleted ids filtered). */
   def loadSimhashIndex(spark: org.apache.spark.sql.SparkSession,
                        prefix: String): SimHashIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
-    val idCol = m.getString(0)
-    SimHashIndex(idCol,
-      Tombstones.filter(spark.table(s"${prefix}_chunked"), idCol, prefix))
+    val idCol = spark.table(Family.meta(prefix)).head().getString(0)
+    SimHashIndex(idCol, Family.SimHash.keyedOn(idCol).load(spark, prefix).head)
   }
 
   /** Build the [[SimHashIndex]] for `df`: signature (native codegen
@@ -1289,12 +1279,8 @@ object Dedup {
     Fence.withFence(spark, prefix, "saveContainmentIndex") {
       import spark.implicits._
       // overlap the three per-table writes: see saveMinhashIndex (round 17)
-      Layout.writeAll(Seq(
-        Layout.Write(idx.posting, s"${prefix}_posting", Seq("gram")),
-        Layout.Write(Seq((idx.idCol, idx.n, buckets)).toDF("id_col", "n", "buckets"),
-          s"${prefix}_meta", Nil),
-        Layout.Write(idx.base, s"${prefix}_base", Seq("id"))),
-        buckets, "overwrite")
+      Family.Containment.save(prefix, Seq(idx.posting, idx.base),
+        Seq((idx.idCol, idx.n, buckets)).toDF("id_col", "n", "buckets"), buckets)
     }
   }
 
@@ -1303,10 +1289,9 @@ object Dedup {
     * normalized `id`). */
   def loadContainmentIndex(spark: org.apache.spark.sql.SparkSession,
                            prefix: String): ContainmentIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
-    ContainmentIndex(m.getString(0), m.getInt(1),
-      Tombstones.filter(spark.table(s"${prefix}_base"), "id", prefix),
-      Tombstones.filter(spark.table(s"${prefix}_posting"), "id", prefix))
+    val m = spark.table(Family.meta(prefix)).head()
+    val Seq(posting, base) = Family.Containment.load(spark, prefix)
+    ContainmentIndex(m.getString(0), m.getInt(1), base, posting)
   }
 
   /** Incremental containment pairs TOUCHING A NEW SHARD — both

@@ -693,15 +693,13 @@ object Similarity {
       import spark.implicits._
       // meta write overlapped with the codes write (round 17; different
       // tables, both inside the fence — see Layout.writeAll)
-      Layout.writeAll(Seq(
-        Layout.Write(Seq((idx.idCol, idx.m, idx.ksub, idx.dim, idx.seed,
+      Family.Pq.save(prefix, Seq(idx.codes),
+        Seq((idx.idCol, idx.m, idx.ksub, idx.dim, idx.seed,
             idx.coarse.l1.map(_.toSeq).toSeq,
             idx.coarse.l2.map(_.toSeq).toSeq,
             idx.codebooks.map(_.map(_.toSeq).toSeq).toSeq, buckets, idx.assign))
           .toDF("id_col", "m", "ksub", "dim", "seed", "coarse_l1", "coarse_l2",
-            "codebooks", "buckets", "assign"), s"${prefix}_meta", Nil),
-        Layout.Write(idx.codes, s"${prefix}_codes", Seq("cell"))),
-        buckets, "overwrite")
+            "codebooks", "buckets", "assign"), buckets)
     }
   }
 
@@ -710,7 +708,7 @@ object Similarity {
     * re-encoding. */
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
                   prefix: String): PqIndex =
-    loadPqIndex(spark, prefix, spark.table(s"${prefix}_meta").head())
+    loadPqIndex(spark, prefix, spark.table(Family.meta(prefix)).head())
 
   /** [[loadPqIndex]] over an already-read meta row `r`. */
   private[graft] def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
@@ -728,7 +726,7 @@ object Similarity {
     val assign =
       if (r.schema.fieldNames.contains("assign")) r.getAs[Int]("assign") else 1
     PqIndex(r.getString(0),
-      Tombstones.filter(spark.table(s"${prefix}_codes"), "c_id", prefix),
+      Family.Pq.load(spark, prefix).head,
       Coarse(l1, l2), books, r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4),
       assign)
   }
@@ -1053,14 +1051,12 @@ object Similarity {
     Fence.withFence(spark, prefix, "saveSemIndex") {
       import spark.implicits._
       // meta overlapped with the docs write (round 17; see Layout.writeAll)
-      Layout.writeAll(Seq(
-        Layout.Write(Seq((idx.idCol, idx.threshold, idx.seed,
+      Family.Sem.save(prefix, Seq(idx.docs),
+        Seq((idx.idCol, idx.threshold, idx.seed,
             idx.coarse.l1.map(_.toSeq).toSeq, idx.coarse.l2.map(_.toSeq).toSeq,
             buckets))
           .toDF("id_col", "threshold", "seed", "coarse_l1", "coarse_l2", "buckets"),
-          s"${prefix}_meta", Nil),
-        Layout.Write(idx.docs, s"${prefix}_docs", Seq("cell"))),
-        buckets, "overwrite")
+        buckets)
     }
   }
 
@@ -1069,7 +1065,7 @@ object Similarity {
     * normalized `id`). */
   def loadSemIndex(spark: org.apache.spark.sql.SparkSession,
                    prefix: String): SemIndex =
-    loadSemIndex(spark, prefix, spark.table(s"${prefix}_meta").head())
+    loadSemIndex(spark, prefix, spark.table(Family.meta(prefix)).head())
 
   /** [[loadSemIndex]] over an already-read meta row `r`. */
   private[graft] def loadSemIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1080,7 +1076,7 @@ object Similarity {
     val l2 = r.getAs[scala.collection.Seq[scala.collection.Seq[Double]]](4)
       .map(_.toArray).toArray
     SemIndex(r.getString(0),
-      Tombstones.filter(spark.table(s"${prefix}_docs"), "id", prefix),
+      Family.Sem.load(spark, prefix).head,
       Coarse(l1, l2), r.getDouble(1), r.getLong(2))
   }
 
@@ -1236,13 +1232,10 @@ object Similarity {
     Fence.withFence(spark, prefix, "saveEmbedIndex") {
       import spark.implicits._
       // overlap the three per-table writes: see Layout.writeAll (round 17)
-      Layout.writeAll(Seq(
-        Layout.Write(idx.hashed, s"${prefix}_hashed", Seq("t", "h")),
-        Layout.Write(Seq((idx.idCol, idx.bitsPerTable, idx.numTables, idx.seed, idx.dim, buckets))
+      Family.Embed.save(prefix, Seq(idx.hashed, idx.vecs),
+        Seq((idx.idCol, idx.bitsPerTable, idx.numTables, idx.seed, idx.dim, buckets))
           .toDF("id_col", "bits_per_table", "num_tables", "seed", "dim", "buckets"),
-          s"${prefix}_meta", Nil),
-        Layout.Write(idx.vecs, s"${prefix}_vecs", Seq("id"))),
-        buckets, "overwrite")
+        buckets)
     }
   }
 
@@ -1251,10 +1244,9 @@ object Similarity {
     * normalized `id`). */
   def loadEmbedIndex(spark: org.apache.spark.sql.SparkSession,
                      prefix: String): EmbedIndex = {
-    val m = spark.table(s"${prefix}_meta").head()
-    EmbedIndex(m.getString(0),
-      Tombstones.filter(spark.table(s"${prefix}_vecs"), "id", prefix),
-      Tombstones.filter(spark.table(s"${prefix}_hashed"), "id", prefix),
+    val m = spark.table(Family.meta(prefix)).head()
+    val Seq(hashed, vecs) = Family.Embed.load(spark, prefix)
+    EmbedIndex(m.getString(0), vecs, hashed,
       m.getInt(1), m.getInt(2), m.getLong(3), m.getInt(4))
   }
 

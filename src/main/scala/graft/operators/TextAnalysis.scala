@@ -56,12 +56,6 @@ object TextAnalysis {
   val defaultStopwords: Seq[String] =
     Seq("the", "a", "an", "of", "to", "and", "in", "is", "it", "for")
 
-  /** Count of stopword tokens (expression over the token array). */
-  def stopwordCount(toks: Column, stopwords: Seq[String] = defaultStopwords): Column = {
-    val inList = stopwords.map(s => s"'$s'").mkString(", ")
-    size(expr(s"filter(${toks.toString}, t -> t IN ($inList))"))
-  }
-
   /** Quality profile per document: lengths, token counts, distinct ratio,
     * stopword ratio, mean token length. One narrow projection — no
     * shuffle, fully pushed into the scan stage. */

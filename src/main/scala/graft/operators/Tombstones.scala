@@ -34,7 +34,7 @@ object Tombstones {
     * compaction is overdue. */
   val defaultMaxTombstones: Long = 10000000L
 
-  def table(prefix: String): String = s"${prefix}_tombstones"
+  def table(prefix: String): String = Family.tombstones(prefix)
 
   /** Record `ids` (any single-keyed frame; `idCol` names the key) as
     * deleted for the `prefix` family. Append-only and idempotent in
@@ -167,9 +167,9 @@ object Tombstones {
                maxTombstones: Long = defaultMaxTombstones): Boolean = {
     require(fraction > 0 && fraction <= 1.0,
       s"maintain fraction must be in (0, 1], got $fraction")
-    if (spark.catalog.tableExists(s"${prefix}_labels")) {
+    if (spark.catalog.tableExists(Family.Components.signature(prefix))) {
       // one count-distinct pass: total delta rows vs live (distinct) ids
-      val m = spark.table(s"${prefix}_labels")
+      val m = spark.table(Family.Components.signature(prefix))
         .agg(count(lit(1)).as("total"), countDistinct(col("id")).as("live"))
         .head()
       val total = m.getLong(0)
@@ -181,21 +181,15 @@ object Tombstones {
       .map(_.select("id").distinct().count()).getOrElse(0L)
     if (n == 0 || n < (maxTombstones * fraction).toLong) false
     else {
-      val families: Seq[(String, () => Unit)] = Seq(
-        ("bands", () => compactMinhash(spark, prefix)),
-        ("chunked", () => compactSimhash(spark, prefix)),
-        ("posting", () => compactContainment(spark, prefix)),
-        ("hashed", () => compactEmbed(spark, prefix)),
-        ("codes", () => compactPq(spark, prefix)),
-        ("docs", () => compactSem(spark, prefix)))
-      val present = families.filter { case (sig, _) =>
-        spark.catalog.tableExists(s"${prefix}_$sig") }
+      val kinds = Family.kinds.filter(_.tombstoned)
+      val present = kinds.filter(k => spark.catalog.tableExists(k.signature(prefix)))
+      def sigs(ks: Seq[Family.Kind]) = ks.map(_.data.head.suffix)
       require(present.size == 1,
         s"maintain cannot infer the family kind for '$prefix': signature " +
-          s"tables present = ${present.map(_._1).mkString("[", ", ", "]")} " +
-          "(expected exactly one of bands/chunked/posting/hashed/codes/docs); " +
+          s"tables present = ${sigs(present).mkString("[", ", ", "]")} " +
+          s"(expected exactly one of ${sigs(kinds).mkString("/")}); " +
           "run the family's Tombstones.compact* pass directly.")
-      present.head._2()
+      compact(spark, prefix, present.head)
       true
     }
     }
@@ -290,12 +284,7 @@ object Tombstones {
                                            Set("loop_id", "local_bid",
                                              "global_bid", "missing_below")): Unit =
     if (!spark.catalog.tableExists(table)) {
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val db = spark.catalog.currentDatabase
-      val base =
-        if (db == "default") new org.apache.hadoop.fs.Path(wh)
-        else new org.apache.hadoop.fs.Path(wh, s"${db.toLowerCase}.db")
-      val p = new org.apache.hadoop.fs.Path(base, table.toLowerCase)
+      val p = Family.location(spark, table)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) {
         // data files (ignore _SUCCESS/. markers); an all-marker dir is a
@@ -363,7 +352,7 @@ object Tombstones {
                                         buckets: Int, bucketCols: Seq[String],
                                         between: () => Unit)(
                                         survivors: => org.apache.spark.sql.DataFrame): Unit = {
-    val tmp = tbl + "__compact"
+    val tmp = Family.compactTemp(tbl)
     def write(df: org.apache.spark.sql.DataFrame, to: String): Unit =
       Layout.writeBucketed(Layout.Write(df, to, bucketCols), buckets, "overwrite")
     if (spark.catalog.tableExists(tmp)) {
@@ -377,7 +366,7 @@ object Tombstones {
   }
 
   private def metaIdCol(spark: SparkSession, prefix: String): String =
-    spark.table(s"${prefix}_meta").head().getString(0)
+    spark.table(Family.meta(prefix)).head().getString(0)
 
   /** The family's recorded bucket count: every save and ingest path
     * since round 10 writes it into `<prefix>_meta`, so compaction preserves
@@ -390,83 +379,63 @@ object Tombstones {
                           explicit: Int): Int =
     if (explicit > 0) explicit
     else {
-      val meta = spark.table(s"${prefix}_meta")
+      val meta = spark.table(Family.meta(prefix))
       require(meta.columns.contains("buckets"),
-        s"${prefix}_meta predates the recorded bucket count: pass buckets " +
+        s"${Family.meta(prefix)} predates the recorded bucket count: pass buckets " +
           "explicitly (it must equal the count the family was written with " +
           "— the bucket layout is the join co-location contract).")
       meta.head().getAs[Int]("buckets")
     }
 
-  /** Fold the tombstones into the MinHash family's physical tables and
-    * clear them. `buckets` defaults to the count recorded in the
+  /** Fold the tombstones into the physical tables of the `kind` family
+    * under `prefix` and clear them: each data table in declared order is
+    * rewritten minus the tombstoned rows ([[rewriteMinus]]), with a
+    * per-table liveness beacon between tables, so an operator reading
+    * the fence's staleness can tell a working multi-table compaction
+    * from a dead one. `buckets` defaults to the count recorded in the
     * family's meta at creation (families persisted before the count was
     * recorded — pre-round-10 — must pass it explicitly once; the next
     * save/ingest records it going forward). Holds the family's writer
-    * [[Fence]] for the duration: a live ingest loop's micro-batch
-    * arriving mid-compaction refuses + replays instead of losing its
-    * append to the drop+recreate rewrite. */
+    * [[Fence]] for the duration, as owner `compact<kind name>`: a live
+    * ingest loop's micro-batch arriving mid-compaction refuses + replays
+    * instead of losing its append to the drop+recreate rewrite. */
+  private[graft] def compact(spark: SparkSession, prefix: String,
+                             kind: Family.Kind, buckets: Int = -1): Unit = {
+    val owner = s"compact${kind.name}"
+    Fence.withFence(spark, prefix, owner) {
+      bumpGeneration(spark, prefix) // FIRST: see generation
+      val k = if (kind.keyedByCaller) kind.keyedOn(metaIdCol(spark, prefix)) else kind
+      val b = metaBuckets(spark, prefix, buckets)
+      k.data.zip(k.tables(prefix)).zipWithIndex.foreach { case ((d, t), i) =>
+        if (i > 0) Fence.heartbeat(spark, prefix, owner)
+        rewriteMinus(spark, t, d.idCol, prefix, b, d.bucketCols)
+      }
+      clear(spark, prefix)
+    }
+  }
+
+  /** [[compact]] for the MinHash family. */
   def compactMinhash(spark: SparkSession, prefix: String, buckets: Int = -1): Unit =
-    Fence.withFence(spark, prefix, "compactMinhash") {
-      bumpGeneration(spark, prefix) // FIRST: see generation
-      val idCol = metaIdCol(spark, prefix)
-      val b = metaBuckets(spark, prefix, buckets)
-      rewriteMinus(spark, s"${prefix}_bands", idCol, prefix, b, Seq("band", "bucket"))
-      // per-stage liveness beacon: lets an operator reading the fence's
-      // staleness tell a working multi-table compaction from a dead one
-      Fence.heartbeat(spark, prefix, "compactMinhash")
-      rewriteMinus(spark, s"${prefix}_shingles", idCol, prefix, b, Seq(idCol))
-      clear(spark, prefix)
-    }
+    compact(spark, prefix, Family.MinHash, buckets)
 
-  /** [[compactMinhash]] for the SimHash family. */
+  /** [[compact]] for the SimHash family (and the media signature loops). */
   def compactSimhash(spark: SparkSession, prefix: String, buckets: Int = -1): Unit =
-    Fence.withFence(spark, prefix, "compactSimhash") {
-      bumpGeneration(spark, prefix) // FIRST: see generation
-      val idCol = metaIdCol(spark, prefix)
-      val b = metaBuckets(spark, prefix, buckets)
-      rewriteMinus(spark, s"${prefix}_chunked", idCol, prefix, b, Seq("chunk", "ckey"))
-      clear(spark, prefix)
-    }
+    compact(spark, prefix, Family.SimHash, buckets)
 
-  /** [[compactMinhash]] for the containment family (internal id column
-    * is the normalized `id`). */
+  /** [[compact]] for the containment family (internal id column is the
+    * normalized `id`). */
   def compactContainment(spark: SparkSession, prefix: String, buckets: Int = -1): Unit =
-    Fence.withFence(spark, prefix, "compactContainment") {
-      bumpGeneration(spark, prefix) // FIRST: see generation
-      val b = metaBuckets(spark, prefix, buckets)
-      rewriteMinus(spark, s"${prefix}_posting", "id", prefix, b, Seq("gram"))
-      Fence.heartbeat(spark, prefix, "compactContainment")
-      rewriteMinus(spark, s"${prefix}_base", "id", prefix, b, Seq("id"))
-      clear(spark, prefix)
-    }
+    compact(spark, prefix, Family.Containment, buckets)
 
-  /** [[compactMinhash]] for the sign-LSH embedding family. */
+  /** [[compact]] for the sign-LSH embedding family. */
   def compactEmbed(spark: SparkSession, prefix: String, buckets: Int = -1): Unit =
-    Fence.withFence(spark, prefix, "compactEmbed") {
-      bumpGeneration(spark, prefix) // FIRST: see generation
-      val b = metaBuckets(spark, prefix, buckets)
-      rewriteMinus(spark, s"${prefix}_hashed", "id", prefix, b, Seq("t", "h"))
-      Fence.heartbeat(spark, prefix, "compactEmbed")
-      rewriteMinus(spark, s"${prefix}_vecs", "id", prefix, b, Seq("id"))
-      clear(spark, prefix)
-    }
+    compact(spark, prefix, Family.Embed, buckets)
 
-  /** [[compactMinhash]] for the IVF-PQ serving family. */
+  /** [[compact]] for the IVF-PQ serving family. */
   def compactPq(spark: SparkSession, prefix: String, buckets: Int = -1): Unit =
-    Fence.withFence(spark, prefix, "compactPq") {
-      bumpGeneration(spark, prefix) // FIRST: see generation
-      val b = metaBuckets(spark, prefix, buckets)
-      rewriteMinus(spark, s"${prefix}_codes", "c_id", prefix, b, Seq("cell"))
-      clear(spark, prefix)
-    }
+    compact(spark, prefix, Family.Pq, buckets)
 
-  /** [[compactMinhash]] for the semantic-dedup family. */
+  /** [[compact]] for the semantic-dedup family. */
   def compactSem(spark: SparkSession, prefix: String, buckets: Int = -1): Unit =
-    Fence.withFence(spark, prefix, "compactSem") {
-      bumpGeneration(spark, prefix) // FIRST: see generation
-      val b = metaBuckets(spark, prefix, buckets)
-      rewriteMinus(spark, s"${prefix}_docs", "id", prefix, b, Seq("cell"))
-      clear(spark, prefix)
-    }
+    compact(spark, prefix, Family.Sem, buckets)
 }

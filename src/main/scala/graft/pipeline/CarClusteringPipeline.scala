@@ -116,14 +116,6 @@ object CarClusteringPipeline {
     (labeled, centersOrig)
   }
 
-  /** Cluster interpretation: per-cluster means of every feature
-    * (clustering.R:132 aggregate(. ~ cluster, FUN = mean)). */
-  def clusterMeans(labeled: DataFrame, cols: Seq[String]): DataFrame =
-    labeled.groupBy("cluster")
-      .agg(cols.map(c => avg(col(s"`$c`")).as(c)).head,
-        cols.map(c => avg(col(s"`$c`")).as(c)).tail: _*)
-      .orderBy("cluster")
-
   /** Per-feature ANOVA by cluster (clustering.R:210-218): does each
     * feature differ significantly across clusters? */
   def validateAnova(labeled: DataFrame, features: Seq[String]): DataFrame = {

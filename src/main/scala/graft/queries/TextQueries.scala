@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{Curation, Dedup, FitPool, Multimodal, Packing, Sampling, Similarity, Staging, TextAnalysis, Tombstones}
+import graft.operators.{Curation, Dedup, Family, Fence, FitPool, Multimodal, Packing, Sampling, Similarity, Staging, TextAnalysis, Tombstones}
 import graft.streaming.IngestLoop
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -19,6 +19,62 @@ object TextQueries {
     Tables(s, d, "documents")
   private def embs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables(s, d, "embeddings")
+
+  /** The quote/excerpt corpus of the containment rows: the sources
+    * (`doc_id % 10 = 0`) plus, at `doc_id + 20000000`, each source's
+    * first half — its first `size DIV 2` space-separated tokens. */
+  private def quoteCorpus(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val base = docs(s, d).filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"), col("text"))
+    base.union(base
+      .withColumn("__toks", split(col("text"), " "))
+      .withColumn("text",
+        expr("concat_ws(' ', slice(__toks, 1, CAST(size(__toks) DIV 2 AS INT)))"))
+      .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
+  }
+
+  /** Reset the persisted index family under `prefix` for a query row
+    * that rebuilds it on every run: drop every table any family kind
+    * declares under the prefix ([[Family.declared]]), delete each one's
+    * warehouse directory (a new session's in-memory catalog forgets a
+    * table, but `saveAsTable` still refuses on the directory an earlier
+    * session left), and force-release a writer fence a crashed run left
+    * held. Valid ONLY for a caller that owns the prefix: unlike
+    * [[Tombstones.clearOrphanLocation]] it deletes without checking whose
+    * data the directory holds. */
+  private[graft] def resetFamily(s: org.apache.spark.sql.SparkSession,
+                                 prefix: String): Unit = {
+    Family.declared(prefix).foreach { t =>
+      if (s.catalog.tableExists(t)) s.sql(s"DROP TABLE $t")
+      val loc = Family.location(s, t)
+      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (fs.exists(loc)) fs.delete(loc, true)
+    }
+    Fence.forceRelease(s, prefix)
+  }
+
+  /** Land `frame` as three one-file parquet shards (split on
+    * `idCol % 3`) in a fresh local landing directory, modified 2 s apart
+    * in shard order, so a `maxFilesPerTrigger = 1` file stream drains
+    * them as three micro-batches in a fixed order. `tag` names the
+    * temporary directories. Returns the landing directory. */
+  private def landShards(frame: org.apache.spark.sql.DataFrame, idCol: String,
+                         tag: String): String = {
+    val landing = java.nio.file.Files.createTempDirectory(tag + "_landing").toString
+    (0 until 3).foreach { i =>
+      val tmp = java.nio.file.Files.createTempDirectory(tag + "_shard").toString
+      frame.filter(col(idCol) % 3 === i).coalesce(1)
+        .write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath
+      val landed = java.nio.file.Files.copy(part,
+        java.nio.file.Paths.get(landing, s"shard$i.parquet"))
+      java.nio.file.Files.setLastModifiedTime(landed,
+        java.nio.file.attribute.FileTime.fromMillis(
+          System.currentTimeMillis() - (10 - i) * 2000L))
+    }
+    landing
+  }
 
   /** q44/q46 contract row: ANN output vs the exact brute-force top-k on
     * the same (q_id, c_id, cos, rn) geometry, reduced to the invariants
@@ -669,26 +725,8 @@ object TextQueries {
     "q112_tombstone_lifecycle" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        // fresh family per run: drop catalog entries AND any orphaned
-        // warehouse locations a previous session left behind (a new
-        // session's in-memory catalog forgets the tables but saveAsTable
-        // still refuses on the existing directory)
-        val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-        val whFs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq("q112mh_bands", "q112mh_shingles", "q112mh_meta",
-            "q112mh_tombstones", "q112mh_bands__compact",
-            "q112mh_shingles__compact", "q112pq_codes", "q112pq_meta",
-            "q112pq_tombstones", "q112pq_codes__compact")
-          .foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS $t")
-            val loc = new org.apache.hadoop.fs.Path(wh, t)
-            if (whFs.exists(loc)) whFs.delete(loc, true)
-          }
-        // a crashed prior session can leave a writer fence held (the
-        // loud-refusal design); this query owns these family prefixes,
-        // so clear them with the fresh-family reset above
-        Seq("q112mh", "q112pq").foreach(p =>
-          graft.operators.Fence.forceRelease(s, p))
+        resetFamily(s, "q112mh")
+        resetFamily(s, "q112pq")
         def sameSet(a: org.apache.spark.sql.DataFrame,
                     b: org.apache.spark.sql.DataFrame): Boolean =
           QueryDef.sameMultiset(a, b) // one action per compare (round 16)
@@ -1932,14 +1970,7 @@ object TextQueries {
     // universe in both engines.
     "q103_containment" -> QueryDef(
       fn = (s, d) => {
-        val base = docs(s, d).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text"))
-        val excerpts = base
-          .withColumn("__toks", split(col("text"), " "))
-          .withColumn("text",
-            expr("concat_ws(' ', slice(__toks, 1, CAST(size(__toks) DIV 2 AS INT)))"))
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
-        Dedup.containmentJoin(base.union(excerpts), "doc_id", "text", tau = 0.5)
+        Dedup.containmentJoin(quoteCorpus(s, d), "doc_id", "text", tau = 0.5)
           .orderBy("a_id", "b_id")
       },
       oracle = Some("""
@@ -2042,14 +2073,7 @@ object TextQueries {
     // as silent agreement.
     "q116_containment_components" -> QueryDef(
       fn = (s, d) => {
-        val base = docs(s, d).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text"))
-        val excerpts = base
-          .withColumn("__toks", split(col("text"), " "))
-          .withColumn("text",
-            expr("concat_ws(' ', slice(__toks, 1, CAST(size(__toks) DIV 2 AS INT)))"))
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
-        val corpus = base.union(excerpts)
+        val corpus = quoteCorpus(s, d)
         val pairs = Dedup.containmentJoin(corpus, "doc_id", "text", tau = 0.5)
           .select("a_id", "b_id")
         // comps is already staged internally per CC round — reusing it
@@ -2129,14 +2153,7 @@ object TextQueries {
     // one batch run over all edges, per cluster, per member-set.
     "q118_components_incremental" -> QueryDef(
       fn = (s, d) => {
-        val base = docs(s, d).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text"))
-        val excerpts = base
-          .withColumn("__toks", split(col("text"), " "))
-          .withColumn("text",
-            expr("concat_ws(' ', slice(__toks, 1, CAST(size(__toks) DIV 2 AS INT)))"))
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
-        val corpus = base.union(excerpts)
+        val corpus = quoteCorpus(s, d)
         // one containment pass over the union, pinned (pairs feed both
         // halves of the split below — recomputing the PPJoin flow twice
         // would double the expensive step for no information)
@@ -2318,25 +2335,8 @@ object TextQueries {
     // partition of the edges must converge to the same catalog.
     "q119_components_lifecycle" -> QueryDef(
       fn = (s, d) => {
-        // fresh family per run: catalog entries, orphaned warehouse
-        // dirs, and a possibly-held fence (the q112 discipline)
-        val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-        val whFs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq("q119cc_labels", "q119cc_meta", "q119cc_labels__compact")
-          .foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS $t")
-            val loc = new org.apache.hadoop.fs.Path(wh, t)
-            if (whFs.exists(loc)) whFs.delete(loc, true)
-          }
-        graft.operators.Fence.forceRelease(s, "q119cc")
-        val base = docs(s, d).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text"))
-        val excerpts = base
-          .withColumn("__toks", split(col("text"), " "))
-          .withColumn("text",
-            expr("concat_ws(' ', slice(__toks, 1, CAST(size(__toks) DIV 2 AS INT)))"))
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
-        val corpus = base.union(excerpts)
+        resetFamily(s, "q119cc")
+        val corpus = quoteCorpus(s, d)
         // one containment pass, pinned: the pairs feed all three shards
         val pairs = Dedup.containmentJoin(corpus, "doc_id", "text", tau = 0.5)
           .select("a_id", "b_id").localCheckpoint(true)
@@ -2371,23 +2371,8 @@ object TextQueries {
     // splits take fresh min-id labels, untouched clusters keep theirs.
     "q120_components_repair" -> QueryDef(
       fn = (s, d) => {
-        val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-        val whFs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq("q120cc_labels", "q120cc_meta", "q120cc_labels__compact")
-          .foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS $t")
-            val loc = new org.apache.hadoop.fs.Path(wh, t)
-            if (whFs.exists(loc)) whFs.delete(loc, true)
-          }
-        graft.operators.Fence.forceRelease(s, "q120cc")
-        val base = docs(s, d).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text"))
-        val excerpts = base
-          .withColumn("__toks", split(col("text"), " "))
-          .withColumn("text",
-            expr("concat_ws(' ', slice(__toks, 1, CAST(size(__toks) DIV 2 AS INT)))"))
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
-        val corpus = base.union(excerpts)
+        resetFamily(s, "q120cc")
+        val corpus = quoteCorpus(s, d)
         val pairs = Dedup.containmentJoin(corpus, "doc_id", "text", tau = 0.5)
           .select("a_id", "b_id").localCheckpoint(true)
         def shard(k: Int) = pairs
@@ -3066,33 +3051,11 @@ object TextQueries {
     //                       one batch simhashPairs over everything
     "q134_simhash_ingest" -> QueryDef(
       fn = (s, d) => {
-        // fresh family per run: drop catalog entries AND orphaned
-        // warehouse locations a previous session left (q112 discipline)
-        val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-        val whFs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq("q134sh_chunked", "q134sh_meta", "q134sh_commits")
-          .foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS $t")
-            val loc = new org.apache.hadoop.fs.Path(wh, t)
-            if (whFs.exists(loc)) whFs.delete(loc, true)
-          }
-        graft.operators.Fence.forceRelease(s, "q134sh")
+        resetFamily(s, "q134sh")
         val corpus = docs(s, d).select(col("doc_id"), col("text"))
           .union(docs(s, d).select((col("doc_id") + 1000000L).as("doc_id"),
             col("text"))).localCheckpoint(true)
-        val landing = java.nio.file.Files.createTempDirectory("q134_landing").toString
-        (0 until 3).foreach { i =>
-          val tmp = java.nio.file.Files.createTempDirectory("q134_shard").toString
-          corpus.filter(col("doc_id") % 3 === i).coalesce(1)
-            .write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head.toPath
-          val landed = java.nio.file.Files.copy(part,
-            java.nio.file.Paths.get(landing, s"shard$i.parquet"))
-          java.nio.file.Files.setLastModifiedTime(landed,
-            java.nio.file.attribute.FileTime.fromMillis(
-              System.currentTimeMillis() - (10 - i) * 2000L))
-        }
+        val landing = landShards(corpus, "doc_id", "q134")
         val pairsDir = java.nio.file.Files.createTempDirectory("q134_pairs").toString
         val ckpt = java.nio.file.Files.createTempDirectory("q134_ckpt").toString
         val q = IngestLoop.simhashIngest(
@@ -3155,37 +3118,9 @@ object TextQueries {
     // not reduced to a contract boolean.
     "q135_containment_ingest" -> QueryDef(
       fn = (s, d) => {
-        // fresh family per run incl. orphaned locations (q112 discipline)
-        val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-        val whFs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq("q135cn_posting", "q135cn_base", "q135cn_meta", "q135cn_commits")
-          .foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS $t")
-            val loc = new org.apache.hadoop.fs.Path(wh, t)
-            if (whFs.exists(loc)) whFs.delete(loc, true)
-          }
-        graft.operators.Fence.forceRelease(s, "q135cn")
-        val base = docs(s, d).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text"))
-        val excerpts = base
-          .withColumn("__toks", split(col("text"), " "))
-          .withColumn("text",
-            expr("concat_ws(' ', slice(__toks, 1, CAST(size(__toks) DIV 2 AS INT)))"))
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
-        val corpus = base.union(excerpts).localCheckpoint(true)
-        val landing = java.nio.file.Files.createTempDirectory("q135_landing").toString
-        (0 until 3).foreach { i =>
-          val tmp = java.nio.file.Files.createTempDirectory("q135_shard").toString
-          corpus.filter(col("doc_id") % 3 === i).coalesce(1)
-            .write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head.toPath
-          val landed = java.nio.file.Files.copy(part,
-            java.nio.file.Paths.get(landing, s"shard$i.parquet"))
-          java.nio.file.Files.setLastModifiedTime(landed,
-            java.nio.file.attribute.FileTime.fromMillis(
-              System.currentTimeMillis() - (10 - i) * 2000L))
-        }
+        resetFamily(s, "q135cn")
+        val corpus = quoteCorpus(s, d).localCheckpoint(true)
+        val landing = landShards(corpus, "doc_id", "q135")
         val pairsDir = java.nio.file.Files.createTempDirectory("q135_pairs").toString
         val ckpt = java.nio.file.Files.createTempDirectory("q135_ckpt").toString
         val q = IngestLoop.containmentIngest(
@@ -3400,15 +3335,7 @@ object TextQueries {
     "q138_media_ingest" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-        val whFs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq("q138sg_chunked", "q138sg_meta", "q138sg_commits")
-          .foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS $t")
-            val loc = new org.apache.hadoop.fs.Path(wh, t)
-            if (whFs.exists(loc)) whFs.delete(loc, true)
-          }
-        graft.operators.Fence.forceRelease(s, "q138sg")
+        resetFamily(s, "q138sg")
         val idsDf = docs(s, d).select(col("doc_id")).filter(col("doc_id") < 300)
         val images = idsDf.as[Long].mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
@@ -3449,19 +3376,7 @@ object TextQueries {
         val sigs = Multimodal.decodeImageDHash(images, "media_id", "bytes")
           .filter(col("decoded")).select(col("media_id"), col("dhash"))
           .localCheckpoint(true)
-        val landing = java.nio.file.Files.createTempDirectory("q138_landing").toString
-        (0 until 3).foreach { i =>
-          val tmp = java.nio.file.Files.createTempDirectory("q138_shard").toString
-          sigs.filter(col("media_id") % 3 === i).coalesce(1)
-            .write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head.toPath
-          val landed = java.nio.file.Files.copy(part,
-            java.nio.file.Paths.get(landing, s"shard$i.parquet"))
-          java.nio.file.Files.setLastModifiedTime(landed,
-            java.nio.file.attribute.FileTime.fromMillis(
-              System.currentTimeMillis() - (10 - i) * 2000L))
-        }
+        val landing = landShards(sigs, "media_id", "q138")
         val pairsDir = java.nio.file.Files.createTempDirectory("q138_pairs").toString
         val ckpt = java.nio.file.Files.createTempDirectory("q138_ckpt").toString
         val q = IngestLoop.signatureIngest(
@@ -3519,41 +3434,10 @@ object TextQueries {
     // ccCatalogOracle, q116's SQL verbatim).
     "q139_containment_ingest_groups" -> QueryDef(
       fn = (s, d) => {
-        // fresh families per run incl. orphaned locations (q112
-        // discipline) — both the containment index and the composed
-        // components family
-        val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-        val whFs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq("q139cn_posting", "q139cn_base", "q139cn_meta", "q139cn_commits",
-            "q139cc_labels", "q139cc_meta", "q139cc_labels__compact")
-          .foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS $t")
-            val loc = new org.apache.hadoop.fs.Path(wh, t)
-            if (whFs.exists(loc)) whFs.delete(loc, true)
-          }
-        graft.operators.Fence.forceRelease(s, "q139cn")
-        graft.operators.Fence.forceRelease(s, "q139cc")
-        val base = docs(s, d).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text"))
-        val excerpts = base
-          .withColumn("__toks", split(col("text"), " "))
-          .withColumn("text",
-            expr("concat_ws(' ', slice(__toks, 1, CAST(size(__toks) DIV 2 AS INT)))"))
-          .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
-        val corpus = base.union(excerpts).localCheckpoint(true)
-        val landing = java.nio.file.Files.createTempDirectory("q139_landing").toString
-        (0 until 3).foreach { i =>
-          val tmp = java.nio.file.Files.createTempDirectory("q139_shard").toString
-          corpus.filter(col("doc_id") % 3 === i).coalesce(1)
-            .write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head.toPath
-          val landed = java.nio.file.Files.copy(part,
-            java.nio.file.Paths.get(landing, s"shard$i.parquet"))
-          java.nio.file.Files.setLastModifiedTime(landed,
-            java.nio.file.attribute.FileTime.fromMillis(
-              System.currentTimeMillis() - (10 - i) * 2000L))
-        }
+        resetFamily(s, "q139cn")
+        resetFamily(s, "q139cc")
+        val corpus = quoteCorpus(s, d).localCheckpoint(true)
+        val landing = landShards(corpus, "doc_id", "q139")
         val ckpt = java.nio.file.Files.createTempDirectory("q139_ckpt").toString
         val q = IngestLoop.containmentIngest(
           s.readStream.schema("doc_id LONG, text STRING")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Dedup, Fence, Layout, Similarity, Tombstones}
+import graft.operators.{Dedup, Family, Fence, Layout, Similarity, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -118,7 +118,7 @@ object IngestLoop {
       "multi-writer ingest requires a loop id (the checkpoint location): " +
         "global partition ids are keyed on (loop_id, local_bid)")
     import spark.implicits._
-    val t = s"${prefix}_commits"
+    val t = Family.commits(prefix)
     // an orphaned commits LOCATION (catalog entry lost to an ephemeral
     // metastore) must die before the append-create both to avoid the
     // LOCATION_ALREADY_EXISTS refusal and because adopting its rows
@@ -199,9 +199,9 @@ object IngestLoop {
   private def bindLoop(spark: SparkSession, prefix: String, meta: Row,
                        loopId: String): Unit = {
     if (!meta.schema.fieldNames.contains("loop_id")) {
-      spark.table(s"${prefix}_meta").localCheckpoint(true)
+      spark.table(Family.meta(prefix)).localCheckpoint(true)
         .withColumn("loop_id", lit(loopId))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
+        .write.mode("overwrite").format("parquet").saveAsTable(Family.meta(prefix))
     } else {
       val recorded = meta.getAs[String]("loop_id")
       require(recorded != MultiWriterMarker,
@@ -245,16 +245,19 @@ object IngestLoop {
     * the family's existing partitions. */
   def rebind(spark: SparkSession, prefix: String, newLoopId: String): Unit =
     Fence.withFence(spark, prefix, "rebindLoop") {
-      spark.table(s"${prefix}_meta").localCheckpoint(true)
+      spark.table(Family.meta(prefix)).localCheckpoint(true)
         .withColumn("loop_id", lit(normLoopId(newLoopId)))
-        .write.mode("overwrite").format("parquet").saveAsTable(s"${prefix}_meta")
+        .write.mode("overwrite").format("parquet").saveAsTable(Family.meta(prefix))
     }
 
   /** Torn-first-batch detection: the first micro-batch creates the index
     * family's tables SEQUENTIALLY, so a crash mid-batch-0 can leave only
     * a strict subset behind. A retry keyed on one table alone would then
     * take the exists=true path and die permanently loading the missing
-    * siblings — so existence is decided on ALL of the family's tables.
+    * siblings — so existence is decided on ALL of the family's declared
+    * data tables plus its meta. The tombstones and commits tables are
+    * optional side tables, never probed here: each probe would cost
+    * every batch one more catalog call.
     *
     * But a torn batch 0 is NOT the only source of a partial set (the
     * round-9 advisory): a [[graft.operators.Tombstones]] compaction
@@ -270,15 +273,16 @@ object IngestLoop {
     * present/missing and the recovery (the family's `compact*` pass
     * self-heals from the orphaned temp). */
   private def familyExists(spark: SparkSession, prefix: String,
-                           tables: Seq[String]): Boolean = {
-    val present = tables.filter(t => spark.catalog.tableExists(s"${prefix}_$t"))
+                           kind: Family.Kind): Boolean = {
+    val tables = kind.data.map(_.suffix) :+ "meta"
+    val present = tables.filter(t => spark.catalog.tableExists(Family.table(prefix, t)))
     if (present.nonEmpty && present.size < tables.size) {
       val missing = tables.filterNot(present.contains)
       val compactLeftovers = tables
-        .map(t => s"${prefix}_${t}__compact")
+        .map(t => Family.compactTemp(Family.table(prefix, t)))
         .filter(spark.catalog.tableExists)
       val beyondBatch0 = present.filter(_ != "meta").filter { t =>
-        val df = spark.table(s"${prefix}_$t")
+        val df = spark.table(Family.table(prefix, t))
         // any batch other than 0 — including the compaction floor
         // partition (ingest_batch = -1, see compactCc) — proves the
         // family accumulated history and is NOT a torn first batch
@@ -296,12 +300,12 @@ object IngestLoop {
           else
             s" — ${beyondBatch0.mkString(", ")} hold(s) ingest batches other than 0") +
           "; refusing to auto-drop the surviving tables.")
-      present.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+      present.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${Family.table(prefix, t)}"))
       // a torn FIRST batch may still have recorded its global-bid
       // mapping (resolveGlobalBid runs before the data tables land):
       // a stale commits row against a recreated family would mis-assign
       // partition ids, so the mapping dies with the family
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_commits")
+      spark.sql(s"DROP TABLE IF EXISTS ${Family.commits(prefix)}")
       false
     } else present.size == tables.size
   }
@@ -310,7 +314,7 @@ object IngestLoop {
     * and hands the row to every check and corpus view that needs it
     * (each read is a single-task Spark job). */
   private def readMeta(spark: SparkSession, prefix: String): Row =
-    spark.table(s"${prefix}_meta").head()
+    spark.table(Family.meta(prefix)).head()
 
   /** Bucket-count agreement between a persisted family and the loop
     * writing into it: appending partitions with a DIFFERENT bucket count
@@ -376,12 +380,14 @@ object IngestLoop {
 
   /** THE batch commit — one fenced sequence shared by every family loop,
     * so the fold's safety properties cannot drift between families.
-    * `tables` lists the family's data tables with their bucket columns;
-    * `view` builds (and checks) the family's corpus view of the batch;
+    * `kind` is the family's registry descriptor ([[Family]]): its
+    * declared data tables, in order, with their bucket columns; `view`
+    * builds (and checks) the family's corpus view of the batch;
     * `fold` is the family's kernel, computed inside the fence. In order:
     *
-    *  1. [[familyExists]] decides existence on ALL of the family's
-    *     tables (the torn-first-batch and compaction-leftover refusals);
+    *  1. [[familyExists]] decides existence on the family's declared
+    *     data tables plus its meta (the torn-first-batch and
+    *     compaction-leftover refusals);
     *  2. the meta row is read ONCE and handed to every check and view
     *     below (each read is a single-task Spark job);
     *  3. multi-writer eligibility ([[bindMulti]]) is checked BEFORE the
@@ -442,52 +448,51 @@ object IngestLoop {
     *    exact. */
   private def commitBatch[V](run: Run, bid: Long, loopId: String,
                              multiWriter: Boolean, buckets: Int,
-                             tables: Seq[(String, Seq[String])])(
+                             kind: Family.Kind)(
                              view: Batch => V)(fold: (Batch, V) => Fold): (Batch, Long) = {
     import run.{owner, prefix, spark}
     val lid = normLoopId(loopId)
+    val tables = kind.tables(prefix)
     Fence.withFence(spark, prefix, owner) {
-      val exists = familyExists(spark, prefix, tables.map(_._1) :+ "meta")
+      val exists = familyExists(spark, prefix, kind)
       val meta = if (exists) readMeta(spark, prefix) else null
       if (exists && multiWriter) bindMulti(prefix, meta)
       val b = Batch(exists, meta,
-        if (multiWriter) resolveGlobalBid(spark, prefix, lid, bid, s"${prefix}_${tables.head._1}")
+        if (multiWriter) resolveGlobalBid(spark, prefix, lid, bid, kind.signature(prefix))
         else before(bid))
       val v = view(b)
       if (exists) {
         requireBucketAgreement(prefix, meta, buckets)
         if (!multiWriter) bindLoop(spark, prefix, meta, lid) // bindMulti ran pre-resolve
-        val replayed = tables.exists(t => partitionExists(spark, s"${prefix}_${t._1}", b.pid))
+        val replayed = tables.exists(t => partitionExists(spark, t, b.pid))
         tables.foreach { t =>
-          spark.sql(s"ALTER TABLE ${prefix}_${t._1} DROP IF EXISTS PARTITION (ingest_batch=${b.pid})")
+          spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (ingest_batch=${b.pid})")
         }
         if (replayed) Tombstones.bumpGeneration(spark, prefix)
       }
       val f = fold(b, v)
-      run.label(s"append ${tables.head._1}")
-      Layout.writeAll(tables.zip(f.frames).map { case ((t, cols), df) =>
-        Layout.Write(df.withColumn("ingest_batch", lit(b.pid)), s"${prefix}_$t", cols)
-      }, buckets, "append", () => {
+      run.label(s"append ${kind.data.head.suffix}")
+      Layout.writeAll(kind.writes(prefix, f.frames.map(_.withColumn("ingest_batch", lit(b.pid)))),
+        buckets, "append", () => {
         Fence.heartbeat(spark, prefix, owner)
-        run.label(s"append ${tables.last._1}")
+        run.label(s"append ${kind.data.last.suffix}")
       })
       if (!exists)
         Layout.writeBucketed(Layout.Write(f.meta.get.withColumn("loop_id",
-          lit(if (multiWriter) MultiWriterMarker else lid)), s"${prefix}_meta", Nil),
+          lit(if (multiWriter) MultiWriterMarker else lid)), Family.meta(prefix), Nil),
           buckets, "overwrite")
       (b, Tombstones.generation(spark, prefix))
     }
   }
 
-  /** Family table `t` as a batch's corpus view reads it: the partitions
-    * `g` may see ([[multiCorpusFilter]] — plain `< bid` for a
-    * single-writer batch), so a retried batch never sees its own
-    * half-written fold, with tombstoned ids gone — the same contract as
-    * the family's batch load path. */
-  private def live(spark: SparkSession, prefix: String, t: String,
-                   idCol: String, g: GlobalBid): DataFrame =
-    Tombstones.filter(spark.table(s"${prefix}_$t").filter(g.corpus)
-      .drop("ingest_batch"), idCol, prefix)
+  /** The family's data tables, in declared order, as a batch's corpus
+    * view reads them: the partitions `g` may see ([[multiCorpusFilter]]
+    * — plain `< bid` for a single-writer batch), so a retried batch
+    * never sees its own half-written fold, with tombstoned ids gone —
+    * the same contract as the family's batch load path. */
+  private def live(spark: SparkSession, prefix: String, kind: Family.Kind,
+                   g: GlobalBid): Seq[DataFrame] =
+    kind.load(spark, prefix, _.filter(g.corpus).drop("ingest_batch"))
 
   /** Run the unfenced mining leg, then verify under a brief fence
     * re-acquire that the family's layout [[graft.operators.Tombstones.generation]]
@@ -660,8 +665,8 @@ object IngestLoop {
   private def minhashView(spark: SparkSession, prefix: String, m: Row,
                           g: GlobalBid): Dedup.MinHashIndex = {
     val idCol = m.getString(0)
-    Dedup.MinHashIndex(idCol, live(spark, prefix, "shingles", idCol, g),
-      live(spark, prefix, "bands", idCol, g), m.getInt(1), m.getInt(2))
+    val Seq(bands, shingles) = live(spark, prefix, Family.MinHash.keyedOn(idCol), g)
+    Dedup.MinHashIndex(idCol, shingles, bands, m.getInt(1), m.getInt(2))
   }
 
   /** One micro-batch of the MinHash ingestion loop (exposed separately so
@@ -698,7 +703,7 @@ object IngestLoop {
           shard.bands.limit(0), numPerms, rowsPerBand)
         else minhashView(run.spark, prefix, b.meta, b.g)
       val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
-        Seq("bands" -> Seq("band", "bucket"), "shingles" -> Seq(idCol))) { b =>
+        Family.MinHash.keyedOn(idCol)) { b =>
         val c = corpus(b)
         require(c.numPerms == numPerms && c.rowsPerBand == rowsPerBand,
           s"persisted index family (${c.numPerms}, ${c.rowsPerBand}) != " +
@@ -742,10 +747,11 @@ object IngestLoop {
     * twin (tombstoned vectors leave it immediately — same contract as
     * the batch load path, Similarity.loadEmbedIndex). */
   private def embedView(spark: SparkSession, prefix: String, m: Row,
-                        g: GlobalBid): Similarity.EmbedIndex =
-    Similarity.EmbedIndex(m.getString(0), live(spark, prefix, "vecs", "id", g),
-      live(spark, prefix, "hashed", "id", g),
+                        g: GlobalBid): Similarity.EmbedIndex = {
+    val Seq(hashed, vecs) = live(spark, prefix, Family.Embed, g)
+    Similarity.EmbedIndex(m.getString(0), vecs, hashed,
       m.getInt(1), m.getInt(2), m.getLong(3), m.getInt(4))
+  }
 
   /** One micro-batch of the embedding (sign-LSH) ingestion loop — same
     * append-only partition design and retry contract as
@@ -771,8 +777,7 @@ object IngestLoop {
         if (!b.exists) Similarity.EmbedIndex(idCol, shard.vecs.limit(0),
           shard.hashed.limit(0), bitsPerTable, numTables, seed, shard.dim)
         else embedView(run.spark, prefix, b.meta, b.g)
-      val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
-        Seq("hashed" -> Seq("t", "h"), "vecs" -> Seq("id"))) { b =>
+      val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets, Family.Embed) { b =>
         val c = corpus(b)
         require(c.bitsPerTable == bitsPerTable && c.numTables == numTables &&
           c.seed == seed && c.dim == shard.dim,
@@ -829,7 +834,7 @@ object IngestLoop {
                     assign: Int = 1): Unit =
     runBatch(batch.sparkSession, prefix, s"ingestPqBatch bid=$bid") { run =>
       import run.spark.implicits._
-      commitBatch(run, bid, loopId, multiWriter, buckets, Seq("codes" -> Seq("cell"))) { b =>
+      commitBatch(run, bid, loopId, multiWriter, buckets, Family.Pq) { b =>
         if (!b.exists) None
         else {
           val idx = Similarity.loadPqIndex(run.spark, prefix, b.meta)
@@ -900,7 +905,7 @@ object IngestLoop {
                      buckets: Int, loopId: String = ""): Unit =
     runBatch(batch.sparkSession, prefix, s"ingestSemBatch bid=$bid") { run =>
       import run.spark.implicits._
-      commitBatch(run, bid, loopId, multiWriter = false, buckets, Seq("docs" -> Seq("cell"))) { b =>
+      commitBatch(run, bid, loopId, multiWriter = false, buckets, Family.Sem) { b =>
         if (!b.exists) None
         else {
           val idx0 = Similarity.loadSemIndex(run.spark, prefix, b.meta)
@@ -985,7 +990,7 @@ object IngestLoop {
   def ccComponentsBefore(spark: SparkSession, prefix: String,
                          bid: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    spark.table(s"${prefix}_labels").filter(col("ingest_batch") < bid)
+    spark.table(Family.Components.signature(prefix)).filter(col("ingest_batch") < bid)
       .withColumn("__rn", row_number().over(
         Window.partitionBy("id").orderBy(col("ingest_batch").desc)))
       .filter(col("__rn") === 1)
@@ -1074,7 +1079,7 @@ object IngestLoop {
       // operator eyeing forceRelease. Each round stamps the fence.
       val beat = () => Fence.heartbeat(run.spark, prefix, run.owner)
       commitBatch(run, bid, loopId, multiWriter = false, buckets,
-        Seq("labels" -> Seq("id")))(_ => ()) { (b, _) =>
+        Family.Components)(_ => ()) { (b, _) =>
         if (!b.exists)
           Fold(Seq(Dedup.connectedComponents(pairs, aCol, bCol, onRound = beat)),
             Some(Seq(("id", buckets)).toDF("id_col", "buckets")))
@@ -1159,7 +1164,8 @@ object IngestLoop {
     Fence.withFence(spark, prefix, owner) {
       Tombstones.bumpGeneration(spark, prefix)
       val b = if (buckets > 0) buckets else readMeta(spark, prefix).getAs[Int]("buckets")
-      Tombstones.rewriteThroughTemp(spark, s"${prefix}_labels", b, Seq("id"),
+      Tombstones.rewriteThroughTemp(spark, Family.Components.signature(prefix), b,
+        Family.Components.data.head.bucketCols,
         () => Fence.heartbeat(spark, prefix, owner))(
         catalog.withColumn("ingest_batch", lit(-1L)))
     }
@@ -1201,7 +1207,7 @@ object IngestLoop {
   private def simhashView(spark: SparkSession, prefix: String, m: Row,
                           g: GlobalBid): Dedup.SimHashIndex = {
     val idCol = m.getString(0)
-    Dedup.SimHashIndex(idCol, live(spark, prefix, "chunked", idCol, g))
+    Dedup.SimHashIndex(idCol, live(spark, prefix, Family.SimHash.keyedOn(idCol), g).head)
   }
 
   /** One micro-batch of the SIMHASH ingestion loop (round 15 — the
@@ -1262,7 +1268,7 @@ object IngestLoop {
         if (!b.exists) Dedup.SimHashIndex(idCol, shard.chunked.limit(0))
         else simhashView(spark, prefix, b.meta, b.g)
       val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
-        Seq("chunked" -> Seq("chunk", "ckey"))) { b =>
+        Family.SimHash.keyedOn(idCol)) { b =>
         val c = corpus(b)
         require(c.idCol == idCol,
           s"persisted SimHash family keys on '${c.idCol}', loop on '$idCol'")
@@ -1311,9 +1317,10 @@ object IngestLoop {
 
   /** The containment corpus view of batch `g` over meta row `m`. */
   private def containmentView(spark: SparkSession, prefix: String, m: Row,
-                              g: GlobalBid): Dedup.ContainmentIndex =
-    Dedup.ContainmentIndex(m.getString(0), m.getInt(1),
-      live(spark, prefix, "base", "id", g), live(spark, prefix, "posting", "id", g))
+                              g: GlobalBid): Dedup.ContainmentIndex = {
+    val Seq(posting, base) = live(spark, prefix, Family.Containment, g)
+    Dedup.ContainmentIndex(m.getString(0), m.getInt(1), base, posting)
+  }
 
   /** One micro-batch of the CONTAINMENT (quote/excerpt) ingestion loop
     * (round 15): same design as [[ingestSimhashBatch]]. Containment
@@ -1353,7 +1360,7 @@ object IngestLoop {
           shard.base.limit(0), shard.posting.limit(0))
         else containmentView(run.spark, prefix, b.meta, b.g)
       val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
-        Seq("posting" -> Seq("gram"), "base" -> Seq("id"))) { b =>
+        Family.Containment) { b =>
         val c = corpus(b)
         require(c.n == n,
           s"persisted containment family has shingle width n=${c.n}, " +

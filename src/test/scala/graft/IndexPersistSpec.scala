@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Family, Fence, Similarity, Tombstones}
+import graft.queries.TextQueries
+import graft.streaming.IngestLoop
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -156,5 +158,113 @@ class IndexPersistSpec extends AnyFunSuite {
         Dedup.containmentJoinIncremental(n4, loaded, tau = 0.5))
       assert(e.getMessage.contains("widths differ"))
     } finally drop("ct_rt_posting", "ct_rt_base", "ct_rt_meta")
+  }
+
+  /** Registry drift: build a tiny `kind` family under `p` through its
+    * public entry point, run its maintenance (a tombstone add and a
+    * compaction, or the components fold), and check after each step
+    * that every `<p>_*` catalog table is declared by the kind's
+    * descriptor and that every declared data table and the meta exist.
+    * Then leave the state a crashed run does — the signature table's
+    * catalog entry gone but its warehouse directory left behind, and the
+    * fence held — and check that [[TextQueries.resetFamily]] clears it
+    * so a fresh build succeeds. */
+  private def checkRegistry(kind: Family.Kind, p: String)(build: => Unit)(
+      maintain: (() => Unit)*): Unit = {
+    def assertDeclared(step: String): Unit = {
+      val held = spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith(p + "_")).toSet
+      val undeclared = held -- kind.declared(p)
+      assert(undeclared.isEmpty,
+        s"after $step, $p holds tables the ${kind.name} descriptor does not declare: $undeclared")
+      (kind.tables(p) :+ Family.meta(p)).foreach(t =>
+        assert(spark.catalog.tableExists(t), s"after $step, declared table $t is missing"))
+    }
+    TextQueries.resetFamily(spark, p)
+    try {
+      build
+      assertDeclared("build")
+      maintain.zipWithIndex.foreach { case (step, i) =>
+        step()
+        assertDeclared(s"maintenance step $i")
+      }
+      val sig = kind.signature(p)
+      spark.sql(s"DROP TABLE $sig")
+      val orphan = Family.location(spark, sig)
+      val fs = orphan.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(orphan)
+      fs.create(new org.apache.hadoop.fs.Path(orphan, "part-00000.parquet")).close()
+      Fence.acquire(spark, p, "crashedRun")
+      TextQueries.resetFamily(spark, p)
+      assert(!fs.exists(orphan), s"resetFamily left the orphaned directory $orphan")
+      assert(Fence.holder(spark, p).isEmpty, "resetFamily left the fence held")
+      build
+      assertDeclared("rebuild after reset")
+    } finally TextQueries.resetFamily(spark, p)
+  }
+
+  private def docs200 = Tables(spark, dir, "documents")
+    .select(col("doc_id"), col("text")).filter(col("doc_id") < 200)
+  private def embs200 = Tables(spark, dir, "embeddings")
+    .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 200)
+  private def tombstoneFirst(df: => org.apache.spark.sql.DataFrame, idCol: String,
+                             p: String): () => Unit =
+    () => Tombstones.add(df.select(idCol).orderBy(idCol).limit(1), idCol, p)
+
+  test("registry: MinHash family tables are the declared ones; resetFamily clears a crashed run") {
+    val p = "rgmh"
+    checkRegistry(Family.MinHash, p)(
+      Dedup.saveMinhashIndex(Dedup.minhashIndex(docs200, "doc_id", "text"), p, buckets = 4))(
+      tombstoneFirst(docs200, "doc_id", p), () => Tombstones.compactMinhash(spark, p))
+  }
+
+  test("registry: SimHash family tables are the declared ones; resetFamily clears a crashed run") {
+    val p = "rgsh"
+    checkRegistry(Family.SimHash, p)(
+      Dedup.saveSimhashIndex(Dedup.simhashIndex(docs200, "doc_id", "text"), p, buckets = 4))(
+      tombstoneFirst(docs200, "doc_id", p), () => Tombstones.compactSimhash(spark, p))
+  }
+
+  test("registry: containment family (multi-writer ingest) tables are the declared ones; resetFamily clears a crashed run") {
+    val p = "rgcn"
+    val pairsDir = java.nio.file.Files.createTempDirectory("rgcn_pairs").toString
+    checkRegistry(Family.Containment, p)(
+      IngestLoop.ingestContainmentBatch(docs200, 0L, "doc_id", "text", p, pairsDir,
+        tau = 0.5, n = 3, buckets = 4, loopId = "rgcn-loop", multiWriter = true))(
+      tombstoneFirst(docs200, "doc_id", p), () => Tombstones.compactContainment(spark, p))
+  }
+
+  test("registry: sign-LSH family tables are the declared ones; resetFamily clears a crashed run") {
+    val p = "rgem"
+    checkRegistry(Family.Embed, p)(
+      Similarity.saveEmbedIndex(
+        Similarity.embedIndex(embs200, "vec_id", "embedding", dim = 64), p, buckets = 4))(
+      tombstoneFirst(embs200, "vec_id", p), () => Tombstones.compactEmbed(spark, p))
+  }
+
+  test("registry: IVF-PQ family tables are the declared ones; resetFamily clears a crashed run") {
+    val p = "rgpq"
+    checkRegistry(Family.Pq, p)(
+      Similarity.savePqIndex(Similarity.pqIndex(embs200, "vec_id", "embedding",
+        nlist = 4, m = 8, ksub = 16), p, buckets = 4))(
+      tombstoneFirst(embs200, "vec_id", p), () => Tombstones.compactPq(spark, p))
+  }
+
+  test("registry: SemDeDup family tables are the declared ones; resetFamily clears a crashed run") {
+    val p = "rgsm"
+    checkRegistry(Family.Sem, p)(
+      Similarity.saveSemIndex(Similarity.semIndex(embs200, "vec_id", "embedding",
+        threshold = 0.95, nlist = 4), p, buckets = 4))(
+      tombstoneFirst(embs200, "vec_id", p), () => Tombstones.compactSem(spark, p))
+  }
+
+  test("registry: components family tables are the declared ones; resetFamily clears a crashed run") {
+    val p = "rgcc"
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    checkRegistry(Family.Components, p)(
+      IngestLoop.ingestCcBatch(pairs, 0L, "a", "b", p, buckets = 4))(
+      () => IngestLoop.ingestCcBatch(Seq((3L, 7L)).toDF("a", "b"), 1L, "a", "b", p, buckets = 4),
+      () => IngestLoop.compactCc(spark, p))
   }
 }
