@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.NumericType
@@ -13,10 +13,11 @@ import org.apache.spark.sql.types.NumericType
   * Scale notes (100 TB): every op here is a single scan + (for the
   * quantile-based ones) one tiny driver round-trip for the break values —
   * the same shape R uses, but distributed. All quantiles for a multi-column
-  * impute/cap are computed in ONE aggregate pass, not one scan per column.
-  * Exact `percentile` (type-7, matches R/DuckDB quantile_cont) is the
-  * default for oracle parity; pass `exact=false` to switch to
-  * `approx_percentile` for cardinality-unbounded columns at scale.
+  * impute/cap are computed in ONE set of narrow passes, not one scan per
+  * column. Exact type-7 quantiles (R quantile, DuckDB quantile_cont) by
+  * sketch-bracketed selection ([[bracketQuantiles]]) are the default for
+  * oracle parity; pass `exact=false` to switch to `approx_percentile`
+  * for cardinality-unbounded columns at scale.
   */
 object Cleaning {
 
@@ -53,289 +54,142 @@ object Cleaning {
       cols.map(c => c -> row.getSeq[Double](row.fieldIndex(c))).toMap
     }
 
-  /** Multi-column exact type-7 quantiles via sketch-bracketed selection
-    * (see [[sortedQuantiles]] for the algorithm rationale). All columns
-    * share the same 3 narrow scans: (1) count/min/max + approx sketch at
-    * padded probabilities, (2) below/inside counts per bracket, (3)
-    * collect only the bracket members and select the exact order
-    * statistics locally. Exactness never depends on the sketch, and the
-    * two ways a bracket can fail retry DIFFERENTLY:
-    *
-    *  - rank miss (a wanted order statistic fell outside its bracket —
-    *    sketch rank drift): widen `pad` ×8 at the same accuracy;
-    *  - oversize (a bracket holds more than `maxBracket` members —
-    *    bracket population ≈ 2·pad·n, so this is the NORMAL case once
-    *    n ≳ maxBracket·accuracy/4): raise `accuracy` so the expected
-    *    bracket shrinks to ~maxBracket/4 and shrink `pad` ∝ 1/accuracy.
-    *    Widening here would be guaranteed-worse; falling back to the
-    *    single-buffer `percentile` aggregate would OOM at exactly the
-    *    scale this operator exists for, so the oversize cause NEVER
-    *    takes that fallback.
-    *
-    * Oversize is also predicted from n right after pass 1 (2·pad·n >
-    * maxBracket) so the escalation happens before paying passes 2–3, and
-    * a degenerate bracket (lo == hi — heavy duplicate mass pinning the
-    * rank to a single value) resolves to that value directly with no
-    * member collection, so duplicate-heavy columns can never oversize
-    * their way into a fallback either. Only the rank-miss cause, after
-    * exhausting its widens, reaches the exact `percentile` safety net —
-    * and rank misses are a small-n rounding phenomenon, where that
-    * aggregate is safe.
-    *
-    * `maxBracket` is the driver-side collection cap (how many bracket
-    * members pass 3 may pull to the driver); `onRetry(col, cause,
-    * accuracy)` is an instrumentation hook (causes: "oversize",
-    * "rankmiss", "fallback") used by the spec that forces each path. */
+  /** Exact type-7 quantiles of several columns: the one-group case of
+    * [[selectQuantiles]], three narrow scans for all columns together.
+    * `maxBracket` caps how many bracket members pass 3 may pull to the
+    * driver; `onRetry(col, cause, accuracy)` reports each retry (causes
+    * `oversize`, `rankmiss`, `fallback`). */
   def bracketQuantiles(df: DataFrame, cols: Seq[String], probs: Seq[Double],
                        accuracy: Int = 10000,
                        maxBracket: Long = 4000000L,
                        onRetry: (String, String, Long) => Unit = (_, _, _) => ())
       : Map[String, Seq[Double]] = {
-    val vcols = cols.indices.map(i => s"__q$i")
-    val vals = df.select(cols.zip(vcols).map { case (c, v) =>
-      col(s"`$c`").cast("double").as(v) }: _*)
-    val out = scala.collection.mutable.Map[String, Seq[Double]]()
-    // per-column retry state: sketch accuracy, bracket half-width, and
-    // how many rank-miss widens / oversize escalations it has burned
-    case class St(c: String, v: String, acc: Long, pad: Double,
-                  widens: Int, escalations: Int)
-    val maxAcc = 100000000L // sketch memory cap: covers n/maxBracket up to 2.5e7
-    var remaining: Seq[St] = cols.zip(vcols).map { case (c, v) =>
-      St(c, v, accuracy.toLong, 2.0 / accuracy, 0, 0) }
-    var attempt = 0
-    while (remaining.nonEmpty && attempt < 12) {
-      val aggs = remaining.flatMap { st =>
-        val sketchProbs = probs.flatMap(p =>
-          Seq(math.max(0.0, p - st.pad), math.min(1.0, p + st.pad)))
-        Seq(count(col(st.v)).as(s"n_${st.v}"), min(col(st.v)).as(s"mn_${st.v}"),
-          max(col(st.v)).as(s"mx_${st.v}"),
-          expr(s"approx_percentile(${st.v}, array(${sketchProbs.mkString(", ")}), ${st.acc})")
-            .as(s"ap_${st.v}"))
-      }
-      val r1 = vals.agg(aggs.head, aggs.tail: _*).head()
-      // per column: wanted ranks + merged brackets from the sketch
-      case class Plan(st: St, n: Long, ranks: Seq[Long],
-                      brackets: Seq[(Double, Double)])
-      val next = scala.collection.mutable.Buffer[St]()
-      val plans = remaining.flatMap { st =>
-        val n = r1.getAs[Long](s"n_${st.v}")
-        if (n == 0) { out(st.c) = probs.map(_ => Double.NaN); None }
-        else if (2.0 * st.pad * n > maxBracket && st.acc < maxAcc) {
-          // predicted oversize: bracket population ≈ 2·pad·n would blow
-          // the collection cap — escalate accuracy (target bracket
-          // ≈ maxBracket/4) before paying passes 2-3
-          val want = math.min(maxAcc, math.max(st.acc * 8, 8L * (n / maxBracket + 1)))
-          onRetry(st.c, "oversize", want)
-          next += st.copy(acc = want, pad = 2.0 / want,
-            escalations = st.escalations + 1)
-          None
-        } else {
-          val (mn, mx) = (r1.getAs[Double](s"mn_${st.v}"), r1.getAs[Double](s"mx_${st.v}"))
-          val ap = r1.getSeq[Double](r1.fieldIndex(s"ap_${st.v}"))
-          val ranks = probs.map(_ * (n - 1)).flatMap(pos =>
-            Seq(math.floor(pos).toLong, math.ceil(pos).toLong)).distinct.sorted
-          // rank-vs-prob rounding at small n can push floor/ceil ranks
-          // outside a tight bracket — the pass-2 coverage check catches
-          // that and the rank-miss retry widens `pad`
-          val raw = probs.indices.map { j =>
-            val lo = if (probs(j) - st.pad <= 0) mn else ap(2 * j)
-            val hi = if (probs(j) + st.pad >= 1) mx else ap(2 * j + 1)
-            (math.min(lo, hi), math.max(lo, hi))
-          }.sortBy(_._1)
-          val merged = raw.foldLeft(List.empty[(Double, Double)]) {
-            case ((plo, phi) :: rest, (lo, hi)) if lo <= phi =>
-              (plo, math.max(phi, hi)) :: rest
-            case (acc0, b) => b :: acc0
-          }.reverse
-          Some(Plan(st, n, ranks, merged))
-        }
-      }
-      if (plans.nonEmpty) {
-        // pass 2 splits each bracket into ==lo / strict interior / ==hi:
-        // endpoint duplicate mass resolves by COUNT arithmetic (a rank
-        // inside the lo-mass IS lo), so only the strict interior is ever
-        // collected. Heavy duplicates at a bracket edge — including the
-        // boundary-rank case where a wanted rank sits exactly where a
-        // heavy value begins — can therefore never oversize a bracket;
-        // the size cap applies to the interior alone.
-        val cntAggs = plans.flatMap { pl =>
-          pl.brackets.zipWithIndex.flatMap { case ((lo, hi), i) =>
-            Seq(sum(when(col(pl.st.v) < lo, 1L).otherwise(0L)).as(s"lt_${pl.st.v}_$i"),
-              sum(when(col(pl.st.v) >= lo && col(pl.st.v) <= hi, 1L).otherwise(0L))
-                .as(s"in_${pl.st.v}_$i"),
-              sum(when(col(pl.st.v) === lo, 1L).otherwise(0L)).as(s"lo_${pl.st.v}_$i"),
-              sum(when(col(pl.st.v) === hi, 1L).otherwise(0L)).as(s"hi_${pl.st.v}_$i"))
-          }
-        }
-        val r2 = vals.agg(cntAggs.head, cntAggs.tail: _*).head()
-        case class B(lt: Long, in: Long, eqLo: Long, eqHi: Long, interior: Long)
-        def meta(pl: Plan) = pl.brackets.indices.map { i =>
-          val lt = r2.getAs[Long](s"lt_${pl.st.v}_$i")
-          val in = r2.getAs[Long](s"in_${pl.st.v}_$i")
-          val eqLo = r2.getAs[Long](s"lo_${pl.st.v}_$i")
-          val eqHi = r2.getAs[Long](s"hi_${pl.st.v}_$i")
-          val (blo, bhi) = pl.brackets(i)
-          val interior = if (blo == bhi) 0L else in - eqLo - eqHi
-          B(lt, in, eqLo, eqHi, interior)
-        }
-        val (ready, retry) = plans.partition { pl =>
-          val m = meta(pl)
-          pl.ranks.forall(k => m.exists(b => k >= b.lt && k < b.lt + b.in)) &&
-            m.forall(_.interior <= maxBracket)
-        }
-        if (ready.nonEmpty) {
-          val interiors = ready.map(pl => pl -> meta(pl))
-          val colAggs = interiors.flatMap { case (pl, m) =>
-            pl.brackets.zipWithIndex.collect {
-              case ((lo, hi), i) if m(i).interior > 0 =>
-                sort_array(collect_list(when(col(pl.st.v) > lo && col(pl.st.v) < hi,
-                  col(pl.st.v)))).as(s"vs_${pl.st.v}_$i")
-            }
-          }
-          val r3 = if (colAggs.nonEmpty)
-            vals.agg(colAggs.head, colAggs.tail: _*).head() else null
-          interiors.foreach { case (pl, m) =>
-            val byRank = pl.ranks.map { k =>
-              val i = m.indices.find(i => k >= m(i).lt && k < m(i).lt + m(i).in).get
-              val off = k - m(i).lt
-              val value =
-                if (off < m(i).eqLo) pl.brackets(i)._1
-                else if (off < m(i).eqLo + m(i).interior)
-                  r3.getSeq[Double](r3.fieldIndex(s"vs_${pl.st.v}_$i"))((off - m(i).eqLo).toInt)
-                else pl.brackets(i)._2
-              k -> value
-            }.toMap
-            out(pl.st.c) = probs.map { p =>
-              val pos = p * (pl.n - 1)
-              val lo = math.floor(pos).toLong
-              val hi = math.ceil(pos).toLong
-              if (hi == lo) byRank(lo)
-              else (hi - pos) * byRank(lo) + (pos - lo) * byRank(hi)
-            }
-          }
-        }
-        // cause-split retry: rank miss widens pad at the same accuracy;
-        // oversize (all wanted ranks covered, some live bracket too big)
-        // escalates accuracy and shrinks pad — NEVER widens
-        retry.foreach { pl =>
-          val m = meta(pl)
-          val covered = pl.ranks.forall(k => m.exists(b => k >= b.lt && k < b.lt + b.in))
-          if (!covered) {
-            onRetry(pl.st.c, "rankmiss", pl.st.acc)
-            next += pl.st.copy(pad = math.min(pl.st.pad * 8, 0.5),
-              widens = pl.st.widens + 1)
-          } else {
-            val want = math.min(maxAcc, pl.st.acc * 8)
-            onRetry(pl.st.c, "oversize", want)
-            next += pl.st.copy(acc = want, pad = 2.0 / want,
-              escalations = pl.st.escalations + 1)
-          }
-        }
-      }
-      // budget the two causes separately: >4 widens → exact-percentile
-      // safety net (small-n regime only, where it is safe); oversize has
-      // no safe fallback, but escalation converges — acc ≥ 8n/maxBracket
-      // bounds the expected bracket at maxBracket/4, and heavier-than-pad
-      // duplicate mass degenerates the bracket instead
-      val (fallback, keep) = next.partition(_.widens > 4)
-      if (fallback.nonEmpty) {
-        val aggs = fallback.toSeq.map(st => pctExpr(st.v, probs, exact = true).as(st.v))
-        val row = vals.agg(aggs.head, aggs.tail: _*).head()
-        fallback.foreach { st =>
-          onRetry(st.c, "fallback", st.acc)
-          out(st.c) = row.getSeq[Double](row.fieldIndex(st.v))
-        }
-      }
-      remaining = keep.toSeq
-      attempt += 1
-    }
-    remaining.foreach { st =>
-      throw new IllegalStateException(
-        s"bracketQuantiles: column '${st.c}' still unresolved after $attempt " +
-          s"attempts (accuracy=${st.acc}, pad=${st.pad}); refusing the " +
-          "single-buffer percentile fallback, which cannot run at this scale")
-    }
-    cols.map(c => c -> out(c)).toMap
+    val q = selectQuantiles(df, None, cols, probs, accuracy, maxBracket, onRetry)
+    cols.map(c => c -> q(("", c))).toMap
   }
 
-  /** Grouped twin of [[bracketQuantiles]] (round 16): exact type-7
-    * quantiles per (group, column) in THREE corpus passes TOTAL instead
-    * of three PER GROUP. The per-class caller shape (KdeNb's bw.nrd0
-    * IQR: one filtered bracketQuantiles call per class) pays
-    * classes × 3 full scans — 192 corpus passes for a 64-class fit at
-    * 100 TB where 3 suffice. Here pass 1 is ONE grouped aggregate
-    * (count/min/max/approx_percentile per group), and passes 2–3 are
-    * ONE global aggregate each whose bracket counters/collects are
-    * group-predicated (`when(g = v, …)`) — the same bracket → count →
-    * interior-select machinery with identical selection arithmetic, so
-    * results are value-identical to the filtered per-group calls
-    * (pinned in CleaningSpec). Retry state (rank-miss widen / oversize
-    * escalation / exact-percentile safety net) is per (group, column),
-    * mirroring the ungrouped cause-split verbatim; retried states rerun
-    * pass 1 grouped per (accuracy, pad) tier. Groups absent from the
-    * data are absent from the result (the filtered form would return
-    * NaNs for them — a caller enumerating groups from the same data
-    * never sees the difference). Driver memory: one row per group in
-    * pass 1 and `groups × cols × brackets` counters in pass 2 — bounded
-    * by the same collection budget discipline as the per-group path
-    * (callers bound their group cardinality; KdeNb's maxClasses). */
+  /** Exact type-7 quantiles per (group, column) of `groupCol`'s groups
+    * in the data, in the same three scans as [[bracketQuantiles]] plus
+    * one collect of the distinct groups, instead of three scans per
+    * group. Values equal the filtered per-group [[bracketQuantiles]]
+    * calls (pinned in CleaningSpec). A group absent from the data is
+    * absent from the result, where a filtered call would return NaNs.
+    * Driver memory grows with groups × columns × brackets, so callers
+    * bound their group count (KdeNb's maxClasses). */
   def bracketQuantilesByGroup(df: DataFrame, groupCol: String,
                               cols: Seq[String], probs: Seq[Double],
                               accuracy: Int = 10000,
                               maxBracket: Long = 4000000L,
                               onRetry: (String, String, Long) => Unit = (_, _, _) => ())
+      : Map[(String, String), Seq[Double]] =
+    selectQuantiles(df, Some(groupCol), cols, probs, accuracy, maxBracket, onRetry)
+
+  /** Sketch-bracketed exact selection, the exact-quantile path that
+    * survives 100 TB. The `percentile` aggregate buffers every value of
+    * a group in one aggregation buffer, and a distributed sort pays a
+    * whole-data range shuffle; this pays three narrow aggregates with no
+    * shuffle and no sort of the data, shared by every column and group:
+    *
+    *  1. count/min/max and an `approx_percentile` sketch at the padded
+    *     probabilities p ± pad bracket each wanted order statistic (a
+    *     global aggregate, or with a group key one `groupBy` aggregate
+    *     per (accuracy, pad) tier);
+    *  2. per bracket, the count below it, inside it and at each endpoint;
+    *  3. a collect of each bracket's strict interior only, from which the
+    *     order statistics are selected on the driver.
+    *
+    * With a group key every pass-2/3 counter and collect is predicated
+    * on its group, and a pass 0 collects the distinct groups. Exactness
+    * never depends on the sketch. Endpoint duplicate mass resolves by
+    * count arithmetic (a rank inside the lo-mass IS lo), and a degenerate
+    * bracket (lo == hi) resolves to its value with no collection, so
+    * heavy duplicates never oversize a bracket. The two ways a bracket
+    * can fail retry differently, per (group, column):
+    *
+    *  - rank miss (a wanted rank fell outside its bracket, the small-n
+    *    rounding case): widen `pad` ×8 at the same accuracy; after 4
+    *    widens, take the exact `percentile` aggregate, which is safe at
+    *    the small n where rank misses happen;
+    *  - oversize (an interior holds more than `maxBracket` members; its
+    *    population ≈ 2·pad·n, so predicted from n right after pass 1):
+    *    raise `accuracy` so the expected bracket shrinks to about
+    *    maxBracket/4, with `pad` ∝ 1/accuracy. It never widens and never
+    *    falls back: the single-buffer aggregate would OOM at exactly the
+    *    scale this path exists for.
+    *
+    * Interpolation is the Percentile aggregate's weighted form
+    * (hi − pos)·x[lo] + (pos − lo)·x[hi], so values equal the aggregate's
+    * (pinned in CleaningSpec and PropertySpec). An all-null column or
+    * group yields NaNs. Results are keyed (group, column), with group ""
+    * when ungrouped. */
+  private def selectQuantiles(df: DataFrame, groupCol: Option[String],
+                              cols: Seq[String], probs: Seq[Double], accuracy: Int,
+                              maxBracket: Long, onRetry: (String, String, Long) => Unit)
       : Map[(String, String), Seq[Double]] = {
+    val grouped = groupCol.isDefined
+    val caller = if (grouped) "bracketQuantilesByGroup" else "bracketQuantiles"
     val vcols = cols.indices.map(i => s"__q$i")
-    val vals = df.select(col(s"`$groupCol`").cast("string").as("__g") +:
-      cols.zip(vcols).map { case (c, v) =>
-        col(s"`$c`").cast("double").as(v) }: _*)
+    val vals = df.select(groupCol.map(g => col(s"`$g`").cast("string").as("__g")).toSeq ++
+      cols.zip(vcols).map { case (c, v) => col(s"`$c`").cast("double").as(v) }: _*)
+    // pass 0 (grouped only): the groups present in the data
+    val groups =
+      if (!grouped) Seq("")
+      else vals.select("__g").filter(col("__g").isNotNull)
+        .distinct().collect().map(_.getString(0)).toSeq.sorted
+    val groupIndex = groups.zipWithIndex.toMap
+    def inGroup(gi: Int, c: Column): Column =
+      if (grouped) col("__g") === lit(groups(gi)) && c else c
     val out = scala.collection.mutable.Map[(String, String), Seq[Double]]()
-    case class St(g: String, c: String, v: String, acc: Long, pad: Double,
-                  widens: Int, escalations: Int)
-    val maxAcc = 100000000L
-    // seed states from pass 0: the groups present in the data
-    val groups = vals.select("__g").filter(col("__g").isNotNull)
-      .distinct().collect().map(_.getString(0)).toSeq.sorted
-    var remaining: Seq[St] = for (g <- groups; (c, v) <- cols.zip(vcols))
-      yield St(g, c, v, accuracy.toLong, 2.0 / accuracy, 0, 0)
+    // per (group, column) retry state: sketch accuracy, bracket
+    // half-width, and how many rank-miss widens it has burned
+    case class St(gi: Int, c: String, v: String, acc: Long, pad: Double, widens: Int) {
+      def tag: String = if (grouped) s"${gi}_$v" else v
+      def key: (String, String) = (groups(gi), c)
+    }
+    val maxAcc = 100000000L // sketch memory cap: covers n/maxBracket up to 2.5e7
+    var remaining: Seq[St] = for (gi <- groups.indices; (c, v) <- cols.zip(vcols))
+      yield St(gi, c, v, accuracy.toLong, 2.0 / accuracy, 0)
     var attempt = 0
     while (remaining.nonEmpty && attempt < 12) {
-      // pass 1, grouped, one aggregate per (acc, pad) tier (first
-      // attempt = one tier; retries are rare and per-state)
-      val r1ByGc = scala.collection.mutable.Map[(String, String), org.apache.spark.sql.Row]()
-      remaining.groupBy(st => (st.acc, st.pad)).foreach { case ((acc, pad), sts) =>
-        val tierCols = sts.map(_.v).distinct
-        val sketchProbs = probs.flatMap(p =>
-          Seq(math.max(0.0, p - pad), math.min(1.0, p + pad)))
-        val aggs = tierCols.flatMap { v =>
-          Seq(count(col(v)).as(s"n_$v"), min(col(v)).as(s"mn_$v"),
-            max(col(v)).as(s"mx_$v"),
-            expr(s"approx_percentile($v, array(${sketchProbs.mkString(", ")}), $acc)")
-              .as(s"ap_$v"))
+      // pass 1: one global aggregate, or one grouped aggregate per tier
+      val r1 = scala.collection.mutable.Map[(Int, String), Row]()
+      remaining.groupBy(st => if (grouped) (st.acc, st.pad) else ()).values.foreach { sts =>
+        val aggs = sts.distinctBy(_.v).flatMap { st =>
+          val sketchProbs = probs.flatMap(p =>
+            Seq(math.max(0.0, p - st.pad), math.min(1.0, p + st.pad)))
+          Seq(count(col(st.v)).as(s"n_${st.v}"), min(col(st.v)).as(s"mn_${st.v}"),
+            max(col(st.v)).as(s"mx_${st.v}"),
+            expr(s"approx_percentile(${st.v}, array(${sketchProbs.mkString(", ")}), ${st.acc})")
+              .as(s"ap_${st.v}"))
         }
-        val tierGroups = sts.map(_.g).distinct
-        vals.filter(col("__g").isin(tierGroups: _*))
-          .groupBy(col("__g")).agg(aggs.head, aggs.tail: _*)
-          .collect().foreach { r =>
-            tierCols.foreach(v => r1ByGc((r.getString(0), v)) = r)
-          }
+        if (!grouped) {
+          val r = vals.agg(aggs.head, aggs.tail: _*).head()
+          sts.foreach(st => r1((st.gi, st.v)) = r)
+        } else {
+          val rows = vals.filter(col("__g").isin(sts.map(st => groups(st.gi)).distinct: _*))
+            .groupBy(col("__g")).agg(aggs.head, aggs.tail: _*)
+            .collect().map(r => groupIndex(r.getString(0)) -> r).toMap
+          sts.foreach(st => rows.get(st.gi).foreach(r => r1((st.gi, st.v)) = r))
+        }
       }
       case class Plan(st: St, n: Long, ranks: Seq[Long],
                       brackets: Seq[(Double, Double)])
       val next = scala.collection.mutable.Buffer[St]()
+      def escalate(st: St, want: Long): Unit = {
+        onRetry(st.c, "oversize", want)
+        next += st.copy(acc = want, pad = 2.0 / want)
+      }
       val plans = remaining.flatMap { st =>
-        val r1 = r1ByGc.get((st.g, st.v)).orNull
-        val n = if (r1 == null) 0L else r1.getAs[Long](s"n_${st.v}")
-        if (n == 0) { out((st.g, st.c)) = probs.map(_ => Double.NaN); None }
+        val r = r1.get((st.gi, st.v))
+        val n = r.fold(0L)(_.getAs[Long](s"n_${st.v}"))
+        if (n == 0) { out(st.key) = probs.map(_ => Double.NaN); None }
         else if (2.0 * st.pad * n > maxBracket && st.acc < maxAcc) {
-          val want = math.min(maxAcc, math.max(st.acc * 8, 8L * (n / maxBracket + 1)))
-          onRetry(st.c, "oversize", want)
-          next += st.copy(acc = want, pad = 2.0 / want,
-            escalations = st.escalations + 1)
+          // predicted oversize: escalate before paying passes 2-3
+          escalate(st, math.min(maxAcc, math.max(st.acc * 8, 8L * (n / maxBracket + 1))))
           None
         } else {
-          val (mn, mx) = (r1.getAs[Double](s"mn_${st.v}"), r1.getAs[Double](s"mx_${st.v}"))
-          val ap = r1.getSeq[Double](r1.fieldIndex(s"ap_${st.v}"))
+          val (mn, mx) = (r.get.getAs[Double](s"mn_${st.v}"), r.get.getAs[Double](s"mx_${st.v}"))
+          val ap = r.get.getSeq[Double](r.get.fieldIndex(s"ap_${st.v}"))
           val ranks = probs.map(_ * (n - 1)).flatMap(pos =>
             Seq(math.floor(pos).toLong, math.ceil(pos).toLong)).distinct.sorted
           val raw = probs.indices.map { j =>
@@ -352,58 +206,56 @@ object Cleaning {
         }
       }
       if (plans.nonEmpty) {
-        // pass 2: group-predicated bracket counters, one global aggregate
-        def tag(pl: Plan) = s"${groups.indexOf(pl.st.g)}_${pl.st.v}"
-        val grpOf = (pl: Plan) => col("__g") === lit(pl.st.g)
+        // pass 2: each bracket split into below / ==lo / interior / ==hi
         val cntAggs = plans.flatMap { pl =>
+          val (v, t) = (col(pl.st.v), pl.st.tag)
           pl.brackets.zipWithIndex.flatMap { case ((lo, hi), i) =>
-            val v = col(pl.st.v); val in = grpOf(pl)
-            Seq(sum(when(in && v < lo, 1L).otherwise(0L)).as(s"lt_${tag(pl)}_$i"),
-              sum(when(in && v >= lo && v <= hi, 1L).otherwise(0L)).as(s"in_${tag(pl)}_$i"),
-              sum(when(in && v === lo, 1L).otherwise(0L)).as(s"lo_${tag(pl)}_$i"),
-              sum(when(in && v === hi, 1L).otherwise(0L)).as(s"hi_${tag(pl)}_$i"))
+            Seq(sum(when(inGroup(pl.st.gi, v < lo), 1L).otherwise(0L)).as(s"lt_${t}_$i"),
+              sum(when(inGroup(pl.st.gi, v >= lo && v <= hi), 1L).otherwise(0L))
+                .as(s"in_${t}_$i"),
+              sum(when(inGroup(pl.st.gi, v === lo), 1L).otherwise(0L)).as(s"lo_${t}_$i"),
+              sum(when(inGroup(pl.st.gi, v === hi), 1L).otherwise(0L)).as(s"hi_${t}_$i"))
           }
         }
         val r2 = vals.agg(cntAggs.head, cntAggs.tail: _*).head()
-        case class B(lt: Long, in: Long, eqLo: Long, eqHi: Long, interior: Long)
-        def meta(pl: Plan) = pl.brackets.indices.map { i =>
-          val lt = r2.getAs[Long](s"lt_${tag(pl)}_$i")
-          val in = r2.getAs[Long](s"in_${tag(pl)}_$i")
-          val eqLo = r2.getAs[Long](s"lo_${tag(pl)}_$i")
-          val eqHi = r2.getAs[Long](s"hi_${tag(pl)}_$i")
-          val (blo, bhi) = pl.brackets(i)
-          val interior = if (blo == bhi) 0L else in - eqLo - eqHi
-          B(lt, in, eqLo, eqHi, interior)
+        case class B(lt: Long, in: Long, eqLo: Long, interior: Long) {
+          def holds(k: Long): Boolean = k >= lt && k < lt + in
         }
-        val (ready, retry) = plans.partition { pl =>
-          val m = meta(pl)
-          pl.ranks.forall(k => m.exists(b => k >= b.lt && k < b.lt + b.in)) &&
-            m.forall(_.interior <= maxBracket)
+        val metered = plans.map { pl =>
+          pl -> pl.brackets.indices.map { i =>
+            def get(name: String) = r2.getAs[Long](s"${name}_${pl.st.tag}_$i")
+            val (blo, bhi) = pl.brackets(i)
+            val interior = if (blo == bhi) 0L else get("in") - get("lo") - get("hi")
+            B(get("lt"), get("in"), get("lo"), interior)
+          }
+        }
+        def covered(pl: Plan, m: Seq[B]) = pl.ranks.forall(k => m.exists(_.holds(k)))
+        val (ready, retry) = metered.partition { case (pl, m) =>
+          covered(pl, m) && m.forall(_.interior <= maxBracket)
         }
         if (ready.nonEmpty) {
-          val interiors = ready.map(pl => pl -> meta(pl))
-          val colAggs = interiors.flatMap { case (pl, m) =>
+          // pass 3: collect only the strict interiors
+          val colAggs = ready.flatMap { case (pl, m) =>
+            val v = col(pl.st.v)
             pl.brackets.zipWithIndex.collect {
               case ((lo, hi), i) if m(i).interior > 0 =>
-                sort_array(collect_list(when(
-                  grpOf(pl) && col(pl.st.v) > lo && col(pl.st.v) < hi,
-                  col(pl.st.v)))).as(s"vs_${tag(pl)}_$i")
+                sort_array(collect_list(when(inGroup(pl.st.gi, v > lo && v < hi), v)))
+                  .as(s"vs_${pl.st.tag}_$i")
             }
           }
           val r3 = if (colAggs.nonEmpty)
             vals.agg(colAggs.head, colAggs.tail: _*).head() else null
-          interiors.foreach { case (pl, m) =>
+          ready.foreach { case (pl, m) =>
             val byRank = pl.ranks.map { k =>
-              val i = m.indices.find(i => k >= m(i).lt && k < m(i).lt + m(i).in).get
+              val i = m.indexWhere(_.holds(k))
               val off = k - m(i).lt
-              val value =
+              k -> (
                 if (off < m(i).eqLo) pl.brackets(i)._1
                 else if (off < m(i).eqLo + m(i).interior)
-                  r3.getSeq[Double](r3.fieldIndex(s"vs_${tag(pl)}_$i"))((off - m(i).eqLo).toInt)
-                else pl.brackets(i)._2
-              k -> value
+                  r3.getSeq[Double](r3.fieldIndex(s"vs_${pl.st.tag}_$i"))((off - m(i).eqLo).toInt)
+                else pl.brackets(i)._2)
             }.toMap
-            out((pl.st.g, pl.st.c)) = probs.map { p =>
+            out(pl.st.key) = probs.map { p =>
               val pos = p * (pl.n - 1)
               val lo = math.floor(pos).toLong
               val hi = math.ceil(pos).toLong
@@ -412,65 +264,39 @@ object Cleaning {
             }
           }
         }
-        retry.foreach { pl =>
-          val m = meta(pl)
-          val covered = pl.ranks.forall(k => m.exists(b => k >= b.lt && k < b.lt + b.in))
-          if (!covered) {
+        retry.foreach { case (pl, m) =>
+          if (covered(pl, m)) escalate(pl.st, math.min(maxAcc, pl.st.acc * 8))
+          else {
             onRetry(pl.st.c, "rankmiss", pl.st.acc)
-            next += pl.st.copy(pad = math.min(pl.st.pad * 8, 0.5),
-              widens = pl.st.widens + 1)
-          } else {
-            val want = math.min(maxAcc, pl.st.acc * 8)
-            onRetry(pl.st.c, "oversize", want)
-            next += pl.st.copy(acc = want, pad = 2.0 / want,
-              escalations = pl.st.escalations + 1)
+            next += pl.st.copy(pad = math.min(pl.st.pad * 8, 0.5), widens = pl.st.widens + 1)
           }
         }
       }
+      // the exact-percentile safety net, for rank misses only; oversize
+      // escalation converges instead (acc ≥ 8n/maxBracket bounds the
+      // expected bracket at maxBracket/4)
       val (fallback, keep) = next.partition(_.widens > 4)
-      fallback.groupBy(_.g).foreach { case (g, sts) =>
+      fallback.groupBy(_.gi).foreach { case (gi, sts) =>
         val aggs = sts.toSeq.map(st => pctExpr(st.v, probs, exact = true).as(st.v))
-        val row = vals.filter(col("__g") === lit(g))
-          .agg(aggs.head, aggs.tail: _*).head()
+        val rows = if (grouped) vals.filter(col("__g") === lit(groups(gi))) else vals
+        val row = rows.agg(aggs.head, aggs.tail: _*).head()
         sts.foreach { st =>
           onRetry(st.c, "fallback", st.acc)
-          out((st.g, st.c)) = row.getSeq[Double](row.fieldIndex(st.v))
+          out(st.key) = row.getSeq[Double](row.fieldIndex(st.v))
         }
       }
       remaining = keep.toSeq
       attempt += 1
     }
     remaining.foreach { st =>
+      val what = if (grouped) s"(${groups(st.gi)}, ${st.c})" else s"column '${st.c}'"
       throw new IllegalStateException(
-        s"bracketQuantilesByGroup: (${st.g}, ${st.c}) still unresolved " +
-          s"after $attempt attempts (accuracy=${st.acc}, pad=${st.pad})")
+        s"$caller: $what still unresolved after $attempt attempts " +
+          s"(accuracy=${st.acc}, pad=${st.pad}); refusing the single-buffer " +
+          "percentile fallback, which cannot run at this scale")
     }
     out.toMap
   }
-
-  /** Exact type-7 quantiles via SKETCH-BRACKETED SELECTION — the 100-TB
-    * path for EXACT quantiles. The `percentile` aggregate (used by
-    * [[quantiles]]) buffers every value of a group in one aggregation
-    * buffer: fine at test scale, impossible at 100 TB. A full
-    * distributed sort works but pays a whole-data range shuffle (and the
-    * round-2 RDD sortBy + zipWithIndex version re-executed that sort per
-    * lineage action — 15x super-linear at a 10x scale-up).
-    *
-    * Here: pass 1 aggregates count + approx_percentile at padded ranks
-    * (rank error <= n/accuracy) to bracket each wanted order statistic;
-    * pass 2 counts values below each bracket and inside it; pass 3
-    * collects only the bracket's members (thousands, not millions) and
-    * selects the exact order statistics locally. If a sketch bracket
-    * misses (rank drift beyond the padding) the padding doubles and the
-    * scan pair reruns — never observed, but correctness does not depend
-    * on the sketch. All scans are narrow single-column aggregates: no
-    * shuffle, no sort of the data.
-    *
-    * Interpolation mirrors the Percentile aggregate's weighted form
-    * (higher − pos)·lower + (pos − lower)·higher, so results agree
-    * bit-for-bit (pinned in CleaningSpec). */
-  def sortedQuantiles(df: DataFrame, c: String, probs: Seq[Double]): Seq[Double] =
-    bracketQuantiles(df, Seq(c), probs)(c)
 
   /** A2 + F8 (BigDataProject.R:86-87): replace nulls with the column
     * median, all medians from one aggregate pass. */

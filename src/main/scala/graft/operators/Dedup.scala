@@ -509,10 +509,7 @@ object Dedup {
     * distributed round loop), never raise it. */
   private[graft] val ccLocalEdges: Int = 1 << 16
 
-  private def isEager(staging: Staging.Mode): Boolean = staging match {
-    case Staging.Local | Staging.Reliable(_) => true
-    case _ => false
-  }
+  private def isEager(staging: Staging.Mode): Boolean = staging != Staging.None
 
   /** Stage `df` under an EAGER mode with `metric` riding the staging
     * action as an observed metric (CollectMetrics): the eager staging
@@ -557,8 +554,8 @@ object Dedup {
     * per round. The bound caps the driver's share at a few MB whatever
     * the corpus; it is a constant, not a conf, and `localEdges` above
     * it is clamped to it (see [[ccLocalEdges]]).
-    * Larger edge sets, and the lazy modes (Memory, None — no action may
-    * fire at build time), run the round loop unchanged, so the path
+    * Larger edge sets, and the lazy mode None (no action may fire at
+    * build time), run the round loop unchanged, so the path
     * still scales to corpus-sized graphs. `onRound` fires once for the
     * driver-local closure.
     *

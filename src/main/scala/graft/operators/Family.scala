@@ -80,11 +80,14 @@ private[graft] object Family {
 
     /** The data tables as a reader sees them, in declared order: `rows`
       * applied to each (a corpus view's partition filter), then the
-      * family's tombstoned ids anti-joined out ([[Tombstones.filter]]). */
+      * family's tombstoned ids anti-joined out ([[Tombstones.filter]]),
+      * the set budget-checked once for all the tables. */
     def load(spark: SparkSession, prefix: String,
-             rows: DataFrame => DataFrame = identity): Seq[DataFrame] =
-      data.map(d => Tombstones.filter(
-        rows(spark.table(table(prefix, d.suffix))), d.idCol, prefix))
+             rows: DataFrame => DataFrame = identity): Seq[DataFrame] = {
+      val dead = Tombstones.budgeted(spark, prefix)
+      data.map(d => Tombstones.antiJoin(
+        rows(spark.table(table(prefix, d.suffix))), d.idCol, dead))
+    }
   }
 
   val MinHash = Kind("Minhash", Seq(

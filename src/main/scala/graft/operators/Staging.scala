@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** How multi-consumer intermediate frames (MinHash/SimHash signatures,
   * LSH projections, token-count fits, component labels) are materialized
@@ -19,10 +18,6 @@ import org.apache.spark.storage.StorageLevel
   *  - [[Reliable]]: a real `checkpoint` into `dir` (sets the Spark
   *    checkpoint dir if unset) — blocks survive executor loss; the mode
   *    a 1000-executor deployment wants for hours-long dedup sweeps.
-  *  - [[Memory]]: `persist(MEMORY_AND_DISK)` — lineage KEPT (fault
-  *    tolerant via recompute), lazy, but each consumer that misses the
-  *    cache may still trigger recompute; good middle ground when the
-  *    staged frame fits the cache tier.
   *  - [[None]]: pass-through — for streaming plans (no actions allowed
   *    at build time) and callers composing into a larger staged plan.
   *    The quadratic re-execution contract is then the caller's.
@@ -42,11 +37,6 @@ object Staging {
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
       df.checkpoint(true)
     }
-  }
-
-  /** persist(MEMORY_AND_DISK): lazy, lineage kept. */
-  case object Memory extends Mode {
-    def apply(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** No materialization — streaming-safe pass-through. */

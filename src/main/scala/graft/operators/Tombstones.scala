@@ -75,23 +75,33 @@ object Tombstones {
     * which folds the deletions into the tables and clears the set. */
   def filter(df: DataFrame, idCol: String, prefix: String,
              maxTombstones: Long = defaultMaxTombstones): DataFrame =
-    ids(df.sparkSession, prefix) match {
-      case None => df
-      case Some(t) =>
-        val cap = math.min(maxTombstones, Int.MaxValue - 1L).toInt
-        // budget the DISTINCT id count (round 11): the raw row count
-        // over-counted repeated adds of overlapping id sets toward the
-        // cap, refusing loads whose actual broadcast was far under it
-        val n = t.select("id").distinct().limit(cap + 1).count()
-        require(n <= cap,
-          s"tombstone set for index family '$prefix' exceeds the broadcast " +
-            s"budget ($n+ distinct ids > $maxTombstones): run the family's " +
-            s"Tombstones.compact* pass to fold the deletions into the index " +
-            s"tables and clear the set, or raise maxTombstones on executors " +
-            s"with the broadcast headroom.")
-        df.join(broadcast(t.select(col("id").as(idCol)).distinct()),
-          Seq(idCol), "left_anti")
+    antiJoin(df, idCol, budgeted(df.sparkSession, prefix, maxTombstones))
+
+  /** The family's tombstone set, if any, once it has passed
+    * [[filter]]'s broadcast budget check: read and counted once, so a
+    * multi-table load anti-joins every table with one checked set
+    * ([[antiJoin]]) instead of re-counting it per table. */
+  private[graft] def budgeted(spark: SparkSession, prefix: String,
+                              maxTombstones: Long = defaultMaxTombstones): Option[DataFrame] =
+    ids(spark, prefix).map { t =>
+      val cap = math.min(maxTombstones, Int.MaxValue - 1L).toInt
+      // budget the DISTINCT id count (round 11): the raw row count
+      // over-counted repeated adds of overlapping id sets toward the
+      // cap, refusing loads whose actual broadcast was far under it
+      val n = t.select("id").distinct().limit(cap + 1).count()
+      require(n <= cap,
+        s"tombstone set for index family '$prefix' exceeds the broadcast " +
+          s"budget ($n+ distinct ids > $maxTombstones): run the family's " +
+          s"Tombstones.compact* pass to fold the deletions into the index " +
+          s"tables and clear the set, or raise maxTombstones on executors " +
+          s"with the broadcast headroom.")
+      t
     }
+
+  /** `df` without the ids of a [[budgeted]] tombstone set. */
+  private[graft] def antiJoin(df: DataFrame, idCol: String, dead: Option[DataFrame]): DataFrame =
+    dead.fold(df)(t =>
+      df.join(broadcast(t.select(col("id").as(idCol)).distinct()), Seq(idCol), "left_anti"))
 
   /** The compaction-side tombstone subtraction: a plain (unhinted,
     * unbudgeted) anti-join. The broadcast budget in [[filter]] exists to

@@ -40,10 +40,10 @@ object RelationalQueries {
         // approx_percentile sketch brackets each order statistic, then
         // narrow conditional aggregates select the exact values in the
         // bracket — no sort/shuffle of data,
-        // bit-identical to the percentile aggregate (CleaningSpec), and
+        // equal to the percentile aggregate (CleaningSpec), and
         // the formulation that survives 100 TB.
-        val qs = Cleaning.sortedQuantiles(l, "l_extendedprice",
-          Seq(0.0, 0.25, 0.5, 0.75, 1.0))
+        val qs = Cleaning.bracketQuantiles(l, Seq("l_extendedprice"),
+          Seq(0.0, 0.25, 0.5, 0.75, 1.0))("l_extendedprice")
         val (q1, q3) = (qs(1), qs(3))
         val iqr = q3 - q1
         val lb = q1 - 1.5 * iqr

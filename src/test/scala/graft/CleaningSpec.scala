@@ -166,13 +166,14 @@ class CleaningSpec extends AnyFunSuite {
     assert(Cleaning.mode(df, "wide").map(_.toString).contains(small.bigDecimal.toPlainString))
   }
 
-  test("sortedQuantiles (sketch-bracketed exact selection) == percentile aggregate exactly") {
+  test("quantiles(exact) == Spark percentile aggregate exactly on lineitem") {
     val li = Tables(spark, "/root/testdata/sf0.001", "lineitem")
     val probs = Seq(0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0)
-    val agg = Cleaning.quantiles(li, Seq("l_extendedprice"), probs)("l_extendedprice")
-    val srt = Cleaning.sortedQuantiles(li, "l_extendedprice", probs)
-    agg.zip(srt).zip(probs).foreach { case ((a, s), p) =>
-      assert(a == s, s"p=$p: aggregate $a vs sorted $s")
+    val got = Cleaning.quantiles(li, Seq("l_extendedprice"), probs)("l_extendedprice")
+    val want = li.agg(expr(s"percentile(l_extendedprice, array(${probs.mkString(",")}))"))
+      .head().getSeq[Double](0)
+    got.zip(want).zip(probs).foreach { case ((g, w), p) =>
+      assert(g == w, s"p=$p: bracket selection $g vs percentile aggregate $w")
     }
   }
 
@@ -201,5 +202,19 @@ class CleaningSpec extends AnyFunSuite {
         tiny.filter(col("g") === g), Seq("x"), probs)
       assert(tg((g, "x")) == per("x"), s"tiny group $g")
     }
+  }
+
+  test("exact quantile selection: Spark job count of one ungrouped and one grouped call") {
+    val ev = Tables(spark, "/root/testdata/sf0.001", "events")
+      .select(col("event_type").as("g"),
+        col("user_id").cast("double").as("u"), col("value").cast("double").as("v"))
+    val probs = Seq(0.0, 0.25, 0.5, 0.75, 1.0)
+    val (_, ungrouped) = JobCount(spark, "cleaningspec-quantile-jobs")(
+      Cleaning.bracketQuantiles(ev, Seq("u", "v"), probs))
+    val (_, grouped) = JobCount(spark, "cleaningspec-grouped-quantile-jobs")(
+      Cleaning.bracketQuantilesByGroup(ev, "g", Seq("u", "v"), probs))
+    // the counts the two entries ran before they shared one core
+    assert(ungrouped == 4, s"ungrouped call ran $ungrouped jobs")
+    assert(grouped == 16, s"grouped call ran $grouped jobs")
   }
 }

