@@ -499,8 +499,9 @@ object Dedup {
   }
 
   /** Edge-row bound of the DRIVER-LOCAL regime of [[connectedComponents]]
-    * and [[connectedComponentsIncremental]]: at most this many (u, v) rows
-    * are ever collected to the driver — 2^16 pairs of longs, a few MB of
+    * and [[connectedComponentsIncremental]] (a small-input regime user,
+    * see [[Staging.stageObserved]]): no collect of either brings more
+    * than this many rows to the driver — 2^16 pairs of longs, a few MB of
     * driver heap with the row objects and the union-find map. It bounds
     * driver memory, which no deployment should trade against data size,
     * so it is a constant and deliberately NOT a `spark.graft.*` conf;
@@ -508,20 +509,6 @@ object Dedup {
     * caller can only lower the bound (specs pass 0 to force the
     * distributed round loop), never raise it. */
   private[graft] val ccLocalEdges: Int = 1 << 16
-
-  private def isEager(staging: Staging.Mode): Boolean = staging != Staging.None
-
-  /** Stage `df` under an EAGER mode with `metric` riding the staging
-    * action as an observed metric (CollectMetrics): the eager staging
-    * runs through Dataset.withAction, which notifies the
-    * QueryExecutionListener Observation registers, so the value is ready
-    * the moment the checkpoint action returns — no job of its own. */
-  private def stageObserved(staging: Staging.Mode, df: DataFrame,
-                            metric: Column): (DataFrame, Any) = {
-    val obs = org.apache.spark.sql.Observation()
-    val staged = staging(df.observe(obs, metric.as("m")))
-    (staged, obs.get("m"))
-  }
 
   /** Connected components over an undirected edge frame — the step that
     * turns near-dup PAIRS (from [[minhashLshPairs]], [[simhashPairs]] or
@@ -578,17 +565,18 @@ object Dedup {
     val fwd = pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull)
     val sym = fwd.union(fwd.select(col("v").as("u"), col("u").as("v"))).distinct()
-    val eagerStaging = isEager(staging)
+    val eagerStaging = Staging.isEager(staging)
     // a caller may only LOWER the bound (specs pass 0): raising it would
     // trade driver memory for data size, which the constant rules out
     val bound = math.min(localEdges, ccLocalEdges)
     val edges =
       if (!eagerStaging || bound <= 0) staging(sym)
       else {
-        val (staged, n) = stageObserved(staging, sym, count(lit(1)))
-        if (n.asInstanceOf[Long] <= bound) {
+        val (staged, n) = Staging.stageObserved(staging, sym, count(lit(1)))
+        if (n.getLong(0) <= bound) {
           onRound()
-          return localComponents(staged.sparkSession, staged.collect())
+          return localComponents(staged.sparkSession,
+            staged.collect().map(e => (e.getLong(0), e.getLong(1))))
         }
         staged
       }
@@ -611,9 +599,9 @@ object Dedup {
     def stageWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) =
       if (!eagerStaging) { val s = staging(df); (s, compSum(s)) }
       else {
-        val (staged, sum0) = stageObserved(staging, df,
+        val (staged, sum0) = Staging.stageObserved(staging, df,
           coalesce(sum(col("comp")), lit(0L)).cast("decimal(38,0)"))
-        val s = sum0 match {
+        val s = sum0.get(0) match {
           case d: java.math.BigDecimal => d
           case other => new java.math.BigDecimal(other.toString)
         }
@@ -658,7 +646,7 @@ object Dedup {
     * root under the smaller keeps every root its component's minimum,
     * so each node's row equals the round loop's fixpoint. */
   private def localComponents(spark: org.apache.spark.sql.SparkSession,
-                              edges: Iterable[Row]): DataFrame = {
+                              edges: Iterable[(Long, Long)]): DataFrame = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
@@ -668,9 +656,9 @@ object Dedup {
       r
     }
     def node(x: Long): Long = { if (!parent.contains(x)) parent(x) = x; x }
-    edges.foreach { e =>
-      val a = find(node(e.getLong(0)))
-      val b = find(node(e.getLong(1)))
+    edges.foreach { case (u, v) =>
+      val a = find(node(u))
+      val b = find(node(v))
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
     }
     val rows = new java.util.ArrayList[Row](parent.size)
@@ -708,14 +696,22 @@ object Dedup {
     * the untouched rows; the CC rounds run on the star subgraph, not
     * the corpus graph.
     *
-    * DRIVER-LOCAL REGIME: under an eager staging mode the shard's edges
-    * are staged once (a miner's output is then evaluated once, not once
-    * per consumer), and the star-subgraph run below is an ordinary
-    * [[connectedComponents]] call, so it takes that function's
-    * driver-local regime whenever its symmetric edge rows (touched stars
-    * plus shard edges) fit `localEdges` ([[ccLocalEdges]]): a handful of
-    * jobs instead of ~4 per round. Past the bound, and under the lazy
-    * modes, the round loop runs as before.
+    * DRIVER-LOCAL REGIME (the small-input regime, see
+    * [[Staging.stageObserved]]): under an eager staging mode the shard's
+    * edges are staged once with their row count observed on the staging
+    * action. When they fit `localEdges` ([[ccLocalEdges]]) they are
+    * collected, and `labels` is read in two bounded lookups: the
+    * touched nodes' labels, then the touched components' members. The
+    * star ∪ shard edges are then closed by the same union-find as
+    * [[connectedComponents]]' driver-local regime, so the sub-run costs
+    * four small jobs and its result is a local relation. The bound
+    * keeps [[connectedComponents]]' meaning — the sub-run's symmetric
+    * distinct edge rows — so a shard whose stars do not fit, a raw
+    * shard past the bound, and the lazy modes run the distributed path:
+    * the touched components' members selected by semi-joins (or, when
+    * the first lookup found the components, by one IN-set scan), then
+    * an ordinary [[connectedComponents]] call over star ∪ shard edges
+    * (which takes its own round loop past the bound).
     *
     * Two output modes. Default (`deltaOnly = false`): the complete
     * updated labeling, same schema and semantics as
@@ -746,33 +742,89 @@ object Dedup {
     // cost back into every shard arrival
     val lab = labels.select(col("id").cast("long").as("id"),
       col("component").cast("long").as("comp"))
+    def emit(sub: DataFrame): DataFrame =
+      if (deltaOnly) sub.select(col("id"), col("component"))
+      else {
+        val untouched = lab.join(sub.select(col("id")), Seq("id"), "left_anti")
+          .select(col("id"), col("comp").as("component"))
+        sub.select(col("id"), col("component")).union(untouched)
+      }
     // the shard's edges feed both the touched-component selection and
     // the sub-run: under an eager mode stage them once, so a miner's
     // output is evaluated once; the new nodes are then a cheap view of
     // them. Lazy modes stage the new nodes, as the shard stays a view
-    val eager = isEager(staging)
-    val fwd = if (eager) staging(shardEdges) else shardEdges
-    val nodes = fwd.select(col("u")).union(fwd.select(col("v")))
-      .distinct().select(col("u").as("id"))
-    val newNodes = if (eager) nodes else staging(nodes)
-    // components with any member incident to a new edge — everything
-    // else is provably unchanged and never enters the propagation
-    val touchedComps = lab.join(newNodes, Seq("id"), "left_semi")
-      .select(col("comp")).distinct()
+    val eager = Staging.isEager(staging)
+    val bound = math.min(localEdges, ccLocalEdges)
+    // `known`: the touched components, when the driver-local regime
+    // looked them up but its sub-run did not fit
+    val (fwd, known): (DataFrame, Option[Set[Long]]) =
+      if (!eager) (shardEdges, None)
+      else if (bound <= 0) (staging(shardEdges), None)
+      else {
+        val (staged, n) = Staging.stageObserved(staging, shardEdges, count(lit(1)))
+        if (n.getLong(0) > bound) (staged, None)
+        else localIncremental(lab, staged.collect(), bound) match {
+          case Right(sub) => onRound(); return emit(sub)
+          case Left(comps) => (staged, comps)
+        }
+      }
+    // the members of every component with a member incident to a new
+    // edge — everything else is provably unchanged and never enters the
+    // propagation. Known components are one IN-set scan, so a regime
+    // that fell back pays no second selection
+    val touchedRows = known match {
+      case Some(comps) => lab.filter(col("comp").isInCollection(comps))
+      case None =>
+        val nodes = fwd.select(col("u")).union(fwd.select(col("v")))
+          .distinct().select(col("u").as("id"))
+        val newNodes = if (eager) nodes else staging(nodes)
+        val touchedComps = lab.join(newNodes, Seq("id"), "left_semi")
+          .select(col("comp")).distinct()
+        lab.join(touchedComps, Seq("comp"), "left_semi")
+    }
     // the frozen component as a star: member — label edges (the label
     // node itself contributes a harmless self-edge, so size-1 components
     // a caller unioned in survive too)
-    val starPairs = lab.join(touchedComps, Seq("comp"), "left_semi")
-      .select(col("id").as("u"), col("comp").as("v"))
-    val sub = connectedComponents(
+    val starPairs = touchedRows.select(col("id").as("u"), col("comp").as("v"))
+    emit(connectedComponents(
       starPairs.union(fwd.select(col("u"), col("v"))), "u", "v",
-      maxIter, staging, onRound, localEdges)
-    if (deltaOnly) sub.select(col("id"), col("component"))
-    else {
-      val untouched = lab.join(sub.select(col("id")), Seq("id"), "left_anti")
-        .select(col("id"), col("comp").as("component"))
-      sub.select(col("id"), col("component")).union(untouched)
-    }
+      maxIter, staging, onRound, localEdges))
+  }
+
+  /** The driver-local sub-run of [[connectedComponentsIncremental]]:
+    * `shard` holds the shard's (u, v) rows, at most `bound` of them.
+    * Looks up the touched nodes' labels, then the touched components'
+    * members, each in one job that brings at most `bound + 1` rows to
+    * the driver ([[Staging.collectAtMost]]; every touched label and
+    * every member adds its own star row, so a larger lookup cannot
+    * fit), and closes star ∪ shard edges by union-find into Right(the
+    * sub-run's rows).
+    * Left when the symmetric distinct star ∪ shard rows exceed `bound` —
+    * the same count [[connectedComponents]]' regime bounds — and the
+    * caller then runs the distributed path; Left holds the touched
+    * components when the first lookup fit, so that path need not select
+    * them again. Touched nodes are every non-NULL endpoint, as the
+    * semi-join of the distributed path selects them; an edge with a
+    * NULL endpoint closes nothing. */
+  private def localIncremental(lab: DataFrame, shard: Array[Row],
+                               bound: Int): Either[Option[Set[Long]], DataFrame] = {
+    val nodes = shard.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+      .collect { case x: Long => x }.toSet
+    val edges = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
+    def link(u: Long, v: Long): Unit = { edges += ((u, v)); edges += ((v, u)) }
+    shard.foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1)) link(r.getLong(0), r.getLong(1)))
+    // an IN-set filter, not a join: the lookup stays one scan and one job
+    val touched =
+      if (nodes.isEmpty) Some(Array.empty[Row])
+      else Staging.collectAtMost(lab.filter(col("id").isInCollection(nodes)).select(col("comp")),
+        bound)
+    val comps = touched.map(_.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet)
+    val star = comps.flatMap(c =>
+      if (c.isEmpty) Some(Array.empty[Row])
+      else Staging.collectAtMost(lab.filter(col("comp").isInCollection(c)), bound))
+    star.foreach(_.foreach(r => if (!r.isNullAt(0)) link(r.getLong(0), r.getLong(1))))
+    if (star.isEmpty || edges.size > bound) Left(comps)
+    else Right(localComponents(lab.sparkSession, edges))
   }
 
   /** Repair a components labeling after UPSTREAM deletions (round 13 —
@@ -1254,13 +1306,32 @@ object Dedup {
   def containmentIndex(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3,
                        staging: Staging.Mode = Staging.Local,
-                       spread: Boolean = true): ContainmentIndex = {
+                       spread: Boolean = true): ContainmentIndex =
+    sizedContainmentIndex(df, idCol, textCol, n, staging, spread)._1
+
+  /** [[containmentIndex]] with the exact row counts of its tables in the
+    * family's declared order (posting, base), observed on the base's
+    * staging action: its rows and Σm, which is the posting's row count
+    * (one row per distinct shingle). Empty under the lazy mode, which
+    * stages nothing. The ingest loop hands them to the one-task family
+    * write ([[Layout.writeBucketed]]). */
+  private[graft] def sizedContainmentIndex(df: DataFrame, idCol: String,
+                                           textCol: String, n: Int,
+                                           staging: Staging.Mode,
+                                           spread: Boolean): (ContainmentIndex, Seq[Long]) = {
     // spread before the gram kernel (round 16): see Staging.spread;
     // spread = false for shard/batch-sized inputs (see minhashIndex)
-    val base = staging(containmentBase(
-      if (spread) Staging.spread(df, col(idCol)) else df, idCol, textCol, n))
-    ContainmentIndex(idCol, n, base,
-      base.select(col("id"), explode(col("sh")).as("gram")))
+    val shingled = containmentBase(
+      if (spread) Staging.spread(df, col(idCol)) else df, idCol, textCol, n)
+    val (base, rows) =
+      if (!Staging.isEager(staging)) (staging(shingled), Nil)
+      else {
+        val (staged, m) = Staging.stageObserved(staging, shingled,
+          count(lit(1)), coalesce(sum(col("m")), lit(0L)))
+        (staged, Seq(m.getLong(1), m.getLong(0)))
+      }
+    (ContainmentIndex(idCol, n, base,
+      base.select(col("id"), explode(col("sh")).as("gram"))), rows)
   }
 
   /** Persist a [[ContainmentIndex]] as bucketed Parquet tables:

@@ -62,10 +62,13 @@ private[graft] object Family {
         (if (tombstoned) Seq(tombstones(prefix)) else Nil) ++
         Seq(commits(prefix)) ++ tables(prefix).map(compactTemp)
 
-    /** One write per data table: `frames` in declared order. */
-    def writes(prefix: String, frames: Seq[DataFrame]): Seq[Layout.Write] =
-      data.zip(frames).map { case (d, df) =>
-        Layout.Write(df, table(prefix, d.suffix), d.bucketCols) }
+    /** One write per data table: `frames` in declared order, with their
+      * observed row counts `rows` in the same order when known (empty
+      * when not; see [[Layout.Write]]). */
+    def writes(prefix: String, frames: Seq[DataFrame],
+               rows: Seq[Long] = Nil): Seq[Layout.Write] =
+      data.zip(frames).zipWithIndex.map { case ((d, df), i) =>
+        Layout.Write(df, table(prefix, d.suffix), d.bucketCols, rows.lift(i)) }
 
     /** A batch save: overwrite the whole family with `frames` and its
       * one-row `meta`, overlapped through [[Layout.writeAll]] (meta goes

@@ -46,23 +46,69 @@ object Layout {
 
   /** One family-table write: `df` saved as the managed parquet table
     * `table`, hash-bucketed and sorted on `cols` — or unbucketed when
-    * `cols` is empty (a family's one-row meta). */
-  private[graft] case class Write(df: DataFrame, table: String, cols: Seq[String])
+    * `cols` is empty (a family's one-row meta). `rows` is `df`'s exact
+    * row count when the action that staged it observed it
+    * ([[Staging.stageObserved]]); None when unknown. */
+  private[graft] case class Write(df: DataFrame, table: String, cols: Seq[String],
+                                  rows: Option[Long] = None)
 
-  /** The family-table write: bucket-aligned (see [[bucketAligned]]),
-    * parquet, partitioned by `ingest_batch` whenever the frame carries
-    * that column (an ingest-grown family keeps its partitions through
-    * every append, compaction and repair — derived from the input, so
-    * no writer can forget it), then bucketed/sorted and saved with
-    * `mode` ("append" or "overwrite"). */
+  /** Row bound of the ONE-TASK family write (a small-input regime user,
+    * see [[Staging.stageObserved]]): a materialized frame of at most
+    * this many rows is written by one task instead of a bucket-aligning
+    * shuffle plus `buckets` tasks. 2^16 narrow rows are tens of
+    * milliseconds of one task's parquet encoding, less than the job the
+    * shuffle costs (~2 jobs and 370–430 ms per tiny append vs 1 job and
+    * 310–350 ms, measured at `local[4]`); past it the write spreads over
+    * the buckets again. A constant, not a conf, and no parameter
+    * raises it. */
+  private[graft] val smallWriteRows: Long = 1L << 16
+
+  /** The family-table write: parquet, partitioned by `ingest_batch`
+    * whenever the frame carries that column (an ingest-grown family
+    * keeps its partitions through every append, compaction and repair —
+    * derived from the input, so no writer can forget it), then
+    * bucketed/sorted and saved with `mode` ("append" or "overwrite").
+    *
+    * A bucketed write is bucket-aligned first (see [[bucketAligned]]),
+    * except for a SMALL MATERIALIZED frame, which is coalesced to one
+    * task: one task holding every bucket still lands one file per
+    * bucket (and per `ingest_batch` partition), sorted the same, so the
+    * layout is unchanged — the write just skips the shuffle's job. Both
+    * conditions are checked on the frame itself, never on an estimate:
+    *  - its row count is KNOWN and within [[smallWriteRows]]: `w.rows`,
+    *    observed by the action that staged it, or the exact size of a
+    *    local relation;
+    *  - it is MATERIALIZED: its plan is narrow operators (project,
+    *    filter, generate) over a local relation or an eagerly
+    *    checkpointed RDD. Coalescing an unmaterialized lineage would
+    *    squeeze its whole upstream computation into one task. */
   private[graft] def writeBucketed(w: Write, buckets: Int, mode: String): Unit = {
     val bucketed = w.cols.nonEmpty
-    val df = if (bucketed) bucketAligned(w.df, buckets, w.cols: _*) else w.df
+    val df =
+      if (!bucketed) w.df
+      else if (small(w)) w.df.coalesce(1)
+      else bucketAligned(w.df, buckets, w.cols: _*)
     val out = df.write.mode(mode).format("parquet")
     val parts = if (df.columns.contains("ingest_batch")) out.partitionBy("ingest_batch") else out
     (if (bucketed) parts.bucketBy(buckets, w.cols.head, w.cols.tail: _*)
       .sortBy(w.cols.head, w.cols.tail: _*) else parts)
       .saveAsTable(w.table)
+  }
+
+  /** Whether `w` is a materialized frame of at most [[smallWriteRows]]
+    * known rows (see [[writeBucketed]]). */
+  private def small(w: Write): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val plan = w.df.queryExecution.optimizedPlan
+    val rows = w.rows.orElse(plan match {
+      case l: LocalRelation => Some(l.data.size.toLong)
+      case _ => scala.None
+    })
+    rows.exists(_ <= smallWriteRows) && !plan.exists {
+      case _: Project | _: Filter | _: Generate | _: LocalRelation => false
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.isStreaming || !r.rdd.isCheckpointed
+      case _ => true
+    }
   }
 
   /** Several writes to DIFFERENT tables of one family, overlapped (round

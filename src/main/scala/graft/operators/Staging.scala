@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** How multi-consumer intermediate frames (MinHash/SimHash signatures,
   * LSH projections, token-count fits, component labels) are materialized
@@ -42,6 +42,56 @@ object Staging {
   /** No materialization — streaming-safe pass-through. */
   case object None extends Mode {
     def apply(df: DataFrame): DataFrame = df
+  }
+
+  /** Whether `staging` runs an action, so a metric can ride on it. */
+  private[graft] def isEager(staging: Mode): Boolean = staging != None
+
+  /** THE SMALL-INPUT REGIME's primitive: stage `df` under an EAGER mode
+    * with `metrics` riding the staging action as observed metrics
+    * (CollectMetrics). The eager staging runs through Dataset.withAction,
+    * which notifies the listener an Observation registers, so the values
+    * are ready when the checkpoint action returns — no job of their own.
+    * Returns the staged frame and the metric values in argument order.
+    *
+    * A user of the regime reads an observed size here and, when it fits
+    * its bound, does a small input's work on the driver or in one task
+    * instead of a chain of jobs. Every user keeps the same contract:
+    *  - its bound is a `private[graft] val` (driver memory or one task's
+    *    share, which no deployment should trade against data size);
+    *  - a parameter may LOWER the bound (specs pass 0 to force the
+    *    general path) but never raise it: the user clamps with `min`
+    *    (a user with no such parameter has nothing to clamp);
+    *  - there is no `spark.graft.*` conf for it;
+    *  - a spec pins both regimes to the same output.
+    * The users: connected components and its incremental twin
+    * (`Dedup.ccLocalEdges`) and the one-task family write
+    * (`Layout.smallWriteRows`). */
+  private[graft] def stageObserved(staging: Mode, df: DataFrame,
+                                   metrics: Column*): (DataFrame, Row) = {
+    require(isEager(staging), "an observed metric needs an eager staging action")
+    val obs = org.apache.spark.sql.Observation()
+    val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
+    val staged = staging(df.observe(obs, named.head, named.tail: _*))
+    val got = obs.get
+    (staged, Row.fromSeq(metrics.indices.map(i => got(s"m$i"))))
+  }
+
+  /** The rows of `df` when it holds at most `cap` of them, else None —
+    * the regime's bounded lookup, in ONE job that brings at most
+    * `cap + 1` rows to the driver however many partitions `df` spans.
+    * `df.limit(cap + 1)` runs through its physical plan's execute path
+    * (CollectLimitExec): every task keeps `cap + 1` rows, a
+    * single-partition exchange inside the job gathers them, and its one
+    * reduce task keeps `cap + 1` in total. (Dataset.collect of the same
+    * limit would take partitions in growing batches, one job each.) */
+  private[graft] def collectAtMost(df: DataFrame, cap: Int): Option[Array[Row]] = {
+    val limited = df.limit(cap + 1)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(limited.schema)
+    val rows = limited.queryExecution.toRdd.map(_.copy()).collect()
+      .map(r => toRow(r).asInstanceOf[Row])
+    if (rows.length > cap) scala.None else Some(rows)
   }
 
   /** Restore full-session parallelism ahead of a CPU-heavy kernel

@@ -50,9 +50,13 @@ object QueryDef {
     val cols = a.columns.toSeq
     val ga = a.groupBy(cols.map(c => col(s"`$c`")): _*)
       .agg(count(lit(1)).as("__ca"))
-    val gb = b.groupBy(cols.map(c => col(s"`$c`")): _*)
+    // b's keys are aliased: two frames read from one table share its
+    // column ids, and `ga(c) <=> gb(c)` would then compare a column
+    // with itself (Spark warns of a trivially true predicate)
+    val keys = cols.indices.map(i => s"__k$i")
+    val gb = b.groupBy(cols.zip(keys).map { case (c, k) => col(s"`$c`").as(k) }: _*)
       .agg(count(lit(1)).as("__cb"))
-    val cond = cols.map(c => ga(c) <=> gb(c)).reduce(_ && _)
+    val cond = cols.zip(keys).map { case (c, k) => ga(c) <=> gb(k) }.reduce(_ && _)
     ga.join(gb, cond, "full_outer")
       .filter(!(coalesce(ga("__ca"), lit(0L)) === coalesce(gb("__cb"), lit(0L))))
       .isEmpty

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Dedup, Family, Fence, Layout, Similarity, Tombstones}
+import graft.operators.{Dedup, Family, Fence, Layout, Similarity, Staging, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -376,14 +376,18 @@ object IngestLoop {
   /** What a batch folds into its family: one frame per data table, in
     * the family's table order, and the meta row a CREATING batch writes
     * (the family's own columns; the commit stamps `loop_id`). */
-  private case class Fold(frames: Seq[DataFrame], meta: Option[DataFrame])
+  private case class Fold(frames: Seq[DataFrame], meta: Option[DataFrame],
+                          rows: Seq[Long] = Nil)
 
   /** THE batch commit — one fenced sequence shared by every family loop,
     * so the fold's safety properties cannot drift between families.
     * `kind` is the family's registry descriptor ([[Family]]): its
     * declared data tables, in order, with their bucket columns; `view`
-    * builds (and checks) the family's corpus view of the batch;
-    * `fold` is the family's kernel, computed inside the fence. In order:
+    * checks the batch's parameters against the family's (the pairwise
+    * families compare the fence-read meta row, so no corpus view and no
+    * tombstone budget count runs under the fence) and returns what the
+    * fold needs (the PQ and SemDeDup models); `fold` is the family's
+    * kernel, computed inside the fence. In order:
     *
     *  1. [[familyExists]] decides existence on the family's declared
     *     data tables plus its meta (the torn-first-batch and
@@ -400,7 +404,7 @@ object IngestLoop {
     *  4. the partition id this batch owns is resolved: checkpoint-local
     *     by default, global via the fenced commits mapping under
     *     multi-writer (resolution runs only there);
-    *  5. the family's view and parameter checks, then bucket agreement
+    *  5. the family's parameter check (`view`), then bucket agreement
     *     and the single-writer loop binding ([[bindLoop]]);
     *  6. the replay probe, drop and generation bump: a retry first drops
     *     its own half-written partition (corpus partitions are untouched
@@ -472,7 +476,8 @@ object IngestLoop {
       }
       val f = fold(b, v)
       run.label(s"append ${kind.data.head.suffix}")
-      Layout.writeAll(kind.writes(prefix, f.frames.map(_.withColumn("ingest_batch", lit(b.pid)))),
+      Layout.writeAll(kind.writes(prefix,
+        f.frames.map(_.withColumn("ingest_batch", lit(b.pid))), f.rows),
         buckets, "append", () => {
         Fence.heartbeat(spark, prefix, owner)
         run.label(s"append ${kind.data.last.suffix}")
@@ -704,10 +709,11 @@ object IngestLoop {
         else minhashView(run.spark, prefix, b.meta, b.g)
       val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
         Family.MinHash.keyedOn(idCol)) { b =>
-        val c = corpus(b)
-        require(c.numPerms == numPerms && c.rowsPerBand == rowsPerBand,
-          s"persisted index family (${c.numPerms}, ${c.rowsPerBand}) != " +
-            s"loop family ($numPerms, $rowsPerBand)")
+        if (b.exists) {
+          val (p, r) = (b.meta.getInt(1), b.meta.getInt(2))
+          require(p == numPerms && r == rowsPerBand,
+            s"persisted index family ($p, $r) != loop family ($numPerms, $rowsPerBand)")
+        }
       } { (_, _) =>
         Fold(Seq(shard.bands, shard.shingles), Some(Seq((idCol, numPerms, rowsPerBand, buckets))
           .toDF("id_col", "num_perms", "rows_per_band", "buckets")))
@@ -778,12 +784,13 @@ object IngestLoop {
           shard.hashed.limit(0), bitsPerTable, numTables, seed, shard.dim)
         else embedView(run.spark, prefix, b.meta, b.g)
       val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets, Family.Embed) { b =>
-        val c = corpus(b)
-        require(c.bitsPerTable == bitsPerTable && c.numTables == numTables &&
-          c.seed == seed && c.dim == shard.dim,
-          s"persisted LSH family (bits=${c.bitsPerTable}, tables=${c.numTables}, " +
-            s"seed=${c.seed}, dim=${c.dim}) != loop family " +
-            s"(bits=$bitsPerTable, tables=$numTables, seed=$seed, dim=${shard.dim})")
+        if (b.exists) {
+          val m = b.meta
+          val (bits, tables, sd, dim) = (m.getInt(1), m.getInt(2), m.getLong(3), m.getInt(4))
+          require(bits == bitsPerTable && tables == numTables && sd == seed && dim == shard.dim,
+            s"persisted LSH family (bits=$bits, tables=$tables, seed=$sd, dim=$dim) != " +
+              s"loop family (bits=$bitsPerTable, tables=$numTables, seed=$seed, dim=${shard.dim})")
+        }
       } { (_, _) =>
         Fold(Seq(shard.hashed, shard.vecs),
           Some(Seq((idCol, bitsPerTable, numTables, seed, shard.dim, buckets))
@@ -1269,9 +1276,10 @@ object IngestLoop {
         else simhashView(spark, prefix, b.meta, b.g)
       val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
         Family.SimHash.keyedOn(idCol)) { b =>
-        val c = corpus(b)
-        require(c.idCol == idCol,
-          s"persisted SimHash family keys on '${c.idCol}', loop on '$idCol'")
+        if (b.exists) {
+          val keyed = b.meta.getString(0)
+          require(keyed == idCol, s"persisted SimHash family keys on '$keyed', loop on '$idCol'")
+        }
       } { (_, _) =>
         Fold(Seq(shard.chunked), Some(Seq((idCol, buckets)).toDF("id_col", "buckets")))
       }
@@ -1354,20 +1362,25 @@ object IngestLoop {
       // clone-heavy batch the whole within-batch pair mass then runs in a
       // single task. One shard-sized hash repartition on the id restores
       // cluster-wide parallelism for everything downstream.
-      val shard = Dedup.containmentIndex(batch.repartition(col(idCol)), idCol, textCol, n)
+      // the base's staging observes the shard tables' row counts, which
+      // let the family append write them from one task when small
+      val (shard, shardRows) = Dedup.sizedContainmentIndex(
+        batch.repartition(col(idCol)), idCol, textCol, n, Staging.Local, spread = true)
       def corpus(b: Batch): Dedup.ContainmentIndex =
         if (!b.exists) Dedup.ContainmentIndex(idCol, n,
           shard.base.limit(0), shard.posting.limit(0))
         else containmentView(run.spark, prefix, b.meta, b.g)
       val (b, gen0) = commitBatch(run, bid, loopId, multiWriter, buckets,
         Family.Containment) { b =>
-        val c = corpus(b)
-        require(c.n == n,
-          s"persisted containment family has shingle width n=${c.n}, " +
-            s"loop has n=$n — mismatched shingle families silently miss overlaps")
+        if (b.exists) {
+          val persisted = b.meta.getInt(1)
+          require(persisted == n,
+            s"persisted containment family has shingle width n=$persisted, " +
+              s"loop has n=$n — mismatched shingle families silently miss overlaps")
+        }
       } { (_, _) =>
         Fold(Seq(shard.posting, shard.base),
-          Some(Seq((idCol, n, buckets)).toDF("id_col", "n", "buckets")))
+          Some(Seq((idCol, n, buckets)).toDF("id_col", "n", "buckets")), shardRows)
       }
       mineAndPublish(run, gen0) {
         if (groupsPrefix.nonEmpty)

@@ -626,6 +626,59 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("incremental CC: a small shard closes on the driver in at most 4 Spark jobs") {
+    // the small-input regime: stage the shard edges (count observed),
+    // collect them, look up the touched labels and then the touched
+    // components' members, close by union-find — the delta is a local
+    // relation, so collecting it runs no job
+    val old = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (70L, 71L)).toDF("a_id", "b_id")
+    val frozen = Dedup.connectedComponents(old, "a_id", "b_id")
+    val fresh = Seq((3L, 10L), (21L, 40L), (50L, 51L)).toDF("a_id", "b_id")
+    val (got, jobs) = JobCount(spark, "dedupspec-cc-inc-jobs")(
+      Dedup.connectedComponentsIncremental(frozen, fresh, "a_id", "b_id",
+        deltaOnly = true).collect())
+    assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 1L, 2L -> 1L,
+      3L -> 1L, 10L -> 1L, 11L -> 1L, 20L -> 20L, 21L -> 20L, 40L -> 20L, 50L -> 50L,
+      51L -> 50L) && got.length == 10)
+    assert(jobs <= 4, s"a small incremental CC run took $jobs jobs")
+  }
+
+  test("collectAtMost: one job whose one result task is all that reaches the driver") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import graft.operators.Staging
+    // 8 partitions of 12-13 rows: no partition alone passes a cap of 30,
+    // all of them together do. Checkpointed, so the plan has no row
+    // bound that would let the optimizer drop the limit
+    val df = spark.range(0, 100, 1, 8).toDF("id").localCheckpoint()
+    // (value, jobs, result tasks) of one lookup: a result task's output
+    // is what the driver receives
+    def lookup(tag: String, cap: Int) = {
+      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+      val shipping = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.job.tags", "").split(",")
+            .contains(tag))) e.stageIds.foreach(stages.add(_))
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskType == "ResultTask" && stages.contains(e.stageId)) shipping.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        // JobCount returns once every event of the block is delivered
+        val (got, jobs) = JobCount(spark, tag)(Staging.collectAtMost(df, cap))
+        (got, jobs, shipping.get)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (all, allJobs, allTasks) = lookup("dedupspec-cap-fits", 100)
+    assert(all.map(_.map(_.getLong(0)).sorted.toSeq) == Some(0L until 100L))
+    assert(allJobs == 1 && allTasks == 1, s"fits: $allJobs jobs, $allTasks result tasks")
+    Seq(99, 30).foreach { cap =>
+      val (over, jobs, tasks) = lookup(s"dedupspec-cap-over-$cap", cap)
+      assert(over.isEmpty, s"cap $cap: 100 rows do not fit")
+      assert(jobs == 1 && tasks == 1, s"cap $cap: $jobs jobs, $tasks result tasks")
+    }
+  }
+
   test("connectedComponents closes a 200-node path within the log-round budget") {
     // diameter 199: plain hash-min would need ~199 rounds; path
     // compression must land well inside maxIter = 12 (2^12 >> 199).

@@ -739,4 +739,50 @@ class PropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("incremental CC: driver-local regime == round loop == batch-over-union with self-edges and NULL endpoints, both modes") {
+    // the small-input regime of the incremental twin (shard edges and the
+    // two label lookups collected, stars closed by union-find) must give
+    // the round loop's rows (forced with localEdges = 0), and both must
+    // fold to one batch run over all edges. NULL endpoints name no node
+    // but still touch the component of their other endpoint
+    type E = (Option[Long], Option[Long])
+    val graphs: Gen[(List[E], Int)] = for {
+      n <- Gen.chooseNum(2, 30)
+      m <- Gen.chooseNum(1, 50)
+      node = Gen.chooseNum(0L, n.toLong)
+      es <- Gen.listOfN(m, Gen.frequency(
+        6 -> (for { a <- node; b <- node } yield (Option(a), Option(b))),
+        2 -> node.map(a => (Option(a), Option(a))),
+        2 -> node.map(a => (Option(a), Option.empty[Long])),
+        1 -> node.map(b => (Option.empty[Long], Option(b))),
+        1 -> Gen.const((Option.empty[Long], Option.empty[Long])))): Gen[List[E]]
+      cut <- Gen.chooseNum(0, m)
+    } yield (es, cut)
+    def same(a: DataFrame, b: DataFrame) =
+      a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
+    def df(rows: List[E]) =
+      rows.map { case (a, b) => (a.map(Long.box).orNull, b.map(Long.box).orNull) }
+        .toDF("a_id", "b_id")
+    cases(graphs, 8).foreach { case (es, cut) =>
+      val (oldE, newE) = es.splitAt(cut)
+      val frozen = Dedup.connectedComponents(df(oldE), "a_id", "b_id", localEdges = 0)
+        .localCheckpoint()
+      val full = Dedup.connectedComponents(df(es), "a_id", "b_id", localEdges = 0)
+      Seq(false, true).foreach { deltaOnly =>
+        val label = s"edges=${es.size} cut=$cut deltaOnly=$deltaOnly"
+        var rounds = 0
+        val local = Dedup.connectedComponentsIncremental(frozen, df(newE), "a_id", "b_id",
+          deltaOnly = deltaOnly, onRound = () => rounds += 1)
+        assert(rounds == 1, s"driver-local regime expected: $label")
+        val loop = Dedup.connectedComponentsIncremental(frozen, df(newE), "a_id", "b_id",
+          deltaOnly = deltaOnly, localEdges = 0)
+        assert(same(local, loop), s"regimes differ: $label")
+        val folded =
+          if (deltaOnly) local.union(frozen.join(local.select(col("id")), Seq("id"), "left_anti"))
+          else local
+        assert(same(folded, full), s"batch-over-union differs: $label")
+      }
+    }
+  }
 }

@@ -360,6 +360,24 @@ class TombstoneSpec extends AnyFunSuite {
     } finally drop("tb_jc_bands", "tb_jc_shingles", "tb_jc_meta", "tb_jc_tombstones")
   }
 
+  test("an ingest batch on a tombstoned family runs the tombstone budget count once, not twice") {
+    // the fence-held parameter check reads the meta row only; the one
+    // budget count belongs to the mine's corpus view
+    val docs = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
+    val pairsDir = java.nio.file.Files.createTempDirectory("tb_bc_pairs").toString
+    def batch(bid: Long) = IngestLoop.ingestMinhashBatch(
+      docs.filter(col("doc_id") % 2 === bid), bid, "doc_id", "text", "tb_bc",
+      pairsDir, threshold = 0.5, numPerms = 32, rowsPerBand = 4, buckets = 8)
+    try {
+      batch(0L)
+      Tombstones.add(docs.filter(col("doc_id") % 8 === 0).select("doc_id"), "doc_id", "tb_bc")
+      val (_, counts) = JobCount.countsOver(spark, "tb_bc_tombstones")(batch(1L))
+      assert(counts == 1, s"one batch ran $counts tombstone budget counts")
+      assert(spark.read.parquet(s"$pairsDir/ingest_batch=1")
+        .filter(col("a_id") % 8 === 0 || col("b_id") % 8 === 0).count() == 0)
+    } finally drop("tb_bc_bands", "tb_bc_shingles", "tb_bc_meta", "tb_bc_tombstones")
+  }
+
   test("deleteWhere: predicate sweep feeds the tombstones — swept ids vanish from pairs and serving") {
     val docs = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
     val embs = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
